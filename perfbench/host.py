@@ -12,8 +12,6 @@ import os
 import threading
 import time
 
-_PAGE = os.sysconf("SC_PAGE_SIZE")
-
 
 def nproc() -> int:
     """Cores this process may run on (what ``nproc`` prints)."""
@@ -92,13 +90,21 @@ def descendants(pid: int) -> list[int]:
     return out
 
 
-def tree_rss(pid: int) -> dict[int, int]:
-    """Resident bytes of ``pid`` and each of its descendants."""
+def tree_pss(pid: int) -> dict[int, int]:
+    """Proportional resident bytes of ``pid`` and each of its descendants.
+
+    A page shared by n processes counts 1/n to each, so the sum counts
+    every resident page of the tree once, also the pages a forked child
+    (a Python worker, or the JVM between fork and exec) still shares with
+    its parent; summing plain RSS would count those twice."""
     out = {}
     for p in [pid, *descendants(pid)]:
         try:
-            with open(f"/proc/{p}/statm", "rb") as f:
-                out[p] = int(f.read().split()[1]) * _PAGE
+            with open(f"/proc/{p}/smaps_rollup", "rb") as f:
+                for line in f:
+                    if line.startswith(b"Pss:"):
+                        out[p] = int(line.split()[1]) * 1024
+                        break
         except OSError:
             continue  # exited since it was listed
     return out
@@ -113,9 +119,9 @@ def _comm(pid: int) -> str:
 
 
 class TreeRssSampler:
-    """Samples the resident set of this process and all its descendants
-    (driver JVM, Python workers) on a background thread; ``peak_mb`` is
-    the largest simultaneous total seen."""
+    """Samples the resident memory of this process and all its
+    descendants (driver JVM, Python workers) as summed PSS on a background
+    thread; ``peak_mb`` is the largest simultaneous total seen."""
 
     def __init__(self, interval_s: float = 0.25) -> None:
         self.interval_s = interval_s
@@ -125,7 +131,7 @@ class TreeRssSampler:
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
     def sample(self) -> None:
-        rss = tree_rss(os.getpid())
+        rss = tree_pss(os.getpid())
         total = sum(rss.values())
         if total > self.peak:
             self.peak = total

@@ -8,8 +8,9 @@ oracle gate compares them (columns sorted by lower-cased name, floats by
 SHA-256 digest, so a cached oracle result is a count and a digest.
 
 Oracle results depend only on the SQL text and the input files, so they
-are cached under ``.perfbench_cache/`` in the checkout: the first run of a
-checkout evaluates them, later runs reuse them.
+are cached under ``perfbench/.cache/``: the first run of a checkout
+evaluates them, later runs reuse them. Either way the work runs after the
+run's measurements have ended.
 """
 
 from __future__ import annotations

@@ -3,19 +3,21 @@
 Usage (from the root of a checkout)::
 
     python3 perfbench/run.py --workload relational_etl --seed 1 \\
-        --seconds 25 --trace 0
+        --seconds 40 --trace 0
 
 One process starts Spark at ``local[nproc]``, sets up a warmed session,
 then runs passes over the workload's items (see ``workloads.py``): one
-cold pass and one warm pass, then further warm passes while the next one
-is expected to end within ``--seconds`` of the first. Every item is checked against DuckDB (row count on
-every pass, full value digest on the cold pass, outside the timed
-region); anything that raises or mismatches counts as failed.
+cold pass and ``WARM_PASSES`` warm ones, whatever their speed;
+``--seconds`` is the length a run is expected to measure, and a run that
+measures longer says so on stderr. Every item is checked against DuckDB
+(row count on every pass, full value digest on the cold pass); anything
+that raises or mismatches counts as failed. The DuckDB work runs after
+Spark has stopped, outside the timed region and the memory sampling.
 
-All run state lives under one fresh directory in ``.perfbench_run/`` of
-the checkout: the working directory, Spark's local and warehouse dirs,
-the JVM and Python temp dirs, the event log and every sink output. It is
-deleted once the clock has stopped.
+All run state lives under one fresh directory in ``perfbench/.run/``:
+the working directory, Spark's local and warehouse dirs, the JVM and
+Python temp dirs, the event log and every sink output. It is deleted once
+the clock has stopped. Oracle results are cached in ``perfbench/.cache/``.
 
 The last stdout line is one JSON object ``{"correct", "attempted",
 "failed", "metrics"}``. With ``--trace 0`` the metrics are the end-to-end
@@ -42,16 +44,17 @@ import host
 import spans as spans_mod
 import stats
 from oracle import OracleCache, digest
-from workloads import BOOKS_N, WORKLOADS, Workload, pass_order
+from workloads import BOOKS_N, WARM_PASSES, WORKLOADS, Workload, pass_order
 
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 PACKAGE = ROOT / "orchestrated_etl_spark" / "__init__.py"
 
-# A run of the committed length holds one warm pass: 8-12 warm item
-# samples, too few for any percentile above the median to have ten samples
-# beyond it, so no tail percentile is reported (stats.tail_pct; the detail
-# line carries the sample count).
+# A run holds WARM_PASSES warm passes: 16 (iterative_staged) or 24
+# (relational_etl) warm item samples, too few for any percentile that both
+# workloads share above the median to have ten samples beyond it, so no
+# tail percentile is reported (stats.tail_pct; the detail line carries the
+# sample count).
 END_TO_END = {
     "setup_s": "s",
     "first_pass_s": "s",
@@ -124,6 +127,9 @@ class Run:
         self.t0 = t0
         self.cores = host.nproc()
         self.samples: list[tuple[int, str, float]] = []  # (pass, item, seconds)
+        # (pass, item, what to check): (rows, digest or None) of a query,
+        # the output directory of a pipeline
+        self.results: list[tuple[int, str, object]] = []
         self.pass_walls: dict[int, float] = {}
         self.failures: list[dict] = []
         self.attempted = 0
@@ -138,6 +144,9 @@ class Run:
         self.spark = get_spark("perfbench", extra_conf=conf)
         self.queries = registry.queries()
         self.oracles = registry.oracle_sql()
+        for name in self.wl.queries:
+            if name not in self.oracles:
+                raise SystemExit(f"perfbench: query {name!r} has no oracle")
         t1 = time.perf_counter()
         self.setup["session.start_s"] = t1 - self.t0
         self.shuffle_width = self.spark.conf.get("spark.sql.shuffle.partitions")
@@ -165,19 +174,6 @@ class Run:
         self.setup["workers.start_s"] = t3 - t2
         self.setup_s = t3 - self.t0
 
-    def expectations(self) -> None:
-        """Oracle counts and digests, from the cache or DuckDB."""
-        cache_dir = ROOT / ".perfbench_cache" / f"sf{self.args.sf}"
-        self.oracle = OracleCache(cache_dir, self.sf_dir, self.run_root / "tmp")
-        self.expected: dict[str, tuple[int, str]] = {}
-        for name in self.wl.queries:
-            if name not in self.oracles:
-                raise SystemExit(f"perfbench: query {name!r} has no oracle")
-            self.expected[name] = self.oracle.expected(self.oracles[name])
-        for item in self.wl.pipelines:
-            for sink, sql in item.sink_sql().items():
-                self.expected[f"{item.name}/{sink}"] = self.oracle.expected(sql)
-
     # -- items -----------------------------------------------------------
     def run_query(self, name: str):
         tr = self.tracer
@@ -203,38 +199,6 @@ class Run:
             pipe.run(self.spark)
         return out_dir
 
-    # -- checks (outside the timed region) --------------------------------
-    def fail(self, pass_no: int, name: str, why: str) -> None:
-        self.failures.append({"pass": pass_no, "item": name, "why": why[-2000:]})
-
-    def check_query(self, pass_no: int, name: str, df, rows) -> None:
-        want_rows, want_digest = self.expected[name]
-        if len(rows) != want_rows:
-            self.fail(pass_no, name, f"rows {len(rows)} != oracle {want_rows}")
-        elif pass_no == 0 and digest(df.columns, rows)[1] != want_digest:
-            self.fail(pass_no, name, "value multiset differs from oracle")
-
-    def check_pipeline(self, pass_no: int, name: str, out_dir: Path) -> None:
-        item = self.wl.pipeline(name)
-        con = self.oracle.connection()
-        for sink in item.sink_sql():
-            path = out_dir / sink
-            files = list(path.rglob("*.parquet"))
-            hive = "true" if sink in item.partitioned else "false"
-            scan = f"read_parquet('{path}/**/*.parquet', hive_partitioning = {hive})"
-            want_rows, want_digest = self.expected[f"{name}/{sink}"]
-            if pass_no == 0:
-                res = con.execute(f"SELECT * FROM {scan}")
-                rows, dig = digest([d[0] for d in res.description], res.fetchall())
-            else:
-                rows, dig = con.execute(f"SELECT count(*) FROM {scan}").fetchone()[0], None
-            if rows != want_rows or (dig is not None and dig != want_digest):
-                self.fail(pass_no, f"{name}/{sink}",
-                          f"sink holds {rows} rows (oracle {want_rows}) or other values")
-            self.tracer.count("sinks.rows", rows)
-            self.tracer.count("sinks.files", len(files))
-            self.tracer.count("sinks.bytes", sum(f.stat().st_size for f in files))
-
     # -- passes ----------------------------------------------------------
     def run_pass(self, pass_no: int) -> float:
         tr = self.tracer
@@ -255,19 +219,19 @@ class Run:
                 self.samples.append((pass_no, name, time.perf_counter() - t_item))
                 self.fail(pass_no, name, traceback.format_exc())
                 continue
-            dt = time.perf_counter() - t_item
-            self.samples.append((pass_no, name, dt))
-            done.append((name, out, dt))
+            self.samples.append((pass_no, name, time.perf_counter() - t_item))
+            done.append((name, out))
         wall = time.perf_counter() - t_pass
         tr.item = None
-        for name, out, dt in done:
+        for name, out in done:
             if isinstance(out, Path):
-                self.check_pipeline(pass_no, name, out)
+                self.results.append((pass_no, name, out))
                 if name == "books_fanout":
                     tr.count("books.rows", BOOKS_N)
-                    tr.count("books.pipeline_s", dt)
             else:
-                self.check_query(pass_no, name, *out)
+                df, rows = out
+                dig = digest(df.columns, rows)[1] if pass_no == 0 else None
+                self.results.append((pass_no, name, (len(rows), dig)))
         done.clear()
         tr.storage_snapshot()
         tr.pass_no = None
@@ -276,12 +240,60 @@ class Run:
 
     def measure(self) -> None:
         t_measure = time.perf_counter()
-        self.run_pass(0)
-        pass_no, last = 1, self.run_pass(1)
-        while time.perf_counter() - t_measure + last <= self.args.seconds:
-            pass_no += 1
-            last = self.run_pass(pass_no)
+        for pass_no in range(1 + WARM_PASSES):
+            self.run_pass(pass_no)
         self.measure_s = time.perf_counter() - t_measure
+        if self.measure_s > self.args.seconds:
+            print(
+                f"perfbench: measured {self.measure_s:.1f} s, "
+                f"longer than --seconds {self.args.seconds:g}",
+                file=sys.stderr,
+            )
+
+    # -- checks (after Spark has stopped) ---------------------------------
+    def fail(self, pass_no: int, name: str, why: str) -> None:
+        self.failures.append({"pass": pass_no, "item": name, "why": why[-2000:]})
+
+    def verify(self) -> None:
+        """Compare every recorded result with its DuckDB oracle."""
+        cache_dir = HERE / ".cache" / f"sf{self.args.sf}"
+        self.oracle = OracleCache(cache_dir, self.sf_dir, self.run_root / "tmp")
+        try:
+            for pass_no, name, got in self.results:
+                if isinstance(got, Path):
+                    self.check_pipeline(pass_no, name, got)
+                else:
+                    self.check_query(pass_no, name, *got)
+        finally:
+            self.oracle.close()
+
+    def check_query(self, pass_no: int, name: str, rows: int, dig: str | None) -> None:
+        want_rows, want_digest = self.oracle.expected(self.oracles[name])
+        if rows != want_rows:
+            self.fail(pass_no, name, f"rows {rows} != oracle {want_rows}")
+        elif dig is not None and dig != want_digest:
+            self.fail(pass_no, name, "value multiset differs from oracle")
+
+    def check_pipeline(self, pass_no: int, name: str, out_dir: Path) -> None:
+        item = self.wl.pipeline(name)
+        con = self.oracle.connection()
+        for sink, sql in item.sink_sql().items():
+            path = out_dir / sink
+            files = list(path.rglob("*.parquet"))
+            hive = "true" if sink in item.partitioned else "false"
+            scan = f"read_parquet('{path}/**/*.parquet', hive_partitioning = {hive})"
+            want_rows, want_digest = self.oracle.expected(sql)
+            if pass_no == 0:
+                res = con.execute(f"SELECT * FROM {scan}")
+                rows, dig = digest([d[0] for d in res.description], res.fetchall())
+            else:
+                rows, dig = con.execute(f"SELECT count(*) FROM {scan}").fetchone()[0], None
+            if rows != want_rows or (dig is not None and dig != want_digest):
+                self.fail(pass_no, f"{name}/{sink}",
+                          f"sink holds {rows} rows (oracle {want_rows}) or other values")
+            self.tracer.count("sinks.rows", rows, pass_no)
+            self.tracer.count("sinks.files", len(files), pass_no)
+            self.tracer.count("sinks.bytes", sum(f.stat().st_size for f in files), pass_no)
 
     # -- results ---------------------------------------------------------
     def end_to_end(self, peak_rss_mb: float) -> dict[str, float]:
@@ -300,8 +312,6 @@ class Run:
         """Release what the run started, also after a failure."""
         if self.tracer is not None:
             self.tracer.uninstall()
-        if self.oracle is not None:
-            self.oracle.close()
         if self.spark is not None:
             shutdown(self.spark)
             self.spark = None
@@ -352,7 +362,7 @@ def main(argv=None) -> int:
         return 2
     host_start = host.host_record()
     t0 = time.perf_counter()
-    runs_dir = ROOT / ".perfbench_run"
+    runs_dir = HERE / ".run"
     runs_dir.mkdir(exist_ok=True)
     run_root = Path(tempfile.mkdtemp(prefix=f"{args.workload}-", dir=runs_dir))
     cwd = os.getcwd()
@@ -365,11 +375,11 @@ def main(argv=None) -> int:
         with host.TreeRssSampler() as rss:
             try:
                 run.start(conf)
-                run.expectations()
                 run.measure()
                 host_end = host.host_record()
             finally:
                 run.stop()
+        run.verify()
         warm = [p for p in run.pass_walls if p > 0]
         if args.trace:
             logs = [p for p in (run_root / "eventlog").iterdir()]

@@ -8,7 +8,8 @@ do inside a query function shows as its own span:
 - ``compat.staged_checkpoint`` and ``DataFrame.localCheckpoint`` (the
   staging primitives) -> ``stage``, counted once when nested;
 - the pipeline callables the benchmark builds -> ``source``,
-  ``transform``, ``validate`` and ``sink``.
+  ``transform``, ``validate`` and ``sink``; the books source is also read
+  on its own -> ``source.read``.
 
 Each span gets its own Spark job group, so the event log written under
 the run root attributes jobs, stages, tasks and executor time to it.
@@ -33,39 +34,15 @@ EXEC_SPANS = ("execute", "validate", "sink")
 BUILD_SPANS = ("build", "source", "transform")
 
 
-def new_jobs(before_max: int, job_ids, floor: int | None = None) -> tuple[int, int]:
-    """(jobs started since ``before_max``, new max job id).
-
-    ``job_ids`` is whatever the status tracker still retains; it may be
-    truncated, so only its maximum is trusted, never its length."""
-    top = max(job_ids, default=before_max)
-    top = max(top, before_max if floor is None else floor)
-    return top - before_max, top
-
-
 class JobClock:
-    """The highest job id started so far in this SparkContext.
-
-    Reads the DAG scheduler's job counter, which is exact but not public
-    API; where it is not reachable, falls back to the status tracker's
-    retained ids for the current job group."""
+    """The highest job id started so far in this SparkContext, read from
+    the DAG scheduler's job counter (exact, but not public API)."""
 
     def __init__(self, sc) -> None:
-        self._sc = sc
-        try:
-            self._sched = sc._jsc.sc().dagScheduler()
-            self._sched.nextJobId()
-        except Exception:  # noqa: BLE001 - accessor absent: use the tracker
-            self._sched = None
-        self._seen = -1
+        self._sched = sc._jsc.sc().dagScheduler()
 
     def max_job_id(self) -> int:
-        if self._sched is not None:
-            return int(self._sched.nextJobId()) - 1
-        group = self._sc.getLocalProperty(GROUP_KEY)
-        ids = self._sc.statusTracker().getJobIdsForGroup(group)
-        _, self._seen = new_jobs(self._seen, ids)
-        return self._seen
+        return int(self._sched.nextJobId()) - 1
 
 
 @dataclass
@@ -130,20 +107,33 @@ class Tracer:
     def inside(self, name: str) -> bool:
         return any(self.spans[i].name == name for i in self._stack)
 
-    def wrap(self, name: str, label: str, fn):
-        """Wrap a pipeline callable in a span (identity when disabled)."""
+    def wrap(self, name: str, label: str, fn, force_read: bool = False):
+        """Wrap a pipeline callable in a span (identity when disabled).
+
+        With ``force_read`` the callable is a source: its lazy DataFrame is
+        then also read in full (a ``noop`` write) in a ``source.read`` span
+        after it, so the source's own read time shows apart from the
+        stages and sinks that would otherwise pull it. The pipeline reads
+        the source again itself; this read is extra work of the traced
+        run only."""
         if not self.enabled:
             return fn
 
         def traced(*args, **kwargs):
             with self._span(name, label=label):
-                return fn(*args, **kwargs)
+                out = fn(*args, **kwargs)
+            if force_read:
+                with self._span("source.read", label=label):
+                    out.write.format("noop").mode("overwrite").save()
+            return out
 
         return traced
 
-    def count(self, name: str, value: float) -> None:
-        if self.enabled and self.pass_no is not None:
-            self.counters[(self.pass_no, name)] += value
+    def count(self, name: str, value: float, pass_no: int | None = None) -> None:
+        """Add to a per-pass counter (of the current pass by default)."""
+        pass_no = self.pass_no if pass_no is None else pass_no
+        if self.enabled and pass_no is not None:
+            self.counters[(pass_no, name)] += value
 
     # -- engine entry points ---------------------------------------------
     def install(self) -> None:
@@ -343,7 +333,7 @@ def pass_layers(
         anc = _ancestors(spans, i)
         names = [spans[a].name for a in anc]
         top = bool(anc) and names[0] in ("item", "pipeline.run")
-        if top and s.name in BUILD_SPANS + ("plan",) + EXEC_SPANS:
+        if top and s.name in BUILD_SPANS + ("plan", "source.read") + EXEC_SPANS:
             layered[anc[names.index("item")]] += s.dur
         if s.name in BUILD_SPANS and top:
             out["build_s"] += s.dur
@@ -353,8 +343,9 @@ def pass_layers(
                 out["pipeline.transform_s"] += s.dur
             if s.name == "source":
                 out["pipeline.attempts"] += 1
-                if s.attrs.get("label") == "books":
-                    out["books.read_s"] += s.dur
+        elif s.name == "source.read" and top:
+            if s.attrs.get("label") == "books":
+                out["books.read_s"] += s.dur
         elif s.name == "plan" and top:
             out["plan_s"] += s.dur
             for k in ("analysis", "optimization", "planning"):
@@ -427,9 +418,9 @@ def summarise(
         layers["sinks.bytes_per_row"] = (
             layers.get("sinks.bytes", 0.0) / rows if rows else 0.0
         )
-        run_s = layers.get("books.pipeline_s", 0.0)
+        read_s = layers.get("books.read_s", 0.0)
         layers["books.rows_per_s"] = (
-            layers.get("books.rows", 0.0) / run_s if run_s else 0.0
+            layers.get("books.rows", 0.0) / read_s if read_s else 0.0
         )
     out: dict[str, float] = {}
     for name in LAYER_METRICS:

@@ -57,12 +57,13 @@ def test_tail_percentile_keeps_ten_samples_beyond_it():
         assert n * (100 - stats.tail_pct(n)) / 100 >= 10
 
 
-def test_warm_samples_support_no_tail_metric():
-    """A committed-length run holds one warm pass, so its warm item samples
-    number one per item: below the 20 a median with ten samples beyond it
-    needs, which is why END_TO_END reports the median and no tail."""
-    for wl in workloads.WORKLOADS.values():
-        assert stats.tail_pct(len(wl.items)) < 50
+def test_warm_samples_support_no_shared_tail_metric():
+    """A run's warm item samples number WARM_PASSES per item; on the
+    smaller workload that leaves no percentile above the median with ten
+    samples beyond it, which is why END_TO_END reports the median and no
+    tail."""
+    fewest = min(len(wl.items) for wl in workloads.WORKLOADS.values())
+    assert stats.tail_pct(fewest * workloads.WARM_PASSES) < 50
     assert [k for k in run.END_TO_END if k.startswith("item_p")] == ["item_p50_s"]
 
 
@@ -72,45 +73,52 @@ def test_percentile_interpolates():
 
 
 # -- job counting ----------------------------------------------------------
-def test_new_jobs_counts_by_max_id_not_list_length():
-    # five jobs ran (10..14); the tracker kept only the last two
-    assert spans.new_jobs(9, [13, 14]) == (5, 14)
-    assert spans.new_jobs(9, []) == (0, 9)
-    # a tracker that forgot everything never yields a negative count
-    assert spans.new_jobs(14, [3, 4]) == (0, 14)
+class _Scheduler:
+    def __init__(self):
+        self.next_id = 10
 
-
-class _Tracker:
-    def __init__(self, ids):
-        self.ids = ids
-
-    def getJobIdsForGroup(self, group):
-        return list(self.ids)
+    def nextJobId(self):
+        return self.next_id
 
 
 class _Context:
-    """A SparkContext without the scheduler accessor, whose tracker
-    retains only the last two job ids."""
-
-    _jsc = None
+    """A SparkContext reduced to what the tracer touches."""
 
     def __init__(self):
-        self.tracker = _Tracker([])
+        self.sched = _Scheduler()
+        self.props = {}
+        self._jsc = self
+
+    def sc(self):
+        return self
+
+    def dagScheduler(self):
+        return self.sched
 
     def getLocalProperty(self, key):
-        return "g"
+        return self.props.get(key)
 
-    def statusTracker(self):
-        return self.tracker
+    def setLocalProperty(self, key, value):
+        self.props[key] = value
 
 
-def test_job_clock_fallback_survives_a_truncated_tracker():
-    sc = _Context()
-    clock = spans.JobClock(sc)
-    sc.tracker.ids = [0, 1]
-    assert clock.max_job_id() == 1
-    sc.tracker.ids = [5, 6]  # jobs 2..6 ran, 2..4 already forgotten
-    assert clock.max_job_id() == 6
+class _Session:
+    def __init__(self):
+        self.sparkContext = _Context()
+
+
+def test_span_jobs_are_max_job_id_deltas():
+    spark = _Session()
+    tr = spans.Tracer(spark, enabled=True)
+    with tr.span("outer"):
+        spark.sparkContext.sched.next_id += 2
+        with tr.span("inner") as inner:
+            assert spark.sparkContext.props[spans.GROUP_KEY] == "s1"
+            spark.sparkContext.sched.next_id += 5  # jobs 12..16
+        spark.sparkContext.sched.next_id += 1
+    assert inner.jobs == 5
+    assert tr.spans[0].jobs == 8
+    assert spark.sparkContext.props[spans.GROUP_KEY] is None
 
 
 # -- layer accounting ------------------------------------------------------
@@ -148,16 +156,17 @@ def test_pass_layers_attributes_pipeline_spans():
         _span("item", 0.0, 5.0),                         # 0
         _span("pipeline.run", 0.0, 4.8, 0),              # 1
         _span("source", 0.0, 0.2, 1, label="books"),     # 2
-        _span("transform", 0.2, 0.3, 1),                 # 3
-        _span("validate", 0.3, 1.3, 1),                  # 4
-        _span("sink", 1.3, 4.8, 1),                      # 5
+        _span("source.read", 0.2, 0.7, 1, label="books"),  # 3
+        _span("transform", 0.7, 0.8, 1),                 # 4
+        _span("validate", 0.8, 1.3, 1),                  # 5
+        _span("sink", 1.3, 4.8, 1),                      # 6
     ]
     out = spans.pass_layers(ss, {}, 1, cores=4)
     assert out["pipeline.run_s"] == 4.8
     assert out["pipeline.attempts"] == 1
-    assert out["books.read_s"] == 0.2
+    assert out["books.read_s"] == pytest.approx(0.5)
     assert out["build_s"] == pytest.approx(0.3)
-    assert out["execute_s"] == pytest.approx(4.5)
+    assert out["execute_s"] == pytest.approx(4.0)
     assert out["sinks.write_s"] == pytest.approx(3.5)
     assert out["item.remainder_s"] == pytest.approx(0.2)
 
@@ -229,11 +238,13 @@ def test_smoke_sf0001(workload):
     assert res.returncode == 0, res.stderr[-3000:]
     detail, out = (json.loads(line) for line in res.stdout.splitlines()[-2:])
     assert out["correct"] is True and out["failed"] == 0, detail["failures"]
-    # one cold and one warm pass: a further one would not end within 1 s
-    assert out["attempted"] == 2 * len(workloads.WORKLOADS[workload].items)
+    # one cold pass and WARM_PASSES warm ones, however long they take
+    passes = 1 + workloads.WARM_PASSES
+    assert out["attempted"] == passes * len(workloads.WORKLOADS[workload].items)
+    assert detail["warm_passes"] == workloads.WARM_PASSES
     assert {k: m["unit"] for k, m in out["metrics"].items()} == run.END_TO_END
     assert all(m["value"] > 0 for m in out["metrics"].values())
-    assert not (ROOT / ".perfbench_run").exists()
+    assert not (BENCH / ".run").exists()
 
 
 def test_smoke_sf0001_traced():
@@ -247,13 +258,14 @@ def test_smoke_sf0001_traced():
     assert got["compat.stage.calls"] == 0
     assert got["sinks.rows"] > 0 and got["pipeline.run_s"] > 0
     assert got["execute.jobs"] > 0 and got["read.calls"] > 0
+    assert got["books.read_s"] > 0 and got["books.rows_per_s"] > 0
 
 
 def test_fails_without_the_engine(tmp_path):
     """A directory holding only the benchmark exits non-zero, no result."""
     shutil.copy(ROOT / "BENCHMARK.json", tmp_path)
     shutil.copytree(BENCH, tmp_path / "perfbench",
-                    ignore=shutil.ignore_patterns("__pycache__", "data"))
+                    ignore=shutil.ignore_patterns("__pycache__", "data", ".run", ".cache"))
     res = _run("--workload", "relational_etl", "--seed", "1", "--seconds", "1",
                "--trace", "0", cwd=tmp_path, timeout=120)
     assert res.returncode != 0

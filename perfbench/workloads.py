@@ -4,7 +4,8 @@ An item is one registered headline query (built by its query function and
 collected) or one ``Pipeline.run`` assembled here from public layer
 functions. A pass runs every item of its workload once, in an order drawn
 from the workload seed; the fixture data is fixed, so the seed varies only
-the order.
+the order. A run is one cold pass and ``WARM_PASSES`` warm ones, the same
+number on every commit, so every commit does the same work.
 """
 
 from __future__ import annotations
@@ -33,11 +34,14 @@ ITERATIVE_STAGED = (
     "graph_triangle_orient",
 )
 
+WARM_PASSES = 2
+
 BOOKS_N = 10_000
 BOOKS_PAGE = 2_500  # one page per core of a 4-core host
 
-# wrap(phase, name, fn) -> fn: the tracer's hook around a pipeline callable
-Wrap = Callable[[str, str, Callable], Callable]
+# wrap(phase, name, fn, force_read=False) -> fn: the tracer's hook around a
+# pipeline callable (spans.Tracer.wrap)
+Wrap = Callable[..., Callable]
 
 
 @dataclass(frozen=True)
@@ -82,7 +86,7 @@ def _books_fanout(sf_dir: str, out_dir: str, wrap: Wrap):
 
     return Pipeline(
         name="books_fanout",
-        source=wrap("source", "books", source),
+        source=wrap("source", "books", source, force_read=True),
         stages=[
             Stage(
                 "standardise",
