@@ -32,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import default_parallelism, staged_checkpoint
+from orchestrated_etl_spark.compat import staged_checkpoint
+from orchestrated_etl_spark.sources.catalog import load_table
 
 
 def copurchase_edges(
@@ -46,7 +47,7 @@ def copurchase_edges(
     from each order's sorted distinct-part array via nested TRANSFORM
     (no self-join, no second scan of lineitem); shuffle #2 aggregates
     pair weights. Both shuffles move only key columns."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
     # collect_set dedupes inside the aggregate — one shuffle replaces
@@ -326,6 +327,20 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     return labels.select("node", F.col("label").alias("community"))
 
 
+def src_layout(edges: DataFrame) -> DataFrame:
+    """Stage an edge relation hash-partitioned by ``src`` at the session
+    shuffle width, the probe side every traversal round joins against.
+
+    Each round's min-aggregate lands at ``spark.sql.shuffle.partitions``,
+    so staging the layout at that width leaves the round join with no
+    exchange on either side. At any other width Spark re-keys the side
+    with fewer partitions, and when that is the layout (the shuffle width
+    above the core count, as session.py advises on a cluster) every round
+    re-shuffles the whole edge list."""
+    width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return staged_checkpoint(edges.repartition(width, F.col("src")))
+
+
 def bfs_distances(
     edges: DataFrame,
     seed: int,
@@ -382,11 +397,7 @@ def bfs_distances(
     u = (
         u_layout
         if u_layout is not None
-        else staged_checkpoint(
-            undirect(edges).repartition(
-                default_parallelism(spark), F.col("src")
-            )
-        )
+        else src_layout(undirect(edges))
     )
     dist = spark.range(1).select(
         F.lit(seed).cast("long").alias("node"),
@@ -437,20 +448,18 @@ def shortest_path_bf(
     # Same layout contract as bfs_distances: edges partitioned by src
     # once, distance relation shuffle-hash-joined against it per round
     # (never broadcast the edge list).
-    u = staged_checkpoint(
+    u = src_layout(
         edges.select(
             F.col("part_a").alias("src"),
             F.col("part_b").alias("dst"),
             F.col("weight").cast("long").alias("w"),
-        )
-        .unionAll(
+        ).unionAll(
             edges.select(
                 F.col("part_b").alias("src"),
                 F.col("part_a").alias("dst"),
                 F.col("weight").cast("long").alias("w"),
             )
         )
-        .repartition(default_parallelism(spark), F.col("src"))
     )
     dist = spark.range(1).select(
         F.lit(seed).cast("long").alias("node"),

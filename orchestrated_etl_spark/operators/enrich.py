@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orchestrated_etl_spark.sources.catalog import load_table
+
 
 def enrich_metrics(
     df: DataFrame,
@@ -72,10 +74,10 @@ def flagship(spark, sf_dir: str) -> DataFrame:
     on the final small key (25 nations). Catalyst prunes lineitem's
     scan to 5 of 11 columns and pushes the null filters into parquet.
     """
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
 
     # SCALED-INTEGER (cents) accumulation: every column is a ≤2-decimal
     # POSITIVE value, so floor(x·100 + 0.5) recovers the exact integer

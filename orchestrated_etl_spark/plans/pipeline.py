@@ -69,14 +69,23 @@ class Pipeline:
         self, spark: SparkSession, done_sinks: set[str]
     ) -> DataFrame:
         df = self.source(spark)
+        checks = []
         for stage in self.stages:
             df = stage.transform(df)
             if stage.validate is not None:
-                stage.validate(df)
+                checks.append((stage.validate, df))
         todo = {k: s for k, s in self.sinks.items() if k not in done_sinks}
-        if len(todo) > 1 and self.cache_before_fanout:
+        fan_out = len(todo) > 1 and self.cache_before_fanout
+        if fan_out:
+            # Persist BEFORE validating: the last stage's validator then
+            # reads through the cache the sinks reuse, so the source and
+            # the stages run once, not once for the validator and again for
+            # the first sink. persist() returns the frame itself, so the
+            # pair recorded for the last stage already names it.
             df = df.persist()
         try:
+            for validate, checked in checks:
+                validate(checked)
             for name, sink in todo.items():
                 sink(df)
                 # A retry must not re-run a sink that already succeeded:
@@ -86,7 +95,7 @@ class Pipeline:
                 # next attempt; only the failed-and-after ones re-run.
                 done_sinks.add(name)
         finally:
-            if len(todo) > 1 and self.cache_before_fanout:
+            if fan_out:
                 df.unpersist()
         return df
 

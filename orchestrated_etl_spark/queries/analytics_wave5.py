@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.functions.dedup import cosine
 from orchestrated_etl_spark.registry import register
-from orchestrated_etl_spark.sources.catalog import read_events
+from orchestrated_etl_spark.sources.catalog import load_table, read_events
 
 
 # ---------------------------------------------------------------------------
@@ -181,7 +181,7 @@ def _distribution_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rank−1)/(n−1) and cume_dist = prefix/n are map-side arithmetic
     against a 3-row broadcast of per-status totals. No stage sorts
     more than a range partition; output identical to the window form."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     base = orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
     grp = base.groupBy("o_orderstatus", "o_totalprice").agg(
         F.count(F.lit(1)).alias("_c")
@@ -270,7 +270,7 @@ def _hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate count vs verified count = the precision the banding bought.
     The all-pairs comparison this replaces is |C|²; here the self-join is
     per-bucket (E[size] = |C| / 2^n_planes)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     planes = _plane_signs()
     sig = None
     for p, signs in enumerate(planes):
@@ -449,7 +449,7 @@ def _text_logparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve lines from a stale fixture generation."""
     from orchestrated_etl_spark.queries.scale_ops import _scratch
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     path = _scratch("doc_log_lines", sf_dir)
     nul = F.lit(r"\N")
     docs.select(
@@ -502,7 +502,7 @@ def _sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     still a pure Catalyst expression after inlining — NOT a Python UDF,
     so whole-stage codegen is preserved), and the literal arrives via a
     named ``:param`` binding instead of string interpolation."""
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
         "v_lineitem_w5"
     )
     spark.sql(
@@ -546,7 +546,7 @@ def _sql_table_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calendar densification pattern with the spine as a reusable
     catalog object instead of per-query boilerplate. The spine is
     generated (sequence + explode), never a scanned calendar table."""
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "v_orders_w5"
     )
     spark.sql(

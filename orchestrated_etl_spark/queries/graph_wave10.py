@@ -26,11 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import application_id, default_parallelism
+from orchestrated_etl_spark.compat import application_id
 from orchestrated_etl_spark.functions.graph import (
     copurchase_edges,
     degrees,
     pagerank,
+    src_layout,
     triangle_count,
     triangle_count_oriented,
     undirect,
@@ -80,7 +81,7 @@ def cached_edges(
     return _EDGE_CACHE[key]
 
 
-_ULAYOUT_CACHE: dict[tuple[str, str, int], DataFrame] = {}
+_ULAYOUT_CACHE: dict[tuple[str, str, int, str], DataFrame] = {}
 
 
 def cached_undirected_layout(
@@ -94,21 +95,16 @@ def cached_undirected_layout(
     bucketed-by-src edges table the nightly graph job stages once, so
     caching it per session is the honest local stand-in (same argument
     as cached_edges / the BM25 index)."""
-    key = (application_id(spark), sf_dir, min_weight)
+    # The layout is staged at the shuffle width (src_layout), so a session
+    # that changes the width needs a new one.
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    key = (application_id(spark), sf_dir, min_weight, width)
     if key not in _ULAYOUT_CACHE:
         if len(_ULAYOUT_CACHE) > 4:
             _ULAYOUT_CACHE.clear()
-        from orchestrated_etl_spark.compat import staged_checkpoint
-        from orchestrated_etl_spark.functions.graph import undirect
-
-        # staged_checkpoint (r18): a plain localCheckpoint under AQE
-        # loses the hashpartitioning(src) this layout exists to provide
-        # — every traversal round was silently re-exchanging it.
-        u = staged_checkpoint(
+        _ULAYOUT_CACHE[key] = src_layout(
             undirect(cached_edges(spark, sf_dir, min_weight=min_weight))
-            .repartition(default_parallelism(spark), F.col("src"))
         )
-        _ULAYOUT_CACHE[key] = u
     return _ULAYOUT_CACHE[key]
 
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from orchestrated_etl_spark.functions import dedup as D
 from orchestrated_etl_spark.functions.text import tokens
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
 # exact dedup (hash-groupBy) — corpus unioned with a shifted copy of
@@ -19,7 +20,7 @@ from orchestrated_etl_spark.registry import register
 
 
 def _exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     doubled = docs.union(
@@ -61,7 +62,7 @@ _MINHASH_THRESHOLD = 0.9
 
 
 def _minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return D.minhash_lsh_dedup(
         docs,
         "doc_id",
@@ -156,7 +157,7 @@ def _incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     store; history never self-joins), verified with exact shingle
     Jaccard. See functions/dedup.py incremental_minhash_flags for the
     staged-store scale posture."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     incoming = docs.where(F.col("doc_id") % 5 == 0)
     history = docs.where(F.col("doc_id") % 5 != 0)
     return D.incremental_minhash_flags(
@@ -211,7 +212,7 @@ _NGRAM_THRESHOLD = 0.02  # synthetic token-soup shingles barely overlap
 
 
 def _ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return D.jaccard_pairs(
         docs, "doc_id", D.shingles("text", 3), _NGRAM_THRESHOLD
     )
@@ -256,7 +257,7 @@ def _containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero (union-dominated), containment scores it 1.0 from the short
     side. The fixture corpus contains true containments (max = 1.0),
     so the threshold filter is exercised from both ends."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return D.containment_pairs(
         docs, "doc_id", D.shingles("text", 3), _CONTAINMENT_THRESHOLD
     )
@@ -299,7 +300,7 @@ def _levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     token (the product noun), in-block pairwise Levenshtein ≤ 4. The
     block key bounds the O(len²)-per-pair stage exactly as LSH bands
     bound minhash — the entity-resolution member of the dedup family."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = load_table(spark, sf_dir, "part")
     return D.levenshtein_blocked(
         part,
         "p_name",
@@ -329,7 +330,7 @@ register(
 
 
 def _simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return D.simhash16(docs, "doc_id", "text").select(
         F.col("_id").alias("doc_id"), "simhash"
     )
@@ -376,7 +377,7 @@ _COSINE_THRESHOLD = 0.4
 
 
 def _emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     return D.embedding_near_dup(
         emb, "vec_id", "embedding", "label", _COSINE_THRESHOLD
     )
@@ -414,7 +415,7 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     join+aggregate rounds to a fixpoint (functions/dedup.py
     connected_components); the oracle computes the same fixpoint with a
     recursive CTE. Docs with no near-dup are their own component."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = _minhash(spark, sf_dir)
     nodes = docs.select(F.col("doc_id").alias("id"))
     edges = pairs.select(
@@ -470,7 +471,7 @@ def _minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from orchestrated_etl_spark.functions.dedup import shingles
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     sh = docs.select("doc_id", shingles("text", 3).alias("sh"))
     tf = HashingTF(
         inputCol="sh", outputCol="features", numFeatures=1 << 18, binary=True
@@ -536,7 +537,7 @@ def _fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket rows. On this fixture one real leak exists (doc 245 ~ bench
     doc 8, j = 0.988) — the output is a genuine detection, not a
     vacuous all-false column."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") >= _BENCH_N)
     bench = docs.where(F.col("doc_id") < _BENCH_N)
     out = D.incremental_minhash_flags(

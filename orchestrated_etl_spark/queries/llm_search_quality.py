@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from orchestrated_etl_spark.compat import application_id
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
 
 _BM25_TERMS = ["spark", "window", "merge"]
 _BM25_K1 = 1.2
@@ -43,7 +44,7 @@ _BM25_B = 0.75
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return load_table(spark, sf_dir, "documents")
 
 
 # ---------------------------------------------------------------------------
@@ -531,7 +532,7 @@ def _search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.orderBy(F.col("score").desc(), F.col("doc_id")))
         .alias("rank_lex"),
     )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0)
     sem = brute_force_topk(q, emb, "vec_id", "embedding", 20).select(
         F.col("neighbor_id").alias("doc_id"),

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from orchestrated_etl_spark.compat import default_parallelism
 from orchestrated_etl_spark.functions import similarity as SIM
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
 
 _COS_SQL = (
     "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
@@ -37,7 +38,7 @@ def _query_pred():
 
 
 def _bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(_query_pred())
     return SIM.brute_force_topk(queries, emb, "vec_id", "embedding", 5)
 
@@ -69,7 +70,7 @@ register(
 
 
 def _ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8)
     queries = emb.filter(_query_pred())
     return SIM.ivf_topk(queries, emb, centroids, "vec_id", "embedding", 3)
@@ -119,7 +120,7 @@ register(
 
 
 def _ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8)
     queries = emb.filter(_query_pred())
     return SIM.ivf_topk(
@@ -172,7 +173,7 @@ register(
 
 
 def _norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     norm2 = F.aggregate(
         F.transform(
             "embedding", lambda x: x.cast("double") * x.cast("double")
@@ -223,7 +224,7 @@ def _normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential list_sum cannot flip a digit."""
     from orchestrated_etl_spark.functions.similarity import l2_normalize_pandas_udf
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     unit = emb.select(
         "vec_id",
         l2_normalize_pandas_udf()(F.col("embedding")).alias("u"),
@@ -264,7 +265,7 @@ def _udaf_mean_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation)."""
     from orchestrated_etl_spark.functions.similarity import mean_norm_grouped_udaf
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     udaf = mean_norm_grouped_udaf()
     # Grouped-agg pandas UDFs cannot share an agg() with JVM aggregates
     # (INVALID_PANDAS_UDF_PLACEMENT) — compute separately, join on the key.
@@ -298,7 +299,7 @@ def _groupmap_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from orchestrated_etl_spark.functions.dedup import vec_norm
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     norms = emb.select(
         "vec_id", "label", F.round(vec_norm(F.col("embedding")), 9).alias("l2")
     )
@@ -343,7 +344,7 @@ def _kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead."""
     from orchestrated_etl_spark.functions.similarity import kmeans_refine
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     cen = kmeans_refine(emb, "vec_id", "embedding", k=8, iters=3)
     return cen.select(
         "centroid_id",
@@ -363,7 +364,7 @@ def _sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate scores are exact integers — no float tolerance anywhere
     in the ranking). Same fixed-size 20-query set as the other sim_*
     queries."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(_query_pred())
     return SIM.sq8_topk(queries, emb, "vec_id", "embedding", 5)
 
@@ -431,7 +432,7 @@ def _mapinarrow_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["vec_id", "l2"],
             )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     emb = emb.repartition(
         default_parallelism(spark), F.col("vec_id")
     )
@@ -472,7 +473,7 @@ def _mrl_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches |Q| x 20 full vectors via broadcast id-join."""
     from orchestrated_etl_spark.functions.dedup import dot, vec_norm
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(_query_pred())
     prefix = F.slice("embedding", 1, 16)
     c = emb.repartition(
@@ -615,7 +616,7 @@ def _semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized trained K; the decision join shuffles only (id,
     cluster, bool) rows. Deterministic: assignment and drops both rank
     on the ROUNDED cosine with id tie-breaks."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8)
     assigned = SIM.assign_to_centroids(
         emb, centroids, "vec_id", "embedding"
@@ -711,7 +712,7 @@ def _tree_assign_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-style metric a production run tracks when tuning fanout.
     Both assignments rank on ROUNDED cosine with id tie-breaks; all
     joins are broadcast map passes; one final 8-row aggregate."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8)
     flat = SIM.assign_to_centroids(
         emb, centroids, "vec_id", "embedding"
@@ -854,7 +855,7 @@ def _brp_lsh_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     feats = emb.select(
         "vec_id",
         F.col("embedding").alias("_arr"),
@@ -941,7 +942,7 @@ def _kmeans_step_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine at IVF centroid-training scale (clusters are corpus/K); the
     production unordered tree-reduce trades bit-reproducibility for
     unbounded clusters, which is exactly why that variant is rows-only."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8)
     assigned = SIM.assign_to_centroids(emb, centroids, "vec_id", "embedding")
     members = assigned.groupBy("centroid_id").agg(

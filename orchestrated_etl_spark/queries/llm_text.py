@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.functions import text as X
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
 
 _STOP_SQL = "['" + "','".join(X.STOPWORDS) + "']"
 
@@ -18,7 +19,7 @@ _STOP_SQL = "['" + "','".join(X.STOPWORDS) + "']"
 
 
 def _token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         X.token_count("text").alias("n_tokens"),
@@ -47,7 +48,7 @@ register(
 
 
 def _quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         X.token_count("text").alias("n_tokens"),
@@ -88,7 +89,7 @@ register(
 
 
 def _lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("n_chars") * 1.0 / F.count(F.lit(1))).alias("avg_chars"),
@@ -118,7 +119,7 @@ register(
 
 
 def _word_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(X.tokens("text")).alias("word"))
         .groupBy("word")
@@ -144,7 +145,7 @@ register(
 
 
 def _fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", X.fingerprint("text").alias("fingerprint")
     )
@@ -167,7 +168,7 @@ register(
 
 
 def _lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select("lang", X.lang_id("text").alias("predicted"))
         .groupBy("lang", "predicted")
@@ -206,7 +207,7 @@ def _bpe_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/text.py bpe_ish_tokens) next to the whitespace count —
     the piece/word ratio is the standard fertility proxy for token-budget
     estimates. Per-lang aggregate; regexp_extract_all is JVM-side."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "lang",
         F.size(X.bpe_ish_tokens("text")).alias("n_pieces"),
@@ -257,7 +258,7 @@ def _pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluates them identically. The synthetic corpus contains no real
     PII — counts are legitimately zero — but the scrub plan itself is
     what's under test."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     scrubbed = F.regexp_replace(
         F.regexp_replace("text", _EMAIL_RE, "<EMAIL>"),
         _PHONE_RE,
@@ -290,7 +291,7 @@ def _repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     taken by its single most-frequent trigram (NON-distinct shingles —
     repeats are the signal). High values flag boilerplate/spam for the
     quality gate. One explode + two-level aggregate, shuffled on doc_id."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     t = F.split(F.col("text"), " ")
     idx = F.sequence(F.lit(1), F.greatest(F.size(t) - 2, F.lit(1)))
     grams = docs.select(
@@ -352,7 +353,7 @@ def _udtf_chunk_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield doc_id, idx, min(32, len(toks) - 32 * idx)
 
     spark.udtf.register("chunk_expand_udtf", ChunkExpand)
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
         "v_documents"
     )
     return spark.sql(
@@ -393,7 +394,7 @@ def _length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer at exact powers of two and flip the bucket — the integer
     form is exact at every boundary. Map-only projection + one
     aggregate."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     # exact integer log2: number of bits in n_chars minus 1
     bucket = (
         F.length(F.conv(F.col("n_chars").cast("string"), 10, 2)) - 1
@@ -438,7 +439,7 @@ def _url_parse_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     URL-dedup front end of a crawl pipeline; all map-side expressions,
     one host-sized aggregate. Oracle: regex equivalents (DuckDB has no
     parse_url)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://"),
         F.col("source"),

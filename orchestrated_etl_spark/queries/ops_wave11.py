@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.queries.scale_ops import _scratch
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -62,10 +63,10 @@ def _dq_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit's cost IS the fact scans and this halves them). Key uniqueness is a
     count-distinct vs count comparison in the same aggregate. Output:
     (rule, n_rows, n_violations), exact integers, one row per rule."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
 
     def viol(cond):
         return F.sum(F.when(cond, 1).otherwise(0))
@@ -214,7 +215,7 @@ def _sink_compacted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     preserves column stats for later pruning."""
     base = _scratch("compaction", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"
     )
     li.repartition(64).write.mode("overwrite").parquet(f"{base}/sharded")
@@ -267,7 +268,7 @@ def _sink_clustered_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction job lays out scan-dominant tables."""
     base = _scratch("clustered", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
     (
@@ -356,7 +357,7 @@ def _sink_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the original table."""
     base = _scratch("zorder", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
     stats = orders.agg(
@@ -472,7 +473,7 @@ def _src_file_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _scratch("lineage", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     orders = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        load_table(spark, sf_dir, "orders")
         .withColumn("order_year", F.year("o_orderdate"))
         .withColumn(
             "lineage_shard", F.col("o_orderkey") % F.lit(_LINEAGE_SHARDS)
@@ -621,7 +622,7 @@ def _sink_dynamic_partition_overwrite(
     per-write via the DataFrameWriter option (no session-wide state)."""
     base = _scratch("dyn_overwrite", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from orchestrated_etl_spark.operators import standardise as S
 from orchestrated_etl_spark.operators.enrich import enrich_metrics, flagship
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
 # flagship — the whole reference pipeline as one plan (SURVEY §7 step 1)
@@ -153,7 +154,7 @@ register(
 
 
 def _s3_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return S.drop_incomplete(
         li.select("l_orderkey", "l_linenumber", "l_quantity", "l_discount"),
         ["l_quantity", "l_discount"],
@@ -177,7 +178,7 @@ register(
 
 
 def _s5_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
@@ -200,7 +201,7 @@ register(
 
 
 def _t2_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return S.dedup_by_key_deterministic(
         docs.select("doc_id", "text", "lang"), ["text"], "doc_id"
     ).select("doc_id", "text", "lang")
@@ -221,7 +222,7 @@ register(
 
 
 def _t3_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -247,7 +248,7 @@ register(
 
 
 def _t4_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         S.extract_number("o_orderpriority", r"(\d)", "int").alias("priority_num"),
@@ -273,7 +274,7 @@ register(
 
 
 def _t5_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         S.strip_separators_to_long(F.format_number(F.col("n_chars") * 1000, 0)).alias(
@@ -298,7 +299,7 @@ register(
 
 
 def _t6_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = load_table(spark, sf_dir, "part")
     return S.project_drop(part, "p_name", "p_type", "p_retailprice")
 
 
@@ -315,9 +316,9 @@ register(
 
 
 def _a_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     joined = (
         li.select("l_orderkey", "l_quantity", "l_discount", "l_extendedprice")
         .join(orders.select("o_orderkey", "o_custkey"), li.l_orderkey == F.col("o_orderkey"))
@@ -391,7 +392,7 @@ def _c1p(col):
 
 
 def _q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -466,11 +467,11 @@ def _j1_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     at bench scale and degrades to a key-partitioned shuffle join past
     it); lineitem⋈orders is the one big-big join, and AQE converts even
     that to broadcast at small sf."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     return (
         li.select("l_orderkey", "l_extendedprice", "l_discount")
         .join(orders.select("o_orderkey", "o_custkey"), li.l_orderkey == F.col("o_orderkey"))
@@ -521,8 +522,8 @@ register(
 def _j_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join: every customer with order count + total spend
     (0 / NULL for customers with no orders — count(col) skips NULLs)."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         customer.select("c_custkey", "c_mktsegment")
         .join(
@@ -556,8 +557,8 @@ register(
 
 def _j_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (EXISTS): customers having ≥1 urgent order."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     return customer.select("c_custkey", "c_name").join(
         urgent, customer.c_custkey == urgent.o_custkey, "left_semi"
@@ -577,8 +578,8 @@ register(
 
 def _j_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join (NOT EXISTS): orders with no lineitems."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return orders.select("o_orderkey", "o_orderstatus").join(
         li.select("l_orderkey"), orders.o_orderkey == F.col("l_orderkey"), "left_anti"
     )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from orchestrated_etl_spark.operators import relational as R
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.schemas import EVENT_PROPS
-from orchestrated_etl_spark.sources.catalog import read_events
+from orchestrated_etl_spark.sources.catalog import load_table, read_events
 
 # ---------------------------------------------------------------------------
 # sort / top-k
@@ -20,7 +20,7 @@ from orchestrated_etl_spark.sources.catalog import read_events
 
 
 def _topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return R.top_k(
         orders.select("o_orderkey", "o_custkey", "o_totalprice"),
         50,
@@ -44,8 +44,8 @@ register(
 
 
 def _union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
     return (
         customer.select(F.col("c_nationkey").alias("nationkey"))
         .union(supplier.select(F.col("s_nationkey").alias("nationkey")))
@@ -65,8 +65,8 @@ register(
 
 
 def _intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
     return customer.select(F.col("c_nationkey").alias("nationkey")).intersect(
         supplier.select(F.col("s_nationkey").alias("nationkey"))
     )
@@ -84,8 +84,8 @@ register(
 
 
 def _except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
     # subtract == EXCEPT DISTINCT (exceptAll would keep multiplicity)
     return customer.select(F.col("c_nationkey").alias("nationkey")).subtract(
         supplier.select(F.col("s_nationkey").alias("nationkey"))
@@ -106,8 +106,8 @@ register(
 def _except_nonempty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order keys with no lineitems, as EXCEPT over key projections
     (non-empty: the fixtures contain childless orders)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return orders.select(F.col("o_orderkey").alias("orderkey")).subtract(
         li.select(F.col("l_orderkey").alias("orderkey"))
     )
@@ -129,8 +129,8 @@ def _intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys keep duplicate counts, where the DISTINCT form collapses them.
     Spark plans intersectAll as a count-and-replicate aggregate, not a
     join explosion."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select(F.col("l_orderkey").alias("orderkey"))
         .intersectAll(orders.select(F.col("o_orderkey").alias("orderkey")))
@@ -158,8 +158,8 @@ def _except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     order row, i.e. "line items beyond the first per order" as a
     multiset. The aggregate-based plan (no join fan-out) is the same
     shape Spark uses for intersectAll."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select(F.col("l_orderkey").alias("orderkey"))
         .exceptAll(orders.select(F.col("o_orderkey").alias("orderkey")))
@@ -187,7 +187,7 @@ register(
 
 
 def _win_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return R.top_k_per_group(
         orders.select("o_custkey", "o_orderkey", "o_totalprice"),
         ["o_custkey"],
@@ -217,7 +217,7 @@ def _win_rank_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ties. Appending l_quantity (the lagged value itself) restores a
     # deterministic MULTISET: rows equal on every sort key are adjacent,
     # so swapping them never changes the emitted (prev, next) values.
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_suppkey").orderBy(
         "l_shipdate", "l_orderkey", "l_linenumber", "l_quantity"
     )
@@ -252,7 +252,7 @@ def _win_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB's segment-tree windows, which can flip round(). Accumulating in
     # DECIMAL(18,2) is exact, so both engines produce bit-identical sums; the
     # avg is then one double division of identical inputs.
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -294,7 +294,7 @@ register(
 
 
 def _rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -316,7 +316,7 @@ register(
 
 
 def _cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(14,2)"))
         .cast("double").alias("sum_price"),
@@ -337,7 +337,7 @@ register(
 
 
 def _grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
@@ -369,7 +369,7 @@ register(
 
 
 def _pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
@@ -396,7 +396,7 @@ register(
 
 
 def _distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_supps"),
@@ -455,7 +455,7 @@ register(
 
 
 def _date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         F.year("o_orderdate").alias("yr"),
@@ -627,9 +627,7 @@ def _sql_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     and shuffle past it, partial agg, pushed predicates) as the
     DataFrame API."""
     for t in ("customer", "orders", "lineitem"):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(
-            f"v_{t}"
-        )
+        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
     return spark.sql(
         """
         SELECT l.l_orderkey AS orderkey,
@@ -694,7 +692,7 @@ def _ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_ntile_expr — SQL-standard ntile computed arithmetically from
     (rank, n), bucket assignment map-side. No stage sorts more than a
     range partition; output identical to ntile(10) OVER (...)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     ranked = R.grouped_rank_two_phase(
         orders.select("o_orderstatus", "o_totalprice", "o_orderkey"),
         ["o_orderstatus"],
@@ -737,7 +735,7 @@ def _stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-variable statistics per returnflag: sample stddev, Pearson
     correlation, covariance — all partial-aggregable (sum/sum-of-squares/
     cross-products combine map-side), so one pass at any scale."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.stddev_samp("l_extendedprice"), 4).alias("sd_price"),
@@ -763,7 +761,7 @@ def _unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt) the lineitem measures into (measure, value) rows via
     stack() — the inverse of pivot_status_qty — then profile each measure.
     stack is a generator expression: no shuffle until the aggregate."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     long = li.selectExpr(
         "l_returnflag",
         "stack(3, 'quantity', l_quantity, 'price', l_extendedprice,"
@@ -875,7 +873,7 @@ def _pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to the previous result, exactly how this engine's DataFrame
     pipelines read. Plan-identical to the nested-SELECT form; this query
     exists to pin the parser surface."""
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "orders_pipe_src"
     )
     return spark.sql(

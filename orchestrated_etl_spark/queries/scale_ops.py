@@ -29,6 +29,7 @@ from orchestrated_etl_spark import schemas
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources import sinks
 from orchestrated_etl_spark.sources.catalog import (
+    load_table,
     read_csv,
     read_events,
     read_json,
@@ -72,7 +73,7 @@ def _sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan stage; a rerun (or a different engine) selects the same rows,
     which ``df.sample()`` cannot guarantee.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.where(_bucket("o_orderkey") < int(_HASH_MOD * 0.10))
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -112,7 +113,7 @@ def _sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Identical output to the one-window form (same total order: hash,
     then key); both windows are partitioned, both bounded."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     order = [_bucket("o_orderkey").asc(), F.col("o_orderkey").asc()]
     salted = orders.select("o_orderkey", "o_orderstatus").withColumn(
         "_salt", _bucket("o_orderkey") % F.lit(_STRAT_SALTS)
@@ -152,7 +153,7 @@ def _percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated quartiles of o_totalprice per status. Exact
     percentile sorts within each group — fine at dashboard-grouping
     cardinality; the 100 TB path is percentile_approx (see sketches)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         F.round(F.expr("percentile(o_totalprice, 0.25)"), 4).alias("p25"),
         F.round(F.expr("percentile(o_totalprice, 0.50)"), 4).alias("p50"),
@@ -200,7 +201,7 @@ def _sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     pmed 256060.74 < interpolated qlo 256258.53 while the rank
     guarantee held); green at the driver's sf0.01 only because larger
     groups put interpolated neighbors inside the widened interval."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     eps = 3.0 / 10000  # 3× the documented rank-error bound
     return orders.groupBy("o_orderstatus").agg(
         F.approx_count_distinct("o_custkey", rsd=0.02).alias("_hll"),
@@ -528,7 +529,7 @@ def _csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dags/dag.py:65-119): external text in, explicit StructType, no
     inference pass over the data."""
     path = _scratch("csv_nation", sf_dir)
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    nation = load_table(spark, sf_dir, "nation")
     nation.write.mode("overwrite").option("header", "true").csv(path)
     return read_csv(spark, path, schemas.NATION)
 
@@ -545,7 +546,7 @@ def _json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive because Spark writes shortest-roundtrip representations;
     the aggregate is rounded on both sides regardless."""
     path = _scratch("json_orders", sf_dir)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     orders.write.mode("overwrite").json(path)
     back = read_json(spark, path, schemas.ORDERS)
     return back.groupBy("o_orderstatus").agg(
@@ -580,7 +581,7 @@ def _partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a low-cardinality key so downstream scans prune whole directories,
     then verify by reading back through the partition column."""
     path = _scratch("orders_by_status", sf_dir)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     sinks.write_parquet(
         orders, path, mode="overwrite", partition_by=["o_orderstatus"]
     )
@@ -633,7 +634,7 @@ def _bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
         shutil.rmtree(os.path.join(wh, table.lower()), ignore_errors=True)
-        df = spark.read.parquet(f"{sf_dir}/{src}.parquet")
+        df = load_table(spark, sf_dir, src)
         df.write.bucketBy(8, key).sortBy(key).mode("overwrite").saveAsTable(table)
 
     _ensure(ob, "orders", "o_orderkey")
@@ -816,7 +817,7 @@ def _binary_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _shutil.rmtree(base, ignore_errors=True)
     _os.makedirs(base, exist_ok=True)
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    nation = load_table(spark, sf_dir, "nation")
     for row in nation.select("n_nationkey", "n_name").collect():
         with open(f"{base}/{row['n_nationkey']:03d}.bin", "wb") as fh:
             fh.write(row["n_name"].encode("utf-8"))
@@ -896,7 +897,7 @@ def _merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates ∪ (base ANTI-JOIN updates) — the MERGE emulation for plain
     parquet. One shuffle on the key; with Delta/Iceberg this becomes
     MERGE INTO with file-level pruning, same logical shape."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     # +10% computed in DECIMAL: round(double*1.1, 2) tie-breaks differently
@@ -1040,7 +1041,7 @@ def _scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     only append (K4, dags/dag.py:198-204); this is the versioned
     correction path its near-duplicate accumulation actually needed."""
     eff = F.to_date(F.lit("1996-06-01"))
-    base = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    base = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
         F.to_date(F.lit("1995-01-01")).alias("valid_from"),
@@ -1114,7 +1115,7 @@ def _orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply to the ORC scan exactly as to parquet, so a 100 TB ORC lake
     needs no conversion pass to be queried by this engine."""
     path = _scratch("orc_supplier", sf_dir)
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    supplier = load_table(spark, sf_dir, "supplier")
     supplier.write.mode("overwrite").orc(path)
     back = read_orc(spark, path, schemas.SUPPLIER)
     return back.groupBy("s_nationkey").agg(
@@ -1151,7 +1152,7 @@ def _dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dim filter selects, never the whole table. Plan assertion in
     tests: the fact scan carries a ``dynamicpruning`` expression."""
     path = _scratch("orders_part_status", sf_dir)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     # one-time layout: directory-partition the fact on the join key
     sinks.write_parquet(
         orders, path, mode="overwrite", partition_by=["o_orderstatus"]
@@ -1214,10 +1215,10 @@ def _ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     shutil.rmtree(os.path.join(wh, tbl.lower()), ignore_errors=True)
-    spark.read.parquet(f"{sf_dir}/nation.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "nation").createOrReplaceTempView(
         "nation_ddl_src"
     )
-    spark.read.parquet(f"{sf_dir}/supplier.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "supplier").createOrReplaceTempView(
         "supplier_ddl_src"
     )
     spark.sql(
@@ -1268,7 +1269,7 @@ def _observed_standardise(spark: SparkSession, sf_dir: str) -> DataFrame:
     dags/dag.py:129-130,160-161). The observation is registered under a
     fixed name; callers fetch it from the QueryExecution listener or the
     Observation object — tests assert the captured values."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     cleaned = orders.select(
         "o_orderkey",
         "o_orderstatus",
@@ -1317,7 +1318,7 @@ def _hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-month grouping would otherwise emit a NULL-month sketch row
     # that the oracle's count(DISTINCT month) skips — a divergence the
     # current fixture never triggers but a regenerated one could.
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
+    orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate").isNotNull()
     )
     monthly = orders.groupBy(
@@ -1388,7 +1389,7 @@ def _sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-ulp libm ln() difference can never flip an ordering (ties then
     break on doc_id). One map-side key projection + one top-k — the
     mixture-sampling shape for corpus construction at any scale."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     u = ((F.col("doc_id") * _HASH_MULT) % _HASH_MOD + 0.5) / float(_HASH_MOD)
     key = F.round(F.log(u) / F.col("n_chars").cast("double"), 9)
     keyed = docs.select("doc_id", "n_chars", key.alias("ws_key"))

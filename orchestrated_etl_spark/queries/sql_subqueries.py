@@ -16,13 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
 
 
 def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
     for t in tables:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(
-            f"v_{t}"
-        )
+        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
 
 
 # ---------------------------------------------------------------------------
@@ -188,7 +187,7 @@ def _array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside whole-stage codegen; no explode, no shuffle, no UDF. At scale
     this is the difference between a map-only stage and a 64× row blowup
     through an exchange."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     dbl = F.transform("embedding", lambda x: x.cast("double"))
     return emb.select(
         "vec_id",

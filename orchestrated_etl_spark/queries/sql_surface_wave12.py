@@ -34,11 +34,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.registry import register
-from orchestrated_etl_spark.sources.catalog import read_events
+from orchestrated_etl_spark.sources.catalog import load_table, read_events
 
 
 def _li(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    return load_table(spark, sf_dir, "lineitem")
 
 
 # ---------------------------------------------------------------------------
@@ -148,7 +148,7 @@ def _bitwise_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact-bitmask rollup (feature flags, permission masks). Fully
     partial-aggregable: each is a commutative-associative fold, so the
     map-side combine does almost all the work."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     flag = (F.col("o_orderkey") % 256).cast("long")
     return orders.groupBy("o_orderpriority").agg(
         F.bit_or(flag).alias("flags_any"),
@@ -410,7 +410,7 @@ def _interval_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     DATE values — wall-clock, engine- and timezone-independent (the
     contract tests/test_timezone.py enforces). DuckDB's dayofweek is
     0=Sunday vs Spark's 1=Sunday — the oracle carries the +1."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
+    orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderkey") < 500
     )
     d = F.col("o_orderdate").cast("date")
@@ -556,7 +556,7 @@ def _width_bucket_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     dq_drift_psi's data-derived bins). The oracle spells the bucketing
     rule arithmetically (DuckDB has no width_bucket): identical doubles
     through floor((x-lo)/(hi-lo)*n)+1 on both engines."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select(
             F.expr(
@@ -676,10 +676,10 @@ def _shuffle_hash_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort phase, build-side hash table per partition). Hints change the
     PHYSICAL strategy only; the result is the plain join, which is the
     oracle. The plan pin lives in tests (ShuffledHashJoin node)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
+    orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderstatus") == "P"
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     joined = li.join(
         orders.hint("shuffle_hash"),
         li.l_orderkey == orders.o_orderkey,
@@ -727,7 +727,7 @@ def _approx_percentile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregable percentile for 100 TB groups — the scale path
     the exact percentile queries (agg_median_percentiles) document
     against."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     ap = orders.groupBy("o_orderpriority").agg(
         F.expr(
             f"approx_percentile(o_totalprice, array(0.5, 0.9), {_AP_ACCURACY})"
@@ -793,7 +793,7 @@ def _pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix); the scale path is keyset pagination (WHERE key > last_seen
     ORDER BY key LIMIT n), which is exactly how every *_topk query here
     bounds its scan. Total order ⇒ deterministic page."""
-    spark.read.parquet(f"{sf_dir}/nation.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "nation").createOrReplaceTempView(
         "nation_w12"
     )
     return spark.sql(
@@ -830,7 +830,7 @@ def _regexp_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     strpos of the first extract, regexp_extract(...)), which is what the
     oracle does; the -1/'' sentinels pin the no-match contracts so no
     NULL-bearing output column exists."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
+    docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < 200
     )
     return docs.select(

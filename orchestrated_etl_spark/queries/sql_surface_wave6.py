@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.registry import register
-from orchestrated_etl_spark.sources.catalog import read_events
+from orchestrated_etl_spark.sources.catalog import load_table, read_events
 
 # Both engines run the SAME recursive SQL text: a lead()-derived edge
 # list links each nation to the next key in its region; the recursion
@@ -62,7 +62,7 @@ def _recursive_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     that distinguishes true recursion from a fixed-length UNION chain).
     Dimension-sized input; each recursion step is a small join Catalyst
     plans independently."""
-    spark.read.parquet(f"{sf_dir}/nation.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "nation").createOrReplaceTempView(
         "v_nation_w6"
     )
     return spark.sql(_RECURSIVE_WALK_SQL.format(nation="v_nation_w6"))

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
 
 
 def _session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -29,7 +30,7 @@ def _session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql("DECLARE OR REPLACE VARIABLE status_var STRING DEFAULT 'F'")
     spark.sql("SET VAR price_floor = 150000.0")
     spark.sql("SET VAR status_var = 'O'")
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "orders_w7"
     )
     return spark.sql(
@@ -63,7 +64,7 @@ def _group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL / ORDER BY ALL: every non-aggregate select item
     becomes a grouping key — the analyst shorthand both engines support
     natively, so the SAME query text runs on Spark and DuckDB."""
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
         "lineitem_w7"
     )
     return spark.sql(
@@ -98,7 +99,7 @@ def _collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower() normalization. Emitted values are deterministic (counts and a
     min, never a collation-arbitrary representative); the oracle
     normalizes with lower(), which UTF8_LCASE matches for ASCII data."""
-    spark.read.parquet(f"{sf_dir}/part.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "part").createOrReplaceTempView(
         "part_w7"
     )
     return spark.sql(
@@ -132,7 +133,7 @@ def _identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     table-pickers, per-tenant table routing) that string concatenation
     gets wrong. The name binds at analysis, so Catalyst still prunes and
     pushes down as if the name were literal."""
-    spark.read.parquet(f"{sf_dir}/customer.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
         "customer_w7"
     )
     return spark.sql(
@@ -165,7 +166,7 @@ def _lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the whole chain constant-folds into a single codegen'd Project.
     The outer DOUBLE-normalizing projection exists only for the oracle
     dtype contract (DuckDB DECIMAL → pandas float64 vs Spark Decimal)."""
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
         "lineitem_w7b"
     )
     return spark.sql(
@@ -222,7 +223,7 @@ def _try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces each NULL contract with explicit CASE guards (DuckDB's
     double division yields inf rather than erroring, so the guard IS the
     portable semantics)."""
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
         "lineitem_w7c"
     )
     return spark.sql(

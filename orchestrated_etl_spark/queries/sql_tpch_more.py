@@ -25,10 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from orchestrated_etl_spark.sources.catalog import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -45,9 +42,9 @@ def _q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final top-k is TakeOrderedAndProject (k rows per partition to
     the driver), not a global sort. Ties broken by custkey for
     cross-engine determinism."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     # exact DECIMAL accumulation (2-decimal factors, scale-4 product);
     # no round() on a cross-engine-compared double
     revenue = F.sum(
@@ -102,8 +99,8 @@ def _q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     — r18 review wording fix), one aggregate — the conditional-sum
     ratio replaces the naive filtered-self-join formulation (two fact
     scans + an extra join) that would double the I/O at 100 TB."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice").cast("decimal(14,2)") * (
         1 - F.col("l_discount")
     ).cast("decimal(4,2)")
@@ -162,9 +159,9 @@ def _q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side), then semi-joins back — at scale this is two passes over
     lineitem and one shuffle each, with the second pass's join key list
     small enough that AQE usually converts it to a broadcast."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     big = (
         lineitem.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sum_qty"))
@@ -221,8 +218,8 @@ def _q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     side grows with SF; r18 review wording fix) — the naive reading
     (three separate joins unioned, or worse a cartesian product
     filtered late) never materialises."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     j = lineitem.join(
         part, F.col("l_partkey") == F.col("p_partkey")
     )

@@ -41,10 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from orchestrated_etl_spark.sources.catalog import load_table
 
 
 def _rev():
@@ -69,14 +66,14 @@ def _q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; lineitem->orders is the only big shuffle; the
     c_nationkey = s_nationkey equality is a post-join filter Catalyst
     keeps next to the join so mismatched rows die before the aggregate."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").where(
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").where(
         F.year("o_orderdate") == 1996
     )
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     return (
         lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(supplier, F.col("l_suppkey") == F.col("s_suppkey"))
@@ -131,7 +128,7 @@ def _q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     WholeStageCodegen span with a single-row result — the cheapest
     possible shape at 100 TB (no shuffle at all beyond the final 1-row
     exchange)."""
-    lineitem = _t(spark, sf_dir, "lineitem")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     return (
         lineitem.where(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -176,11 +173,11 @@ def _q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric pair predicate is a residual filter on the joined row, not
     a join-condition disjunction, so the two big joins stay plain hash
     joins."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     n1 = nation.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
@@ -247,13 +244,13 @@ def _q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     second scan of lineitem. Customer nation restricts to the ASIA
     region (broadcast chain nation->region); the supplier nation only
     feeds the CASE, so it joins by key without filtering."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-    part = _t(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
+    part = load_table(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     n_cust = nation.select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_rkey")
     )
@@ -325,11 +322,11 @@ def _q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join/group shape is unchanged.) The LIKE filter prunes the part
     dim BEFORE broadcast, so the fact-side hash probe only carries
     matching partkeys."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    part = _t(spark, sf_dir, "part").where(F.col("p_name").contains("red"))
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    supplier = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    part = load_table(spark, sf_dir, "part").where(F.col("p_name").contains("red"))
     return (
         lineitem.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -381,8 +378,8 @@ def _q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     shape.) Two aggregations: the first shuffles on custkey, the second
     on the tiny count domain — AQE collapses the second into a handful
     of partitions."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").where(
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderpriority") != "5-LOW"
     )
     per_cust = (
@@ -430,8 +427,8 @@ def _q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse the exchange instead of recomputing the aggregate. Revenue is
     rounded to 2dp BEFORE the max-equality so the comparison is exact
     across engines."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    supplier = _t(spark, sf_dir, "supplier")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    supplier = load_table(spark, sf_dir, "supplier")
     revenue = (
         lineitem.where(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -492,9 +489,9 @@ def _q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no other supplier's line was returned) become semi/anti joins on
     l_orderkey, sharing the shuffle key with the outer scan, so the
     fact table shuffles once per branch and never nested-loops."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
-    supplier = _t(spark, sf_dir, "supplier")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
+    supplier = load_table(spark, sf_dir, "supplier")
     l1 = lineitem.where(F.col("l_returnflag") == "R")
     other = lineitem.select(
         F.col("l_orderkey").alias("o2_orderkey"),
@@ -568,7 +565,7 @@ def _q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a date-filtered orders projection — at 100 TB the orders side
     prunes to the recent partitions before the anti-join."""
     for t in ("customer", "orders", "nation"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"{t}_q22")
+        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_q22")
     return spark.sql(
         """
         SELECT n.n_name AS nation, count(*) AS numcust,
@@ -604,10 +601,10 @@ def _q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     only non-broadcast join in the TPC-H set) feeding disjunctive
     conditional counts per class. The orderkey join carries the shuffle;
     the shipdate range predicate pushes into the lineitem scan."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))

@@ -39,13 +39,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
 
 
 def _views(spark: SparkSession, sf_dir: str, tag: str, *tables: str) -> None:
     for t in tables:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(
-            f"{t}_{tag}"
-        )
+        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_{tag}")
 
 
 # ---------------------------------------------------------------------------

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.registry import register
-from orchestrated_etl_spark.sources.catalog import read_events
+from orchestrated_etl_spark.sources.catalog import load_table, read_events
 
 
 # ---------------------------------------------------------------------------
@@ -118,7 +118,7 @@ def _range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     dates. Issued as SQL text (the DataFrame ``rangeBetween`` API takes
     only numeric offsets; interval frames are SQL-surface). Window is
     partitioned by customer — no global sort at any scale."""
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "v_orders_w4"
     )
     return spark.sql(
@@ -165,7 +165,7 @@ def _filtered_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plus bool_and/bool_or/count_if) — the single-pass replacement for
     the reference's three-separate-groupbys style (dags/dag.py:167-181).
     One hash aggregate, map-side partials, no self-joins."""
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
         "v_lineitem_w4"
     )
     return spark.sql(
@@ -213,7 +213,7 @@ def _string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dags/dag.py:138-146 did only replace+cast) extended to the full
     set an entity-resolution / catalog-cleaning pipeline needs. Pure
     map-stage projection: no shuffle, whole-stage codegen."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = load_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
         F.lpad("p_brand", 12, "*").alias("brand_padded"),
@@ -254,7 +254,7 @@ def _char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate low), averaged per lang. Explode → two hash aggregates,
     all JVM expressions; the explode fan-out (~n_chars rows) combines
     map-side immediately, so the shuffle carries only (doc, char) counts."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     chars = docs.select(
         "doc_id",
         "lang",
@@ -374,7 +374,7 @@ def _split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan stage with no shuffle, and any future re-shard keeps every
     document's split stable. Reports per-(split, lang) composition —
     the skew check run before training."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("long")
@@ -589,7 +589,7 @@ def _pandas_api_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     float sums were quietly nondeterministic."""
     import pyspark.pandas as ps  # noqa: F401  (API under test)
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     pdf = li.pandas_api()
     pdf = pdf.assign(qty_int=pdf.l_quantity.astype("int"))
     out = pdf.groupby("l_returnflag").agg(

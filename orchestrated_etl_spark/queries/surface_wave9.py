@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.queries.scale_ops import _scratch
+from orchestrated_etl_spark.sources.catalog import load_table
 
 
 def _src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -34,7 +35,7 @@ def _src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     never serve stale batches."""
     base = _scratch("schema_evolution", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     y = F.year("o_orderdate")
     # old writer: no priority column yet
     orders.where(y == 1996).select(
@@ -107,7 +108,7 @@ def _text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-prob is genuinely irrational → round(…,6) is the cross-engine
     tolerance (registry.py float policy), and ordering ties break on
     doc_id."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
         "docs_ulm"
     )
     return spark.sql(
@@ -165,7 +166,7 @@ def _agg_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-partition arbitrarily."""
     base = _scratch("incremental_rollup", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     keys = ["o_orderstatus", "o_orderpriority"]
     cutoff = F.col("o_orderdate") < "1998-01-01"
 
@@ -234,10 +235,10 @@ def _agg_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows with l_suppkey % 7 == 0 (both sides genuinely change)."""
     base = _scratch("incremental_join_view", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_suppkey",
         F.col("l_extendedprice").cast("decimal(18,2)").alias("price"),

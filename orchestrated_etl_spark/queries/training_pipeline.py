@@ -16,6 +16,7 @@ from orchestrated_etl_spark.functions import text as X
 from orchestrated_etl_spark.functions.dedup import shingle_rows
 from orchestrated_etl_spark.functions.dedup import shingles as D_shingles
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
 
 _HASH_MULT = 2654435761
 _HASH_MOD = 4294967296
@@ -43,7 +44,7 @@ def _cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     global top-15 member — phase 2 re-ranks the ≤ 15·32 survivors per
     source, a window bounded at 480 rows BY CONSTRUCTION, independent
     of corpus size. Identical output (same total order: doc_id)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     salted = docs.select("doc_id", "source", "lang").withColumn(
         "_salt", F.col("doc_id") % F.lit(_CAP_SALTS)
     )
@@ -126,7 +127,7 @@ def _token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-sum shape (packing stays per-source by construction — a
     GLOBAL ordered window would serialise through one partition at
     100 TB, and a source-partitioned one through ~20)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "source", X.token_count("text").alias("n_tokens")
     )
@@ -160,7 +161,7 @@ def _mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter of everything else — via the same deterministic per-key hash
     as scale_ops (reproducible across reruns and engines, evaluated in the
     scan stage, no shuffle at all)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     weight = (
         F.when(F.col("lang") == "en", F.lit(1.0))
         .when(F.col("lang") == "zh", F.lit(0.5))
@@ -211,7 +212,7 @@ def _temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter still evaluates map-side with no fact-table shuffle. Output
     is the per-language audit (before/after/rate), exact integers plus
     the one blessed sqrt."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     n_min = counts.agg(F.min("n_docs").alias("_n_min"))
     rates = counts.crossJoin(F.broadcast(n_min)).select(
@@ -274,7 +275,7 @@ def _profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row data-quality profile of `documents`: row count, null counts,
     distinct cardinalities, length extremes. A single partial-aggregable
     pass — the shape of every profiling/validation job at scale."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("text").isNull().cast("long")).alias("null_text"),
@@ -321,7 +322,7 @@ def _chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM expressions (split/sequence/explode/slice): no UDF, no shuffle at
     all — chunking is embarrassingly parallel and stays inside whole-stage
     codegen."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     ts = docs.select("doc_id", F.split("text", " ").alias("ts")).withColumn(
         "nc",
         F.greatest(
@@ -377,7 +378,7 @@ def _build_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregable — the only heavy stage), then rank by (count DESC, word)
     for a deterministic id assignment. The final window runs over V rows,
     not the corpus, so the global ordering is cheap at any corpus size."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select(F.explode(X.tokens("text")).alias("word"))
         .groupBy("word")
@@ -420,7 +421,7 @@ def _oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab is tiny by construction → broadcast anti-membership via a left
     join, aggregated per lang. The corpus-side explode+join is the only
     O(tokens) stage and shuffles once on the word."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     vocab = _build_vocab(spark, sf_dir).select("word")
     toks = docs.select("lang", F.explode(X.tokens("text")).alias("word"))
     flagged = toks.join(
@@ -475,7 +476,7 @@ def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the corpus side explodes its shingles once and semi-joins —
     linear in corpus tokens, no pairwise stage at all. Returns the flagged
     doc ids with how many distinct benchmark shingles they hit."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     bench = docs.where(F.col("doc_id") < _BENCH_DOCS)
     bench_sh = (
         bench.select(F.explode(D_shingles("text", _DECONTAM_N)).alias("sh"))
@@ -563,7 +564,7 @@ def _e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pipe = Pipeline(
         name="training_data_e2e",
-        source=lambda s: s.read.parquet(f"{sf_dir}/documents.parquet"),
+        source=lambda s: load_table(s, sf_dir, "documents"),
         stages=[
             Stage("dedup", dedup_stage),
             Stage("quality", quality_stage),
@@ -635,7 +636,7 @@ def _dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     constants. The oracle reproduces it with the explode + row_number
     formulation — which is also the Spark fallback if documents were
     ever long enough for per-doc O(L²) to matter."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     t = F.split("text", " ")
     n_seg = F.ceil(F.size(t) / F.lit(2.0)).cast("int")
     lines = F.transform(
@@ -703,7 +704,7 @@ def _dedup_lines_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefer re-scanning over checkpointing the exploded line relation,
     which is itself corpus-sized. The threshold is a lazy scalar
     (broadcast one-row count), not a driver-side collect."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     t = F.split("text", " ")
     n_seg = F.ceil(F.size(t) / F.lit(2.0)).cast("int")
     lines = F.transform(
@@ -806,7 +807,7 @@ def _epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     forced, justified: the epoch×shard domain is fixed by
     construction. The two epochs are an explode, i.e. the epoch
     dimension fans out map-side, not as separate jobs."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     epochs = docs.select(
         "doc_id", F.explode(F.array(F.lit(0), F.lit(1))).alias("epoch")
     )

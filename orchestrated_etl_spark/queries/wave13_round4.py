@@ -44,7 +44,7 @@ from orchestrated_etl_spark.queries.graph_wave10 import (
     cached_undirected_layout,
 )
 from orchestrated_etl_spark.registry import register
-from orchestrated_etl_spark.sources.catalog import read_events
+from orchestrated_etl_spark.sources.catalog import load_table, read_events
 
 
 # ---------------------------------------------------------------------------
@@ -143,7 +143,7 @@ def _snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     is table-wide. The comparison covers the mutable columns
     (o_totalprice here); schema evolution between versions is
     src_schema_evolution's department."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
     a = orders
@@ -255,11 +255,11 @@ def _bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full fact table against a selective dim: rows failing the
     membership test never leave the scan stage."""
     sup = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
+        load_table(spark, sf_dir, "supplier")
         .where(F.col("s_acctbal") > 9000)
         .select("s_suppkey")
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_extendedprice", "l_discount"
     )
     return bloom_prefilter_core(sup, li)
@@ -356,7 +356,7 @@ def _er_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     failure mode: production blockers compose multiple keys (name +
     brand prefix) or salt oversized blocks, both of which only shrink
     blocks and slot into the same plan."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
+    part = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"
     )
     a = part.alias("a")
@@ -527,7 +527,7 @@ def _skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
       blocking bound: Sigma band_size^2, tunable via band width).
     At 100 TB the bands are the partitioning; every data-sized op is
     a hash shuffle on band or a broadcast of the #bands-row stats."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
+    part = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_retailprice",
         "p_size",
@@ -776,7 +776,7 @@ def _pipe_syntax_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one scan, one partial+final aggregate), so this is an API-surface
     query: the engine accepts BOTH spellings of the same plan. DECIMAL
     accumulation cast to double per the registry float policy."""
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "v_orders_pipe"
     )
     return spark.sql(
@@ -826,7 +826,7 @@ def _lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     LATERAL surface (the thing this query demonstrates) is unchanged.
     Deterministic tie-break on s_suppkey; DuckDB runs the single-pass
     statement (identical result: same total order both phases)."""
-    spark.read.parquet(f"{sf_dir}/supplier.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "supplier").createOrReplaceTempView(
         "v_supplier_lat"
     )
     return spark.sql(
@@ -899,7 +899,7 @@ def _spatial_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where(F.col("user_id").isNotNull()).select("user_id").distinct(),
         "user_id", 2654435761, 0, 40503, 7,
     ).withColumn("_ux", F.col("x")).withColumn("_uy", F.col("y"))
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = load_table(spark, sf_dir, "part")
     stores = _spatial_points(
         part.where(F.col("p_partkey") < 200).select(
             F.col("p_partkey").alias("store_id")
@@ -1079,7 +1079,7 @@ def _multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB wide multi-distincts either split into joined single-
     distinct passes or drop to approx_count_distinct
     (agg_approx_sketches is that registered path)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.count_distinct("o_custkey").alias("n_customers"),
         F.count_distinct(F.date_trunc("month", F.col("o_orderdate"))).alias(
@@ -1116,7 +1116,7 @@ def _parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-folds them so pushdown/pruning see real literals (the
     filter reaches the parquet scan exactly as if written inline).
     The oracle inlines the same values."""
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "v_orders_param"
     )
     return spark.sql(
@@ -1246,7 +1246,7 @@ def _incremental_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantum sits 8+ orders above the drift, making a boundary flip
     probability ~4e-9 instead of certainty-of-ulp-mismatch. The mean
     needs no grid: S fits 2^53, its cast is exact on both engines."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus",
         F.date_trunc("month", F.col("o_orderdate")).alias("_m"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("_x"),
@@ -1367,7 +1367,7 @@ def _rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-frame semantics under gaps. A rolling median over a per-key
     fact-sized series would partition by key instead and skip the
     padding entirely; the frame logic is unchanged."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     daily = (
         orders.groupBy(
             F.col("o_orderdate").cast("date").alias("day")

@@ -47,7 +47,7 @@ from orchestrated_etl_spark.functions.graph import degrees
 from orchestrated_etl_spark.operators.relational import global_rank_two_phase
 from orchestrated_etl_spark.queries.graph_wave10 import _EDGE_CTE, cached_edges
 from orchestrated_etl_spark.registry import register
-from orchestrated_etl_spark.sources.catalog import read_events
+from orchestrated_etl_spark.sources.catalog import load_table, read_events
 
 # ---------------------------------------------------------------------------
 # local clustering coefficient
@@ -436,7 +436,7 @@ def _countmin_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(keys); the stored-sketch pattern of agg_hll_sketch_merge applied
     to frequencies). The probe side is a top-k (TakeOrdered, no global
     sort) fanned x4 and hash-joined against the tiny sketch."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("k")
     )
     rb = F.explode(
@@ -575,7 +575,7 @@ def _cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of corpus size."""
     import pandas as pd
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 
@@ -728,7 +728,7 @@ def _bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The result is EXACT, so the oracle is a plain count(DISTINCT) —
     the strongest possible cross-engine check of the bitmap path."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.trunc("l_shipdate", "month").alias("ship_month"),
         F.col("l_partkey").alias("k"),
     )
@@ -806,7 +806,7 @@ def _chi2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one fact pass builds the contingency table; everything
     after operates on O(categories²) rows broadcast-side."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     obs = orders.groupBy(
         F.col("o_orderpriority").alias("pri"),
         F.col("o_orderstatus").alias("st"),
@@ -907,7 +907,7 @@ def _corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     model-based quality scoring. Correlations are genuinely irrational
     → round(,6) tolerance (float-policy exception c), as
     graph_assortativity establishes for cross-engine corr()."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     pairs = [
         ("l_quantity", "l_extendedprice", "qty_price"),
         ("l_quantity", "l_discount", "qty_disc"),
@@ -1290,7 +1290,7 @@ def _named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the named clause isn't sugar only: it guarantees frame/partition
     identity, which is what lets Catalyst compute both in one Window
     operator."""
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
+    load_table(spark, sf_dir, "events").createOrReplaceTempView(
         "v_events_w15"
     )
     return spark.sql(_NAMED_WINDOW_SQL.format(events="v_events_w15"))
@@ -1433,7 +1433,7 @@ def _trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-cardinality groups; at unbounded cardinality swap in the
     histogram cutoffs of events_rfm_quantile_cutoffs), one filtered
     re-aggregate with the 3-row cutoff relation broadcast."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", F.col("o_totalprice").cast("decimal(18,2)").alias("x")
     )
     cuts = orders.groupBy("o_orderstatus").agg(
@@ -1530,8 +1530,8 @@ def _gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded). The former nation-partitioned window sorted each
     nation's whole customer population in ONE task (parallelism 25
     forever); no stage sorts more than a range partition now."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
     rev = orders.groupBy("o_custkey").agg(
@@ -1911,7 +1911,7 @@ def _label_centroid_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     K²·d pair stage is centroid-sized (K labels, d dims). The exact
     same shape serves source-vs-source redundancy at any corpus
     size."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     cent = (
         emb.select("label", F.posexplode("embedding").alias("dim", "v"))
         .groupBy("label", "dim")
@@ -2008,7 +2008,7 @@ def _scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     the small fixture history, shuffle-hash takes over at scale; the
     fact table shuffles once on the join key at most."""
     eff = F.to_date(F.lit("1996-06-01"))
-    base = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    base = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     changed = base.where(F.col("c_custkey") % 10 == 0) \
@@ -2030,7 +2030,7 @@ def _scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("date").alias("valid_to"),
     )
     dim = v1.unionByName(v2)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderdate").cast("date").alias("od"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
@@ -2095,7 +2095,7 @@ def _dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial-aggregable groupBy(source); the exact
     percentile buffers one source's lengths (bounded by per-source doc
     counts; swap in histogram cutoffs past that)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "source",
         "lang",
         F.length("text").alias("n_chars_m"),
@@ -2172,7 +2172,7 @@ def _bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     with counts — corpus-sized work once, vocabulary-sized work per
     merge), which is exactly the staged shape here: `words` is the
     distinct-word relation with frequencies."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
             F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
@@ -2353,7 +2353,7 @@ def _countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle recomputes the same arithmetic globally — equality
     PROVES the merge identity cross-engine."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.trunc("l_shipdate", "month").alias("m"),
         F.col("l_partkey").alias("k"),
     )
@@ -2469,7 +2469,7 @@ def _bitmap_rollup_quarters(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarser-grain consumption side of agg_bitmap_distinct's monthly
     store. Oracle = plain count(DISTINCT) per quarter: equality proves
     the OR-merge identity."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.trunc("l_shipdate", "month").alias("m"),
         F.col("l_partkey").alias("k"),
     )
@@ -2542,7 +2542,7 @@ def _pack_nfd_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard ≫ cap), with per-source metrics recovered by summing shard
     rows. The oracle pins the exact per-source form at fixture
     scale."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
         "doc_id",
@@ -2661,7 +2661,7 @@ def _basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan_audit SCALAR_BROADCAST_OK). Output is a TakeOrdered top-k,
     never a global sort."""
     li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
@@ -2864,7 +2864,7 @@ def _pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregable); per-doc fan-out is |vocab_doc|², bounded by
     document length — the same contract as shingling. N and the
     unigram doc-frequencies are vocabulary-sized broadcasts."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     words = docs.repartition(
@@ -3104,7 +3104,7 @@ def _zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets — instead of the former unpartitioned rank window (a
     single-executor vocabulary sort at 100x). The regression is one
     distributed regr_* aggregate pass over the ranked relation."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     freq = (
         docs.select(
             F.explode(
@@ -3203,7 +3203,7 @@ def _histogram_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact-DECIMAL global min/max (one 1-row broadcast), so bucket
     assignment floor((x-lo)/w) is a fixed IEEE chain on identical
     operands — no boundary drift between engines."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         F.date_trunc("month", "o_orderdate").alias("m"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("x"),
     )
@@ -3504,7 +3504,7 @@ def _sampled_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan only the sample partition and keep the exact total as a
     stored aggregate — the point of AQP is skipping the full scan;
     here the single pass keeps the contract checkable)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_totalprice").cast("decimal(19,2)").alias("x")
     )
     in_s = F.col("o_orderkey") % 10 == 0

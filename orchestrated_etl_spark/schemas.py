@@ -3,10 +3,19 @@
 The reference infers schemas implicitly from scraped dicts and pandas
 ``to_numeric`` (/root/reference/dags/dag.py:117,138-146) and only declares
 types at the Postgres sink DDL (dags/dag.py:40-58). We invert that: schemas
-are declared up front (FIXTURES.md §B, verified against the parquet footers)
-and every cast is explicit. Parquet is self-describing, so readers use the
-footer schema; these StructTypes are the contract used for validation,
-``createDataFrame``, and streaming sources (which cannot infer).
+are declared up front (FIXTURES.md §B) and every cast is explicit. The
+fixture readers (sources/catalog.py) read parquet with these StructTypes
+instead of the footer schema: a declared read launches no inference job.
+tests/test_schemas.py pins every declared table schema to the fixture
+footers (nullability aside — Spark reads files as nullable anyway), so
+fixture drift fails a test instead of being silently re-inferred.
+
+Timestamps: the fixtures store wall-clock TIMESTAMP(MICROS) without a
+zone, which is TIMESTAMP_NTZ; declaring them ``TimestampType`` (LTZ)
+would shift every value by the session zone. Only events ``ts`` varies
+(``events_schema``): the events file stream declares it LTZ, because
+watermarks reject NTZ, and both events readers follow a nanos or zoned
+``ts`` found by their shared footer probe (sources/catalog.py).
 """
 
 from __future__ import annotations
@@ -66,7 +75,7 @@ ORDERS = T.StructType(
         T.StructField("o_custkey", T.LongType(), False),
         T.StructField("o_orderstatus", T.StringType(), True),
         T.StructField("o_totalprice", T.DoubleType(), True),
-        T.StructField("o_orderdate", T.TimestampType(), True),
+        T.StructField("o_orderdate", T.TimestampNTZType(), True),
         T.StructField("o_orderpriority", T.StringType(), True),
     ]
 )
@@ -83,7 +92,7 @@ LINEITEM = T.StructType(
         T.StructField("l_tax", T.DoubleType(), True),
         T.StructField("l_returnflag", T.StringType(), True),
         T.StructField("l_linestatus", T.StringType(), True),
-        T.StructField("l_shipdate", T.TimestampType(), True),
+        T.StructField("l_shipdate", T.TimestampNTZType(), True),
     ]
 )
 
@@ -92,13 +101,26 @@ LINEITEM = T.StructType(
 EVENTS = T.StructType(
     [
         T.StructField("event_id", T.LongType(), False),
-        T.StructField("ts", T.TimestampType(), False),
+        T.StructField("ts", T.TimestampNTZType(), False),
         T.StructField("user_id", T.LongType(), True),
         T.StructField("event_type", T.StringType(), True),
         T.StructField("value", T.DoubleType(), True),
         T.StructField("props", T.StringType(), True),  # JSON text
     ]
 )
+
+
+def events_schema(ts_type: T.DataType) -> T.StructType:
+    """``EVENTS`` with ``ts`` declared as ``ts_type`` (the type
+    ``sources/catalog.events_ts_type`` probes from the footer, or
+    TimestampType for the file stream)."""
+    return T.StructType(
+        [
+            T.StructField("ts", ts_type, f.nullable) if f.name == "ts" else f
+            for f in EVENTS
+        ]
+    )
+
 
 # JSON payload schema inside events.props (the analogue of the reference's
 # HTML field extraction, dags/dag.py:83-92 → S2 in SURVEY §2.1).

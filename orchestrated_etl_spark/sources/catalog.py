@@ -10,10 +10,12 @@ pruning there is the single biggest lever.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from orchestrated_etl_spark import schemas
 
@@ -21,12 +23,21 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table (parquet, self-describing footer schema)."""
+    """Read one fixture table with its declared schema (``schemas.TABLES``).
+
+    This is the engine's one fixture reader. Without a schema, every
+    parquet read first runs a footer-inference job (95-130 ms and one job
+    per table read on a 4-core host, against 13-28 ms and no job when
+    declared), and a multi-table query pays that once per table before
+    its own action. The declared schemas are pinned to the fixture
+    footers by tests/test_schemas.py: a declared read does not check the
+    file (a declared column the file lacks reads as all-null), so drift
+    must fail that test instead."""
     if name not in schemas.TABLES:
         raise KeyError(f"unknown table {name!r}; known: {sorted(schemas.TABLES)}")
     if name == "events":
         return read_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(schemas.TABLES[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def nanos_to_micros_ts(col: str = "ts"):
@@ -45,26 +56,56 @@ def nanos_to_micros_ts(col: str = "ts"):
     )
 
 
-def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet stores ``ts`` as TIMESTAMP(NANOS), which Spark's
-    parquet reader rejects outright (PARQUET_TYPE_ILLEGAL). Read the
-    physical INT64 as nanoseconds-since-epoch (legacy conf) and truncate to
-    microsecond TimestampType — the same floor-truncation DuckDB applies,
-    so oracle comparisons agree.
+def events_ts_type(sf_dir: str) -> T.DataType:
+    """The type to declare for events ``ts``, from one parquet footer read
+    on the driver (pyarrow, no Spark job); the batch and stream events
+    readers share this probe. ``sf_dir/events.parquet`` may be one file or
+    a directory of part files (the first part's footer decides).
 
-    SESSION-WIDE SIDE EFFECT (deliberate; round-14 review made it
-    signature-level doc, mirroring read_events_stream): the
-    ``nanosAsLong`` conf stays set because it is consulted again at
-    EXECUTION time, not just at this schema probe — a scoped restore
-    would break the very frame this function returns. Consequence: any
-    OTHER nanos-timestamp parquet read later in the session also comes
-    back as bigint nanos instead of erroring; a session that must read
-    foreign nanos files as errors should use a separate session."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(raw.dtypes)["ts"] == "bigint":  # TIMESTAMP(NANOS) physical int64
-        raw = raw.withColumn("ts", nanos_to_micros_ts("ts"))
-    return raw.select("event_id", "ts", "user_id", "event_type", "value", "props")
+    - TIMESTAMP(NANOS), an earlier fixture generation: LongType, the
+      physical INT64 read under ``nanosAsLong`` (Spark's reader rejects
+      NANOS outright) and converted by ``nanos_to_micros_ts``;
+    - a zoned timestamp (INT96, or isAdjustedToUTC=true — what Spark
+      writes for a TimestampType column): TimestampType;
+    - a wall-clock timestamp (isAdjustedToUTC=false, the current
+      fixtures): TimestampNTZType, as ``schemas.EVENTS`` declares."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    first = ds.dataset(f"{sf_dir}/events.parquet", format="parquet").files[0]
+    footer = pq.ParquetFile(first).schema
+    ts = footer.column(footer.names.index("ts"))
+    logical = json.loads(ts.logical_type.to_json())
+    if logical.get("timeUnit") == "nanoseconds":
+        return T.LongType()
+    if ts.physical_type == "INT96" or logical.get("isAdjustedToUTC"):
+        return T.TimestampType()
+    return T.TimestampNTZType()
+
+
+def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet with the declared ``schemas.EVENTS`` columns; ``ts``
+    takes the type ``events_ts_type`` finds in the footer (TIMESTAMP_NTZ
+    for the fixtures). A TIMESTAMP(NANOS) ``ts`` is read as nanoseconds
+    since the epoch and floor-truncated to a microsecond TimestampType —
+    the same truncation DuckDB applies, so oracle comparisons agree.
+
+    SESSION-WIDE SIDE EFFECT, nanos files only (deliberate; mirrors
+    read_events_stream): the ``nanosAsLong`` conf stays set because it is
+    consulted again at EXECUTION time, not just at read time — a scoped
+    restore would break the very frame this function returns.
+    Consequence: any OTHER nanos-timestamp parquet read later in the
+    session also comes back as bigint nanos instead of erroring; a
+    session that must read foreign nanos files as errors should use a
+    separate session."""
+    ts_type = events_ts_type(sf_dir)
+    nanos = isinstance(ts_type, T.LongType)
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = spark.read.schema(schemas.events_schema(ts_type)).parquet(
+        f"{sf_dir}/events.parquet"
+    )
+    return raw.withColumn("ts", nanos_to_micros_ts("ts")) if nanos else raw
 
 
 def read_csv(spark: SparkSession, path: str, schema, **options) -> DataFrame:

@@ -20,35 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-def _events_schema(sf_dir: str) -> tuple[T.StructType, bool]:
-    """Declared file-stream schema for events.parquet, probed from the
-    parquet footer (driver-side, one footer read). TIMESTAMP(NANOS) files
-    must be declared LongType under ``nanosAsLong`` and converted;
-    micro/millisecond files read as TimestampType directly. Returns
-    (schema, ts_is_nanos_long)."""
-    import pyarrow.parquet as pq
-
-    field = pq.read_schema(f"{sf_dir}/events.parquet").field("ts")
-    nanos = field.type.unit == "ns"
-    # Watermarks require TimestampType (LTZ) — TIMESTAMP_NTZ is rejected by
-    # withWatermark — so micro/millis columns are declared LTZ: the stored
-    # micros are read as UTC instants. Run streaming sessions with
-    # spark.sql.session.timeZone=UTC (session.py default) so window
-    # boundaries line up with the batch reader's NTZ wall clock.
-    ts_type: T.DataType = T.LongType() if nanos else T.TimestampType()
-    return (
-        T.StructType(
-            [
-                T.StructField("event_id", T.LongType(), False),
-                T.StructField("ts", ts_type, False),
-                T.StructField("user_id", T.LongType(), True),
-                T.StructField("event_type", T.StringType(), True),
-                T.StructField("value", T.DoubleType(), True),
-                T.StructField("props", T.StringType(), True),
-            ]
-        ),
-        nanos,
-    )
+from orchestrated_etl_spark import schemas
+from orchestrated_etl_spark.sources.catalog import (
+    events_ts_type,
+    nanos_to_micros_ts,
+)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,22 +32,33 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ts``. File streams need a declared schema — inference would require
     a listing job per trigger.
 
+    The column list is ``schemas.EVENTS`` and the footer probe is the
+    batch reader's (``events_ts_type``); ``ts`` is always declared LTZ
+    (or LongType for a nanos file), because withWatermark rejects the
+    batch reader's TIMESTAMP_NTZ.
+
     SESSION-WIDE SIDE EFFECT (deliberate, round-14 review made it
     signature-level doc): this sets ``spark.sql.session.timeZone=UTC``
-    and ``spark.sql.legacy.parquet.nanosAsLong=true`` on the session and
+    (and, for a TIMESTAMP(NANOS) file,
+    ``spark.sql.legacy.parquet.nanosAsLong=true``) on the session and
     does NOT restore them — the timezone pin must still be in force when
     the stream EXECUTES (window boundaries and the Arrow rendering of
     the LTZ ``ts`` evaluate at trigger time, not at plan-build time), so
     a scoped save/restore would silently break the stream it just built.
     A caller running non-UTC batch queries in the same session should
     use a separate session for them."""
-    schema, nanos = _events_schema(sf_dir)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # The µs/ms file stores NTZ wall-clock values but is declared LTZ above
-    # (withWatermark rejects NTZ). Window boundaries match the batch
-    # reader's NTZ semantics ONLY when the session renders instants in
-    # UTC — force it here rather than relying on the session.py default,
-    # since the driver verifies with its own vanilla session.
+    nanos = isinstance(events_ts_type(sf_dir), T.LongType)
+    if nanos:
+        # TIMESTAMP(NANOS) is read as its physical INT64 and converted
+        # below, exactly as the batch reader does.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # The µs/ms file stores NTZ wall-clock values but is declared LTZ
+    # (withWatermark rejects NTZ): the stored micros are read as UTC
+    # instants. Window boundaries match the batch reader's NTZ semantics
+    # ONLY when the session renders instants in UTC — force it here rather
+    # than relying on the session.py default, since the driver verifies
+    # with its own vanilla session.
+    schema = schemas.events_schema(T.LongType() if nanos else T.TimestampType())
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # The [p] glob makes the path a pattern, so the file source accepts a
     # single file (basePath = parent dir) instead of demanding a directory.
@@ -80,8 +67,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{sf_dir}/events.[p]arquet")
     )
     if nanos:
-        from orchestrated_etl_spark.sources.catalog import nanos_to_micros_ts
-
         raw = raw.withColumn("ts", nanos_to_micros_ts("ts"))
     return raw
 

@@ -6,6 +6,7 @@ map-side pair generation)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.functions.graph import (
@@ -208,59 +209,53 @@ def test_staged_checkpoint_preserves_partitioning_and_conf(spark):
     assert control.count("Exchange hashpartitioning") == 2, control
 
 
-def test_bfs_round_join_is_exchange_free(spark):
+@pytest.mark.parametrize("width", [None, 16], ids=["session", "16"])
+def test_bfs_round_join_is_exchange_free(spark, width):
     """The bfs_distances round body must join the frontier against the
     staged edge layout with no exchange on either side (the r18
     zero-exchange-round contract; plans/r18/graph_bfs_frontier_round_
-    body_after.txt is the committed capture of the same shape)."""
-    from orchestrated_etl_spark.compat import (
-        default_parallelism,
-        staged_checkpoint,
-    )
-    from orchestrated_etl_spark.functions.graph import undirect
+    body_after.txt is the committed capture of the same shape), whatever
+    the shuffle width: the test session's 8 and 16 both differ from the
+    core count of a 4-core host, where a layout staged at the core count
+    had its edge side re-keyed every round."""
+    from orchestrated_etl_spark.compat import staged_checkpoint
+    from orchestrated_etl_spark.functions.graph import src_layout, undirect
 
     pairs = [(i, i + 1) for i in range(200)]
     edges = _edges_df(spark, pairs)
-    # Width-aligned layout: the aggregate below always lands at
-    # spark.sql.shuffle.partitions, so stage the edge layout at the
-    # same width (the bench/driver sessions set shuffle.partitions ==
-    # default_parallelism, which is what bfs_distances' layout uses;
-    # this test session pins shuffle.partitions=8). A width MISMATCH
-    # would re-exchange only the frontier side — the edge side stays
-    # in place either way, which the src-key assertion pins.
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    u = staged_checkpoint(
-        undirect(edges).repartition(width, F.col("src"))
-    )
-    # replicate the real loop: round 1 expands an RDD-backed seed, the
-    # staged min-aggregate re-partitions by node, round 2's frontier is
-    # a filter of that staged relation.
-    seed = (
-        spark.createDataFrame([(0, 0)], "node long, dist int")
-        .localCheckpoint(eager=True)
-    )
-    expanded = (
-        seed.select("node").hint("shuffle_hash")
-        .join(u, F.col("node") == u["src"])
-        .select(F.col("dst").alias("node"), F.lit(1).cast("int").alias("dist"))
-    )
-    dist = staged_checkpoint(
-        seed.unionByName(expanded)
-        .groupBy("node").agg(F.min("dist").alias("dist"))
-    )
-    frontier = dist.filter(F.col("dist") == 1).select("node")
-    plan = (
-        frontier.hint("shuffle_hash").join(u, frontier["node"] == u["src"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    if width is not None:
+        spark.conf.set(key, str(width))
+    try:
+        u = src_layout(undirect(edges))
+        # replicate the real loop: round 1 expands an RDD-backed seed, the
+        # staged min-aggregate re-partitions by node, round 2's frontier is
+        # a filter of that staged relation.
+        seed = (
+            spark.createDataFrame([(0, 0)], "node long, dist int")
+            .localCheckpoint(eager=True)
+        )
+        expanded = (
+            seed.select("node").hint("shuffle_hash")
+            .join(u, F.col("node") == u["src"])
+            .select(
+                F.col("dst").alias("node"), F.lit(1).cast("int").alias("dist")
+            )
+        )
+        dist = staged_checkpoint(
+            seed.unionByName(expanded)
+            .groupBy("node").agg(F.min("dist").alias("dist"))
+        )
+        frontier = dist.filter(F.col("dist") == 1).select("node")
+        plan = (
+            frontier.hint("shuffle_hash").join(u, frontier["node"] == u["src"])
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+    finally:
+        spark.conf.set(key, saved)
+    # the edge layout must NEVER be re-keyed, and with the layout at the
+    # aggregate's width neither side moves
+    assert "Exchange hashpartitioning(src" not in plan, plan
     assert "Exchange" not in plan, plan
     assert "ShuffledHashJoin" in plan, plan
-    # and independent of widths: the edge layout must NEVER be re-keyed
-    u32 = staged_checkpoint(
-        undirect(edges).repartition(default_parallelism(spark), F.col("src"))
-    )
-    plan32 = (
-        frontier.hint("shuffle_hash").join(u32, frontier["node"] == u32["src"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange hashpartitioning(src" not in plan32, plan32

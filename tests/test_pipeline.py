@@ -41,6 +41,53 @@ def test_pipeline_fanout_two_sinks(spark, sf_dir, tmp_path):
     assert out.columns == ["o_custkey", "o_totalprice"]
 
 
+def test_pipeline_fanout_evaluates_the_source_once(spark, tmp_path):
+    """The fan-out frame is persisted before the validators run, so the
+    validator's job and both sinks share one evaluation of the source and
+    of the dedup shuffle behind it (the books fan-out shape). Validating
+    first evaluated the source once for the validator and again for the
+    first sink. Each source partition leaves one marker file per
+    evaluation; without the cache every consumer evaluates it, which
+    shows the markers see each evaluation."""
+    parts = 4
+
+    def marked(batches):
+        import uuid
+
+        (marks / uuid.uuid4().hex).touch()
+        yield from batches
+
+    for cache in (True, False):
+        marks = tmp_path / f"cache_{cache}"
+        marks.mkdir()
+        pipe = Pipeline(
+            name="source_once",
+            source=lambda s: s.range(0, 40, numPartitions=parts).mapInPandas(
+                marked, "id long"
+            ),
+            stages=[
+                Stage(
+                    "dedup",
+                    lambda df: df.dropDuplicates(["id"]),
+                    validate=lambda df: require_nonempty(df, "dedup"),
+                )
+            ],
+            sinks={
+                "rows": lambda df: df.count(),
+                "total": lambda df: df.agg(F.sum("id")).collect(),
+            },
+            retries=0,
+            cache_before_fanout=cache,
+        )
+        pipe.run(spark)
+        evaluated = len(list(marks.iterdir()))
+        if cache:
+            assert evaluated == parts
+        else:
+            # the validator reads at least one partition, each sink all
+            assert evaluated > 2 * parts
+
+
 def test_pipeline_validation_aborts(spark):
     pipe = Pipeline(
         name="empty_in",

@@ -1165,6 +1165,61 @@ def test_spark_connect_portability_exemptions_are_pinned():
     assert sites == Counter({"compat.py": 2, "session.py": 1}), dict(sites)
 
 
+def test_fixture_tables_have_one_reader():
+    """Every fixture-table read goes through sources/catalog.load_table,
+    which reads with the declared schema: an undeclared
+    ``spark.read.parquet`` runs a footer-inference job per table read,
+    and a hand-rolled read elsewhere would bring it back unseen. An AST
+    scan (comments and docstrings cannot trip or satisfy it) flags, in
+    every engine module except catalog.py:
+
+    - a batch parquet read (``<x>.read[.<opt>(...)].parquet(...)``) whose
+      arguments mention ``sf_dir``;
+    - an f-string building a fixture path ``{sf_dir}/<table>.parquet``.
+
+    Read-backs of paths the engine wrote itself (``path``, ``target``,
+    ``base``) stay allowed, and so does the events file stream, which
+    has its own declared reader."""
+    import ast
+
+    def mentions_sf_dir(node) -> bool:
+        return any(
+            isinstance(n, ast.Name) and n.id == "sf_dir" for n in ast.walk(node)
+        )
+
+    def reads_batch(call: ast.Call) -> bool:
+        node = call.func.value
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Attribute) and node.attr == "read":
+                return True
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return False
+
+    def fixture_path(node: ast.JoinedStr) -> bool:
+        tail = node.values[-1]
+        return (
+            mentions_sf_dir(node)
+            and isinstance(tail, ast.Constant)
+            and str(tail.value).endswith(".parquet")
+        )
+
+    sites = set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel.startswith("_vendor/") or rel == "sources/catalog.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and reads_batch(node)
+                and any(mentions_sf_dir(a) for a in node.args)
+            ) or (isinstance(node, ast.JoinedStr) and fixture_path(node)):
+                sites.add(f"{rel}:{node.lineno}")
+    assert not sites, sorted(sites)
+
+
 def test_compat_accessors_classic_and_connect_fallback(spark):
     """compat.default_parallelism / application_id must (a) match the
     classic sparkContext reads on a classic session, (b) degrade to the
