@@ -13,8 +13,9 @@ sequencing multiple sinks (O3's fan-out), input validation (T1), retries
 
 At 100 TB the fan-out pattern matters: a pipeline writing the same
 transformed frame to two sinks should compute it once — ``cache_before_
-fanout`` persists the pre-sink frame (MEMORY_AND_DISK) so the second sink
-reuses it instead of recomputing the whole lineage.
+fanout`` persists the pre-sink frame (MEMORY_AND_DISK) before the
+validators run, so the validators and every sink reuse it instead of
+recomputing the whole lineage.
 """
 
 from __future__ import annotations
