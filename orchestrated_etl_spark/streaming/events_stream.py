@@ -56,8 +56,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (withWatermark rejects NTZ): the stored micros are read as UTC
     # instants. Window boundaries match the batch reader's NTZ semantics
     # ONLY when the session renders instants in UTC — force it here rather
-    # than relying on the session.py default, since the driver verifies
-    # with its own vanilla session.
+    # than relying on the session.py default, since a caller may bring its
+    # own vanilla session.
     schema = schemas.events_schema(T.LongType() if nanos else T.TimestampType())
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # The [p] glob makes the path a pattern, so the file source accepts a
