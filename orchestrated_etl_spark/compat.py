@@ -24,10 +24,9 @@ instead of being sprinkled across operators:
   (new key per session) but never under-invalidates.
 
 The grep contract in tests/test_plan_audit.py pins ``sparkContext`` to
-exactly this module plus the two documented classic-only surfaces
-(session.py's log-level call in our own non-Connect builder, and the
-vendored protobuf runtime is excluded wholesale), so a new classic-only
-touch anywhere else fails the suite.
+exactly this module plus session.py's log-level call in our own
+non-Connect builder, so a new classic-only touch anywhere else fails the
+suite.
 """
 
 from __future__ import annotations

@@ -212,12 +212,10 @@ def test_staged_checkpoint_preserves_partitioning_and_conf(spark):
 @pytest.mark.parametrize("width", [None, 16], ids=["session", "16"])
 def test_bfs_round_join_is_exchange_free(spark, width):
     """The bfs_distances round body must join the frontier against the
-    staged edge layout with no exchange on either side (the r18
-    zero-exchange-round contract; plans/r18/graph_bfs_frontier_round_
-    body_after.txt is the committed capture of the same shape), whatever
-    the shuffle width: the test session's 8 and 16 both differ from the
-    core count of a 4-core host, where a layout staged at the core count
-    had its edge side re-keyed every round."""
+    staged edge layout with no exchange on either side, whatever the
+    shuffle width: the test session's 8 and 16 both differ from the core
+    count of a 4-core host, where a layout staged at the core count had
+    its edge side re-keyed every round."""
     from orchestrated_etl_spark.compat import staged_checkpoint
     from orchestrated_etl_spark.functions.graph import src_layout, undirect
 

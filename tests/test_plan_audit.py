@@ -1050,10 +1050,9 @@ def test_driver_side_materialization_allowlist():
       sink IS driver-side by definition).
 
     `toPandas`/`toLocalIterator` are banned outright. Tokenized scan,
-    so docstrings/comments mentioning collect() don't count; _vendor/
-    (third-party protobuf) is excluded. Keys are package-relative paths
-    (not basenames) so a same-named file in another subpackage can't
-    share a sibling's budget."""
+    so docstrings/comments mentioning collect() don't count. Keys are
+    package-relative paths (not basenames) so a same-named file in
+    another subpackage can't share a sibling's budget."""
     import tokenize
 
     allowed = {
@@ -1065,8 +1064,6 @@ def test_driver_side_materialization_allowlist():
     banned: list[tuple[str, int, str]] = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
-        if rel.startswith("_vendor/"):
-            continue
         prev = None
         with open(path, "rb") as f:
             toks = list(tokenize.tokenize(f.readline))
@@ -1097,21 +1094,20 @@ def test_driver_side_materialization_allowlist():
 
 
 def test_stub_site_allowlist():
-    """Pin the package's stub surface to the two sites the repo
+    """Pin the package's stub surface to the one site the repo
     legitimately needs (previously a hand check each round):
 
     - functions/multimodal.py: the env-gated media DECODER raise — the
       container has no image/audio libs, the stub is the documented
       honest boundary and its deterministic fake path IS oracle-checked.
-    - streaming/stateful.py: a required-interface no-op (`pass` body
-      mandated by the processor ABC).
 
-    Any new NotImplementedError or `pass` statement elsewhere is either
-    padding (unfinished surface presented as done) or a new env gate
-    that needs a written reason here. Tokenized NAME scan (comments and
-    docstrings mentioning either word don't count — a `pass` NAME token
-    can only be the statement keyword) compared as a per-file multiset,
-    so neither glob order nor prose can flip the gate."""
+    No `pass` statement is allowed anywhere: a new one, or a new
+    NotImplementedError, is either padding (unfinished surface presented
+    as done) or a new env gate that needs a written reason here.
+    Tokenized NAME scan (comments and docstrings mentioning either word
+    don't count — a `pass` NAME token can only be the statement keyword)
+    compared as a per-file multiset, so neither glob order nor prose can
+    flip the gate."""
     import tokenize
     from collections import Counter
 
@@ -1119,8 +1115,6 @@ def test_stub_site_allowlist():
     bare: Counter[str] = Counter()
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
-        if rel.startswith("_vendor/"):
-            continue
         with open(path, "rb") as f:
             for t in tokenize.tokenize(f.readline):
                 if t.type != tokenize.NAME:
@@ -1130,7 +1124,7 @@ def test_stub_site_allowlist():
                 elif t.string == "pass":
                     bare[rel] += 1
     assert nie == Counter({"functions/multimodal.py": 1}), dict(nie)
-    assert bare == Counter({"streaming/stateful.py": 1}), dict(bare)
+    assert bare == Counter(), dict(bare)
 
 
 def test_spark_connect_portability_exemptions_are_pinned():
@@ -1156,8 +1150,6 @@ def test_spark_connect_portability_exemptions_are_pinned():
     sites: Counter[str] = Counter()
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
-        if rel.startswith("_vendor/"):
-            continue
         with open(path, "rb") as f:
             for t in tokenize.tokenize(f.readline):
                 if t.type == tokenize.NAME and t.string == "sparkContext":
@@ -1206,7 +1198,7 @@ def test_fixture_tables_have_one_reader():
     sites = set()
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
-        if rel.startswith("_vendor/") or rel == "sources/catalog.py":
+        if rel == "sources/catalog.py":
             continue
         for node in ast.walk(ast.parse(path.read_text())):
             if (

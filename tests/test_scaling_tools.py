@@ -1,15 +1,14 @@
-"""Smoke contracts for tools/scaling_common.py (round-10 consolidation
-of the measure_scaling_r* scaffolding) and the thin per-round drivers.
+"""Contracts for tools/measure_scaling.py (one driver, one entry per
+scaling family) and its shared scaffolding tools/scaling_common.py.
 
-The round files stay committed as reproducible method records; the
-machinery they share — steady-state timing, disjoint key-shift growth,
-alphabet-permutation content growth, temp-sf_dir staging — now lives in
-one module. These tests pin the properties the published SCALING.md
-curves depend on."""
+The machinery — steady-state timing, disjoint key-shift growth,
+alphabet-permutation content growth, temp-sf_dir staging — lives in one
+module. These tests pin the properties the published SCALING.md curves
+depend on, and that SCALING.md and the driver name the same families."""
 
 from __future__ import annotations
 
-import py_compile
+import re
 import sys
 from pathlib import Path
 
@@ -19,13 +18,25 @@ sys.path.insert(0, str(REPO / "tools"))
 import scaling_common as SC  # noqa: E402
 
 
-def test_round_drivers_compile():
-    """Every historical measure_scaling_r* driver must still compile
-    against the consolidated module (the 'each historical tool still
-    runs' clause; full runs need 16g and minutes, so the per-round
-    METHODS are exercised via the shared builders below)."""
-    for p in sorted((REPO / "tools").glob("measure_scaling_r*.py")):
-        py_compile.compile(str(p), doraise=True)
+def test_scaling_md_cites_exactly_the_driver_families():
+    """Every `measure_scaling.py <family> ...` citation in SCALING.md
+    names a FAMILIES key, and every family is cited at least once — so
+    a published curve always has a runnable method and the driver keeps
+    no family that no curve reports. Importing the driver starts no
+    Spark session."""
+    import measure_scaling
+
+    cited: set[str] = set()
+    spans = re.findall(
+        r"`(?:tools/)?measure_scaling\.py([^`]*)`",
+        (REPO / "SCALING.md").read_text(),
+    )
+    for span in spans:
+        cited.update(span.split())
+    assert spans and cited, "SCALING.md cites no measure_scaling.py family"
+    families = set(measure_scaling.FAMILIES)
+    assert cited <= families, f"cited but not defined: {cited - families}"
+    assert families <= cited, f"defined but never cited: {families - cited}"
 
 
 def test_alphabet_permutations_distinct_and_bijective():

@@ -213,90 +213,6 @@ def test_stream_stream_join_matches_batch_range_join(spark, sf_dir):
     assert stream == batch
 
 
-def _protobuf_ok() -> bool:
-    # Activates the vendored pure-python protobuf runtime
-    # (orchestrated_etl_spark/_vendor) when no real install exists.
-    # Runs at pytest collection time — before the session fixture
-    # launches the JVM — so the PYTHONPATH/env it sets reaches Spark's
-    # Python workers too.
-    from orchestrated_etl_spark._vendor import ensure_protobuf
-
-    return ensure_protobuf()
-
-
-# Collection-time activation (must precede the JVM launch so workers
-# inherit the PYTHONPATH); availability itself is asserted hard by
-# test_transform_with_state_runtime_is_unconditionally_available —
-# round-12 verdict item 4 removed the skip-if-unavailable escape so a
-# regression in the vendored runtime fails the suite instead of
-# silently shrinking it.
-_PROTOBUF_ACTIVATED = _protobuf_ok()
-
-
-def test_transform_with_state_runtime_is_unconditionally_available(spark):
-    """The transformWithStateInPandas surface has NO skip path in this
-    container (round-12 verdict item 4): google.protobuf must import
-    (real install or the vendored pure-python runtime), the Python
-    runner's generated proto module must import on top of it, and the
-    RocksDB state-store provider (multiple column families) must be
-    loadable from the JVM classpath (rocksdbjni ships with Spark)."""
-    assert _PROTOBUF_ACTIVATED, (
-        "google.protobuf unavailable and the vendored runtime "
-        "(orchestrated_etl_spark/_vendor) failed to activate"
-    )
-    import google.protobuf  # noqa: F401
-    from pyspark.sql.streaming.proto import StateMessage_pb2  # noqa: F401
-
-    spark._jvm.java.lang.Class.forName(
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-
-
-def test_transform_with_state_matches_batch(spark, sf_dir):
-    """transformWithStateInPandas running totals: final emission per user
-    equals the batch groupBy."""
-    from orchestrated_etl_spark.sources.catalog import read_events
-    from orchestrated_etl_spark.streaming.events_stream import (
-        read_events_stream,
-        run_available_now,
-    )
-    from orchestrated_etl_spark.streaming.stateful import user_totals_tws
-
-    # transformWithState stores per-key state in MULTIPLE column families,
-    # which the default HDFSBackedStateStoreProvider rejects; RocksDB
-    # (rocksdbjni ships with Spark) is the supported provider for it.
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_available_now(
-            user_totals_tws(read_events_stream(spark, sf_dir)),
-            output_mode="update",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    got = {
-        r["user_id"]: r["n_events"]
-        for r in out.groupBy("user_id").agg(
-            F.max("n_events").alias("n_events")
-        ).collect()
-    }
-    want = {
-        r["user_id"]: r["n"]
-        for r in read_events(spark, sf_dir)
-        .groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert got == want
-
-
 def test_dedup_within_watermark_single_batch_matches_distinct(spark, sf_dir):
     """With the whole file source in one micro-batch, watermark-bounded
     dedup equals the batch count-distinct per type."""

@@ -426,7 +426,6 @@ SOURCE_REPARTITION_OK: dict[tuple[str, tuple[str, ...]], tuple[int, str]] = {
 }
 
 SOURCE_SCAN_DIRS = ("orchestrated_etl_spark",)
-SOURCE_SCAN_EXCLUDE = ("_vendor",)
 
 _STR_LIT_ARG = re.compile(r'^["\']([A-Za-z_]\w*)["\']$')
 _COL_REF_ARG = re.compile(r'^(?:F\.)?col\(\s*["\']([A-Za-z_]\w*)["\']\s*\)$')
@@ -676,8 +675,6 @@ def run_source_audit(repo_root) -> list[str]:
     for d in SOURCE_SCAN_DIRS:
         for path in sorted((root / d).rglob("*.py")):
             rel = str(path.relative_to(root))
-            if any(x in rel for x in SOURCE_SCAN_EXCLUDE):
-                continue
             text = path.read_text()
             for relpath, lineno, names in source_repartition_findings(
                 text, rel

@@ -1,11 +1,5 @@
-"""Shared scaffolding for the measure_scaling_r* drivers (round-10
-consolidation — the r9 verdict's item 5: seven near-clone round files
-accreted ~2.4k LoC of duplicated staging/growth/timing boilerplate).
-
-The per-round files stay committed as thin, reproducible drivers — the
-measurement *methods* (which keys shift, which multipliers, which cores
-run) remain round-pinned there, exactly as published in SCALING.md. What
-lives here is only the method-neutral machinery every round shares:
+"""Shared scaffolding for tools/measure_scaling.py: the method-neutral
+machinery every scaling family uses.
 
 - ``steady``: the SCALING.md steady-state protocol — each reported
   timing is the SECOND consecutive run; the first absorbs staging,
@@ -14,19 +8,20 @@ lives here is only the method-neutral machinery every round shares:
   of a frame with the listed key columns shifted by ``i * (max(key)+1)``
   per copy — disjoint id spaces, so per-entity structure is constant and
   the measured growth term is pure data volume. Pass explicit ``shifts``
-  to reproduce a historical round's exact (pre-consolidation) choice.
+  when two tables must share one shift (a foreign key and its parent).
 - disjoint growth by CONTENT PERMUTATION (``rot26``/``dihedral52`` +
   ``grow_permuted_docs``): text copies under distinct alphabet
   permutations, so token/chunk/shingle domains genuinely grow. Plain
   rotations give 26 distinct transforms; the dihedral family (reflection
-  composed with rotation) gives 52 — required past 26 copies (r9 CDC).
+  composed with rotation) gives 52 — required past 26 copies.
 - temp-sf_dir staging (``stage_parquet`` + ``staged_tmpdir``): grown
   inputs are written to a temporary sf_dir so operators run through
   their normal ``(spark, sf_dir)`` contract, 32 files to match the
   local[32] layout.
 
-Drivers need ``SPARK_GRAFT_DRIVER_MEM=16g`` past ~mult 5 (the default
-1 g driver heap dies during checkpoint-heavy staging).
+Runs need ``SPARK_GRAFT_DRIVER_MEM=16g`` past ~mult 5 on the sf0.1
+fixtures (the default 1 g driver heap dies during checkpoint-heavy
+staging).
 """
 
 from __future__ import annotations
@@ -72,8 +67,8 @@ def grow_shifted(
 ) -> DataFrame:
     """Union ``mult`` copies of ``df`` with each key in ``cols`` shifted
     by ``i * shift`` per copy i — disjoint id spaces, constant per-entity
-    structure. Default shift is ``max(col)+1``; pass ``shifts`` to pin a
-    historical round's exact choice."""
+    structure. Default shift is ``max(col)+1``; pass ``shifts`` to share
+    one shift across tables."""
     if shifts is None:
         shifts = {c: max_shift(df, c) for c in cols}
     parts = [df]
@@ -108,13 +103,11 @@ def grow_permuted_docs(
     id_col: str = "doc_id",
     text_col: str = "text",
     keep: tuple[str, ...] = (),
-    id_shift: int | None = None,
 ) -> DataFrame:
     """Union ``mult`` document copies, each under a DISTINCT alphabet
     permutation of ``text_col`` (content domains genuinely grow) with
-    ``id_col`` shifted disjoint. Default id shift is max(id)+1."""
-    if id_shift is None:
-        id_shift = max_shift(docs, id_col)
+    ``id_col`` shifted disjoint by max(id)+1."""
+    id_shift = max_shift(docs, id_col)
     parts = [docs]
     for i in range(1, mult):
         parts.append(
@@ -140,26 +133,3 @@ def staged_tmpdir(prefix: str) -> Iterator[str]:
         yield tmp
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def write_scaled_lineitem_disjoint(
-    spark, sf_dir: str, mult: int, out_dir: str
-) -> int:
-    """lineitem grown with BOTH l_orderkey and l_partkey shifted — each
-    copy contributes a DISJOINT co-purchase component (the r6/r8/r9
-    graph-growth method). Returns the grown row count."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    n = li.count()
-    grown = grow_shifted(li, mult, ["l_orderkey", "l_partkey"])
-    stage_parquet(grown, f"{out_dir}/lineitem.parquet")
-    return n * mult
-
-
-def scaled_docs_idshift(spark, sf_dir: str, mult: int) -> DataFrame:
-    """documents (doc_id, text) grown by doc-id-shifted VERBATIM copies —
-    each copy is a disjoint near-dup cluster family (the r8/r9 minhash /
-    BM25 / incremental-dedup growth method)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return grow_shifted(docs, mult, ["doc_id"])
