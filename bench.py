@@ -4,12 +4,18 @@ driver-parseable headline as the LAST stdout line (kept ≤1.5 KB so a tail
 capture still round-trips through json.loads): {"metric": ..., "value":
 total_sec, "unit": "sec", "queries": {name: sec}, "repeats": n, "sf": ...}.
 A preceding line carries the detail object (queries_spread, queries_cold,
-plus load-average/CPU/SPARK_GRAFT_* telemetry at start and end so
-cross-session drift verdicts adjudicate themselves from the record).
+codegen_compiles, plus load-average/CPU/SPARK_GRAFT_* telemetry at start
+and end so cross-session drift verdicts adjudicate themselves from the
+record).
 
-Each query is timed end-to-end (plan + execute + count-style materialise);
-a warmup query first absorbs JVM/codegen startup so numbers reflect the
-engine, not JIT warmup.
+Each query is timed end-to-end (plan + execute + count-style materialise).
+A warmup first absorbs JVM start, first-touch file metadata and the Python
+worker start; it compiles only its own queries' generated classes, so the
+cold pass still compiles the headline queries' classes. Warm passes skip
+compilation only while the session's codegen cache holds every class the
+suite generates: "codegen_compiles" counts the classes compiled in the
+warmup, the cold pass and each warm pass, and a warm count above 0 means
+the warm timings include recompilation.
 
 Warm numbers come from $SPARK_GRAFT_BENCH_REPEATS (default 3) INTERLEAVED
 full-suite passes — pass 1 runs every query, then pass 2, then pass 3 —
@@ -142,6 +148,14 @@ def _env_telemetry() -> dict:
     }
 
 
+def _compiles(spark) -> int:
+    """Generated classes compiled so far in the JVM (driver and, in local
+    mode, executor tasks): the sample count of Spark's codegen
+    compilation-time metric."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -151,6 +165,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     spark = get_spark("bench")
+    compiled = _compiles(spark)
     qs = entrymod.queries()
     names = [n for n in HEADLINE if n in qs]
     # extension queries register later; include any bench-tagged ones
@@ -174,25 +189,31 @@ def main() -> None:
     qs["sim_vector_norms"](spark, sf_dir).count()
 
     # Two timed passes per query. COLD = the first execution, which pays
-    # one-time whole-stage-codegen compilation (hundreds of ms for wide
-    # plans) — what a single-shot run of the query costs after session
-    # start. WARM = the second execution — steady-state engine throughput,
-    # what repeats at 100 TB. Reporting both makes driver-vs-local bench
-    # deltas explainable: a driver bench that times first executions
-    # should land near the cold column, not the warm one.
+    # whole-stage-codegen compilation (hundreds of ms for wide plans) —
+    # what a single-shot run of the query costs after session start.
+    # WARM = the later executions, which pay no compilation only while the
+    # codegen cache holds every class the suite generates (the counts in
+    # codegen_compiles say whether it did). Reporting both makes
+    # driver-vs-local bench deltas explainable: a driver bench that times
+    # first executions should land near the cold column, not the warm one.
+    warmup_compiles = _compiles(spark) - compiled
+    compiled = _compiles(spark)
     cold: dict[str, float] = {}
     for name in names:
         t0 = time.perf_counter()
         df = qs[name](spark, sf_dir)
         df.collect() if name == "flagship" else df.count()
         cold[name] = round(time.perf_counter() - t0, 3)
+    cold_compiles = _compiles(spark) - compiled
 
     # Warm: n interleaved full-suite passes -> per-query median + spread.
     import statistics
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     samples: dict[str, list[float]] = {name: [] for name in names}
+    warm_compiles: list[int] = []
     for _ in range(reps):
+        compiled = _compiles(spark)
         for name in names:
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
@@ -200,6 +221,7 @@ def main() -> None:
             samples[name].append(time.perf_counter() - t0)
             if n < 0:  # consumes n without assert (compiled out under -O)
                 raise RuntimeError(f"negative row count for {name}")
+        warm_compiles.append(_compiles(spark) - compiled)
     timings = {n: round(statistics.median(s), 3) for n, s in samples.items()}
     spread = {n: round(max(s) - min(s), 3) for n, s in samples.items()}
     total = round(sum(timings.values()), 3)
@@ -215,6 +237,11 @@ def main() -> None:
                 "queries_spread": spread,
                 "cold_value": round(sum(cold.values()), 3),
                 "queries_cold": cold,
+                "codegen_compiles": {
+                    "warmup": warmup_compiles,
+                    "cold": cold_compiles,
+                    "warm": warm_compiles,
+                },
                 "telemetry_start": telemetry_start,
                 "telemetry_end": _env_telemetry(),
             }

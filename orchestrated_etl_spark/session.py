@@ -6,7 +6,9 @@ multi-executor cluster: AQE handles runtime partition coalescing and
 skew-join splitting, shuffle partition count is sized for the local core
 count (raise via env on a cluster), Arrow accelerates every
 pandas_udf/applyInPandas boundary, and the session timezone is pinned to
-UTC so timestamp semantics are deployment-independent.
+UTC so timestamp semantics are deployment-independent. The codegen cache
+holds the whole registry's generated classes, so a repeated query reuses
+its compiled classes instead of recompiling them.
 """
 
 from __future__ import annotations
@@ -30,6 +32,20 @@ _DEFAULTS: dict[str, str] = {
     # sort-merge, so the spill-graceful path remains the default for
     # data-sized x data-sized joins at 100 TB.
     "spark.sql.join.preferSortMergeJoin": "false",
+    # --- codegen: keep every generated class compiled once per session.
+    # Spark caches compiled whole-stage/projection classes in an LRU of
+    # 100 entries by default, but one pass needs more: the 8
+    # iterative_staged queries generate 290 distinct classes (sf0.01),
+    # the 29 bench.py headline queries 452 (sf0.1) and one pass over all
+    # 295 registered queries compiles 3,371 (sf0.001; counted with
+    # CodegenMetrics). A cyclic working set larger than an LRU misses on
+    # every access, so at 100 every warm pass recompiled ~all of them
+    # (~10 ms each, Janino's name lookups scanning every jar); at 4096
+    # the registry fits and warm passes compile 0. Cost: ~4 KB of
+    # Metaspace per retained class (+3.4 MB measured over four headline
+    # passes), so at most ~16-32 MB per JVM — the driver, and each
+    # executor on a cluster. Static conf: set before the session starts.
+    "spark.sql.codegen.cache.maxEntries": "4096",
     # --- deterministic semantics --------------------------------------
     "spark.sql.session.timeZone": "UTC",
     # --- python boundary ----------------------------------------------

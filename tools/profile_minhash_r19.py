@@ -90,6 +90,10 @@ def main() -> None:
         out.count()
         stages["verify"].append(time.perf_counter() - t0)
         stages["total"].append(time.perf_counter() - t_all)
+        # drop this rep's checkpoint blocks so later reps start from the
+        # same block-manager storage
+        for staged in (sigs, cands, sets):
+            staged.unpersist()
 
     import statistics
 

@@ -1,4 +1,4 @@
-"""Round-18 optimization harness: per-query measurement + plan capture.
+"""Round-19 optimization harness: per-query measurement + plan capture.
 
 For each named query (default: the bench HEADLINE list) this tool
 - builds the DataFrame and times the BUILD (driver-side plan
@@ -7,8 +7,9 @@ For each named query (default: the bench HEADLINE list) this tool
   every column of every row, no collect/count pruning) AND through the
   bench's own action (count/collect) so numbers stay comparable with
   BENCH_r*.json history,
-- counts Spark jobs per execution via the status tracker (job count ~
-  scheduling overhead: each eager localCheckpoint/broadcast is a job),
+- counts Spark jobs per execution as deltas of the DAG scheduler's job
+  counter (job count ~ scheduling overhead: each eager
+  localCheckpoint/broadcast is a job), one count per rep,
 - optionally writes `.explain("formatted")` to plans/r19/<q>_<tag>.txt.
 
 Usage:
@@ -55,6 +56,7 @@ def main() -> None:
             extra[k.strip()] = v.strip()
     spark = get_spark("profile_r19", extra_conf=extra or None)
     sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
     qs = entrymod.queries()
     names = args or [n for n in bench.HEADLINE if n in qs]
 
@@ -85,7 +87,7 @@ def main() -> None:
         samples = []
         jobs = []
         for _ in range(reps):
-            j0 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
+            j0 = int(dag.nextJobId())
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             if use_noop:
@@ -93,8 +95,7 @@ def main() -> None:
             else:
                 df.collect() if name == "flagship" else df.count()
             samples.append(time.perf_counter() - t0)
-            j1 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
-            jobs.append(j1 - j0)
+            jobs.append(int(dag.nextJobId()) - j0)
         samples.sort()
         med = samples[len(samples) // 2]
         out[name] = {
@@ -102,7 +103,7 @@ def main() -> None:
             "median_s": round(med, 3),
             "min_s": round(samples[0], 3),
             "max_s": round(samples[-1], 3),
-            "jobs": jobs[-1],
+            "jobs": jobs,
         }
         print(json.dumps({name: out[name]}), flush=True)
         sc.setJobDescription(None)
