@@ -29,13 +29,16 @@ the attribution protocol the round-4/5 verdicts asked for.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.host import cpu_probe_ms, mt_probe_ms  # noqa: E402
+
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 # Headline set: one per operator family — scan+agg, star join, window,
 # rollup, dedup, json/datetime, temporal joins, sessionization, and the
@@ -79,55 +82,6 @@ HEADLINE = [
 ]
 
 
-def _cpu_probe_ms() -> float:
-    """Fixed single-core CPU reference: milliseconds to SHA-256 a 1 MiB
-    buffer 32 times (~20 ms on this class of host). The round-12 drift
-    bisection found that idle-session totals on BYTE-IDENTICAL code
-    spread ±10% across sessions (19.65 / 20.34 / 21.88 s for r10/r11/r12)
-    — host-level throughput variance that loadavg cannot see (it measures
-    our own runqueue, not hypervisor contention or frequency scaling).
-    Recording a deterministic compute probe with every capture lets a
-    future drift verdict normalise totals by machine speed instead of
-    re-running the attribution protocol from scratch."""
-    buf = b"\x5a" * (1 << 20)
-    t0 = time.perf_counter()
-    h = hashlib.sha256()
-    for _ in range(32):
-        h.update(buf)
-    h.digest()
-    return round((time.perf_counter() - t0) * 1000.0, 2)
-
-
-def _mt_probe_ms() -> float:
-    """Sustained ALL-CORE reference: wall-clock ms for os.cpu_count()
-    threads to each run the single-core probe's hash loop concurrently
-    (sha256 releases the GIL on 1 MiB updates, so threads genuinely
-    load every core). Added in round 14: that round's host reproduced a
-    ~27 s idle headline (history 19.7-22.3 s) while the SINGLE-thread
-    probe read normal (21-24 ms) — the slowdown only existed under
-    sustained multi-core load, exactly what a 29-query local[32] bench
-    generates and a one-shot single-core sample cannot see. Recording
-    both probes lets a future drift verdict separate "one core is slow"
-    (frequency scaling) from "the cores contend" (hypervisor neighbor,
-    memory bandwidth) by arithmetic. Near-ideal scaling reads ≈ the
-    single-core number; contention reads higher."""
-    import concurrent.futures
-
-    n = os.cpu_count() or 1
-
-    def work() -> None:
-        buf = b"\x5a" * (1 << 20)
-        h = hashlib.sha256()
-        for _ in range(32):
-            h.update(buf)
-        h.digest()
-
-    t0 = time.perf_counter()
-    with concurrent.futures.ThreadPoolExecutor(max_workers=n) as ex:
-        list(ex.map(lambda _: work(), range(n)))
-    return round((time.perf_counter() - t0) * 1000.0, 2)
-
-
 def _env_telemetry() -> dict:
     """Session conditions for cross-run noise adjudication (round-9 item:
     a +12% cross-session drift should adjudicate itself from the recorded
@@ -136,11 +90,14 @@ def _env_telemetry() -> dict:
         load1, load5, load15 = os.getloadavg()
     except OSError:  # pragma: no cover - getloadavg unsupported
         load1 = load5 = load15 = -1.0
+    # Both CPU probes: loadavg cannot see host-level throughput variance,
+    # and a slow single core (frequency scaling) reads apart from cores
+    # that contend under sustained all-core load (mt_probe_ms only).
     return {
         "loadavg": [round(load1, 2), round(load5, 2), round(load15, 2)],
         "cpus": os.cpu_count(),
-        "cpu_probe_ms": _cpu_probe_ms(),
-        "mt_probe_ms": _mt_probe_ms(),
+        "cpu_probe_ms": round(cpu_probe_ms(), 2),
+        "mt_probe_ms": round(mt_probe_ms(), 2),
         "env": {
             k: v for k, v in sorted(os.environ.items())
             if k.startswith("SPARK_GRAFT_")
@@ -156,24 +113,22 @@ def _compiles(spark) -> int:
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    telemetry_start = _env_telemetry()
-
-    from orchestrated_etl_spark.session import get_spark
-    import __spark_entry__ as entrymod
-
-    spark = get_spark("bench")
-    compiled = _compiles(spark)
-    qs = entrymod.queries()
+def suite(qs: dict) -> list[str]:
+    """The timed query names: HEADLINE, plus any bench-tagged extension
+    query (those register later)."""
     names = [n for n in HEADLINE if n in qs]
-    # extension queries register later; include any bench-tagged ones
-    names += [n for n in qs if n.startswith("bench_") and n not in names]
+    return names + [n for n in qs if n.startswith("bench_") and n not in names]
 
-    # Warmup: file-index listings + footer reads for every table, plus one
-    # real query for codegen/JIT — so per-query timings measure the query,
-    # not first-touch filesystem metadata.
+
+def action(name: str, df) -> int:
+    """The timed action: row count, or a full collect for flagship."""
+    return len(df.collect()) if name == "flagship" else df.count()
+
+
+def warmup(spark, qs: dict, sf_dir: str) -> None:
+    """File-index listings + footer reads for every table, plus real
+    queries for codegen/JIT — so per-query timings measure the query,
+    not first-touch filesystem metadata."""
     import glob
 
     for p in glob.glob(f"{sf_dir}/*.parquet"):
@@ -188,6 +143,21 @@ def main() -> None:
     qs["sim_normalize_embeddings"](spark, sf_dir).count()
     qs["sim_vector_norms"](spark, sf_dir).count()
 
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    telemetry_start = _env_telemetry()
+
+    from orchestrated_etl_spark.session import get_spark
+    import __spark_entry__ as entrymod
+
+    spark = get_spark("bench")
+    compiled = _compiles(spark)
+    qs = entrymod.queries()
+    names = suite(qs)
+    warmup(spark, qs, sf_dir)
+
     # Two timed passes per query. COLD = the first execution, which pays
     # whole-stage-codegen compilation (hundreds of ms for wide plans) —
     # what a single-shot run of the query costs after session start.
@@ -201,8 +171,7 @@ def main() -> None:
     cold: dict[str, float] = {}
     for name in names:
         t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        df.collect() if name == "flagship" else df.count()
+        action(name, qs[name](spark, sf_dir))
         cold[name] = round(time.perf_counter() - t0, 3)
     cold_compiles = _compiles(spark) - compiled
 
@@ -216,8 +185,7 @@ def main() -> None:
         compiled = _compiles(spark)
         for name in names:
             t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            n = df.count() if name != "flagship" else len(df.collect())
+            n = action(name, qs[name](spark, sf_dir))
             samples[name].append(time.perf_counter() - t0)
             if n < 0:  # consumes n without assert (compiled out under -O)
                 raise RuntimeError(f"negative row count for {name}")

@@ -201,17 +201,12 @@ def pagerank(
     iterations=0 call still returns the distinct-node seed). The
     composed lazy plan re-partitions ranks and edges on the same key,
     so AQE collapses the per-iteration exchanges at bench scale."""
-    # Materialize the CANONICAL edge list first (one eager checkpoint
-    # job): both ``undirect`` and ``degrees`` consume the edge relation,
-    # and joining two lazy derivations of it would execute the
-    # fact-scan → pair-aggregate subtree TWICE inside the ed_deg
-    # checkpoint job (measured: checkpointing edges first + the window
-    # degree annotation below cut the pagerank query 3.7 s → 2.9 s warm
-    # at sf0.1 — the derivation runs once, and everything downstream
-    # operates on the thresholded edge list, orders of magnitude
-    # smaller than the fact table). Same pattern as the MinHash
-    # signature materialization in functions/dedup.py.
-    edges_m = edges.localCheckpoint(eager=True)
+    # The caller passes the edge list STAGED (every registered query
+    # passes cached_edges, a session-cached eager checkpoint): ``undirect``
+    # reads it twice, and over a lazy derivation both branches would
+    # re-run the fact-scan → pair-aggregate subtree inside the ed_deg
+    # checkpoint job. It is staged already, so it is not checkpointed
+    # again here.
     # Degree-annotate with a COUNT window over the undirected relation:
     # one shuffle on src replaces the undirect-join-degrees formulation,
     # whose two branches would re-derive the union twice and add a
@@ -228,7 +223,7 @@ def pagerank(
     from pyspark.sql import Window
 
     ed_deg = (
-        undirect(edges_m)
+        undirect(edges)
         .select(
             "src",
             "dst",
@@ -279,17 +274,18 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     Per round: one (dst, label) count aggregate over the label-joined
     edge relation, then the argmax folds into a MAP-SIDE-combinable
     max_by over (count, -label) — no row_number window, so the per-node
-    candidate labels never sort-shuffle. Same materialize-edges-once
-    pattern as pagerank; everything downstream of the checkpoint is
-    edge-list-sized. Round 1 skips the label join (r18, guide §2.4):
-    the seed is the identity labelling, so each edge's neighbor-label
-    row is just (dst, src) — identical multiset to joining the distinct
-    -node identity relation — and the distinct() that only seeded it
+    candidate labels never sort-shuffle. As for pagerank, the input edge
+    list must be staged; everything downstream of it is edge-list-sized.
+    Round 1 skips the label join (r18, guide §2.4): the seed is the
+    identity labelling, so each edge's neighbor-label row is just
+    (dst, src) — identical multiset to joining the distinct-node
+    identity relation — and the distinct() that only seeded it
     disappears (one exchange + one join fewer per query; iterations=0
     still returns the identity seed). Pure BIGINT arithmetic end to
     end."""
-    edges_m = edges.localCheckpoint(eager=True)
-    ed = undirect(edges_m)
+    # The caller passes the edge list staged (cached_edges), as for
+    # pagerank: ``undirect`` reads it twice and every round re-reads it.
+    ed = undirect(edges)
     labels: DataFrame | None = None
     for _ in range(iterations):
         if labels is None:
