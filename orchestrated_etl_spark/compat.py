@@ -17,8 +17,8 @@ instead of being sprinkled across operators:
   back to ``spark.sql.shuffle.partitions``, the knob that already sizes
   every other shuffle in the same plans, so the fallback degrades to
   "no worse than the neighboring exchanges".
-- ``application_id``: used only as a per-application cache key for
-  staged relations (BM25 posting store, trimmed graph edges). On
+- ``application_id``: used only as the per-application part of
+  staged.py's session-index key (graph edges, BM25 index). On
   Connect, ``spark.app.id`` is a plain runtime conf read; the final
   fallback keys on the session object identity, which over-invalidates
   (new key per session) but never under-invalidates.

@@ -369,12 +369,18 @@ def _cogroup_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     can't be a join (e.g. attribution models, per-user reconciliation).
     The kernel here is deliberately expressible (counts + rounded sums)
     so the DuckDB oracle — a full outer join of two aggregates — pins the
-    cogroup semantics: keys present on EITHER side reach the function."""
-    ev = read_events(spark, sf_dir).where(F.col("user_id").isNotNull())
-    clicks = ev.where(F.col("event_type") == "click").select("user_id", "value")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "value"
-    )
+    cogroup semantics: keys present on EITHER side reach the function.
+    Each side reads events on its own: two sides derived from one frame
+    share its attributes, the UDF binds both sides' ``value`` to one
+    attribute, and the pruning a ``count()`` triggers then drops
+    ``value`` from the purchase side (KeyError in the kernel)."""
+
+    def side(event_type: str) -> DataFrame:
+        return read_events(spark, sf_dir).where(
+            F.col("user_id").isNotNull() & (F.col("event_type") == event_type)
+        ).select("user_id", "value")
+
+    clicks, purchases = side("click"), side("purchase")
 
     def reconcile(key, left, right):
         import pandas as pd

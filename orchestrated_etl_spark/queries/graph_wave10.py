@@ -26,12 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import application_id
 from orchestrated_etl_spark.functions.graph import (
-    copurchase_edges,
+    cached_edges,
     degrees,
     pagerank,
-    src_layout,
     triangle_count,
     triangle_count_oriented,
     undirect,
@@ -55,57 +53,6 @@ _EDGE_CTE = """
 # ---------------------------------------------------------------------------
 # edge derivation
 # ---------------------------------------------------------------------------
-
-
-# Materialize-once edge store: (applicationId, sf_dir, min_weight) ->
-# eagerly checkpointed edge relation. Every graph query in this module
-# starts from the same derived co-purchase edges; without the cache each
-# query re-runs the two fact-table shuffles of the derivation (the
-# per-query fixed cost SCALING.md documents, ~1.6 s at sf0.1 — and at
-# 100 TB, two fact-scale shuffles per query). This is the same session
-# cache pattern as the BM25 index: on a cluster it is the staged edges
-# table the nightly graph job writes once and every query reads.
-_EDGE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
-def cached_edges(
-    spark: SparkSession, sf_dir: str, min_weight: int = 2
-) -> DataFrame:
-    key = (application_id(spark), sf_dir, min_weight)
-    if key not in _EDGE_CACHE:
-        if len(_EDGE_CACHE) > 8:  # one fixture's relations at a time
-            _EDGE_CACHE.clear()
-        _EDGE_CACHE[key] = copurchase_edges(
-            spark, sf_dir, min_weight=min_weight
-        ).localCheckpoint(eager=True)
-    return _EDGE_CACHE[key]
-
-
-_ULAYOUT_CACHE: dict[tuple[str, str, int, str], DataFrame] = {}
-
-
-def cached_undirected_layout(
-    spark: SparkSession, sf_dir: str, min_weight: int = 1
-) -> DataFrame:
-    """Session-cached UNDIRECTED (src, dst) edge layout, hash-
-    partitioned by src and pinned with a checkpoint — the per-round
-    probe side every iterative traversal (BFS, Bellman-Ford) joins
-    its frontier against. Building it costs an edge-sized shuffle
-    (~0.8 s at sf0.1 on the dense graph); on a cluster this IS the
-    bucketed-by-src edges table the nightly graph job stages once, so
-    caching it per session is the honest local stand-in (same argument
-    as cached_edges / the BM25 index)."""
-    # The layout is staged at the shuffle width (src_layout), so a session
-    # that changes the width needs a new one.
-    width = spark.conf.get("spark.sql.shuffle.partitions")
-    key = (application_id(spark), sf_dir, min_weight, width)
-    if key not in _ULAYOUT_CACHE:
-        if len(_ULAYOUT_CACHE) > 4:
-            _ULAYOUT_CACHE.clear()
-        _ULAYOUT_CACHE[key] = src_layout(
-            undirect(cached_edges(spark, sf_dir, min_weight=min_weight))
-        )
-    return _ULAYOUT_CACHE[key]
 
 
 def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

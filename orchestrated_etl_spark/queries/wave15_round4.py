@@ -43,9 +43,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.compat import default_parallelism
-from orchestrated_etl_spark.functions.graph import degrees
+from orchestrated_etl_spark.functions.graph import cached_edges, degrees
 from orchestrated_etl_spark.operators.relational import global_rank_two_phase
-from orchestrated_etl_spark.queries.graph_wave10 import _EDGE_CTE, cached_edges
+from orchestrated_etl_spark.queries.graph_wave10 import _EDGE_CTE
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources.catalog import load_table, read_events
 

@@ -22,6 +22,12 @@ from orchestrated_etl_spark import schemas
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """Where fixture table ``name`` lives under ``sf_dir``: one parquet
+    file or a directory of part files."""
+    return f"{sf_dir}/{name}.parquet"
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table with its declared schema (``schemas.TABLES``).
 
@@ -37,7 +43,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {sorted(schemas.TABLES)}")
     if name == "events":
         return read_events(spark, sf_dir)
-    return spark.read.schema(schemas.TABLES[name]).parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(schemas.TABLES[name]).parquet(table_path(sf_dir, name))
 
 
 def nanos_to_micros_ts(col: str = "ts"):
@@ -72,7 +78,7 @@ def events_ts_type(sf_dir: str) -> T.DataType:
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
-    first = ds.dataset(f"{sf_dir}/events.parquet", format="parquet").files[0]
+    first = ds.dataset(table_path(sf_dir, "events"), format="parquet").files[0]
     footer = pq.ParquetFile(first).schema
     ts = footer.column(footer.names.index("ts"))
     logical = json.loads(ts.logical_type.to_json())
@@ -103,7 +109,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.schema(schemas.events_schema(ts_type)).parquet(
-        f"{sf_dir}/events.parquet"
+        table_path(sf_dir, "events")
     )
     return raw.withColumn("ts", nanos_to_micros_ts("ts")) if nanos else raw
 

@@ -200,3 +200,18 @@ def test_linear_interpolation_hand_series(spark):
     assert got[(1, "2024-01-03")] == (False, 30.0)
     assert got[(1, "2024-01-04")] == (True, 40.0)
     assert got[(2, "2024-01-02")] == (True, 7.0)
+
+
+def test_cogroup_click_purchase_counts_what_it_collects(spark, sf_dir):
+    """Counting the cogroup must run the same kernel as collecting it.
+    When both sides came from one events frame they shared attributes,
+    and the column pruning of count() dropped ``value`` from the purchase
+    side (KeyError: 'value' inside the pandas function)."""
+    from orchestrated_etl_spark.queries.analytics_wave5 import (
+        _cogroup_click_purchase,
+    )
+
+    df = _cogroup_click_purchase(spark, sf_dir)
+    rows = df.collect()
+    assert rows
+    assert df.count() == len(rows)

@@ -28,12 +28,15 @@ def test_trace_splits_layers_and_lists_staging_calls(sf_dir):
     calls show with their job counts, and its warm build runs exactly
     2 jobs: cached_edges hands pagerank a staged edge list, so pagerank
     stages only its degree-annotated relation (it re-checkpointed the
-    staged edges too, 3 jobs, before)."""
-    proc = _trace(sf_dir, "--reps", "2", "graph_pagerank", "q1_pricing_summary")
+    staged edges too, 3 jobs, before). graph_bfs_frontier's warm build
+    is its five one-job staging calls and nothing else: its seed is
+    staged with its edges (the seed fetch added 2 jobs, 7, before)."""
+    names = ["graph_pagerank", "graph_bfs_frontier", "q1_pricing_summary"]
+    proc = _trace(sf_dir, "--reps", "2", *names)
     assert proc.returncode == 0, proc.stderr[-3000:]
     lines = [json.loads(line) for line in proc.stdout.splitlines()]
     by_name = {line["query"]: line for line in lines if "query" in line}
-    assert list(by_name) == ["graph_pagerank", "q1_pricing_summary"]
+    assert list(by_name) == names
     assert "summary" in lines[-1] and lines[-1]["errors"] == []
     for line in by_name.values():
         for phase in ("cold", "warm"):
@@ -47,6 +50,9 @@ def test_trace_splits_layers_and_lists_staging_calls(sf_dir):
     assert all(jobs > 0 for _via, _s, jobs in pr["stages"])
     assert sum(jobs for _via, _s, jobs in pr["stages"]) == pr["warm"]["build_jobs"]
     assert pr["warm"]["build_jobs"] == 2
+    bfs = by_name["graph_bfs_frontier"]
+    assert sum(jobs for _via, _s, jobs in bfs["stages"]) == bfs["warm"]["build_jobs"]
+    assert bfs["warm"]["build_jobs"] == 5
     assert by_name["q1_pricing_summary"]["stages"] == []
 
 

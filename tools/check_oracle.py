@@ -153,6 +153,42 @@ def duck_fetch(res, pandas_mode):
     return cols, rows
 
 
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with every fixture table under ``sf_dir``
+    registered as a view by its name, as the oracle SQL expects."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def compare(scols, srows, dcols, drows) -> list[str]:
+    """The gate's verdict on one query: [] when Spark's and DuckDB's
+    results agree (column names case-insensitively, row count, and the
+    order-insensitive multiset of normalized values), else the lines
+    that say how they differ, with example differing rows."""
+    lower = sorted(c.lower() for c in dcols)
+    if sorted(scols) != lower and sorted(c.lower() for c in scols) != lower:
+        return [
+            "columns differ",
+            f"      spark={sorted(scols)}",
+            f"      duck ={sorted(dcols)}",
+        ]
+    if len(srows) != len(drows):
+        return [f"row count spark={len(srows)} duck={len(drows)}"]
+    sm = df_multiset([c.lower() for c in scols], srows)
+    dm = df_multiset([c.lower() for c in dcols], drows)
+    if sm == dm:
+        return []
+    return (
+        ["value multiset differs"]
+        + [f"      oracle-only ×{c}: {r}" for r, c in list((dm - sm).items())[:3]]
+        + [f"      spark-only ×{c}: {r}" for r, c in list((sm - dm).items())[:3]]
+    )
+
+
 def sample_queries(
     qs: dict, oracles: dict, n: int, seed: int, non_front: bool
 ) -> list[str]:
@@ -262,11 +298,7 @@ def main() -> int:
         spark = get_spark("oracle_check", extra_conf=static_confs or None)
     for k, v in confs.items():
         spark.conf.set(k, v)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -315,31 +347,12 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: duckdb error: {e}")
             continue
-        ok = True
-        if sorted(scols) != sorted(c.lower() for c in dcols) and sorted(
-            c.lower() for c in scols
-        ) != sorted(c.lower() for c in dcols):
-            ok = False
-            print(f"FAIL  {name}: columns differ\n      spark={sorted(scols)}\n      duck ={sorted(dcols)}")
-        elif len(srows) != len(drows):
-            ok = False
-            print(f"FAIL  {name}: row count spark={len(srows)} duck={len(drows)}")
-        else:
-            sm = df_multiset([c.lower() for c in scols], srows)
-            dm = df_multiset([c.lower() for c in dcols], drows)
-            if sm != dm:
-                ok = False
-                miss = list((dm - sm).items())[:3]
-                extra = list((sm - dm).items())[:3]
-                print(f"FAIL  {name}: value multiset differs")
-                for r, c in miss:
-                    print(f"      oracle-only ×{c}: {r}")
-                for r, c in extra:
-                    print(f"      spark-only ×{c}: {r}")
-        if ok:
-            print(f"OK    {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
-        else:
+        diff = compare(scols, srows, dcols, drows)
+        if diff:
             failures.append(name)
+            print(f"FAIL  {name}: " + "\n".join(diff))
+        else:
+            print(f"OK    {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from orchestrated_etl_spark.functions import similarity as SIM  # noqa: E402
 from orchestrated_etl_spark.functions.graph import (  # noqa: E402
     bfs_distances,
+    cached_edges,
     copurchase_edges,
     shortest_path_bf,
 )
@@ -54,10 +55,7 @@ from orchestrated_etl_spark.queries import (  # noqa: E402
     wave13_round4 as W13,
     wave15_round4 as W15,
 )
-from orchestrated_etl_spark.queries.graph_wave10 import (  # noqa: E402
-    _graph_pagerank,
-    cached_edges,
-)
+from orchestrated_etl_spark.queries.graph_wave10 import _graph_pagerank  # noqa: E402
 from orchestrated_etl_spark.session import get_spark  # noqa: E402
 from orchestrated_etl_spark.sources.catalog import (  # noqa: E402
     DEFAULT_SF_DIR,
@@ -76,9 +74,9 @@ from scaling_common import (  # noqa: E402
 
 Grow = Callable[[DataFrame, int], DataFrame]
 Stage = Callable[[SparkSession, str, str, int], None]
-# A core returns the DataFrame to count, or None when it only stages
-# session state (the BM25 index build).
-Query = Callable[[SparkSession, str], "DataFrame | None"]
+# A core returns the DataFrame to count, or the relations it staged (the
+# BM25 index build), which are not counted.
+Query = Callable[[SparkSession, str], object]
 
 
 class Family(NamedTuple):
@@ -317,7 +315,7 @@ FAMILIES: dict[str, Family] = {
 
 def _run(query: Query, spark: SparkSession, sf_dir: str) -> None:
     out = query(spark, sf_dir)
-    if out is not None:
+    if isinstance(out, DataFrame):
         out.count()
 
 
