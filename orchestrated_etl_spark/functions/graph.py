@@ -36,6 +36,20 @@ from orchestrated_etl_spark.compat import staged_checkpoint
 from orchestrated_etl_spark.sources.catalog import load_table
 from orchestrated_etl_spark.staged import staged
 
+# DuckDB twin of ``copurchase_edges`` for oracle strings: canonical (a<b)
+# co-purchase edges ``e`` with weight, over a ``li`` CTE.
+EDGE_CTE = """
+    li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    e AS (
+        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
+               count(*) AS weight
+        FROM li a
+        JOIN li b ON a.l_orderkey = b.l_orderkey
+                 AND a.l_partkey < b.l_partkey
+        GROUP BY 1, 2
+    )
+"""
+
 
 def copurchase_edges(
     spark: SparkSession, sf_dir: str, min_weight: int = 1

@@ -9,7 +9,7 @@ everything, which keeps the hot path out of Python entirely.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # A small function-word list; overlaps the fixtures' vocabulary ('the','a')
@@ -60,12 +60,6 @@ def stopword_ratio(col: Column | str) -> Column:
     return F.try_divide(sw, F.size(t))
 
 
-def digit_ratio(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    digits = F.length(F.regexp_replace(c, r"[^0-9]", ""))
-    return F.try_divide(digits, F.length(c))
-
-
 def quality_score(col: Column | str) -> Column:
     """A composite [0,1] quality heuristic in the Gopher/C4-rule spirit:
     penalize very short docs, high repetition (low unique-token ratio),
@@ -106,17 +100,4 @@ def lang_id(col: Column | str) -> Column:
         .when(has("的", "是", "了"), F.lit("zh"))
         .when(has("the", "a", "is", "and", "of"), F.lit("en"))
         .otherwise(F.lit("und"))
-    )
-
-
-def rolling_hash_fingerprints(col: Column | str, window: int = 5) -> Column:
-    """Winnowing-style shingle digests: md5 over each ``window``-token
-    shingle. Returns the array of shingle digests (callers explode/min
-    them for containment checks). Expression-only; the explode that
-    usually follows is the only row-multiplier."""
-    t = tokens(col)
-    n = F.size(t)
-    idx = F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1)))
-    return F.transform(
-        idx, lambda i: F.md5(F.array_join(F.slice(t, i, window), " "))
     )

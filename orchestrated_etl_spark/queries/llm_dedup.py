@@ -9,7 +9,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.functions import dedup as D
-from orchestrated_etl_spark.functions.text import tokens
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources.catalog import load_table
 
@@ -585,4 +584,184 @@ register(
     "train_fuzzy_decontaminate",
     _fuzzy_decontaminate,
     _fuzzy_decontaminate_oracle(),
+)
+
+
+# ---------------------------------------------------------------------------
+# content-defined chunking dedup (FastCDC-style, exact substring level)
+# ---------------------------------------------------------------------------
+
+_CDC_POWS = [31**e for e in range(7, -1, -1)]  # 31^7 .. 31^0
+
+
+_CDC_MOD = 32  # expected chunk length ~= 32 chars
+
+
+def _cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact substring-level dedup via content-defined chunking — the
+    rsync / dedup-storage / incremental-sync primitive, and the exact
+    complement to MinHash's document-level near-dup: it finds SHARED
+    PASSAGES between otherwise-different documents.
+
+    Each document is cut where the 8-gram polynomial hash
+    Σ ord(c_{i+j})·31^(7-j) satisfies H % 32 == 0 — boundaries are
+    CONTENT-defined, so a shared passage chunks identically regardless
+    of its offset in either document (the property fixed-size blocking
+    lacks; cf. FastCDC, USENIX ATC'16). Chunks are md5'd; a chunk seen
+    in >= 2 DISTINCT documents is shared content. Per doc: chunk count,
+    shared-chunk count, shared chars, total chars — all exact integers.
+
+    The hashing kernel is a vectorized-numpy ``mapInPandas`` stage, a
+    DELIBERATE exception to the JVM-first rule: Spark evaluates
+    higher-order-function lambdas interpreted (never whole-stage
+    codegen), and the multiply-referenced cut array gets inlined by
+    CollapseProject into one hash re-scan PER CHUNK — the pure-
+    expression form measured 150x slower than this Arrow-batched
+    kernel at sf0.01. The per-row kernel is one O(n) sliding-window
+    dot product (utf-32 codepoints ⊗ the power vector), so parity with
+    the DuckDB oracle's integer arithmetic is exact.
+
+    Production variants enforce min/max chunk sizes inside the same
+    kernel; the unclamped cut rule keeps the oracle expressible as
+    DuckDB list comprehensions.
+
+    Scale shape: hashing/chunking is MAP-ONLY inside the scan stage,
+    and the emitted stream carries (doc_id, md5, chunk_len) — 40-ish
+    bytes per chunk, never text. It is checkpointed ONCE (two
+    consumers; re-running the kernel would re-hash the corpus), then
+    one groupBy(md5) + one broadcast-eligible join back + one
+    groupBy(doc_id): two narrow shuffles over chunk-count rows
+    regardless of corpus size."""
+    import pandas as pd
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text"
+    )
+
+    def chunker(batches):
+        import hashlib
+
+        import numpy as np
+
+        pows = np.array(_CDC_POWS, dtype=np.int64)
+        for pdf in batches:
+            recs = {"doc_id": [], "n": [], "h": [], "len": []}
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                t = text or ""
+                nn = len(t)
+                starts = [1]
+                if nn >= 9:
+                    codes = np.frombuffer(
+                        t.encode("utf-32-le"), dtype=np.uint32
+                    ).astype(np.int64)
+                    win = np.lib.stride_tricks.sliding_window_view(codes, 8)
+                    hashes = win @ pows  # H at 0-based start index
+                    cut_pos = np.nonzero(hashes % _CDC_MOD == 0)[0] + 1
+                    starts += [int(i) for i in cut_pos if i >= 2]
+                for ki, s in enumerate(starts):
+                    e = starts[ki + 1] if ki + 1 < len(starts) else nn + 1
+                    chunk = t[s - 1 : e - 1]
+                    recs["doc_id"].append(doc_id)
+                    recs["n"].append(nn)
+                    recs["h"].append(
+                        hashlib.md5(chunk.encode("utf-8")).hexdigest()
+                    )
+                    recs["len"].append(e - s)
+            yield pd.DataFrame(recs)
+
+    chunk_stream = docs.mapInPandas(
+        chunker, "doc_id long, n long, h string, len long"
+    ).localCheckpoint(eager=True)
+    shared = (
+        chunk_stream.groupBy("h")
+        .agg(F.count_distinct("doc_id").alias("n_docs"))
+        .where(F.col("n_docs") >= 2)
+        .select("h")
+    )
+    # No forced broadcast (round-15 review): `shared` is the set of
+    # chunk hashes seen in >=2 docs — corpus-proportional, not bounded.
+    # The threshold/AQE broadcast it while it is small; at 100 TB the
+    # join correctly shuffles on the hash.
+    marked = chunk_stream.join(
+        shared.withColumn("_s", F.lit(1)), "h", "left"
+    )
+    return marked.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_chunks"),
+        F.sum(F.when(F.col("_s").isNotNull(), 1).otherwise(0)).alias(
+            "n_shared_chunks"
+        ),
+        F.sum(
+            F.when(F.col("_s").isNotNull(), F.col("len")).otherwise(0)
+        ).alias("shared_chars"),
+        F.max("n").alias("total_chars"),
+    )
+
+
+register(
+    "dedup_cdc_chunks",
+    _cdc_chunks,
+    """
+    WITH d AS (
+        SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n
+        FROM documents
+    ),
+    cutl AS (
+        SELECT doc_id, text, n,
+               CASE WHEN n >= 9 THEN list_filter(
+                   range(2, CAST(n - 6 AS BIGINT)),
+                   i ->
+                     (  CAST(ord(text[CAST(i AS INTEGER)]) AS BIGINT)
+                          * 27512614111
+                      + CAST(ord(text[CAST(i + 1 AS INTEGER)]) AS BIGINT)
+                          * 887503681
+                      + CAST(ord(text[CAST(i + 2 AS INTEGER)]) AS BIGINT)
+                          * 28629151
+                      + CAST(ord(text[CAST(i + 3 AS INTEGER)]) AS BIGINT)
+                          * 923521
+                      + CAST(ord(text[CAST(i + 4 AS INTEGER)]) AS BIGINT)
+                          * 29791
+                      + CAST(ord(text[CAST(i + 5 AS INTEGER)]) AS BIGINT)
+                          * 961
+                      + CAST(ord(text[CAST(i + 6 AS INTEGER)]) AS BIGINT)
+                          * 31
+                      + CAST(ord(text[CAST(i + 7 AS INTEGER)]) AS BIGINT)
+                     ) % 32 = 0)
+               ELSE [] END AS cuts
+        FROM d
+    ),
+    st AS (
+        SELECT doc_id, text, n,
+               list_prepend(CAST(1 AS BIGINT), cuts) AS starts
+        FROM cutl
+    ),
+    chunks AS (
+        SELECT doc_id, n,
+               unnest(list_transform(
+                   range(1, CAST(len(starts) + 1 AS BIGINT)),
+                   k -> struct_pack(
+                       h := md5(substr(text,
+                                CAST(starts[CAST(k AS INTEGER)] AS INTEGER),
+                                CAST(COALESCE(
+                                      starts[CAST(k + 1 AS INTEGER)], n + 1)
+                                   - starts[CAST(k AS INTEGER)]
+                                   AS INTEGER))),
+                       l := COALESCE(starts[CAST(k + 1 AS INTEGER)], n + 1)
+                            - starts[CAST(k AS INTEGER)]))) AS c
+        FROM st
+    ),
+    stream AS (SELECT doc_id, n, c.h AS h, c.l AS len FROM chunks),
+    shared AS (
+        SELECT h FROM stream GROUP BY h
+        HAVING count(DISTINCT doc_id) >= 2
+    )
+    SELECT s.doc_id,
+           CAST(count(*) AS BIGINT) AS n_chunks,
+           CAST(sum(CASE WHEN sh.h IS NOT NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_shared_chunks,
+           CAST(sum(CASE WHEN sh.h IS NOT NULL THEN s.len ELSE 0 END)
+                AS BIGINT) AS shared_chars,
+           CAST(max(s.n) AS BIGINT) AS total_chars
+    FROM stream s LEFT JOIN shared sh ON s.h = sh.h
+    GROUP BY s.doc_id
+    """,
 )

@@ -7,10 +7,13 @@ engine-independent."""
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.compat import default_parallelism
+from orchestrated_etl_spark.functions.dedup import cosine
 from orchestrated_etl_spark.functions import similarity as SIM
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources.catalog import load_table
@@ -1006,5 +1009,218 @@ register(
                  s -> (s / n_members) * (s / n_members)))), 6) AS new_l2,
            round(vsum[1] / n_members, 6) AS new_c0
     FROM folded
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# random-hyperplane LSH (cosine space)
+# ---------------------------------------------------------------------------
+
+_N_PLANES = 6
+
+
+_DIM = 64
+
+
+_COSINE_THRESHOLD = 0.4  # same bar as dedup_embedding_cosine
+
+
+def _plane_signs() -> list[list[int]]:
+    """±1 hyperplane components derived from md5 — deterministic without
+    any RNG, so the Spark query and the SQL oracle inline the SAME planes
+    (and a rerun on another cluster buckets identically)."""
+    return [
+        [
+            1 if int(hashlib.md5(f"plane{p}:dim{d}".encode()).hexdigest()[:2], 16) % 2 == 0 else -1
+            for d in range(_DIM)
+        ]
+        for p in range(_N_PLANES)
+    ]
+
+
+def _hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Random-hyperplane LSH over the embedding corpus: each vector's
+    signature is the sign pattern of its dot products with fixed ±1
+    hyperplanes (a map-only JVM expression — SimHash for real-valued
+    vectors), vectors sharing a signature become candidate pairs, and
+    candidates are verified with the exact cosine. Per-bucket stats:
+    candidate count vs verified count = the precision the banding bought.
+    The all-pairs comparison this replaces is |C|²; here the self-join is
+    per-bucket (E[size] = |C| / 2^n_planes)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    planes = _plane_signs()
+    sig = None
+    for p, signs in enumerate(planes):
+        plane_col = F.array(*[F.lit(float(s)) for s in signs])
+        d = F.aggregate(
+            F.zip_with(
+                "embedding", plane_col, lambda x, y: x.cast("double") * y
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        bit = F.when(d >= 0, F.lit(1 << p)).otherwise(F.lit(0))
+        sig = bit if sig is None else sig + bit
+    tagged = emb.select("vec_id", "embedding", sig.alias("signature"))
+    buckets = tagged.groupBy("signature").agg(
+        F.count(F.lit(1)).alias("n_vectors"),
+        (F.count(F.lit(1)) * (F.count(F.lit(1)) - 1) / 2)
+        .cast("long")
+        .alias("n_candidate_pairs"),
+    )
+    a = tagged.alias("a")
+    b = tagged.alias("b")
+    verified = (
+        a.join(
+            b,
+            (F.col("a.signature") == F.col("b.signature"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .where(
+            F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6)
+            >= _COSINE_THRESHOLD
+        )
+        .groupBy(F.col("a.signature").alias("signature"))
+        .agg(F.count(F.lit(1)).alias("n_verified_pairs"))
+    )
+    return (
+        buckets.join(verified, "signature", "left")
+        .select(
+            "signature",
+            "n_vectors",
+            "n_candidate_pairs",
+            F.coalesce("n_verified_pairs", F.lit(0)).alias("n_verified_pairs"),
+        )
+    )
+
+
+def _lsh_oracle() -> str:
+    planes = _plane_signs()
+    bit_terms = " + ".join(
+        f"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
+        f"[{', '.join(f'{s}.0' for s in signs)}]) >= 0 THEN {1 << p} ELSE 0 END)"
+        for p, signs in enumerate(planes)
+    )
+    return f"""
+    WITH tagged AS (
+        SELECT vec_id, embedding, {bit_terms} AS signature FROM embeddings
+    ),
+    buckets AS (
+        SELECT signature, CAST(count(*) AS BIGINT) AS n_vectors,
+               CAST(count(*) * (count(*) - 1) / 2 AS BIGINT)
+                   AS n_candidate_pairs
+        FROM tagged GROUP BY signature
+    ),
+    verified AS (
+        SELECT a.signature, CAST(count(*) AS BIGINT) AS n_verified_pairs
+        FROM tagged a JOIN tagged b
+          ON a.signature = b.signature AND a.vec_id < b.vec_id
+        WHERE round(
+                list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                 CAST(b.embedding AS DOUBLE[]))
+                / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                         CAST(a.embedding AS DOUBLE[])))
+                   * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]),
+                                           CAST(b.embedding AS DOUBLE[])))),
+                6) >= {_COSINE_THRESHOLD}
+        GROUP BY a.signature
+    )
+    SELECT b.signature, b.n_vectors, b.n_candidate_pairs,
+           coalesce(v.n_verified_pairs, 0) AS n_verified_pairs
+    FROM buckets b LEFT JOIN verified v ON b.signature = v.signature
+    """
+
+
+register("sim_hyperplane_lsh", _hyperplane_lsh, _lsh_oracle())
+
+
+# ---------------------------------------------------------------------------
+# label-centroid cosine similarity matrix
+# ---------------------------------------------------------------------------
+
+
+def _label_centroid_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise cosine similarity between per-label embedding
+    centroids — the class-confusability / cluster-quality readout
+    (labels whose centroids nearly coincide are candidates for
+    merging; for corpora, sources whose centroid similarity is high
+    carry redundant content). Centroids are per-(label, dim) means
+    from ONE posexplode pass; the pair join is dim-keyed over the
+    K·d-sized centroid relation, never the corpus. Mean/dot/norm
+    summation order differs between engines, and cosines are
+    genuinely irrational → round(,6) tolerance (float-policy
+    exception c).
+
+    Scale: corpus-sized work is the single explode+aggregate; the
+    K²·d pair stage is centroid-sized (K labels, d dims). The exact
+    same shape serves source-vs-source redundancy at any corpus
+    size."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    cent = (
+        emb.select("label", F.posexplode("embedding").alias("dim", "v"))
+        .groupBy("label", "dim")
+        .agg(F.avg("v").alias("c"))
+        .localCheckpoint(eager=True)  # feeds norms AND the pair join
+    )
+    norms = cent.groupBy("label").agg(
+        F.sqrt(F.sum(F.col("c") * F.col("c"))).alias("nrm")
+    )
+    a = cent.select(
+        F.col("label").alias("label_a"), "dim", F.col("c").alias("ca")
+    )
+    b = cent.select(
+        F.col("label").alias("label_b"), "dim", F.col("c").alias("cb")
+    )
+    dots = (
+        a.join(b, "dim")
+        .where(F.col("label_a") < F.col("label_b"))
+        .groupBy("label_a", "label_b")
+        .agg(F.sum(F.col("ca") * F.col("cb")).alias("dot"))
+    )
+    na = norms.select(
+        F.col("label").alias("label_a"), F.col("nrm").alias("na")
+    )
+    nb = norms.select(
+        F.col("label").alias("label_b"), F.col("nrm").alias("nb")
+    )
+    return (
+        dots.join(F.broadcast(na), "label_a")
+        .join(F.broadcast(nb), "label_b")
+        .select(
+            "label_a",
+            "label_b",
+            F.round(
+                F.col("dot") / (F.col("na") * F.col("nb")), 6
+            ).alias("cos_sim"),
+        )
+    )
+
+
+register(
+    "sim_label_centroid_matrix",
+    _label_centroid_matrix,
+    """
+    WITH cent AS (
+        SELECT label, CAST(t.i - 1 AS INTEGER) AS dim,
+               avg(embedding[CAST(t.i AS INTEGER)]) AS c
+        FROM embeddings, range(1, 4097) AS t(i)
+        WHERE t.i <= len(embedding)
+        GROUP BY 1, 2
+    ),
+    norms AS (
+        SELECT label, sqrt(sum(c * c)) AS nrm FROM cent GROUP BY label
+    ),
+    dots AS (
+        SELECT a.label AS label_a, b.label AS label_b,
+               sum(a.c * b.c) AS dot
+        FROM cent a JOIN cent b ON a.dim = b.dim AND a.label < b.label
+        GROUP BY 1, 2
+    )
+    SELECT d.label_a, d.label_b,
+           round(d.dot / (na.nrm * nb.nrm), 6) AS cos_sim
+    FROM dots d
+    JOIN norms na ON d.label_a = na.label
+    JOIN norms nb ON d.label_b = nb.label
     """,
 )

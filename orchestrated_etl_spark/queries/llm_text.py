@@ -4,10 +4,12 @@ word counts, fingerprinting, heuristic language-ID."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from orchestrated_etl_spark.compat import default_parallelism
 from orchestrated_etl_spark.functions import text as X
+from orchestrated_etl_spark.operators.relational import global_rank_two_phase
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources.catalog import load_table
 
@@ -495,5 +497,373 @@ register(
            count(DISTINCT page_param) AS n_page_values
     FROM parsed
     GROUP BY host
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# character entropy (quality signal)
+# ---------------------------------------------------------------------------
+
+
+def _char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-language character-entropy profile: Shannon entropy of each
+    document's character distribution (gibberish scores high, repeated
+    boilerplate low), averaged per lang. Explode → two hash aggregates,
+    all JVM expressions; the explode fan-out (~n_chars rows) combines
+    map-side immediately, so the shuffle carries only (doc, char) counts."""
+    docs = load_table(spark, sf_dir, "documents")
+    chars = docs.select(
+        "doc_id",
+        "lang",
+        F.explode(F.filter(F.split("text", ""), lambda c: c != "")).alias("ch"),
+    )
+    per_char = chars.groupBy("doc_id", "lang", "ch").agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+    with_total = per_char.withColumn(
+        "p", F.col("cnt") / F.sum("cnt").over(Window.partitionBy("doc_id"))
+    )
+    per_doc = with_total.groupBy("doc_id", "lang").agg(
+        (-F.sum(F.col("p") * F.log("p"))).alias("entropy"),
+        F.count(F.lit(1)).alias("uniq_chars"),
+    )
+    return per_doc.groupBy("lang").agg(
+        F.round(F.avg("entropy"), 4).alias("avg_entropy"),
+        F.round(F.avg("uniq_chars"), 4).alias("avg_uniq_chars"),
+        F.count(F.lit(1)).alias("n_docs"),
+    )
+
+
+register(
+    "text_char_entropy",
+    _char_entropy,
+    r"""
+    WITH chars AS (
+        -- [\s\S] (not '.') so newlines are enumerated like every other
+        -- character, matching Spark's split(text, '') enumeration even on
+        -- multi-line documents.
+        SELECT doc_id, lang, unnest(regexp_extract_all(text, '[\s\S]')) AS ch
+        FROM documents
+    ),
+    per_char AS (
+        SELECT doc_id, lang, ch, count(*) AS cnt
+        FROM chars GROUP BY doc_id, lang, ch
+    ),
+    with_total AS (
+        SELECT doc_id, lang, cnt,
+               cnt * 1.0 / sum(cnt) OVER (PARTITION BY doc_id) AS p
+        FROM per_char
+    ),
+    per_doc AS (
+        SELECT doc_id, lang,
+               -sum(p * ln(p)) AS entropy,
+               count(*) AS uniq_chars
+        FROM with_total GROUP BY doc_id, lang
+    )
+    SELECT lang,
+           round(avg(entropy), 4) AS avg_entropy,
+           round(avg(uniq_chars), 4) AS avg_uniq_chars,
+           count(*) AS n_docs
+    FROM per_doc GROUP BY lang
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# unigram LM document scoring (CCNet-style quality signal)
+# ---------------------------------------------------------------------------
+
+
+def _text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document mean unigram log-probability under the corpus's own
+    unigram distribution — the cheap stand-in for CCNet's LM-perplexity
+    quality filter: documents of common words score high (less negative),
+    documents of rare words score low. Plan: one (term) aggregate builds
+    the LM, one explode+join+aggregate scores every document; both
+    aggregates partial-combine map-side.
+
+    The LM join-back carries NO broadcast hint (round-17 review — the
+    r16 text_tfidf_keywords finding's SQL-hint sibling, which the F.
+    broadcast() grep missed): the RAW-token vocabulary grows by Heaps'
+    law with the corpus, not the language — a forced hint never falls
+    back past the threshold and OOMs executors at 100 TB. Below the
+    threshold Catalyst still picks broadcast on its own (same local
+    plan); past it the score pass degrades to a term-keyed shuffle
+    join, which partial-combines map-side either way. Issued as SQL
+    text so the corpus token total plans as a ScalarSubquery literal
+    rather than a 1-row nested-loop join (plan-audit clean). The
+    log-prob is genuinely irrational → round(…,6) is the cross-engine
+    tolerance (registry.py float policy), and ordering ties break on
+    doc_id."""
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
+        "docs_ulm"
+    )
+    return spark.sql(
+        """
+        WITH toks AS (
+            SELECT doc_id, explode(split(text, ' ')) AS term FROM docs_ulm
+        ),
+        lm AS (SELECT term, count(*) AS cnt FROM toks GROUP BY 1)
+        SELECT doc_id,
+               round(avg(ln(CAST(cnt AS DOUBLE)
+                            / (SELECT sum(cnt) FROM lm))), 6)
+                   AS mean_logprob,
+               count(*) AS n_tokens
+        FROM toks JOIN lm USING (term)
+        GROUP BY doc_id
+        ORDER BY doc_id
+        """
+    )
+
+
+register(
+    "text_unigram_logprob",
+    _text_unigram_logprob,
+    """
+    WITH toks AS (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        FROM documents
+    ),
+    lm AS (SELECT term, count(*) AS cnt FROM toks GROUP BY 1),
+    tot AS (SELECT sum(cnt) AS total FROM lm)
+    SELECT doc_id,
+           round(avg(ln(CAST(cnt AS DOUBLE) / total)), 6) AS mean_logprob,
+           count(*) AS n_tokens
+    FROM toks JOIN lm USING (term) CROSS JOIN tot
+    GROUP BY doc_id
+    ORDER BY doc_id
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# PMI collocations (corpus co-occurrence statistics)
+# ---------------------------------------------------------------------------
+
+
+def _pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pointwise mutual information of word pairs at DOCUMENT
+    co-occurrence granularity — collocation/phrase mining for
+    tokenizer vocabularies and topic audits: PMI = ln(n_ab·N /
+    (n_a·n_b)) corrects raw co-occurrence for word frequency (the
+    text twin of orders_basket_lift's lift). Pairs are generated
+    MAP-SIDE from each document's sorted distinct-word array via
+    nested TRANSFORM (the copurchase_edges idiom — no self-join, no
+    second corpus scan); the corpus is repartitioned by doc before
+    the quadratic-per-doc expansion so the kernel parallelizes off
+    the fixture's single row group. Counts are exact BIGINTs; ln is
+    applied to an exact rational, so round(,6) is a pure tolerance
+    (float-policy exception c, the text_unigram_logprob precedent).
+    Top-50 by (n_ab DESC, pair ASC) — total order, rank-stable.
+
+    Scale: one doc-grouped aggregate + one pair aggregate (both
+    partial-aggregable); per-doc fan-out is |vocab_doc|², bounded by
+    document length — the same contract as shingling. N and the
+    unigram doc-frequencies are vocabulary-sized broadcasts."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text"
+    )
+    words = docs.repartition(
+        default_parallelism(spark), "doc_id"
+    ).select(
+        "doc_id",
+        F.array_sort(
+            F.array_distinct(
+                F.filter(
+                    F.split(F.lower("text"), r"\s+"),
+                    lambda w: F.length(w) >= 2,
+                )
+            )
+        ).alias("ws"),
+    ).localCheckpoint(eager=True)  # pair counts + unigram df, one pass
+    n_docs = words.agg(F.count(F.lit(1)).alias("n"))
+    uni = words.select(F.explode("ws").alias("w")).groupBy("w").agg(
+        F.count(F.lit(1)).alias("df")
+    )
+    pairs = words.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    "ws",
+                    lambda x, i: F.transform(
+                        F.slice(F.col("ws"), i + F.lit(2), F.size("ws")),
+                        lambda y: F.struct(
+                            x.alias("word_a"), y.alias("word_b")
+                        ),
+                    ),
+                )
+            )
+        ).alias("p")
+    ).select("p.word_a", "p.word_b")
+    co = pairs.groupBy("word_a", "word_b").agg(
+        F.count(F.lit(1)).alias("n_ab")
+    )
+    da = uni.select(F.col("w").alias("word_a"), F.col("df").alias("n_a"))
+    db = uni.select(F.col("w").alias("word_b"), F.col("df").alias("n_b"))
+    # No forced broadcast on the unigram tables (round-15 review): the
+    # vocabulary grows with the corpus. Threshold/AQE broadcast them
+    # while small; the co-occurrence join shuffles on the word past it.
+    scored = (
+        co.join(da, "word_a")
+        .join(db, "word_b")
+        .crossJoin(F.broadcast(n_docs))
+        .select(
+            "word_a",
+            "word_b",
+            "n_ab",
+            "n_a",
+            "n_b",
+            F.round(
+                F.log(
+                    (F.col("n_ab") * F.col("n")).cast("double")
+                    / (F.col("n_a") * F.col("n_b")).cast("double")
+                ),
+                6,
+            ).alias("pmi"),
+        )
+    )
+    return scored.orderBy(
+        F.desc("n_ab"), F.asc("word_a"), F.asc("word_b")
+    ).limit(50)
+
+
+register(
+    "text_pmi_collocations",
+    _pmi_collocations,
+    """
+    WITH words AS (
+        SELECT doc_id,
+               list_sort(list_distinct(list_filter(
+                   regexp_split_to_array(lower(text), '\\s+'),
+                   w -> length(w) >= 2))) AS ws
+        FROM documents
+    ),
+    n_docs AS (SELECT count(*) AS n FROM words),
+    uni AS (
+        SELECT unnest(ws) AS w, doc_id FROM words
+    ),
+    df AS (SELECT w, count(*) AS df FROM uni GROUP BY w),
+    pairs AS (
+        SELECT ws[CAST(i AS INTEGER)] AS word_a,
+               ws[CAST(j AS INTEGER)] AS word_b
+        FROM words,
+             range(1, 4096) AS t1(i),
+             range(1, 4096) AS t2(j)
+        WHERE i < j AND j <= len(ws)
+    ),
+    co AS (
+        SELECT word_a, word_b, count(*) AS n_ab
+        FROM pairs GROUP BY 1, 2
+    )
+    SELECT c.word_a, c.word_b,
+           CAST(c.n_ab AS BIGINT) AS n_ab,
+           CAST(a.df AS BIGINT) AS n_a,
+           CAST(b.df AS BIGINT) AS n_b,
+           round(ln(CAST(c.n_ab * n.n AS DOUBLE)
+                    / CAST(a.df * b.df AS DOUBLE)), 6) AS pmi
+    FROM co c
+    JOIN df a ON c.word_a = a.w
+    JOIN df b ON c.word_b = b.w, n_docs n
+    ORDER BY n_ab DESC, c.word_a ASC, c.word_b ASC
+    LIMIT 50
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Zipf-law fit of the corpus word-frequency distribution
+# ---------------------------------------------------------------------------
+
+
+def _zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Zipf-law diagnostic of the corpus vocabulary: OLS slope of
+    ln(freq) against ln(rank) — natural language sits near -1;
+    strong deviation flags templated/boilerplate or synthetic text
+    (a corpus-quality gate cousin of text_unigram_logprob). Ranks are
+    a total order (freq DESC, word), the regression runs as ONE
+    regr_slope/regr_intercept/regr_r2 aggregate pass over the
+    vocabulary-sized rank relation (agg_regression_funcs establishes
+    cross-engine regr_* parity), and log/ratio outputs are genuinely
+    irrational → round(,6) tolerance (float-policy exception c).
+
+    Scale (re-plumbed round 6): the corpus collapses to the vocabulary
+    relation in one explode+aggregate, but the vocabulary itself is
+    UNBOUNDED in corpus size (Heaps' law), so ranking runs through the
+    two-phase ``global_rank_two_phase`` operator — range-partition on
+    (freq DESC, w), per-partition row_number, broadcast P-row count
+    offsets — instead of the former unpartitioned rank window (a
+    single-executor vocabulary sort at 100x). The regression is one
+    distributed regr_* aggregate pass over the ranked relation."""
+    docs = load_table(spark, sf_dir, "documents")
+    freq = (
+        docs.select(
+            F.explode(
+                F.filter(
+                    F.split(F.lower("text"), r"\s+"),
+                    lambda w: F.length(w) >= 2,
+                )
+            ).alias("w")
+        )
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
+    ranked = global_rank_two_phase(
+        freq, [F.desc("freq"), F.asc("w")], rank_col="rnk"
+    ).select("freq", "rnk")
+    return ranked.agg(
+        F.count(F.lit(1)).alias("vocab_size"),
+        F.round(
+            F.expr(
+                "regr_slope(ln(CAST(freq AS DOUBLE)),"
+                " ln(CAST(rnk AS DOUBLE)))"
+            ),
+            6,
+        ).alias("zipf_slope"),
+        F.round(
+            F.expr(
+                "regr_intercept(ln(CAST(freq AS DOUBLE)),"
+                " ln(CAST(rnk AS DOUBLE)))"
+            ),
+            6,
+        ).alias("zipf_intercept"),
+        F.round(
+            F.expr(
+                "regr_r2(ln(CAST(freq AS DOUBLE)),"
+                " ln(CAST(rnk AS DOUBLE)))"
+            ),
+            6,
+        ).alias("fit_r2"),
+    )
+
+
+register(
+    "text_zipf_slope",
+    _zipf_slope,
+    """
+    WITH freq AS (
+        SELECT w, count(*) AS freq
+        FROM (
+            SELECT unnest(list_filter(
+                regexp_split_to_array(lower(text), '\\s+'),
+                x -> length(x) >= 2)) AS w
+            FROM documents
+        )
+        GROUP BY w
+    ),
+    ranked AS (
+        SELECT freq,
+               row_number() OVER (ORDER BY freq DESC, w) AS rnk
+        FROM freq
+    )
+    SELECT CAST(count(*) AS BIGINT) AS vocab_size,
+           round(regr_slope(ln(CAST(freq AS DOUBLE)),
+                            ln(CAST(rnk AS DOUBLE))), 6) AS zipf_slope,
+           round(regr_intercept(ln(CAST(freq AS DOUBLE)),
+                                ln(CAST(rnk AS DOUBLE))), 6)
+               AS zipf_intercept,
+           round(regr_r2(ln(CAST(freq AS DOUBLE)),
+                         ln(CAST(rnk AS DOUBLE))), 6) AS fit_r2
+    FROM ranked
     """,
 )

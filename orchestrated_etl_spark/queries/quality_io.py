@@ -1,45 +1,210 @@
-"""Wave-11: data-quality auditing and physical-layout operations.
+"""Data quality, sources and sinks.
 
-Two capabilities any 100 TB corpus store runs nightly that the
-reference's DAG (dags/dag.py) leaves implicit:
-
-- **Constraint audit** — the reference drops incomplete records inline
-  (dags/dag.py:117-131, its S3 completeness filter) but never REPORTS
-  data quality. `dq_constraint_audit` evaluates a declarative rule set
-  (uniqueness, referential integrity, ranges, null checks) across three
-  tables and emits one row per rule with checked/violation counts — the
-  shape a quality dashboard or a circuit-breaker gate consumes. All
+- Quality: a declarative constraint audit (uniqueness, referential
+  integrity, ranges, nulls) that emits one row per rule, population
+  drift as PSI, and quarantine routing with per-rule reasons. All
   within-row rules for a table fold into ONE conditional aggregate over
-  ONE scan; only the cross-table rules (key uniqueness, FK containment)
-  pay a shuffle, and those shuffle key columns only.
-
-- **Physical layout** — at 100 TB the dominant read cost is decided at
-  WRITE time. `sink_compacted_roundtrip` fixes the small-file problem
-  (a 200-file shard set rewritten to a handful of right-sized files —
-  same bytes, 40× fewer open/close/footer costs); `sink_clustered_write`
-  range-clusters rows on the filter column before writing so parquet
-  row-group min/max stats become disjoint and a range predicate prunes
-  whole files (the poor man's Z-order for one dimension);
-  `src_file_lineage` reads back a hive-partitioned write through the
-  `_metadata` hidden column, proving per-file provenance accounting —
-  which file contributed which rows — without any bookkeeping table.
+  ONE scan; only the cross-table rules pay a shuffle, of key columns
+  only.
+- Sources: unstructured text logs parsed with regexp_extract, XML
+  extraction with from_xml, parquet batches whose schema evolves, and
+  per-file lineage read through the ``_metadata`` hidden column.
+- Sinks: at 100 TB the dominant read cost is decided at WRITE time.
+  Compaction rewrites a many-small-file shard set into a few right-sized
+  files; clustered and z-ordered writes make parquet row-group min/max
+  stats disjoint so range predicates prune whole files; dynamic
+  partition overwrite replaces only the partitions a batch touches.
 
 Every query returns engine-comparable AGGREGATES over the round-tripped
 data (exact integer/decimal), so the DuckDB oracle checks end-to-end
-preservation; file-count and footer-stat assertions (which DuckDB
-cannot see) are pinned in tests/test_ops_wave11.py instead.
+preservation. File-count and footer-stat assertions, which DuckDB cannot
+see, are pinned in tests/test_quality_io.py.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.queries.scale_ops import _scratch
+from orchestrated_etl_spark.functions.quality import (
+    QUARANTINE_SQL,
+    quarantine_route,
+)
 from orchestrated_etl_spark.registry import register
-from orchestrated_etl_spark.sources.catalog import load_table
+from orchestrated_etl_spark.sources.catalog import load_table, read_events
+from orchestrated_etl_spark.sources.scratch import scratch_path
+
+
+# ---------------------------------------------------------------------------
+# text-file source + regex log parse
+# ---------------------------------------------------------------------------
+
+
+def _text_logparse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unstructured-text ingestion: materialize documents as pipe-framed
+    log lines, read them back with ``spark.read.text`` (one string column,
+    no schema), and recover typed fields with regexp_extract + try_cast —
+    the reference's scrape-then-extract shape (dags/dag.py:83-106) done on
+    a text source. The parse is a map-only projection; malformed lines
+    regex-miss to NULL and are counted, not crashed on.
+
+    Robustness (vs the naive concat_ws framing): every field is framed
+    through coalesce(·, '\\N') so a NULL can never shift later fields
+    into the wrong position, the lang capture accepts any non-delimiter
+    bytes (not just lowercase ASCII), and '\\N' un-maps to NULL after
+    extraction. The materialized lines are rewritten on every call —
+    documents is dimension-sized, and an always-fresh write can never
+    serve lines from a stale fixture generation."""
+    docs = load_table(spark, sf_dir, "documents")
+    path = scratch_path("doc_log_lines", sf_dir)
+    nul = F.lit(r"\N")
+    docs.select(
+        F.concat_ws(
+            "|",
+            F.coalesce(F.col("doc_id").cast("string"), nul),
+            F.coalesce(F.col("lang"), nul),
+            F.coalesce(F.col("n_chars").cast("string"), nul),
+            F.coalesce(F.col("source"), nul),
+        ).alias("value")
+    ).write.mode("overwrite").text(path)
+    lines = spark.read.text(path)
+    raw_lang = F.regexp_extract("value", r"^[^|]*\|([^|]*)\|", 1)
+    parsed = lines.select(
+        F.regexp_extract("value", r"^(\d+)\|", 1)
+        .try_cast("long")
+        .alias("doc_id"),
+        F.when(raw_lang == r"\N", F.lit(None)).otherwise(raw_lang).alias("lang"),
+        F.regexp_extract("value", r"^[^|]*\|[^|]*\|(\d+)\|", 1)
+        .try_cast("long")
+        .alias("n_chars"),
+    )
+    return parsed.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_lines"),
+        F.count("doc_id").alias("n_parsed_ids"),
+        F.sum("n_chars").alias("total_chars"),
+    )
+
+
+register(
+    "src_text_logparse",
+    _text_logparse,
+    """
+    SELECT lang, count(*) AS n_lines,
+           count(doc_id) AS n_parsed_ids,
+           CAST(sum(n_chars) AS BIGINT) AS total_chars
+    FROM documents GROUP BY lang
+    """,
+)
+
+
+def _xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S2's markup-extraction semantics on native XML: frame event
+    fields as XML fragments, recover a typed struct with ``from_xml``
+    (declared schema — no inference pass), and aggregate on the
+    extracted fields. Map-only until the final small aggregate; a
+    regex-miss/malformed fragment yields NULL fields, never a crash —
+    the completeness filter (S3) then drops them explicitly."""
+    ev = read_events(spark, sf_dir).where(F.col("user_id").isNotNull())
+    framed = ev.select(
+        F.concat(
+            F.lit("<e><u>"),
+            F.col("user_id").cast("string"),
+            F.lit("</u><t>"),
+            "event_type",
+            F.lit("</t></e>"),
+        ).alias("xml")
+    )
+    parsed = framed.select(
+        F.from_xml("xml", "u BIGINT, t STRING").alias("s")
+    ).select(F.col("s.u").alias("user_id"), F.col("s.t").alias("event_type"))
+    return (
+        parsed.where(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.count_distinct("user_id").alias("n_users"),
+        )
+    )
+
+
+register(
+    "src_xml_extract",
+    _xml_extract,
+    """
+    SELECT event_type, count(*) AS n_events,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+    FROM events
+    WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+    GROUP BY event_type
+    """,
+)
+
+
+def _src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two parquet batches written months apart with different schemas —
+    the 1996 batch predates the ``o_orderpriority`` column, the 1997
+    batch carries it — read back as ONE relation with
+    ``mergeSchema=true``: the union schema is reconstructed from the file
+    footers and the missing column null-fills for old files. The
+    aggregate shows both the evolution seam (priority NULL ⇔ old batch)
+    and that money sums stay exact across it (DECIMAL accumulation).
+
+    Scale posture: schema merging is a FOOTER operation (one per file,
+    driver-side listing + parallel footer reads) — data pages are never
+    touched to reconcile schemas, so the merged read costs the same scan
+    as a uniform one. The batch directories are rewritten on every call
+    (always-fresh, like src_text_logparse) so a regenerated fixture can
+    never serve stale batches."""
+    base = scratch_path("schema_evolution", sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
+    orders = load_table(spark, sf_dir, "orders")
+    y = F.year("o_orderdate")
+    # old writer: no priority column yet
+    orders.where(y == 1996).select(
+        "o_orderkey", "o_totalprice", "o_orderdate"
+    ).write.mode("overwrite").parquet(os.path.join(base, "batch_1996"))
+    # new writer: schema gained o_orderpriority
+    orders.where(y == 1997).select(
+        "o_orderkey", "o_totalprice", "o_orderdate", "o_orderpriority"
+    ).write.mode("overwrite").parquet(os.path.join(base, "batch_1997"))
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        os.path.join(base, "batch_1996"), os.path.join(base, "batch_1997")
+    )
+    return (
+        merged.groupBy(
+            F.coalesce("o_orderpriority", F.lit("<pre-evolution>")).alias(
+                "priority"
+            )
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("total_price"),
+        )
+        .orderBy("priority")
+    )
+
+
+register(
+    "src_schema_evolution",
+    _src_schema_evolution,
+    """
+    SELECT coalesce(CASE WHEN year(o_orderdate) = 1997
+                         THEN o_orderpriority END,
+                    '<pre-evolution>') AS priority,
+           count(*) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+               AS total_price
+    FROM orders
+    WHERE year(o_orderdate) IN (1996, 1997)
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -213,7 +378,7 @@ def _sink_compacted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     width; target file count = total_bytes / desired_file_size (here a
     fixed 4 keeps the test deterministic). Row-group-aligned rewrite
     preserves column stats for later pruning."""
-    base = _scratch("compaction", sf_dir)
+    base = scratch_path("compaction", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"
@@ -266,7 +431,7 @@ def _sink_clustered_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-balanced even under date skew. At 100 TB the same two-line
     recipe (repartitionByRange + sortWithinPartitions) is how a daily
     compaction job lays out scan-dominant tables."""
-    base = _scratch("clustered", sf_dir)
+    base = scratch_path("clustered", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
@@ -355,7 +520,7 @@ def _sink_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     The returned relation is a box-query rollup read back through the
     clustered copy — the oracle checks the filtered read end to end
     against the original table."""
-    base = _scratch("zorder", sf_dir)
+    base = scratch_path("zorder", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
@@ -449,8 +614,8 @@ def _src_file_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus ("which file did these rows come from?") — with zero
     bookkeeping tables.
 
-    Scale posture (round-17 rework of the r16 verdict's bounded-key-
-    Exchange finding): the original staging write repartitioned on
+    Scale posture (fix of a bounded-key Exchange finding): the
+    original staging write repartitioned on
     ``order_year`` ALONE — a ~7-value key, so the full fact-table
     rewrite ran as ~7 tasks each writing O(fact/7). The write now
     clusters on (order_year, lineage_shard) where ``lineage_shard =
@@ -470,7 +635,7 @@ def _src_file_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     I/O), and the per-file aggregate shuffles one small row per (file,
     year) — audit cost stays proportional to file count, not data
     volume."""
-    base = _scratch("lineage", sf_dir)
+    base = scratch_path("lineage", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     orders = (
         load_table(spark, sf_dir, "orders")
@@ -620,7 +785,7 @@ def _sink_dynamic_partition_overwrite(
     partitions, not the table — the property that makes per-day or
     per-status reprocessing O(day) on a 100 TB table. The conf is set
     per-write via the DataFrameWriter option (no session-wide state)."""
-    base = _scratch("dyn_overwrite", sf_dir)
+    base = scratch_path("dyn_overwrite", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -662,7 +827,7 @@ def _sink_dynamic_partition_overwrite(
         # option resolution ("dynamic" → "DYNAMİC", dotted capital I).
         # Uppercase ASCII is a fixed point of every locale's case
         # mapping, so the pre-uppercased value is safe under all
-        # locales. Found by the round-11 tr-TR JVM-locale sweep.
+        # locales. Found by a tr-TR JVM-locale sweep.
         .option("partitionOverwriteMode", "DYNAMIC")
         .parquet(path)
     )
@@ -685,4 +850,30 @@ register(
                AS total_price
     FROM orders GROUP BY o_orderstatus
     """,
+)
+
+
+def _quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Expectations-style quarantine routing (the Delta Live Tables /
+    Great Expectations shape): a declarative rule set evaluates
+    MAP-SIDE over the scan, and rows failing ANY rule are routed to
+    quarantine carrying machine-readable reasons — the complement to
+    dq_constraint_audit's aggregate violation COUNTS: this emits the
+    rows themselves, ready to write to a quarantine sink while clean
+    rows continue down the pipeline (one pass, two filtered sinks —
+    never two scans).
+
+    Reasons are a deterministically-ordered (rule-declaration order)
+    joined string, so the relation is engine- and partitioning-
+    stable. Business rules chosen to genuinely fire on real data:
+    purchase price cap, a props range contract, and an ingest-SLA
+    hour window. `stream_quarantine_split` runs the SAME rule
+    expressions over a multi-micro-batch stream."""
+    return quarantine_route(read_events(spark, sf_dir))
+
+
+register(
+    "dq_quarantine_split",
+    _quarantine_split,
+    QUARANTINE_SQL,
 )

@@ -899,3 +899,1514 @@ register(
     GROUP BY 1 ORDER BY 1
     """,
 )
+
+
+# ---------------------------------------------------------------------------
+# date-spine gap fill + forward fill
+# ---------------------------------------------------------------------------
+
+
+def _gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Regularize each user's daily event-value series: build the full
+    min→max day spine per user with ``sequence()`` (no calendar-table
+    cross join, no driver loop), left-join the observed daily sums, and
+    forward-fill gaps with ``last(..., ignorenulls)`` over one partitioned
+    window. Two shuffles total (daily agg, spine join) — both on user_id,
+    and AQE coalesces them at small SF."""
+    ev = (
+        read_events(spark, sf_dir)
+        .where(F.col("user_id").isNotNull() & (F.col("user_id") < 40))
+        .select("user_id", F.col("ts").cast("date").alias("day"), "value")
+    )
+    daily = ev.groupBy("user_id", "day").agg(
+        F.sum(F.col("value").cast("decimal(25,10)"))
+        .cast("double").alias("day_value")
+    )
+    spine = (
+        daily.groupBy("user_id")
+        .agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
+        .select(
+            "user_id",
+            F.explode(
+                F.sequence("d0", "d1", F.expr("INTERVAL 1 DAY"))
+            ).alias("day"),
+        )
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("day")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        spine.join(daily, ["user_id", "day"], "left")
+        .select(
+            "user_id",
+            "day",
+            F.coalesce("day_value", F.lit(0.0)).alias("day_value"),
+            F.last("day_value", ignorenulls=True).over(w).alias("filled_value"),
+        )
+    )
+
+
+register(
+    "datetime_gap_fill",
+    _gap_fill,
+    """
+    WITH daily AS (
+        SELECT user_id, CAST(ts AS DATE) AS day,
+               CAST(sum(CAST(value AS DECIMAL(25,10))) AS DOUBLE) AS day_value
+        FROM events
+        WHERE user_id IS NOT NULL AND user_id < 40
+        GROUP BY user_id, CAST(ts AS DATE)
+    ),
+    spine AS (
+        SELECT user_id,
+               CAST(unnest(generate_series(min(day), max(day),
+                                           INTERVAL 1 DAY)) AS DATE) AS day
+        FROM daily GROUP BY user_id
+    )
+    SELECT s.user_id, s.day,
+           coalesce(d.day_value, 0.0) AS day_value,
+           last_value(d.day_value IGNORE NULLS) OVER (
+               PARTITION BY s.user_id ORDER BY s.day
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+           ) AS filled_value
+    FROM spine s LEFT JOIN daily d
+      ON s.user_id = d.user_id AND s.day = d.day
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# interval RANGE window frame
+# ---------------------------------------------------------------------------
+
+
+def _range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling 7-day spend per customer — a RANGE frame bounded by a time
+    interval, which a ROWS frame cannot express over irregular order
+    dates. Issued as SQL text (the DataFrame ``rangeBetween`` API takes
+    only numeric offsets; interval frames are SQL-surface). Window is
+    partitioned by customer — no global sort at any scale."""
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
+        "v_orders_w4"
+    )
+    return spark.sql(
+        """
+        SELECT o_custkey, o_orderkey, o_orderdate,
+               CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+                   PARTITION BY o_custkey ORDER BY o_orderdate
+                   RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW
+               ) AS DOUBLE) AS spend_7d,
+               count(*) OVER (
+                   PARTITION BY o_custkey ORDER BY o_orderdate
+                   RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW
+               ) AS n_orders_7d
+        FROM v_orders_w4
+        """
+    )
+
+
+register(
+    "window_range_7day_spend",
+    _range_frame,
+    """
+    SELECT o_custkey, o_orderkey, o_orderdate,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+               PARTITION BY o_custkey ORDER BY o_orderdate
+               RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW
+           ) AS DOUBLE) AS spend_7d,
+           CAST(count(*) OVER (
+               PARTITION BY o_custkey ORDER BY o_orderdate
+               RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW
+           ) AS BIGINT) AS n_orders_7d
+    FROM orders
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# string-function profile
+# ---------------------------------------------------------------------------
+
+
+def _string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """String-function surface over part names: pad, translate,
+    split_part, reverse, levenshtein — the standardise-stage vocabulary
+    (dags/dag.py:138-146 did only replace+cast) extended to the full
+    set an entity-resolution / catalog-cleaning pipeline needs. Pure
+    map-stage projection: no shuffle, whole-stage codegen."""
+    part = load_table(spark, sf_dir, "part")
+    return part.select(
+        "p_partkey",
+        F.lpad("p_brand", 12, "*").alias("brand_padded"),
+        F.translate("p_type", " ", "_").alias("type_snake"),
+        F.split_part(F.col("p_type"), F.lit(" "), F.lit(1)).alias("type_head"),
+        F.reverse("p_name").alias("name_rev"),
+        F.levenshtein("p_brand", F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)))
+        .alias("brand_name_dist"),
+        F.length("p_name").alias("name_len"),
+    )
+
+
+register(
+    "string_funcs_profile",
+    _string_funcs,
+    """
+    SELECT p_partkey,
+           lpad(p_brand, 12, '*') AS brand_padded,
+           translate(p_type, ' ', '_') AS type_snake,
+           split_part(p_type, ' ', 1) AS type_head,
+           reverse(p_name) AS name_rev,
+           CAST(levenshtein(p_brand, split_part(p_name, ' ', 1)) AS INTEGER)
+               AS brand_name_dist,
+           CAST(length(p_name) AS INTEGER) AS name_len
+    FROM part
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# linear interpolation over the day spine
+# ---------------------------------------------------------------------------
+
+
+def _linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LINEAR interpolation of missing daily values — the resampling op
+    forward-fill (datetime_gap_fill) can't express: a gap day's value is
+    prev + (next - prev) · (day - prev_day)/(next_day - prev_day), from
+    the nearest known neighbors found with last(ignorenulls) over the
+    preceding frame and first(ignorenulls) over the following frame —
+    two frames over ONE user_id window partitioning, no self-join. The
+    formula is written identically in the oracle, so both engines
+    execute the same IEEE ops on the same exact-DECIMAL-derived doubles;
+    boundary days (before first / after last observation) coalesce to
+    the known side. The standard sensor/time-series regularization at
+    any scale: two shuffles (daily agg, spine join), both on user_id."""
+    ev = (
+        read_events(spark, sf_dir)
+        .where(F.col("user_id").isNotNull() & (F.col("user_id") < 40))
+        .select("user_id", F.col("ts").cast("date").alias("day"), "value")
+    )
+    daily = ev.groupBy("user_id", "day").agg(
+        F.sum(F.col("value").cast("decimal(25,10)"))
+        .cast("double").alias("day_value")
+    )
+    spine = (
+        daily.groupBy("user_id")
+        .agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
+        .select(
+            "user_id",
+            F.explode(
+                F.sequence("d0", "d1", F.expr("INTERVAL 1 DAY"))
+            ).alias("day"),
+        )
+    )
+    joined = spine.join(daily, ["user_id", "day"], "left")
+    wp = (
+        Window.partitionBy("user_id")
+        .orderBy("day")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wf = (
+        Window.partitionBy("user_id")
+        .orderBy("day")
+        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    )
+    prev_v = F.last("day_value", ignorenulls=True).over(wp)
+    next_v = F.first("day_value", ignorenulls=True).over(wf)
+    prev_d = F.last(
+        F.when(F.col("day_value").isNotNull(), F.col("day")), ignorenulls=True
+    ).over(wp)
+    next_d = F.first(
+        F.when(F.col("day_value").isNotNull(), F.col("day")), ignorenulls=True
+    ).over(wf)
+    frac = F.datediff(F.col("day"), prev_d) / F.datediff(next_d, prev_d)
+    interp = F.when(F.col("day_value").isNotNull(), F.col("day_value")).otherwise(
+        F.when(prev_v.isNull(), next_v)
+        .when(next_v.isNull(), prev_v)
+        .otherwise(prev_v + (next_v - prev_v) * frac)
+    )
+    return joined.select(
+        "user_id",
+        "day",
+        F.col("day_value").isNotNull().alias("observed"),
+        interp.alias("interp_value"),
+    )
+
+
+register(
+    "datetime_linear_interpolate",
+    _linear_interpolate,
+    """
+    WITH daily AS (
+        SELECT user_id, CAST(ts AS DATE) AS day,
+               CAST(sum(CAST(value AS DECIMAL(25,10))) AS DOUBLE) AS day_value
+        FROM events
+        WHERE user_id IS NOT NULL AND user_id < 40
+        GROUP BY user_id, CAST(ts AS DATE)
+    ),
+    spine AS (
+        SELECT user_id,
+               CAST(unnest(generate_series(min(day), max(day),
+                                           INTERVAL 1 DAY)) AS DATE) AS day
+        FROM daily GROUP BY user_id
+    ),
+    j AS (
+        SELECT s.user_id, s.day, d.day_value FROM spine s
+        LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day
+    ),
+    n AS (
+        SELECT user_id, day, day_value,
+               last_value(day_value IGNORE NULLS) OVER wp AS prev_v,
+               first_value(day_value IGNORE NULLS) OVER wf AS next_v,
+               last_value(CASE WHEN day_value IS NOT NULL THEN day END
+                          IGNORE NULLS) OVER wp AS prev_d,
+               first_value(CASE WHEN day_value IS NOT NULL THEN day END
+                           IGNORE NULLS) OVER wf AS next_d
+        FROM j
+        WINDOW wp AS (PARTITION BY user_id ORDER BY day
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+               wf AS (PARTITION BY user_id ORDER BY day
+                      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+    )
+    SELECT user_id, day,
+           day_value IS NOT NULL AS observed,
+           CASE WHEN day_value IS NOT NULL THEN day_value
+                WHEN prev_v IS NULL THEN next_v
+                WHEN next_v IS NULL THEN prev_v
+                ELSE prev_v + (next_v - prev_v)
+                     * (CAST(day - prev_d AS DOUBLE)
+                        / CAST(next_d - prev_d AS DOUBLE))
+           END AS interp_value
+    FROM n
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# pandas API on Spark — the reference's own syntax, distributed
+# ---------------------------------------------------------------------------
+
+
+def _pandas_api_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference IS a pandas pipeline (its whole transform stage is
+    pandas groupbys, dags/dag.py:167-181) — this query runs that exact
+    SYNTAX distributed through the pandas API on Spark (pyspark.pandas):
+    assign → groupby → named-agg → reset_index, then back to a Spark
+    DataFrame. A reference user migrates by changing the import, not the
+    code; under the hood every pandas call here compiles to the same
+    Catalyst plan the native DataFrame form produces (one hash
+    aggregate). Aggregates are chosen exact-by-construction (counts,
+    integer sums, min/max) because pandas-API float sums accumulate in
+    double — order-dependent — which is also why the reference's own
+    float sums were quietly nondeterministic."""
+    import pyspark.pandas as ps  # noqa: F401  (API under test)
+
+    li = load_table(spark, sf_dir, "lineitem")
+    pdf = li.pandas_api()
+    pdf = pdf.assign(qty_int=pdf.l_quantity.astype("int"))
+    out = pdf.groupby("l_returnflag").agg(
+        n_lines=("l_orderkey", "count"),
+        total_qty=("qty_int", "sum"),
+        min_price=("l_extendedprice", "min"),
+        max_price=("l_extendedprice", "max"),
+    )
+    return out.reset_index().to_spark()
+
+
+register(
+    "ps_pandas_api_rollup",
+    _pandas_api_rollup,
+    """
+    SELECT l_returnflag,
+           count(l_orderkey) AS n_lines,
+           CAST(sum(CAST(l_quantity AS INTEGER)) AS BIGINT) AS total_qty,
+           min(l_extendedprice) AS min_price,
+           max(l_extendedprice) AS max_price
+    FROM lineitem
+    GROUP BY l_returnflag
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# distribution window functions
+# ---------------------------------------------------------------------------
+
+
+def _distribution_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """percent_rank / cume_dist / dense_rank within each order status —
+    the tie-stable ranking family (equal o_totalprice rows get equal
+    scores, so the result is deterministic under shuffle reordering,
+    unlike row_number without a unique tiebreak).
+
+    Scale (round-16 rework): the original window partitioned the FULL
+    orders relation by the 3-value o_orderstatus — each status sorted
+    in one task forever (the r15 verdict's parallelism-ceiling class;
+    the r15 review pass explicitly noted this query had no salting
+    decomposition — the two-phase grouped rank IS that decomposition).
+    All three scores are constant within a (status, price) tie group,
+    so: aggregate to the tie-group relation (one fact-sized hash agg),
+    two-phase-rank the GROUPS per status (grouped_rank_two_phase with
+    the group's row count as running sum) — giving dense_rank = group
+    index, RANK = inclusive count prefix − group size + 1, cume
+    numerator = inclusive count prefix — then join the scores back to
+    the rows on the (status, price) equi-key. percent_rank =
+    (rank−1)/(n−1) and cume_dist = prefix/n are map-side arithmetic
+    against a 3-row broadcast of per-status totals. No stage sorts
+    more than a range partition; output identical to the window form."""
+    orders = load_table(spark, sf_dir, "orders")
+    base = orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
+    grp = base.groupBy("o_orderstatus", "o_totalprice").agg(
+        F.count(F.lit(1)).alias("_c")
+    )
+    from orchestrated_etl_spark.operators.relational import (
+        grouped_rank_two_phase,
+    )
+
+    scored = grouped_rank_two_phase(
+        grp,
+        ["o_orderstatus"],
+        [F.asc("o_totalprice")],
+        rank_col="_drank",
+        running_sum_expr=F.col("_c"),
+        running_sum_col="_rmax",
+        broadcast_offsets=True,  # o_orderstatus domain: 3 values
+    )
+    totals = base.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).alias("_np")
+    )
+    rank = F.col("_rmax") - F.col("_c") + F.lit(1)
+    scored = scored.join(F.broadcast(totals), "o_orderstatus").select(
+        "o_orderstatus",
+        "o_totalprice",
+        F.round(
+            F.when(F.col("_np") == 1, F.lit(0.0)).otherwise(
+                (rank - F.lit(1)) / (F.col("_np") - F.lit(1))
+            ),
+            6,
+        ).alias("pct_rank"),
+        F.round(F.col("_rmax") / F.col("_np"), 6).alias("cume"),
+        F.col("_drank").cast("int").alias("drank"),
+    )
+    return base.join(scored, ["o_orderstatus", "o_totalprice"]).select(
+        "o_orderkey",
+        "o_orderstatus",
+        "o_totalprice",
+        "pct_rank",
+        "cume",
+        "drank",
+    )
+
+
+register(
+    "window_distribution_ranks",
+    _distribution_windows,
+    """
+    SELECT o_orderkey, o_orderstatus, o_totalprice,
+           round(percent_rank() OVER w, 6) AS pct_rank,
+           round(cume_dist() OVER w, 6) AS cume,
+           CAST(dense_rank() OVER w AS BIGINT) AS drank
+    FROM orders
+    WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice)
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# ignore-nulls carry-forward (LOCF)
+# ---------------------------------------------------------------------------
+
+
+def _locf_purchase_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Last-observation-carried-forward: annotate every event with the
+    value of the user's most recent PURCHASE at-or-before it — the
+    sensor/price-feed gap-fill shape, done with last(expr, ignorenulls)
+    over a running frame instead of a self-join. One shuffle on user_id;
+    the frame scan is O(1) amortized per row. Ordering (ts, event_id) is
+    a unique total order, so the carried value is engine-deterministic."""
+    ev = read_events(spark, sf_dir).select(
+        "event_id", "user_id", "ts", "event_type", "value"
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return ev.select(
+        "event_id",
+        "user_id",
+        # coalesce to a typed sentinel: a NULL-bearing numeric column
+        # pandas-coerces to float64/NaN downstream, which hashes
+        # differently from Spark's None (tests/test_oracle_dtypes.py
+        # class); -1.0 is outside the value domain (values >= 0).
+        F.coalesce(
+            F.last(
+                F.when(F.col("event_type") == "purchase", F.col("value")),
+                ignorenulls=True,
+            ).over(w),
+            F.lit(-1.0),
+        ).alias("last_purchase_value"),
+    )
+
+
+register(
+    "window_locf_ignore_nulls",
+    _locf_purchase_value,
+    """
+    SELECT event_id, user_id,
+           coalesce(
+               last_value(CASE WHEN event_type = 'purchase' THEN value END
+                          IGNORE NULLS)
+                   OVER (PARTITION BY user_id ORDER BY ts, event_id
+                         ROWS UNBOUNDED PRECEDING),
+               -1.0) AS last_purchase_value
+    FROM events
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# nth_value over a full frame
+# ---------------------------------------------------------------------------
+
+
+def _nth_value_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """nth_value over the FULL partition frame: each order's 2nd line
+    part key annotated onto every line (NULL for 1-line orders) — the
+    "compare to the group's k-th element" window shape. Unique ordering
+    (l_linenumber) makes the picked row engine-deterministic."""
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 200)
+    w = (
+        Window.partitionBy("l_orderkey")
+        .orderBy("l_linenumber")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    return li.select(
+        "l_orderkey",
+        "l_linenumber",
+        # sentinel for 1-line orders: NULL-bearing BIGINT pandas-coerces
+        # to float64 downstream (see window_locf_ignore_nulls note)
+        F.coalesce(F.nth_value("l_partkey", 2).over(w), F.lit(-1).cast("long"))
+        .alias("second_line_part"),
+    )
+
+
+register(
+    "window_nth_value",
+    _nth_value_lines,
+    """
+    SELECT l_orderkey, l_linenumber,
+           coalesce(
+               nth_value(l_partkey, 2)
+                   OVER (PARTITION BY l_orderkey ORDER BY l_linenumber
+                         ROWS BETWEEN UNBOUNDED PRECEDING
+                                  AND UNBOUNDED FOLLOWING),
+               -1) AS second_line_part
+    FROM lineitem
+    WHERE l_orderkey < 200
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# higher-order array functions
+# ---------------------------------------------------------------------------
+
+
+def _array_hof_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Higher-order array function surface over per-order quantity
+    arrays: aggregate (fold), filter, exists, array_distinct,
+    array_position — the fold/position half of the lambda-expression
+    API (the existing `array_hof_profile` covers filter/exists/min/max
+    over embeddings); keeps per-row collection logic JVM-side instead
+    of a Python UDF. The array is
+    built with ONE collect_list aggregate (sorted for determinism);
+    every HOF then evaluates map-side in the same projection. Oracle:
+    DuckDB's list_* twins (list_reduce/list_filter/list_contains/
+    list_distinct/list_position; absent-element position NULL-coalesced
+    to Spark's 0 contract)."""
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 500)
+    per_order = li.groupBy("l_orderkey").agg(
+        F.array_sort(
+            F.collect_list(F.col("l_quantity").cast("int"))
+        ).alias("qtys")
+    )
+    return per_order.select(
+        "l_orderkey",
+        F.aggregate(
+            "qtys", F.lit(0).cast("long"), lambda acc, x: acc + x
+        ).alias("total_qty"),
+        F.size(F.filter("qtys", lambda x: x > 30)).alias("n_big"),
+        F.exists("qtys", lambda x: x == 40).alias("has_qty_40"),
+        F.size(F.array_distinct("qtys")).alias("n_distinct_qty"),
+        F.array_position("qtys", 25).cast("long").alias("pos_of_25"),
+        F.size("qtys").alias("n_lines"),
+    )
+
+
+register(
+    "array_fold_profile",
+    _array_hof_profile,
+    """
+    SELECT l_orderkey,
+           CAST(list_reduce(list_prepend(0, qtys), (a, b) -> a + b)
+                AS BIGINT) AS total_qty,
+           len(list_filter(qtys, x -> x > 30)) AS n_big,
+           list_contains(qtys, 40) AS has_qty_40,
+           len(list_distinct(qtys)) AS n_distinct_qty,
+           CAST(coalesce(list_position(qtys, 25), 0) AS BIGINT)
+               AS pos_of_25,
+           len(qtys) AS n_lines
+    FROM (
+        SELECT l_orderkey,
+               list_sort(list(CAST(l_quantity AS INTEGER))) AS qtys
+        FROM lineitem
+        WHERE l_orderkey < 500
+        GROUP BY l_orderkey
+    )
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# calendar / interval arithmetic
+# ---------------------------------------------------------------------------
+
+
+def _interval_math(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Calendar-arithmetic surface on order dates: fixed-day and
+    calendar-month offsets (month-end clamping pinned: Jan 31 + 1 month
+    = Feb 28/29), last_day, ISO week start/number, day-of-week,
+    quarter, and day distance to an anchor. All map-side projections on
+    DATE values — wall-clock, engine- and timezone-independent (the
+    contract tests/test_timezone.py enforces). DuckDB's dayofweek is
+    0=Sunday vs Spark's 1=Sunday — the oracle carries the +1."""
+    orders = load_table(spark, sf_dir, "orders").where(
+        F.col("o_orderkey") < 500
+    )
+    d = F.col("o_orderdate").cast("date")
+    return orders.select(
+        "o_orderkey",
+        d.alias("d"),
+        F.date_add(d, 45).alias("plus_45d"),
+        F.add_months(d, 2).alias("plus_2m"),
+        F.last_day(d).alias("month_end"),
+        F.trunc(d, "week").alias("week_start"),
+        F.dayofweek(d).alias("dow"),
+        F.weekofyear(d).alias("iso_week"),
+        F.quarter(d).alias("qtr"),
+        F.datediff(F.to_date(F.lit("1997-01-01")), d).alias("days_to_1997"),
+    )
+
+
+register(
+    "datetime_interval_math",
+    _interval_math,
+    """
+    SELECT o_orderkey,
+           CAST(o_orderdate AS DATE) AS d,
+           CAST(CAST(o_orderdate AS DATE) + to_days(45) AS DATE)
+               AS plus_45d,
+           CAST(CAST(o_orderdate AS DATE) + INTERVAL 2 MONTH AS DATE)
+               AS plus_2m,
+           last_day(CAST(o_orderdate AS DATE)) AS month_end,
+           CAST(date_trunc('week', CAST(o_orderdate AS DATE)) AS DATE)
+               AS week_start,
+           CAST(dayofweek(CAST(o_orderdate AS DATE)) + 1 AS INTEGER) AS dow,
+           CAST(weekofyear(CAST(o_orderdate AS DATE)) AS INTEGER) AS iso_week,
+           CAST(quarter(CAST(o_orderdate AS DATE)) AS INTEGER) AS qtr,
+           CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '1997-01-01')
+                AS INTEGER) AS days_to_1997
+    FROM orders
+    WHERE o_orderkey < 500
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# null-safe equality join
+# ---------------------------------------------------------------------------
+
+
+def _null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Null-safe equality join (<=> / IS NOT DISTINCT FROM): anonymous
+    activity (NULL user key) forms a real group that plain equi-joins
+    silently drop — here per-user click and purchase rollups are joined
+    null-safely so the anonymous bucket joins to itself. The fixture has
+    no NULL user_id rows, so the anonymization rule user_id % 7 == 0 →
+    NULL is applied identically on both engines, guaranteeing NULL keys
+    on BOTH join sides — the null-safe path, the -1 sentinel, and
+    is_anonymous=true are all exercised by the oracle (round-3 advice:
+    previously vacuous). <=> plans as an ordinary hash join (NULL is
+    just another key value), so the scale shape is identical to the
+    equi-join. The nullable key is emitted through a -1 sentinel (no
+    NULL-bearing numeric output)."""
+    ev = read_events(spark, sf_dir).withColumn(
+        "user_id",
+        F.when(F.col("user_id") % 7 == 0, F.lit(None)).otherwise(
+            F.col("user_id")
+        ),
+    )
+    clicks = (
+        ev.where(F.col("event_type") == "click")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_clicks"))
+    )
+    purchases = (
+        ev.where(F.col("event_type") == "purchase")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_purchases"))
+    )
+    joined = clicks.alias("c").join(
+        purchases.alias("p"),
+        F.col("c.user_id").eqNullSafe(F.col("p.user_id")),
+        "full_outer",
+    )
+    return joined.select(
+        F.coalesce(
+            F.col("c.user_id"), F.col("p.user_id"), F.lit(-1).cast("long")
+        ).alias("user_key"),
+        F.coalesce(F.col("n_clicks"), F.lit(0).cast("long")).alias("n_clicks"),
+        F.coalesce(F.col("n_purchases"), F.lit(0).cast("long")).alias(
+            "n_purchases"
+        ),
+        (
+            F.col("c.user_id").isNull() & F.col("p.user_id").isNull()
+        ).alias("is_anonymous"),
+    )
+
+
+register(
+    "join_null_safe_eq",
+    _null_safe_join,
+    """
+    WITH anon AS (
+        SELECT CASE WHEN user_id % 7 = 0 THEN NULL ELSE user_id END
+                   AS user_id,
+               event_type
+        FROM events
+    ),
+    c AS (
+        SELECT user_id, count(*) AS n_clicks
+        FROM anon WHERE event_type = 'click' GROUP BY user_id
+    ),
+    p AS (
+        SELECT user_id, count(*) AS n_purchases
+        FROM anon WHERE event_type = 'purchase' GROUP BY user_id
+    )
+    SELECT coalesce(c.user_id, p.user_id, -1) AS user_key,
+           coalesce(c.n_clicks, 0) AS n_clicks,
+           coalesce(p.n_purchases, 0) AS n_purchases,
+           c.user_id IS NULL AND p.user_id IS NULL AS is_anonymous
+    FROM c FULL OUTER JOIN p
+      ON c.user_id IS NOT DISTINCT FROM p.user_id
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# SHUFFLE_HASH join hint
+# ---------------------------------------------------------------------------
+
+
+def _shuffle_hash_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SHUFFLE_HASH hint surface: pins the orders–lineitem join to a
+    shuffled hash join — the strategy that beats sort-merge when one
+    side is much smaller than the other but too big to broadcast (no
+    sort phase, build-side hash table per partition). Hints change the
+    PHYSICAL strategy only; the result is the plain join, which is the
+    oracle. The plan pin lives in tests (ShuffledHashJoin node)."""
+    orders = load_table(spark, sf_dir, "orders").where(
+        F.col("o_orderstatus") == "P"
+    )
+    li = load_table(spark, sf_dir, "lineitem")
+    joined = li.join(
+        orders.hint("shuffle_hash"),
+        li.l_orderkey == orders.o_orderkey,
+    )
+    return joined.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_lines"),
+        F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
+        .cast("double")
+        .alias("total_price"),
+    )
+
+
+register(
+    "join_shuffle_hash_hint",
+    _shuffle_hash_hint,
+    """
+    SELECT o_orderpriority, count(*) AS n_lines,
+           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+               AS total_price
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    WHERE o_orderstatus = 'P'
+    GROUP BY o_orderpriority
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# table snapshot diff (change data feed between two versions)
+# ---------------------------------------------------------------------------
+
+
+def _snapshot_b(orders: DataFrame) -> DataFrame:
+    """Deterministic 'next version' of orders: keys %50==0 deleted,
+    surviving keys %7==0 get +100.00 totalprice, keys %101==0 cloned as
+    inserts at key+10_000_000. (+100.0 keeps the update arithmetic an
+    identical IEEE op on both engines — no rounding anywhere.)"""
+    base = orders.where(F.col("o_orderkey") % 50 != 0)
+    updated = base.withColumn(
+        "o_totalprice",
+        F.when(
+            F.col("o_orderkey") % 7 == 0, F.col("o_totalprice") + F.lit(100.0)
+        ).otherwise(F.col("o_totalprice")),
+    )
+    inserts = orders.where(F.col("o_orderkey") % 101 == 0).withColumn(
+        "o_orderkey", F.col("o_orderkey") + F.lit(10_000_000)
+    )
+    return updated.unionByName(inserts)
+
+
+def _snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Change data feed between two snapshots of ``orders``: one
+    co-partitioned FULL OUTER join on the key, classifying each key as
+    insert / delete / update (value columns differ) and emitting old/new
+    prices — the Delta-CDF shape computed from plain parquet versions.
+    Unchanged keys (the overwhelming majority) are filtered BEFORE the
+    output, so the result is change-sized, not table-sized. At 100 TB
+    both snapshots hash-shuffle once on the join key (bucketed storage
+    on o_orderkey makes the diff zero-shuffle); nothing else in the plan
+    is table-wide. The comparison covers the mutable columns
+    (o_totalprice here); schema evolution between versions is
+    src_schema_evolution's department."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice"
+    )
+    a = orders
+    b = _snapshot_b(orders)
+    j = a.alias("a").join(
+        b.alias("b"),
+        F.col("a.o_orderkey") == F.col("b.o_orderkey"),
+        "full_outer",
+    )
+    return (
+        j.select(
+            F.coalesce(F.col("a.o_orderkey"), F.col("b.o_orderkey")).alias(
+                "o_orderkey"
+            ),
+            F.col("a.o_totalprice").alias("old_price"),
+            F.col("b.o_totalprice").alias("new_price"),
+        )
+        .withColumn(
+            "change_type",
+            F.when(F.col("old_price").isNull(), F.lit("insert"))
+            .when(F.col("new_price").isNull(), F.lit("delete"))
+            .when(
+                F.col("old_price") != F.col("new_price"), F.lit("update")
+            )
+            .otherwise(F.lit("unchanged")),
+        )
+        .where(F.col("change_type") != "unchanged")
+        .select("o_orderkey", "change_type", "old_price", "new_price")
+    )
+
+
+register(
+    "table_snapshot_diff",
+    _snapshot_diff,
+    """
+    WITH a AS (SELECT o_orderkey, o_totalprice FROM orders),
+    b AS (
+        SELECT o_orderkey,
+               CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 100.0
+                    ELSE o_totalprice END AS o_totalprice
+        FROM orders WHERE o_orderkey % 50 != 0
+        UNION ALL
+        SELECT o_orderkey + 10000000, o_totalprice
+        FROM orders WHERE o_orderkey % 101 = 0
+    ),
+    j AS (
+        SELECT coalesce(a.o_orderkey, b.o_orderkey) AS o_orderkey,
+               a.o_totalprice AS old_price,
+               b.o_totalprice AS new_price
+        FROM a FULL OUTER JOIN b ON a.o_orderkey = b.o_orderkey
+    )
+    SELECT o_orderkey,
+           CASE WHEN old_price IS NULL THEN 'insert'
+                WHEN new_price IS NULL THEN 'delete'
+                WHEN old_price != new_price THEN 'update'
+                ELSE 'unchanged' END AS change_type,
+           old_price, new_price
+    FROM j
+    WHERE (CASE WHEN old_price IS NULL THEN 'insert'
+                WHEN new_price IS NULL THEN 'delete'
+                WHEN old_price != new_price THEN 'update'
+                ELSE 'unchanged' END) != 'unchanged'
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Bloom-filter runtime join pre-filter
+# ---------------------------------------------------------------------------
+
+_BLOOM_WORDS = 64  # 64 longs = 4096 bits
+
+
+_BLOOM_K = 3
+
+
+def _bloom_positions(key_sql: str) -> list[tuple[F.Column, F.Column]]:
+    """k (word, mask) pairs for a key: bit position = xxhash64(key, seed)
+    mod 4096, identical expression on build and probe side. Built via
+    F.expr because shiftleft's Python binding takes only a literal shift
+    count, while the SQL function accepts a column."""
+    m = _BLOOM_WORDS * 64
+    out = []
+    for seed in range(_BLOOM_K):
+        pos = f"pmod(xxhash64({key_sql}, {seed}), {m})"
+        word = F.expr(f"CAST({pos} DIV 64 AS INT)")
+        mask = F.expr(
+            f"shiftleft(CAST(1 AS BIGINT), CAST({pos} % 64 AS INT))"
+        )
+        out.append((word, mask))
+    return out
+
+
+def _bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue per high-balance supplier, with the fact scan pre-pruned
+    by a hand-rolled Bloom filter built from the dim keys — the runtime
+    row-group/row filter pattern (Spark's own
+    spark.sql.optimizer.runtime.bloomFilter injects exactly this shape;
+    bloom_filter_agg is not in the public function registry, so the bit
+    set is built from first-class expressions).
+
+    Build side: each dim key sets k=3 bits of a 4096-bit array — explode
+    to (word, mask), bit_or per word, fold the <=64 rows into ONE map
+    row (map_from_entries over collect_list — a scalar-sized broadcast,
+    like the RFM cutoffs). Probe side: a row survives iff ALL its k bits
+    are set — map lookups against the broadcast row, pure map-side.
+    The subsequent broadcast equi-join computes the EXACT result, so
+    Bloom false positives cost only wasted rows, never wrong rows —
+    which is why the oracle is the plain join with no Bloom at all.
+    At 100 TB the Bloom row is a tiny broadcast replacing a shuffle of
+    the full fact table against a selective dim: rows failing the
+    membership test never leave the scan stage."""
+    sup = (
+        load_table(spark, sf_dir, "supplier")
+        .where(F.col("s_acctbal") > 9000)
+        .select("s_suppkey")
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_suppkey", "l_extendedprice", "l_discount"
+    )
+    return bloom_prefilter_core(sup, li)
+
+
+def bloom_prefilter_core(sup: DataFrame, li: DataFrame) -> DataFrame:
+    """Bloom build + probe + exact join core — split out so tests can
+    drive it with their own dim subset (the sf0.001 fixture has no
+    supplier over the query's 9000 cutoff)."""
+    # --- build: one map row {word -> bits} ---
+    entries = sup.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(w.alias("word"), m.alias("mask"))
+                    for w, m in _bloom_positions("s_suppkey")
+                ]
+            )
+        ).alias("e")
+    ).select("e.word", "e.mask")
+    words = entries.groupBy("word").agg(F.bit_or("mask").alias("bits"))
+    bloom_row = words.agg(
+        F.map_from_entries(
+            F.array_sort(F.collect_list(F.struct("word", "bits")))
+        ).alias("_bloom")
+    )
+    # --- probe: all k bits set (missing word => bit not set) ---
+    probe = li.crossJoin(F.broadcast(bloom_row))
+    hit = F.lit(True)
+    for w, m in _bloom_positions("l_suppkey"):
+        bits = F.coalesce(
+            F.element_at(F.col("_bloom"), w), F.lit(0).cast("long")
+        )
+        hit = hit & (bits.bitwiseAND(m) != 0)
+    pruned = probe.where(hit).drop("_bloom")
+    # --- exact join + aggregate (decides the final result) ---
+    return (
+        # no forced hint: supplier is 10k·SF rows (round-15 review);
+        # threshold/AQE broadcast it while small, shuffle past that
+        pruned.join(sup, pruned.l_suppkey == sup.s_suppkey)
+        .groupBy("s_suppkey")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum(
+                (
+                    F.col("l_extendedprice").cast("decimal(18,2)")
+                    * (F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)"))
+                )
+            )
+            .cast("double")
+            .alias("revenue"),
+        )
+    )
+
+
+register(
+    "join_bloom_prefilter",
+    _bloom_prefilter_join,
+    """
+    SELECT s.s_suppkey,
+           count(*) AS n_items,
+           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+                    * (CAST(1 AS DECIMAL(18,2))
+                       - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
+               AS revenue
+    FROM lineitem l
+    JOIN supplier s ON l.l_suppkey = s.s_suppkey
+    WHERE s.s_acctbal > 9000
+    GROUP BY s.s_suppkey
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# entity resolution: blocked pairwise attribute scoring
+# ---------------------------------------------------------------------------
+
+_ER_THRESHOLD = 0.7
+
+
+def _er_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Record linkage over the part catalog: candidate pairs are
+    generated ONLY within a blocking key (exact p_name — the standard
+    cheap blocker), then scored by weighted attribute agreement
+    (brand 0.4, type 0.3, size within 2 units 0.15, price within 50.00
+    0.15); pairs scoring >= 0.7 are matches. The score is a fixed
+    left-to-right sum of identical double literals on both engines —
+    bitwise-reproducible, no rounding.
+
+    Scale shape: the block self-join is bounded by Sigma block_size^2,
+    NOT |R|^2 — the blocker's whole job. One shuffle partitions by the
+    blocking key; scoring is map-side on co-located rows. Monster
+    blocks (a name shared by millions of listings) are the known
+    failure mode: production blockers compose multiple keys (name +
+    brand prefix) or salt oversized blocks, both of which only shrink
+    blocks and slot into the same plan."""
+    part = load_table(spark, sf_dir, "part").select(
+        "p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"
+    )
+    a = part.alias("a")
+    b = part.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.p_name") == F.col("b.p_name"))
+        & (F.col("a.p_partkey") < F.col("b.p_partkey")),
+    )
+    score = (
+        F.when(F.col("a.p_brand") == F.col("b.p_brand"), F.lit(0.4)).otherwise(F.lit(0.0))
+        + F.when(F.col("a.p_type") == F.col("b.p_type"), F.lit(0.3)).otherwise(F.lit(0.0))
+        + F.when(
+            F.abs(F.col("a.p_size") - F.col("b.p_size")) <= 2, F.lit(0.15)
+        ).otherwise(F.lit(0.0))
+        + F.when(
+            F.abs(F.col("a.p_retailprice") - F.col("b.p_retailprice"))
+            <= 50.0,
+            F.lit(0.15),
+        ).otherwise(F.lit(0.0))
+    )
+    return (
+        pairs.withColumn("score", score)
+        .where(F.col("score") >= _ER_THRESHOLD)
+        .select(
+            F.col("a.p_partkey").alias("id_a"),
+            F.col("b.p_partkey").alias("id_b"),
+            "score",
+        )
+    )
+
+
+register(
+    "er_match_blocked_parts",
+    _er_match_parts,
+    f"""
+    -- literals are CAST AS DOUBLE: DuckDB otherwise sums DECIMALs
+    -- exactly (0.4+0.3 = 0.7) while Spark sums doubles
+    -- (0.7000000000000001) — same class as the round-2 HUGEINT lesson.
+    SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
+           (CASE WHEN a.p_brand = b.p_brand
+                 THEN CAST(0.4 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END
+            + CASE WHEN a.p_type = b.p_type
+                 THEN CAST(0.3 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END
+            + CASE WHEN abs(a.p_size - b.p_size) <= 2
+                 THEN CAST(0.15 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END
+            + CASE WHEN abs(a.p_retailprice - b.p_retailprice) <= 50.0
+                 THEN CAST(0.15 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
+               AS score
+    FROM part a
+    JOIN part b ON a.p_name = b.p_name AND a.p_partkey < b.p_partkey
+    WHERE (CASE WHEN a.p_brand = b.p_brand
+                 THEN CAST(0.4 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END
+            + CASE WHEN a.p_type = b.p_type
+                 THEN CAST(0.3 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END
+            + CASE WHEN abs(a.p_size - b.p_size) <= 2
+                 THEN CAST(0.15 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END
+            + CASE WHEN abs(a.p_retailprice - b.p_retailprice) <= 50.0
+                 THEN CAST(0.15 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
+              >= CAST({_ER_THRESHOLD} AS DOUBLE)
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# distributed skyline (Pareto frontier)
+# ---------------------------------------------------------------------------
+
+
+def _skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Skyline / Pareto frontier of the part catalog under (minimize
+    p_retailprice, minimize p_size), strict dominance: a part survives
+    iff no part is <= on both dimensions and < on at least one.
+
+    Distributed two-phase plan (the textbook divide-and-conquer skyline,
+    NOT the naive |R|^2 self-join the oracle runs):
+    - partition the price axis into bands (floor(price/5) — a value
+      rule, so band(q) < band(p) implies q.price < p.price);
+    - CROSS-BAND pruning needs only each band's min size: a point is
+      dominated by SOME strictly-cheaper band iff the prefix-min of
+      band min-sizes at its band is <= its size (strict dominance free
+      via the strictly-lower price). The prefix-min runs over the
+      #bands-row relation, then broadcasts back — no global sort of
+      the data relation anywhere;
+    - WITHIN-BAND dominance is exact pairwise inside the band (the ER
+      blocking bound: Sigma band_size^2, tunable via band width).
+    At 100 TB the bands are the partitioning; every data-sized op is
+    a hash shuffle on band or a broadcast of the #bands-row stats."""
+    part = load_table(spark, sf_dir, "part").select(
+        "p_partkey",
+        "p_retailprice",
+        "p_size",
+        F.floor(F.col("p_retailprice") / 5).cast("long").alias("_band"),
+    )
+    from pyspark.sql import Window
+
+    band_stats = part.groupBy("_band").agg(
+        F.min("p_size").alias("_band_min_size")
+    )
+    wb = Window.orderBy("_band").rowsBetween(
+        Window.unboundedPreceding, -1
+    )  # ordered window over the ~20-row band relation only
+    prev_min = band_stats.select(
+        "_band", F.min("_band_min_size").over(wb).alias("_prev_min_size")
+    )
+    # Checkpoint the pruned candidates ONCE: three consumers below
+    # (pair side a, pair side b, final anti-join) would otherwise each
+    # replay the part scan + band join — 6 scans for a relation that is
+    # skyline-small after cross-band pruning.
+    cand = (
+        part.join(F.broadcast(prev_min), "_band", "left")
+        .where(
+            F.col("_prev_min_size").isNull()
+            | (F.col("p_size") < F.col("_prev_min_size"))
+        )
+        .localCheckpoint(eager=True)
+    )
+    # within-band exact dominance on the pruned candidates
+    a = cand.alias("a")
+    b = cand.alias("b")
+    dominated = a.join(
+        b,
+        (F.col("a._band") == F.col("b._band"))
+        & (F.col("b.p_retailprice") <= F.col("a.p_retailprice"))
+        & (F.col("b.p_size") <= F.col("a.p_size"))
+        & (
+            (F.col("b.p_retailprice") < F.col("a.p_retailprice"))
+            | (F.col("b.p_size") < F.col("a.p_size"))
+        ),
+        "left_semi",
+    )
+    return (
+        cand.join(dominated.select("a.p_partkey"), "p_partkey", "left_anti")
+        .select("p_partkey", "p_retailprice", "p_size")
+    )
+
+
+register(
+    "skyline_price_size",
+    _skyline,
+    """
+    SELECT a.p_partkey, a.p_retailprice, a.p_size
+    FROM part a
+    WHERE NOT EXISTS (
+        SELECT 1 FROM part b
+        WHERE b.p_retailprice <= a.p_retailprice
+          AND b.p_size <= a.p_size
+          AND (b.p_retailprice < a.p_retailprice OR b.p_size < a.p_size)
+    )
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# grid-blocked spatial radius join
+# ---------------------------------------------------------------------------
+
+_SPATIAL_R = 25  # radius; also the grid cell size
+
+
+def _spatial_points(df: DataFrame, id_col: str, a: int, b: int, c: int, d: int):
+    """Deterministic synthetic coordinates on a 1000x1000 integer grid:
+    multiplicative-hash of the id (portable SQL arithmetic — identical
+    on any engine, unlike engine-specific hash functions). Integer
+    coordinates keep every distance computation exact."""
+    return df.select(
+        F.col(id_col),
+        ((F.col(id_col) * a + b) % 1000).alias("x"),
+        ((F.col(id_col) * c + d) % 1000).alias("y"),
+    )
+
+
+def _spatial_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spatial radius join: every (user, store) pair within Euclidean
+    distance 25 on a synthetic 1000x1000 grid (coordinates are
+    multiplicative hashes of the ids — deterministic, uniform, and
+    reproducible in plain SQL on any engine). The classic grid-blocked
+    plan: bucket both sides into r x r cells, replicate the SMALL side
+    (stores) into its 3x3 neighborhood map-side (x9 on the small
+    relation only), equi-join on the cell key, then the exact integer
+    distance^2 filter. Candidate pairs are bounded by cell density —
+    never the |A| x |B| cross join the oracle runs. At 100 TB this is
+    the standard geospatial join: cell key = geohash prefix, hash
+    shuffle on cells, skew handled by splitting hot cells (same salting
+    slot as the ER blocker). Output columns exact integers."""
+    ev = read_events(spark, sf_dir)
+    users = _spatial_points(
+        ev.where(F.col("user_id").isNotNull()).select("user_id").distinct(),
+        "user_id", 2654435761, 0, 40503, 7,
+    ).withColumn("_ux", F.col("x")).withColumn("_uy", F.col("y"))
+    part = load_table(spark, sf_dir, "part")
+    stores = _spatial_points(
+        part.where(F.col("p_partkey") < 200).select(
+            F.col("p_partkey").alias("store_id")
+        ),
+        "store_id", 48271, 11, 69621, 3,
+    )
+    r = _SPATIAL_R
+    # replicate stores into their 3x3 cell neighborhood (small side only)
+    neigh = stores.select(
+        "store_id",
+        F.col("x").alias("_sx"),
+        F.col("y").alias("_sy"),
+        F.explode(
+            F.expr(
+                f"flatten(transform(sequence(-1, 1), dx -> "
+                f"transform(sequence(-1, 1), dy -> "
+                f"struct((x DIV {r}) + dx AS cx, (y DIV {r}) + dy AS cy))))"
+            )
+        ).alias("_cell"),
+    ).select("store_id", "_sx", "_sy", "_cell.cx", "_cell.cy")
+    cand = users.select(
+        "user_id",
+        "_ux",
+        "_uy",
+        (F.col("_ux") / r).cast("long").alias("cx"),
+        (F.col("_uy") / r).cast("long").alias("cy"),
+    ).join(F.broadcast(neigh), ["cx", "cy"])
+    d2 = (F.col("_ux") - F.col("_sx")) * (F.col("_ux") - F.col("_sx")) + (
+        F.col("_uy") - F.col("_sy")
+    ) * (F.col("_uy") - F.col("_sy"))
+    return cand.where(d2 <= r * r).select(
+        "user_id",
+        "store_id",
+        d2.cast("long").alias("dist_sq"),
+    )
+
+
+register(
+    "spatial_radius_join",
+    _spatial_radius_join,
+    f"""
+    WITH u AS (
+        SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL
+    ),
+    up AS (
+        SELECT user_id,
+               (user_id * 2654435761) % 1000 AS x,
+               (user_id * 40503 + 7) % 1000 AS y
+        FROM u
+    ),
+    st AS (
+        SELECT p_partkey AS store_id,
+               (p_partkey * 48271 + 11) % 1000 AS x,
+               (p_partkey * 69621 + 3) % 1000 AS y
+        FROM part WHERE p_partkey < 200
+    )
+    SELECT up.user_id, st.store_id,
+           (up.x - st.x)*(up.x - st.x) + (up.y - st.y)*(up.y - st.y)
+               AS dist_sq
+    FROM up, st
+    WHERE (up.x - st.x)*(up.x - st.x) + (up.y - st.y)*(up.y - st.y)
+          <= {_SPATIAL_R * _SPATIAL_R}
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# exact rolling median over the daily revenue series
+# ---------------------------------------------------------------------------
+
+
+def _rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """7-day rolling EXACT median of daily order revenue. Spark has no
+    median window aggregate, so the frame's values are collected and
+    sorted per row (array_sort over collect_list) and the middle
+    element(s) picked — exact, not approximate, and O(w log w) per row
+    for the fixed w=7 frame. Even-count frames average the two middle
+    values with the same (a+b)/2 double op DuckDB's windowed median
+    interpolates with, on identical exact-DECIMAL-derived inputs.
+
+    Scale shape (round-13 rewrite — this was the registry's last
+    allowlisted GLOBAL window): the fact-sized work is the one
+    day-grouped aggregate; the rolling frame then runs over the
+    DATE-RANGE-sized daily relation via the bounded-overlap pattern
+    instead of one unpartitioned WindowExec. The series is bucketed by
+    YEAR, each bucket's last 6 ROWS are replicated as padding into the
+    next non-empty bucket (the 6-PRECEDING frame never reaches further
+    back), the window runs partitionBy(bucket), and padding rows are
+    dropped after the frame is computed — bit-identical to the global
+    ROWS BETWEEN 6 PRECEDING window while every executor works one year.
+    PRECONDITION (runtime-ENFORCED, round-14 advice): each non-final
+    bucket carries >= 6 rows — a year of a daily series has 100s; a
+    sparser series would pick a coarser bucket. A violation no longer
+    corrupts med7 silently: per-bucket counts (an O(#years) aggregate on
+    the already-checkpointed daily relation, broadcast back) gate every
+    output row through ``raise_error``, so a <6-row non-final bucket
+    fails loudly with the bucket and its count named — pinned by
+    tests/test_relational.py::test_rolling_median_sparse_bucket_guard.
+    The next-bucket mapping is a broadcast
+    self-join on the ~#years bucket spine (no window), so calendar gaps
+    (an entirely empty year) pad into the next PRESENT year, preserving
+    row-frame semantics under gaps. A rolling median over a per-key
+    fact-sized series would partition by key instead and skip the
+    padding entirely; the frame logic is unchanged."""
+    orders = load_table(spark, sf_dir, "orders")
+    daily = (
+        orders.groupBy(
+            F.col("o_orderdate").cast("date").alias("day")
+        )
+        .agg(
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("rev")
+        )
+        # 4 consumers (spine, pad source, main rows, next-bucket map):
+        # checkpoint the O(calendar-range) daily relation so the fact is
+        # aggregated ONCE, not re-scanned per consumer.
+        .localCheckpoint(eager=True)
+    )
+    from pyspark.sql import Window
+
+    base = daily.withColumn("b", F.trunc("day", "year"))
+    bkts = base.select("b").distinct()
+    nxt = (
+        bkts.alias("a")
+        .join(F.broadcast(bkts.alias("n")), F.col("n.b") > F.col("a.b"),
+              "left")
+        .groupBy(F.col("a.b").alias("b"))
+        .agg(F.min(F.col("n.b")).alias("next_b"))
+    )
+    tail6 = Window.partitionBy("b").orderBy(F.desc("day"))
+    pads = (
+        base.withColumn("rnd", F.row_number().over(tail6))
+        .where(F.col("rnd") <= 6)
+        .join(F.broadcast(nxt), "b")
+        .where(F.col("next_b").isNotNull())
+        .select(
+            "day", "rev",
+            F.col("next_b").alias("b"), F.lit(True).alias("is_pad"),
+        )
+    )
+    # Precondition guard: a non-final bucket with < 6 rows can't donate
+    # a full pad tail, so the NEXT bucket's leading frames would
+    # silently under-fill. Count rows per bucket (O(#years) output, one
+    # more consumer of the checkpointed daily relation), broadcast the
+    # verdict back, and route every output row's median through the
+    # check so a violation raises instead of returning wrong medians.
+    guard = (
+        base.groupBy("b")
+        .agg(F.count(F.lit(1)).alias("bucket_rows"))
+        .join(F.broadcast(nxt), "b")
+        .select(
+            "b",
+            "bucket_rows",
+            (F.col("next_b").isNull() | (F.col("bucket_rows") >= 6))
+            .alias("bucket_ok"),
+        )
+    )
+    un = (
+        base.select("day", "rev", "b", F.lit(False).alias("is_pad"))
+        .unionByName(pads)
+        .join(F.broadcast(guard), "b")
+    )
+
+    w = Window.partitionBy("b").orderBy("day").rowsBetween(
+        -6, Window.currentRow
+    )
+    sorted_frame = F.array_sort(F.collect_list("rev").over(w))
+    n = F.size(sorted_frame)
+    mid_hi = ((n + 1) / F.lit(2)).cast("int")  # element_at wants INT
+    mid_lo = (n / F.lit(2)).cast("int")
+    med = F.when(
+        n % 2 == 1,
+        F.element_at(sorted_frame, mid_hi),
+    ).otherwise(
+        (
+            F.element_at(sorted_frame, mid_lo)
+            + F.element_at(sorted_frame, mid_lo + 1)
+        )
+        / F.lit(2.0)
+    )
+    # Every output row evaluates med7, so hanging the precondition off
+    # it cannot be pruned away by Catalyst: a violating bucket raises
+    # on the first row an executor materializes.
+    med_guarded = F.when(F.col("bucket_ok"), med).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(
+                    "window_rolling_median: non-final year bucket "
+                ),
+                F.col("b").cast("string"),
+                F.lit(" has only "),
+                F.col("bucket_rows").cast("string"),
+                F.lit(
+                    " rows (< 6); the bounded-overlap rewrite needs a"
+                    " coarser bucket for a series this sparse"
+                ),
+            )
+        )
+    )
+    return (
+        un.select("day", "rev", "is_pad", med_guarded.alias("med7"))
+        .where(~F.col("is_pad"))
+        .select("day", "rev", "med7")
+    )
+
+
+register(
+    "window_rolling_median",
+    _rolling_median,
+    """
+    WITH daily AS (
+        SELECT CAST(o_orderdate AS DATE) AS day,
+               CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+                   AS rev
+        FROM orders GROUP BY 1
+    )
+    SELECT day, rev,
+           median(rev) OVER (ORDER BY day
+               ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS med7
+    FROM daily
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# SCD2 point-in-time join (as-of dimension attribution)
+# ---------------------------------------------------------------------------
+
+
+def _scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point-in-time join against a versioned (SCD2) dimension: each
+    order joins the customer-segment version VALID AT ITS ORDER DATE —
+    the consumption side of sink_scd2_history (scale_ops.py), and the
+    correctness difference between "revenue by segment today" and
+    "revenue by the segment the customer was in when they ordered"
+    (the error class behind most dashboard restatements).
+
+    The history is the same deterministic two-version construction as
+    sink_scd2_history (every 10th customer moves to MACHINERY on
+    1996-06-01). The join is an EQUI-join on custkey with the validity
+    predicate as a post-filter — at most #versions rows per key (2
+    here), so there is no range-join blow-up and no binning needed;
+    per-key version counts are what keep SCD2 joins tractable at any
+    scale. Revenue accumulates in exact DECIMAL.
+
+    Scale: dimension versions are dimension-sized — linearly growing,
+    so the join carries NO forced broadcast hint (round-15 review; a
+    hint never falls back past the threshold): threshold/AQE broadcast
+    the small fixture history, shuffle-hash takes over at scale; the
+    fact table shuffles once on the join key at most."""
+    eff = F.to_date(F.lit("1996-06-01"))
+    base = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    changed = base.where(F.col("c_custkey") % 10 == 0) \
+        .where(F.col("c_mktsegment") != "MACHINERY")
+    v1 = base.select(
+        "c_custkey",
+        "c_mktsegment",
+        F.to_date(F.lit("1992-01-01")).alias("valid_from"),
+        F.when(
+            (F.col("c_custkey") % 10 == 0)
+            & (F.col("c_mktsegment") != "MACHINERY"),
+            eff,
+        ).alias("valid_to"),
+    )
+    v2 = changed.select(
+        "c_custkey",
+        F.lit("MACHINERY").alias("c_mktsegment"),
+        eff.alias("valid_from"),
+        F.lit(None).cast("date").alias("valid_to"),
+    )
+    dim = v1.unionByName(v2)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_custkey",
+        F.col("o_orderdate").cast("date").alias("od"),
+        F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
+    )
+    joined = orders.join(
+        dim, orders.o_custkey == dim.c_custkey
+    ).where(
+        (F.col("od") >= F.col("valid_from"))
+        & (F.col("valid_to").isNull() | (F.col("od") < F.col("valid_to")))
+    )
+    return joined.groupBy("c_mktsegment").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum("price").cast("decimal(18,2)").cast("double").alias("revenue"),
+    )
+
+
+register(
+    "join_scd2_point_in_time",
+    _scd2_point_in_time,
+    """
+    WITH base AS (SELECT c_custkey, c_mktsegment FROM customer),
+    dim AS (
+        SELECT c_custkey, c_mktsegment,
+               DATE '1992-01-01' AS valid_from,
+               CASE WHEN c_custkey % 10 = 0
+                         AND c_mktsegment <> 'MACHINERY'
+                    THEN DATE '1996-06-01' END AS valid_to
+        FROM base
+        UNION ALL
+        SELECT c_custkey, 'MACHINERY', DATE '1996-06-01', NULL
+        FROM base
+        WHERE c_custkey % 10 = 0 AND c_mktsegment <> 'MACHINERY'
+    )
+    SELECT d.c_mktsegment,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           CAST(CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2)))
+                     AS DECIMAL(18,2)) AS DOUBLE) AS revenue
+    FROM orders o
+    JOIN dim d ON o.o_custkey = d.c_custkey
+    WHERE CAST(o.o_orderdate AS DATE) >= d.valid_from
+      AND (d.valid_to IS NULL
+           OR CAST(o.o_orderdate AS DATE) < d.valid_to)
+    GROUP BY d.c_mktsegment
+    """,
+)

@@ -35,6 +35,10 @@ from orchestrated_etl_spark.sources.catalog import (
     read_json,
     read_orc,
 )
+from orchestrated_etl_spark.sources.scratch import (
+    nation_blob_files,
+    scratch_path,
+)
 
 # Multiplicative hash (Knuth 2^32 golden ratio) expressed in plain int64
 # arithmetic so Spark and the DuckDB oracle compute bit-identical buckets.
@@ -50,15 +54,6 @@ def _bucket(col: str):
 
 def _bucket_sql(col: str) -> str:
     return f"(({col} * {_HASH_MULT}) % {_HASH_MOD})"
-
-
-def _scratch(name: str, sf_dir: str) -> str:
-    """Per-query, per-sf scratch path inside the repo (gitignored)."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__)))), ".scratch", f"{name}_{tag}")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    return path
 
 
 # ---------------------------------------------------------------------------
@@ -528,7 +523,7 @@ def _csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-source analogue of the reference's scrape ingest (S1/S2/S6,
     dags/dag.py:65-119): external text in, explicit StructType, no
     inference pass over the data."""
-    path = _scratch("csv_nation", sf_dir)
+    path = scratch_path("csv_nation", sf_dir)
     nation = load_table(spark, sf_dir, "nation")
     nation.write.mode("overwrite").option("header", "true").csv(path)
     return read_csv(spark, path, schemas.NATION)
@@ -545,7 +540,7 @@ def _json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → JSON lines → declared-schema read → aggregate. Doubles
     survive because Spark writes shortest-roundtrip representations;
     the aggregate is rounded on both sides regardless."""
-    path = _scratch("json_orders", sf_dir)
+    path = scratch_path("json_orders", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     orders.write.mode("overwrite").json(path)
     back = read_json(spark, path, schemas.ORDERS)
@@ -580,7 +575,7 @@ def _partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1-K4 (dags/dag.py:189-227) at scale: directory-partition the sink
     on a low-cardinality key so downstream scans prune whole directories,
     then verify by reading back through the partition column."""
-    path = _scratch("orders_by_status", sf_dir)
+    path = scratch_path("orders_by_status", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     sinks.write_parquet(
         orders, path, mode="overwrite", partition_by=["o_orderstatus"]
@@ -810,17 +805,7 @@ def _binary_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE column — project it away after feature extraction so only
     digests/metadata shuffle (here: nothing shuffles at all; the
     aggregate-free plan is map-only)."""
-    import os as _os
-
-    base = _scratch("binfiles", sf_dir)
-    import shutil as _shutil
-
-    _shutil.rmtree(base, ignore_errors=True)
-    _os.makedirs(base, exist_ok=True)
-    nation = load_table(spark, sf_dir, "nation")
-    for row in nation.select("n_nationkey", "n_name").collect():
-        with open(f"{base}/{row['n_nationkey']:03d}.bin", "wb") as fh:
-            fh.write(row["n_name"].encode("utf-8"))
+    base = nation_blob_files(spark, sf_dir)
     raw = spark.read.format("binaryFile").load(f"{base}/*.bin")
     return raw.select(
         F.regexp_extract(
@@ -914,7 +899,7 @@ def _merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = updates.unionByName(
         orders.join(updates.select("o_orderkey"), "o_orderkey", "left_anti")
     )
-    path = _scratch("orders_merged", sf_dir)
+    path = scratch_path("orders_merged", sf_dir)
     sinks.write_parquet(merged, path, mode="overwrite")
     back = spark.read.parquet(path)
     return back.groupBy("o_orderstatus").agg(
@@ -1114,7 +1099,7 @@ def _orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     format Spark ships natively — column pruning and predicate pushdown
     apply to the ORC scan exactly as to parquet, so a 100 TB ORC lake
     needs no conversion pass to be queried by this engine."""
-    path = _scratch("orc_supplier", sf_dir)
+    path = scratch_path("orc_supplier", sf_dir)
     supplier = load_table(spark, sf_dir, "supplier")
     supplier.write.mode("overwrite").orc(path)
     back = read_orc(spark, path, schemas.SUPPLIER)
@@ -1151,7 +1136,7 @@ def _dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical date-dimension pattern — the fact scan reads the partitions
     the dim filter selects, never the whole table. Plan assertion in
     tests: the fact scan carries a ``dynamicpruning`` expression."""
-    path = _scratch("orders_part_status", sf_dir)
+    path = scratch_path("orders_part_status", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     # one-time layout: directory-partition the fact on the join key
     sinks.write_parquet(

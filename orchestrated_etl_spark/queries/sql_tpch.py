@@ -1,38 +1,48 @@
-"""Third TPC-H wave: Q5/Q6/Q7/Q8/Q9/Q13/Q15/Q21/Q22 shapes adapted to the
-driver's synthetic schema.
+"""TPC-H query shapes adapted to the driver's synthetic schema.
 
-Gap-list coverage (the reference has no query language — SURVEY §3): these
-shapes exercise the remaining Catalyst rewrites the earlier SQL families
-(Q1/Q3/Q4/Q17 and Q10/Q14/Q18/Q19) didn't touch:
+The reference has no query language (SURVEY §3). Every TPC-H shape has
+a registered adaptation (Q1 lives in reference_surface, Q3 in
+relational, Q4 and Q17 in sql_subqueries); each exercises a Catalyst
+rewrite that matters at 100 TB:
 
-- Q5: a 6-table join chain with a NON-join equality (c_nationkey =
-  s_nationkey) folded into the join graph — join-reorder + two broadcast
-  dims + one fact shuffle.
-- Q6: pure scan-filter-agg — the pushed-filter baseline every other plan
-  is judged against (PushedFilters on l_shipdate should appear).
-- Q7: a join producing BOTH sides' nations with a symmetric disjunctive
-  pair filter — tests that the disjunction doesn't break the equi-join.
-- Q8: market-share — conditional-sum ratio over a 7-table join, the
-  one-pass formulation of "share of X within group".
-- Q9: profit by (nation, year) over a LIKE-filtered part dim — LIKE
-  pushdown plus a medium-cardinality group-by.
-- Q13: outer-join + double aggregation (count per customer, then
-  histogram of counts) — the classic "aggregate of an aggregate".
-- Q15: CTE reused twice (per-supplier revenue vs its max) — tests CTE
-  dedup/reuse rather than recompute.
-- Q21: EXISTS + NOT EXISTS self-joins on the fact table at the same key —
-  Catalyst turns both into semi/anti joins sharing one shuffle key.
-- Q22: scalar aggregate subquery feeding a filter + anti-join against the
-  fact — the "qualified but inactive" pattern.
+- Q2: a CORRELATED scalar MIN subquery, decorrelated into an aggregate
+  joined back on the correlation key.
+- Q5: a 6-table join chain with a non-join equality (c_nationkey =
+  s_nationkey) folded into the join graph.
+- Q6: pure scan-filter-agg, the pushed-filter baseline.
+- Q7: both sides' nations with a symmetric disjunctive pair filter that
+  must not break the equi-join.
+- Q8/Q14: conditional-sum ratios (market share, promo share) in one
+  pass, no self-join.
+- Q9: profit by (nation, year) over a LIKE-filtered part dimension.
+- Q10: 3-way join + top-k on an aggregate (TakeOrderedAndProject caps
+  the transfer at k rows per partition).
+- Q11: a scalar aggregate in HAVING sharing its subtree with the outer
+  aggregate.
+- Q12: conditional counts per ship mode.
+- Q13: outer join + an aggregate of an aggregate.
+- Q15: a CTE reused twice (per-supplier revenue vs its max).
+- Q16: count(DISTINCT) per group with a null-aware NOT IN anti-join.
+- Q18/Q20: IN-subqueries over grouped HAVING, rewritten to left-semi
+  joins (two deep in Q20).
+- Q19: an OR-of-ANDs join predicate whose common equi-key Catalyst
+  extracts, so it stays a hash join.
+- Q21/Q22: EXISTS/NOT EXISTS and scalar-subquery filters turned into
+  semi/anti joins.
 
-Schema deltas vs real TPC-H (driver data has no partsupp, no
-l_commitdate/l_receiptdate/l_shipmode, no c_phone/o_comment):
-- Q9 profit omits ps_supplycost (no partsupp table).
-- Q21's "kept waiting" predicate becomes l_returnflag = 'R' (no
-  receipt/commit dates) — same EXISTS/NOT-EXISTS plan shape.
-- Q22's "no orders in 7 years" becomes "no orders since 1999-01-01"
-  (every synthetic customer has at least one order overall), and the
-  country-code group becomes the nation.
+Schema deltas vs real TPC-H (the driver data has no partsupp, no
+l_commitdate/l_receiptdate/l_shipmode, no c_phone/o_comment/s_comment):
+supply cost becomes the minimum observed unit price
+``l_extendedprice / l_quantity`` per (part, supplier) and availability
+the total shipped quantity; Q9 omits ps_supplycost; Q21's "kept
+waiting" predicate becomes l_returnflag = 'R'; Q22's "no orders in 7
+years" becomes "no orders since 1999-01-01" with the nation as the
+country code; the "Customer Complaints" supplier exclusion becomes a
+negative account balance.
+
+FLOAT POLICY (registry.py): money sums accumulate in DECIMAL on both
+engines; unit-cost quotients are raw IEEE operations on identical
+inputs; no round() on compared doubles.
 """
 
 from __future__ import annotations
@@ -42,6 +52,235 @@ from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources.catalog import load_table
+
+
+# ---------------------------------------------------------------------------
+# Q10 shape — top returned-item customers by revenue
+# ---------------------------------------------------------------------------
+
+
+def _q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 customers by revenue on returned line items. Both join
+    dims are HINT-FREE (customer/orders grow with SF — the flagship-docstring
+    class): they broadcast under the threshold
+    at bench scale and degrade to key-partitioned shuffle joins past
+    it. Lineitem aggregates with map-side partials after one shuffle;
+    the final top-k is TakeOrderedAndProject (k rows per partition to
+    the driver), not a global sort. Ties broken by custkey for
+    cross-engine determinism."""
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    # exact DECIMAL accumulation (2-decimal factors, scale-4 product);
+    # no round() on a cross-engine-compared double
+    revenue = F.sum(
+        F.col("l_extendedprice").cast("decimal(14,2)")
+        * (1 - F.col("l_discount")).cast("decimal(4,2)")
+    ).cast("double").alias("revenue")
+    return (
+        lineitem.where(F.col("l_returnflag") == "R")
+        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(customer, F.col("o_custkey") == F.col("c_custkey"))
+        .groupBy(
+            F.col("c_custkey").alias("custkey"),
+            F.col("c_name").alias("name"),
+            F.col("c_mktsegment").alias("mktsegment"),
+        )
+        .agg(revenue, F.count("*").alias("n_lines"))
+        .orderBy(F.desc("revenue"), "custkey")
+        .limit(20)
+    )
+
+
+register(
+    "sql_q10_returned_revenue",
+    _q10_returned_revenue,
+    """
+    SELECT c.c_custkey AS custkey, c.c_name AS name,
+           c.c_mktsegment AS mktsegment,
+           CAST(sum(CAST(l.l_extendedprice AS DECIMAL(14,2))
+                    * CAST(1 - l.l_discount AS DECIMAL(4,2))) AS DOUBLE)
+               AS revenue,
+           count(*) AS n_lines
+    FROM lineitem l
+    JOIN orders o ON l.l_orderkey = o.o_orderkey
+    JOIN customer c ON o.o_custkey = c.c_custkey
+    WHERE l.l_returnflag = 'R'
+    GROUP BY 1, 2, 3
+    ORDER BY revenue DESC, custkey
+    LIMIT 20
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Q14 shape — monthly promo revenue share (conditional aggregation)
+# ---------------------------------------------------------------------------
+
+
+def _q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Monthly share of revenue from PROMO-type parts. One scan, one
+    hint-free join to part (broadcast under the threshold; part grows
+    with SF, so past it the join degrades to a key-partitioned
+    shuffle), one aggregate — the conditional-sum ratio replaces the naive filtered-self-join formulation (two fact
+    scans + an extra join) that would double the I/O at 100 TB."""
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    rev = F.col("l_extendedprice").cast("decimal(14,2)") * (
+        1 - F.col("l_discount")
+    ).cast("decimal(4,2)")
+    promo_rev = F.sum(F.when(F.col("p_type") == "PROMO", rev)).cast("double")
+    return (
+        lineitem.join(
+            part, F.col("l_partkey") == F.col("p_partkey")
+        )
+        # trunc()->DATE->NTZ stays wall-clock across session timezones
+        .groupBy(
+            F.trunc("l_shipdate", "month").cast("timestamp_ntz").alias("month")
+        )
+        .agg(
+            (100.0 * promo_rev / F.sum(rev).cast("double")).alias(
+                "promo_share"
+            ),
+            promo_rev.alias("promo_revenue"),
+            F.count("*").alias("n_lines"),
+        )
+    )
+
+
+register(
+    "sql_q14_promo_share",
+    _q14_promo_share,
+    """
+    SELECT CAST(date_trunc('month', l.l_shipdate) AS TIMESTAMP) AS month,
+           100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
+                                  THEN CAST(l.l_extendedprice AS DECIMAL(14,2))
+                                       * CAST(1 - l.l_discount AS DECIMAL(4,2))
+                                  END) AS DOUBLE)
+                 / CAST(sum(CAST(l.l_extendedprice AS DECIMAL(14,2))
+                            * CAST(1 - l.l_discount AS DECIMAL(4,2)))
+                        AS DOUBLE)
+               AS promo_share,
+           CAST(sum(CASE WHEN p.p_type = 'PROMO'
+                         THEN CAST(l.l_extendedprice AS DECIMAL(14,2))
+                              * CAST(1 - l.l_discount AS DECIMAL(4,2))
+                         END) AS DOUBLE) AS promo_revenue,
+           count(*) AS n_lines
+    FROM lineitem l
+    JOIN part p ON l.l_partkey = p.p_partkey
+    GROUP BY 1
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Q18 shape — large-quantity orders via IN over a grouped HAVING
+# ---------------------------------------------------------------------------
+
+
+def _q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Customers holding orders whose total quantity exceeds 300. The
+    qualifying-keys subquery aggregates lineitem ONCE (partial aggs
+    map-side), then semi-joins back — at scale this is two passes over
+    lineitem and one shuffle each, with the second pass's join key list
+    small enough that AQE usually converts it to a broadcast."""
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    big = (
+        lineitem.groupBy("l_orderkey")
+        .agg(F.sum("l_quantity").alias("sum_qty"))
+        .where(F.col("sum_qty") > 300)
+        .select("l_orderkey")
+    )
+    return (
+        lineitem.join(big.withColumnRenamed("l_orderkey", "bigkey"),
+                      F.col("l_orderkey") == F.col("bigkey"), "left_semi")
+        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(customer, F.col("o_custkey") == F.col("c_custkey"))
+        .groupBy(
+            F.col("c_name").alias("name"),
+            F.col("c_custkey").alias("custkey"),
+            F.col("o_orderkey").alias("orderkey"),
+            F.round("o_totalprice", 2).alias("totalprice"),
+        )
+        .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
+        .orderBy("custkey", "orderkey")
+    )
+
+
+register(
+    "sql_q18_large_orders",
+    _q18_large_orders,
+    """
+    SELECT c.c_name AS name, c.c_custkey AS custkey,
+           o.o_orderkey AS orderkey,
+           round(o.o_totalprice, 2) AS totalprice,
+           round(sum(l.l_quantity), 2) AS total_qty
+    FROM lineitem l
+    JOIN orders o ON l.l_orderkey = o.o_orderkey
+    JOIN customer c ON o.o_custkey = c.c_custkey
+    WHERE l.l_orderkey IN (
+        SELECT l_orderkey FROM lineitem
+        GROUP BY l_orderkey HAVING sum(l_quantity) > 300
+    )
+    GROUP BY 1, 2, 3, 4
+    ORDER BY custkey, orderkey
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Q19 shape — disjunctive OR-of-ANDs join predicate
+# ---------------------------------------------------------------------------
+
+
+def _q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue under an OR-of-ANDs predicate spanning both join sides.
+    Catalyst factors the common p_partkey = l_partkey conjunct out of
+    the disjunction, so the plan stays a HASH join with a residual
+    filter (broadcast under the threshold, shuffle past it — the part
+    side grows with SF) — the naive reading
+    (three separate joins unioned, or worse a cartesian product
+    filtered late) never materialises."""
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    j = lineitem.join(
+        part, F.col("l_partkey") == F.col("p_partkey")
+    )
+    q, s, t = F.col("l_quantity"), F.col("p_size"), F.col("p_type")
+    cond = (
+        ((t == "SMALL") & q.between(1, 11) & s.between(1, 5))
+        | ((t == "MEDIUM") & q.between(10, 20) & s.between(1, 10))
+        | ((t == "LARGE") & q.between(20, 30) & s.between(1, 15))
+    )
+    return j.where(cond).agg(
+        F.sum(
+            F.col("l_extendedprice").cast("decimal(14,2)")
+            * (1 - F.col("l_discount")).cast("decimal(4,2)")
+        ).cast("double").alias("revenue"),
+        F.count("*").alias("n_lines"),
+    )
+
+
+register(
+    "sql_q19_disjunctive",
+    _q19_disjunctive,
+    """
+    SELECT CAST(sum(CAST(l.l_extendedprice AS DECIMAL(14,2))
+                    * CAST(1 - l.l_discount AS DECIMAL(4,2))) AS DOUBLE)
+               AS revenue,
+           count(*) AS n_lines
+    FROM lineitem l
+    JOIN part p ON p.p_partkey = l.l_partkey
+    WHERE (p.p_type = 'SMALL' AND l.l_quantity BETWEEN 1 AND 11
+           AND p.p_size BETWEEN 1 AND 5)
+       OR (p.p_type = 'MEDIUM' AND l.l_quantity BETWEEN 10 AND 20
+           AND p.p_size BETWEEN 1 AND 10)
+       OR (p.p_type = 'LARGE' AND l.l_quantity BETWEEN 20 AND 30
+           AND p.p_size BETWEEN 1 AND 15)
+    """,
+)
 
 
 def _rev():
@@ -653,5 +892,278 @@ register(
     )
     GROUP BY 1
     ORDER BY nation
+    """,
+)
+
+
+def _views(spark: SparkSession, sf_dir: str, tag: str, *tables: str) -> None:
+    for t in tables:
+        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_{tag}")
+
+
+# ---------------------------------------------------------------------------
+# Q2 shape — minimum-cost supplier per part within a region
+# ---------------------------------------------------------------------------
+
+
+def _q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """For ECONOMY parts of size ≤ 10, the EUROPE-region supplier(s)
+    offering the per-part minimum unit cost. The correlated
+    ``cost = (SELECT min(cost) ... WHERE same part)`` is the load-bearing
+    shape: Catalyst decorrelates it to an aggregate on the correlation
+    key joined back to the outer relation — one extra shuffle on
+    l_partkey, NOT a per-row subquery execution. At 100 TB the derived
+    supply relation is a single partial-aggregated shuffle of lineitem on
+    (l_partkey, l_suppkey); supplier/nation/region broadcast onto it.
+    The unit-cost quotient is a raw IEEE division of identical inputs on
+    both engines, so the min-equality filter decides identically."""
+    _views(spark, sf_dir, "q2", "lineitem", "part", "supplier", "nation", "region")
+    return spark.sql(
+        """
+        WITH supply AS (
+            SELECT l_partkey AS partkey, l_suppkey AS suppkey,
+                   min(l_extendedprice / l_quantity) AS unit_cost
+            FROM lineitem_q2
+            GROUP BY 1, 2
+        ),
+        eu_supply AS (
+            SELECT supply.*, s_name, s_acctbal, n_name
+            FROM supply
+            JOIN supplier_q2 ON suppkey = s_suppkey
+            JOIN nation_q2 ON s_nationkey = n_nationkey
+            JOIN region_q2 ON n_regionkey = r_regionkey
+            WHERE r_name = 'EUROPE'
+        )
+        SELECT s_acctbal, s_name, n_name,
+               p_partkey, p_type, p_size, unit_cost
+        FROM part_q2
+        JOIN eu_supply ON p_partkey = partkey
+        WHERE p_type = 'ECONOMY' AND p_size <= 10
+          AND unit_cost = (
+              SELECT min(unit_cost) FROM eu_supply e2
+              WHERE e2.partkey = p_partkey
+          )
+        ORDER BY s_acctbal DESC, s_name, p_partkey
+        LIMIT 100
+        """
+    )
+
+
+register(
+    "sql_q2_min_cost_supplier",
+    _q2_min_cost_supplier,
+    """
+    WITH supply AS (
+        SELECT l_partkey AS partkey, l_suppkey AS suppkey,
+               min(l_extendedprice / l_quantity) AS unit_cost
+        FROM lineitem
+        GROUP BY 1, 2
+    ),
+    eu_supply AS (
+        SELECT supply.*, s_name, s_acctbal, n_name
+        FROM supply
+        JOIN supplier ON suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
+        WHERE r_name = 'EUROPE'
+    )
+    SELECT s_acctbal, s_name, n_name,
+           p_partkey, p_type, p_size, unit_cost
+    FROM part
+    JOIN eu_supply ON p_partkey = partkey
+    WHERE p_type = 'ECONOMY' AND p_size <= 10
+      AND unit_cost = (
+          SELECT min(unit_cost) FROM eu_supply e2
+          WHERE e2.partkey = p_partkey
+      )
+    ORDER BY s_acctbal DESC, s_name, p_partkey
+    LIMIT 100
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Q11 shape — parts holding an outsized share of a nation's supply value
+# ---------------------------------------------------------------------------
+
+
+def _q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Supply value per part from NATION_7 suppliers, keeping parts whose
+    value exceeds 0.0001 of that nation's total. The HAVING scalar
+    subquery re-aggregates the SAME filtered join — Catalyst evaluates it
+    once (1-row result broadcast into the filter), so the plan is: one
+    lineitem⋈broadcast(supplier⋈nation) shuffle on l_partkey, plus a
+    cheap global re-aggregation of the per-part partials. DECIMAL
+    accumulation on both engines makes the threshold comparison exact —
+    no group can flip sides from float ordering."""
+    _views(spark, sf_dir, "q11", "lineitem", "supplier", "nation")
+    return spark.sql(
+        """
+        WITH national AS (
+            SELECT l_partkey,
+                   CAST(l_extendedprice AS DECIMAL(14,2))
+                     * CAST(1.0 - l_discount AS DECIMAL(4,2)) AS val
+            FROM lineitem_q11
+            JOIN supplier_q11 ON l_suppkey = s_suppkey
+            JOIN nation_q11 ON s_nationkey = n_nationkey
+            WHERE n_name = 'NATION_7'
+        )
+        SELECT l_partkey AS partkey,
+               CAST(sum(val) AS DOUBLE) AS part_value
+        FROM national
+        GROUP BY 1
+        HAVING sum(val) > (SELECT sum(val) * 0.0001 FROM national)
+        ORDER BY part_value DESC, partkey
+        """
+    )
+
+
+register(
+    "sql_q11_important_stock",
+    _q11_important_stock,
+    """
+    WITH national AS (
+        SELECT l_partkey,
+               CAST(l_extendedprice AS DECIMAL(14,2))
+                 * CAST(1.0 - l_discount AS DECIMAL(4,2)) AS val
+        FROM lineitem
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
+        WHERE n_name = 'NATION_7'
+    )
+    SELECT l_partkey AS partkey,
+           CAST(sum(val) AS DOUBLE) AS part_value
+    FROM national
+    GROUP BY 1
+    HAVING sum(val) > (SELECT sum(val) * 0.0001 FROM national)
+    ORDER BY part_value DESC, partkey
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Q16 shape — supplier diversity per part attribute, excluding flagged ones
+# ---------------------------------------------------------------------------
+
+
+def _q16_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct supplier count per (brand, type, size) over the observed
+    part-supplier pairs, excluding Brand#1, PROMO types, off-list sizes,
+    and suppliers in arrears (s_acctbal < 0 stands in for TPC-H's
+    "Customer Complaints" comment — no s_comment column in the fixture).
+    Two rewrites in one plan: count(DISTINCT l_suppkey) expands via a
+    two-phase distinct aggregate (dedup shuffle then count), and the
+    NOT IN becomes a null-aware anti-join (NAAJ). SCALE CAVEAT:
+    Spark executes a NAAJ broadcast-side ONLY — there is no
+    shuffle fallback for the null-aware form — and the flagged list is
+    NOT construction-bounded: suppliers in arrears are a roughly
+    constant FRACTION of the supplier table, so the build side grows
+    with the data. The NOT IN spelling is kept because exercising the
+    NAAJ rewrite IS this query's coverage point (both key columns are
+    non-null here, so semantics match the anti-join); at 100 TB the
+    scale-safe spelling of the same predicate is NOT EXISTS / a
+    left_anti join, which Spark plans as a shuffle-capable regular
+    anti-join — see j_anti_join for that form."""
+    _views(spark, sf_dir, "q16", "lineitem", "part", "supplier")
+    return spark.sql(
+        """
+        SELECT p_brand, p_type, p_size,
+               count(DISTINCT l_suppkey) AS supplier_cnt
+        FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem_q16) pairs
+        JOIN part_q16 ON p_partkey = l_partkey
+        WHERE p_brand <> 'Brand#1'
+          AND p_type NOT LIKE 'PROMO%'
+          AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
+          AND l_suppkey NOT IN (
+              SELECT s_suppkey FROM supplier_q16 WHERE s_acctbal < 0.0
+          )
+        GROUP BY 1, 2, 3
+        ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
+        """
+    )
+
+
+register(
+    "sql_q16_supplier_diversity",
+    _q16_supplier_diversity,
+    """
+    SELECT p_brand, p_type, p_size,
+           count(DISTINCT l_suppkey) AS supplier_cnt
+    FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) pairs
+    JOIN part ON p_partkey = l_partkey
+    WHERE p_brand <> 'Brand#1'
+      AND p_type NOT LIKE 'PROMO%'
+      AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
+      AND l_suppkey NOT IN (
+          SELECT s_suppkey FROM supplier WHERE s_acctbal < 0.0
+      )
+    GROUP BY 1, 2, 3
+    ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# Q20 shape — suppliers whose recent shipments dominate their history
+# ---------------------------------------------------------------------------
+
+
+def _q20_excess_availability(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NATION_3 suppliers who, for some 'small %' part, shipped more than
+    half of their all-time quantity for that part during 1996 (the
+    fixture has no ps_availqty; "more than half of availability" becomes
+    "1996 outweighs the rest of history"). The two-deep IN nesting is the
+    point: the part-name IN becomes a broadcast semi-join pruning
+    lineitem BEFORE its (suppkey, partkey) aggregation, and the outer
+    suppkey IN becomes a semi-join onto the supplier dim — no distinct
+    materialization, no correlated re-execution. Quantities accumulate in
+    DECIMAL so the half-share comparison is exact on both engines."""
+    _views(spark, sf_dir, "q20", "lineitem", "part", "supplier", "nation")
+    return spark.sql(
+        """
+        SELECT s_name, s_acctbal
+        FROM supplier_q20
+        JOIN nation_q20 ON s_nationkey = n_nationkey
+        WHERE n_name = 'NATION_3'
+          AND s_suppkey IN (
+              SELECT l_suppkey
+              FROM lineitem_q20
+              WHERE l_partkey IN (
+                  SELECT p_partkey FROM part_q20 WHERE p_name LIKE 'small %'
+              )
+              GROUP BY l_suppkey, l_partkey
+              HAVING sum(CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01'
+                               AND l_shipdate < TIMESTAMP '1997-01-01'
+                              THEN CAST(l_quantity AS DECIMAL(12,2))
+                              ELSE CAST(0 AS DECIMAL(12,2)) END)
+                     > 0.5 * sum(CAST(l_quantity AS DECIMAL(12,2)))
+          )
+        ORDER BY s_name
+        """
+    )
+
+
+register(
+    "sql_q20_excess_availability",
+    _q20_excess_availability,
+    """
+    SELECT s_name, s_acctbal
+    FROM supplier
+    JOIN nation ON s_nationkey = n_nationkey
+    WHERE n_name = 'NATION_3'
+      AND s_suppkey IN (
+          SELECT l_suppkey
+          FROM lineitem
+          WHERE l_partkey IN (
+              SELECT p_partkey FROM part WHERE p_name LIKE 'small %'
+          )
+          GROUP BY l_suppkey, l_partkey
+          HAVING sum(CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01'
+                           AND l_shipdate < TIMESTAMP '1997-01-01'
+                          THEN CAST(l_quantity AS DECIMAL(12,2))
+                          ELSE CAST(0 AS DECIMAL(12,2)) END)
+                 > 0.5 * sum(CAST(l_quantity AS DECIMAL(12,2)))
+      )
+    ORDER BY s_name
     """,
 )

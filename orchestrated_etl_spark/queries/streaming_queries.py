@@ -14,7 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orchestrated_etl_spark.functions.quality import (
+    QUARANTINE_SQL,
+    quarantine_route,
+)
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import read_events
+from orchestrated_etl_spark.sources.scratch import nation_blob_files
 from orchestrated_etl_spark.streaming import windows as W
 from orchestrated_etl_spark.streaming.events_stream import (
     read_events_stream,
@@ -472,14 +478,7 @@ def _stream_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is batch-equal regardless of batch boundaries, so this
     streaming query carries a full oracle (same relation as
     src_binary_file_source)."""
-    from orchestrated_etl_spark.queries.scale_ops import (
-        _binary_file_source,
-        _scratch,
-    )
-
-    # ensure the .bin fixture files exist (same prep as the batch query)
-    _binary_file_source(spark, sf_dir).count()
-    base = _scratch("binfiles", sf_dir)
+    base = nation_blob_files(spark, sf_dir)
     raw = (
         spark.readStream.format("binaryFile")
         .schema(
@@ -752,4 +751,39 @@ register(
                AS window_end
     FROM events GROUP BY event_type, date_trunc('day', ts)
     """,
+)
+
+
+def _stream_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming expectations routing: the SAME quarantine rule set as
+    dq_quarantine_split evaluated over a file stream consumed 2 files
+    per trigger (6 feed files → 3 micro-batches), append mode. The
+    rules are stateless row maps, so the final quarantine table is
+    batch-equal regardless of micro-batch boundaries — which is why
+    this streaming query carries the FULL batch oracle (the
+    stream_binary_files determinism argument). This is the live half
+    of the DLT-expectations pattern: bad rows divert to a quarantine
+    sink as they ARRIVE, instead of being found by tomorrow's audit."""
+    import tempfile
+
+    work = tempfile.mkdtemp(prefix="quarantine_stream_")
+    src = f"{work}/feed"
+    ev = read_events(spark, sf_dir)
+    ev.repartition(6).write.parquet(src)
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+    )
+    from orchestrated_etl_spark.streaming.events_stream import (
+        run_available_now,
+    )
+
+    return run_available_now(quarantine_route(stream), output_mode="append")
+
+
+register(
+    "stream_quarantine_split",
+    _stream_quarantine_split,
+    QUARANTINE_SQL,
 )

@@ -865,3 +865,357 @@ register(
     FROM keyed
     """,
 )
+
+
+# ---------------------------------------------------------------------------
+# deterministic train/val/test split
+# ---------------------------------------------------------------------------
+
+
+def _split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic 80/10/10 train/val/test split: the bucket is an md5
+    hash of the stable doc_id, so the assignment is reproducible across
+    reruns, engines, and cluster sizes (never ``rand()``), evaluates in
+    the scan stage with no shuffle, and any future re-shard keeps every
+    document's split stable. Reports per-(split, lang) composition —
+    the skew check run before training."""
+    docs = load_table(spark, sf_dir, "documents")
+    bucket = (
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
+        .cast("long")
+        % 10
+    )
+    split = (
+        F.when(bucket < 8, F.lit("train"))
+        .when(bucket == 8, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+    return (
+        docs.select(split.alias("split"), "lang", "n_chars")
+        .groupBy("split", "lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+        )
+    )
+
+
+register(
+    "train_split_assignment",
+    _split_assignment,
+    """
+    WITH assigned AS (
+        SELECT CASE
+                 WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
+                      AS BIGINT) % 10 < 8 THEN 'train'
+                 WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
+                      AS BIGINT) % 10 = 8 THEN 'val'
+                 ELSE 'test'
+               END AS split,
+               lang, n_chars
+        FROM documents
+    )
+    SELECT split, lang, count(*) AS n_docs,
+           CAST(sum(n_chars) AS BIGINT) AS total_chars
+    FROM assigned GROUP BY split, lang
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# dataset card (per-source corpus profile for dataset publishing)
+# ---------------------------------------------------------------------------
+
+
+def _dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source dataset card — the publish-time summary a dataset
+    release ships (HuggingFace dataset-card statistics section): doc
+    counts, size, language spread, length distribution (exact
+    percentile_disc order statistics), and a whitespace token
+    estimate, all from ONE grouped pass over the corpus. Every value
+    is an exact integer, an order statistic, or an exact-integer-sum
+    quotient — no rounding policy.
+
+    Scale: one partial-aggregable groupBy(source); the exact
+    percentile buffers one source's lengths (bounded by per-source doc
+    counts; swap in histogram cutoffs past that)."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "source",
+        "lang",
+        F.length("text").alias("n_chars_m"),
+        (F.size(F.split(F.col("text"), r"\s+"))).alias("n_tokens_ws"),
+    )
+    return docs.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.count_distinct("lang").alias("n_langs"),
+        F.sum("n_chars_m").alias("total_chars"),
+        F.sum("n_tokens_ws").alias("total_tokens_ws"),
+        F.min("n_chars_m").alias("min_chars"),
+        F.expr(
+            "CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY n_chars_m)"
+            " AS BIGINT)"
+        ).alias("p50_chars"),
+        F.max("n_chars_m").alias("max_chars"),
+        (
+            F.sum("n_chars_m").cast("double")
+            / F.count(F.lit(1)).cast("double")
+        ).alias("avg_chars"),
+    )
+
+
+register(
+    "train_dataset_card",
+    _dataset_card,
+    """
+    WITH src AS (
+        SELECT source, lang,
+               CAST(length(text) AS BIGINT) AS n_chars_m,
+               CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT)
+                   AS n_tokens_ws
+        FROM documents
+    )
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+           CAST(sum(n_chars_m) AS BIGINT) AS total_chars,
+           CAST(sum(n_tokens_ws) AS BIGINT) AS total_tokens_ws,
+           CAST(min(n_chars_m) AS BIGINT) AS min_chars,
+           CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY n_chars_m)
+                AS BIGINT) AS p50_chars,
+           CAST(max(n_chars_m) AS BIGINT) AS max_chars,
+           CAST(sum(n_chars_m) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+               AS avg_chars
+    FROM src
+    GROUP BY source
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# one distributed BPE merge step (tokenizer training primitive)
+# ---------------------------------------------------------------------------
+
+
+def _bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ONE iteration of byte-pair-encoding tokenizer training,
+    distributed: count every adjacent character pair across the
+    whitespace-pre-tokenized corpus, pick the argmax merge (count
+    DESC, pair ASC — a total order, so the winner is engine- and
+    rerun-stable), and report its blast radius (distinct words
+    containing it). Looping this step IS BPE training; one step keeps
+    the relation oracle-able while exercising the full plan shape:
+    corpus explode → pair explode → count → 1-row argmax broadcast →
+    membership re-probe. Pair occurrences are positional (overlaps
+    count — "aaa" contributes "aa" twice), identical arithmetic on
+    both engines.
+
+    Scale: two map-side explodes feeding one partial-aggregable
+    count; the argmax is a 1-row TakeOrdered broadcast back onto the
+    word relation (plan_audit SCALAR_BROADCAST_OK). Real BPE training
+    runs this loop on the WORD-FREQUENCY table (words pre-aggregated
+    with counts — corpus-sized work once, vocabulary-sized work per
+    merge), which is exactly the staged shape here: `words` is the
+    distinct-word relation with frequencies."""
+    docs = load_table(spark, sf_dir, "documents")
+    words = (
+        docs.select(
+            F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
+        )
+        .where(F.length("w") >= 2)
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("freq"))
+        .localCheckpoint(eager=True)  # pair count + re-probe, one pass
+    )
+    pairs = words.select(
+        "freq",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), F.length("w") - 1),
+                lambda i: F.col("w").substr(i, F.lit(2)),
+            )
+        ).alias("pair"),
+    )
+    counts = pairs.groupBy("pair").agg(
+        F.sum("freq").alias("n_occurrences")
+    )
+    best = counts.orderBy(
+        F.desc("n_occurrences"), F.asc("pair")
+    ).limit(1)
+    probe = words.crossJoin(F.broadcast(best)).where(
+        F.col("w").contains(F.col("pair"))
+    )
+    return probe.agg(
+        F.max("pair").alias("merge_pair"),
+        F.max("n_occurrences").alias("n_occurrences"),
+        F.count(F.lit(1)).alias("n_distinct_words_affected"),
+        F.sum("freq").alias("n_word_instances_affected"),
+    )
+
+
+register(
+    "train_bpe_merge_step",
+    _bpe_merge_step,
+    """
+    WITH words AS (
+        SELECT w, CAST(count(*) AS BIGINT) AS freq
+        FROM (
+            SELECT unnest(regexp_split_to_array(lower(text), '\\s+')) AS w
+            FROM documents
+        )
+        WHERE length(w) >= 2
+        GROUP BY w
+    ),
+    pairs AS (
+        SELECT freq, substr(w, CAST(i AS INTEGER), 2) AS pair
+        FROM words, range(1, 4096) AS t(i)
+        WHERE i <= length(w) - 1
+    ),
+    counts AS (
+        SELECT pair, CAST(sum(freq) AS BIGINT) AS n_occurrences
+        FROM pairs GROUP BY pair
+    ),
+    best AS (
+        SELECT pair, n_occurrences FROM counts
+        ORDER BY n_occurrences DESC, pair ASC LIMIT 1
+    )
+    SELECT max(b.pair) AS merge_pair,
+           max(b.n_occurrences) AS n_occurrences,
+           CAST(count(*) AS BIGINT) AS n_distinct_words_affected,
+           CAST(sum(w.freq) AS BIGINT) AS n_word_instances_affected
+    FROM words w, best b
+    WHERE contains(w.w, b.pair)
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# whole-document bin packing (next-fit-decreasing, no doc splitting)
+# ---------------------------------------------------------------------------
+
+_NFD_CAP = 512  # context-window token budget per bin
+
+
+def _pack_nfd_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Whole-document context-window packing per source via NEXT-FIT-
+    DECREASING: documents sorted by (tokens DESC, doc_id), each either
+    joins the currently-open bin or opens a new one — the packing
+    variant where documents are NEVER split across windows (the
+    complement of train_token_packing's prefix-sum splitter, which is
+    optimal for token throughput but slices documents). Emitted per
+    source: bins used vs the ceil(total/cap) lower bound and the fill
+    efficiency — the packing-quality readout a data-loader build
+    reports.
+
+    The fold carries a (bins, last_load) STRUCT accumulator over the
+    sorted token array — sequential by nature (bin state depends on
+    every prior document). Seeded with last_load = cap so the first
+    document provably opens bin 1. All outputs are exact integers or
+    quotients of exact integers; the oracle unrolls the same
+    recurrence as a recursive CTE (the DuckDB struct-fold hazard
+    events_holt_linear documents).
+
+    Scale honesty (round-16 review — the old text claimed the
+    per-source array was "shard-bounded"; a source is a crawl dump,
+    i.e. O(corpus/#sources), NOT bounded like events_ewma_fold's
+    per-user arrays): exact NFD over a whole source is inherently
+    sequential, so this exact form buffers one source per aggregate
+    group and is only safe up to sources that fit an executor. The
+    100 TB path keeps the SAME code shape but packs per
+    (source, hash(doc_id) % n_shards) — each shard's fold is bounded
+    by construction and the packing quality loss is at most one
+    partially-filled bin per shard (amortised to nothing at
+    shard ≫ cap), with per-source metrics recovered by summing shard
+    rows. The oracle pins the exact per-source form at fixture
+    scale."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "source",
+        "doc_id",
+        F.size(F.split(F.col("text"), " ")).cast("long").alias("t"),
+    )
+    packed = toks.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("t").alias("total_tokens"),
+        F.array_sort(
+            F.collect_list(F.struct((-F.col("t")).alias("neg"),
+                                    F.col("doc_id").alias("d"),
+                                    F.col("t").alias("t")))
+        ).alias("arr"),
+    )
+    cap = F.lit(_NFD_CAP).cast("long")
+    state = F.aggregate(
+        F.col("arr"),
+        F.struct(
+            F.lit(0).cast("long").alias("bins"),
+            cap.alias("last"),
+        ),
+        lambda acc, x: F.struct(
+            F.when(acc["last"] + x["t"] <= cap, acc["bins"])
+            .otherwise(acc["bins"] + 1)
+            .alias("bins"),
+            F.when(acc["last"] + x["t"] <= cap, acc["last"] + x["t"])
+            .otherwise(x["t"])
+            .alias("last"),
+        ),
+    )
+    lower = F.ceil(
+        F.col("total_tokens").cast("double") / cap.cast("double")
+    ).cast("long")
+    return packed.select(
+        "source",
+        "n_docs",
+        "total_tokens",
+        state["bins"].alias("bins_used"),
+        lower.alias("bins_lower_bound"),
+        (
+            F.col("total_tokens").cast("double")
+            / (state["bins"] * cap).cast("double")
+        ).alias("fill_efficiency"),
+    )
+
+
+register(
+    "train_pack_nfd_bins",
+    _pack_nfd_bins,
+    f"""
+    WITH RECURSIVE toks AS (
+        SELECT source, doc_id,
+               CAST(len(string_split(text, ' ')) AS BIGINT) AS t
+        FROM documents
+    ),
+    seq AS (
+        SELECT source, t,
+               CAST(row_number() OVER (PARTITION BY source
+                   ORDER BY t DESC, doc_id) AS INTEGER) AS i
+        FROM toks
+    ),
+    walk(source, i, bins, last) AS (
+        SELECT source, 1, CAST(1 AS BIGINT), t FROM seq WHERE i = 1
+        UNION ALL
+        SELECT s.source, s.i,
+               CASE WHEN w.last + s.t <= {_NFD_CAP} THEN w.bins
+                    ELSE w.bins + 1 END,
+               CASE WHEN w.last + s.t <= {_NFD_CAP} THEN w.last + s.t
+                    ELSE s.t END
+        FROM walk w JOIN seq s ON s.source = w.source AND s.i = w.i + 1
+    ),
+    final AS (
+        SELECT source, bins
+        FROM walk w
+        WHERE i = (SELECT max(i) FROM walk x WHERE x.source = w.source)
+    ),
+    totals AS (
+        SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(sum(t) AS BIGINT) AS total_tokens
+        FROM toks GROUP BY source
+    )
+    SELECT t.source, t.n_docs, t.total_tokens,
+           f.bins AS bins_used,
+           CAST(ceil(CAST(t.total_tokens AS DOUBLE)
+                     / CAST({_NFD_CAP} AS DOUBLE)) AS BIGINT)
+               AS bins_lower_bound,
+           CAST(t.total_tokens AS DOUBLE)
+               / CAST(f.bins * {_NFD_CAP} AS DOUBLE) AS fill_efficiency
+    FROM totals t JOIN final f ON t.source = f.source
+    """,
+)

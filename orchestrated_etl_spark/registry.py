@@ -25,6 +25,7 @@ rows-only check.
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Callable
 from pathlib import Path
 
@@ -92,25 +93,17 @@ _FRONT = [
 ]
 
 
-def _ordered(d: dict) -> dict:
-    front = {n: d[n] for n in _FRONT if n in d}
-    rest = {n: v for n, v in d.items() if n not in front}
-    return {**front, **rest}
-
-
 _ORDER_FILE = Path(__file__).resolve().parents[1] / "REGISTRATION_ORDER.txt"
 
 
-def frozen_registration_order() -> list[str] | None:
-    """The committed canonical registration order, or None if absent.
+def frozen_registration_order() -> list[str]:
+    """The committed registration order, read from ``REGISTRATION_ORDER.txt``.
 
-    ``REGISTRATION_ORDER.txt`` (repo root, written by
-    ``tools/gen_registration_order.py`` from a fresh interpreter) pins
-    the staleness tie-break to a diffable artifact so `_FRONT` is
-    auditable from files alone. Lines starting with ``#`` are comments.
+    The artifact at the repo root is the one source of query order: the
+    order ``queries()`` and ``oracle_sql()`` serve after ``_FRONT``, and
+    the staleness tie-break, auditable from files alone. A new query
+    appends its name at the end. Lines starting with ``#`` are comments.
     """
-    if not _ORDER_FILE.exists():
-        return None
     return [
         ln.strip()
         for ln in _ORDER_FILE.read_text().splitlines()
@@ -128,32 +121,31 @@ def registration_order() -> list[str]:
     (the front always holds the newest samples) but wrong in a
     driver-skip round where front members stay stale.
 
-    CANONICAL ONLY FROM A FRESH INTERPRETER: dict order here is import
-    order, so the canonical sequence is what ``_load_all()`` produces
-    when no query module was imported earlier. A process that imports
-    query modules directly before calling this (pytest does) gets a
-    permuted order — prefer ``frozen_registration_order()`` (the
-    committed artifact) for any ordering decision, the way
-    ``tools/rotate_front.py`` does.
-
-    Validates live MEMBERSHIP against the committed artifact when one
-    exists (set equality — order-insensitive, hence safe to call from
-    pytest's permuted import state; the full ordered sequence is pinned
-    by a fresh-subprocess pytest contract instead). Registering or
-    removing a query without regenerating the artifact raises here.
+    Returns the committed artifact after checking that the live registry
+    holds exactly its names, each once; registering or removing a query
+    without editing the artifact raises here. Which module was imported
+    first does not matter.
     """
     _load_all()
-    live = list(_QUERIES)
     frozen = frozen_registration_order()
-    if frozen is not None and set(frozen) != set(live):
-        added = sorted(set(live) - set(frozen))
-        removed = sorted(set(frozen) - set(live))
+    counts = Counter(frozen)
+    dupes = sorted(n for n, c in counts.items() if c > 1)
+    added = sorted(set(_QUERIES) - counts.keys())
+    removed = sorted(counts.keys() - set(_QUERIES))
+    if dupes or added or removed:
         raise RuntimeError(
-            "REGISTRATION_ORDER.txt is stale vs the live registry "
-            f"(added={added}, removed={removed}) — rerun "
-            "`python tools/gen_registration_order.py` standalone."
+            "REGISTRATION_ORDER.txt does not match the live registry "
+            f"(added={added}, removed={removed}, duplicated={dupes}) — "
+            "append each new query name at the end of the file."
         )
-    return live
+    return frozen
+
+
+def _ordered(d: dict) -> dict:
+    """``_FRONT`` first, then every other name in artifact order."""
+    front = [n for n in _FRONT if n in d]
+    rest = [n for n in registration_order() if n in d and n not in front]
+    return {n: d[n] for n in front + rest}
 
 
 def queries() -> dict[str, QueryFn]:

@@ -21,13 +21,11 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 # The scraper's raw record shape: everything a string, exactly as
@@ -76,13 +74,12 @@ class Non200Error(RuntimeError):
 
 
 class _PolicyMixin:
-    """Shared option parsing for all three readers, plus cross-trigger
-    attempt accounting for the two stream readers (ONE parser means a
-    new option or changed default cannot silently diverge batch vs
-    stream semantics — round-14 review). The stream readers live
-    driver-side for the whole run (the Simple wrapper prefetches there;
-    the partitioned reader's latestOffset runs there), so a plain
-    instance counter is the durable form of "attempts accumulate across
+    """Shared option parsing for the batch and stream readers, plus
+    cross-trigger attempt accounting for the stream reader (ONE parser
+    means a new option or changed default cannot silently diverge batch
+    vs stream semantics — round-14 review). The stream reader lives
+    driver-side for the whole run (its latestOffset runs there), so a
+    plain instance counter is the durable form of "attempts accumulate across
     triggers" (round-13 advice: a per-trigger counter made a finite
     transient non-200 unclearable under ``stop``). The counter is
     per-RUN: a checkpoint-restart constructs a fresh reader and the
@@ -195,64 +192,6 @@ class BooksReader(_PolicyMixin, DataSourceReader):
         raise AssertionError("unreachable")  # pragma: no cover
 
 
-class BooksStreamReader(_PolicyMixin, SimpleDataSourceStreamReader):
-    """Micro-batch form of the paginated scrape: each batch is one page,
-    the offset is the next global row index — exactly the cursor the
-    reference carried in its `page` loop variable (dags/dag.py:76-111),
-    made durable: offsets are checkpointed by the engine, so a restarted
-    stream resumes at the page it stopped on instead of re-scraping.
-    SimpleDataSourceStreamReader prefetches on the driver — right for a
-    rate-limited scrape (one polite fetcher), while the batch reader
-    above stays partition-parallel for backfills. Selected with
-    ``.option("stream_mode", "simple")``; the default stream reader is
-    the partition-parallel ``BooksPartitionedStreamReader`` below."""
-
-    def __init__(self, options: dict) -> None:
-        self._parse(options)
-
-    def initialOffset(self) -> dict:
-        return {"i": 0}
-
-    def read(self, start: dict):
-        """One page per micro-batch, with the same failure policies as
-        the batch reader (round-13: the reference's page loop IS the
-        stream analogue, so the non-200 contract belongs here too):
-
-        - ``stop``: the cursor stops advancing at the failing page —
-          each subsequent trigger returns an empty batch at the same
-          offset, the durable-stream form of the reference's `break`;
-          attempts accumulate across triggers, so a TRANSIENT non-200
-          (finite ``fail_attempts``) clears on a later trigger and the
-          stream heals (round-13 advice — previously the counter reset
-          each trigger and a transient could never clear);
-        - ``fail``: the non-200 raises out of the micro-batch and fails
-          the streaming query;
-        - ``retry`` + ``retries=N``: re-attempt the page fetch inside
-          the trigger, then degrade to fail-fast when exhausted.
-        """
-        s = start["i"]
-        e = min(s + self.page_size, self.n)
-        page_no = s // self.page_size
-        failing = (
-            self.fail_page is not None
-            and page_no == self.fail_page
-            and s < e  # past-the-end offsets never "fetch"
-        )
-        if failing and not self._attempt_page(page_no):
-            if self.on_error == "stop":
-                return (iter([]), {"i": s})
-            raise Non200Error(
-                f"non-200 response for page {page_no} "
-                f"(attempt {min(self._attempts_made, self.fail_attempts)})"
-            )
-        return (iter([_row(j) for j in range(s, e)]), {"i": e})
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        # replay path (failure recovery between commits) — deterministic
-        # rows make replay trivially exact
-        return iter([_row(j) for j in range(start["i"], end["i"])])
-
-
 class BooksPartitionedStreamReader(_PolicyMixin, DataSourceStreamReader):
     """Partition-parallel stream reader (round-13 verdict item 3 — the
     default since round 14). Unlike ``SimpleDataSourceStreamReader``,
@@ -276,8 +215,7 @@ class BooksPartitionedStreamReader(_PolicyMixin, DataSourceStreamReader):
     plans an executor task for a page whose fetch would non-200. The
     clean prefix before the failing page is always admitted FIRST, so
     ``on_error=fail`` commits pages [0, fail_page) before the error
-    surfaces — the same partial-result contract as the Simple reader's
-    page-at-a-time cursor:
+    surfaces — the partial-result contract of a page-at-a-time cursor:
 
     - ``stop``: the offset freezes at the failing page (checkpointable,
       resumable; heals when a finite transient clears) — the durable
@@ -383,8 +321,7 @@ class BooksPartitionedStreamReader(_PolicyMixin, DataSourceStreamReader):
 class BooksDataSource(DataSource):
     """spark.read.format("books").option("n", N).load() — batch;
     spark.readStream.format("books") — partition-parallel micro-batches
-    (real availableNow); add .option("stream_mode", "simple") for the
-    driver-side one-page-per-trigger prefetcher (rate-limited scrapes)."""
+    (real availableNow)."""
 
     @classmethod
     def name(cls) -> str:
@@ -397,24 +334,7 @@ class BooksDataSource(DataSource):
         return BooksReader(self.options)
 
     def streamReader(self, schema) -> BooksPartitionedStreamReader:
-        mode = str(self.options.get("stream_mode", "partitioned")).lower()
-        if mode == "simple":
-            # The documented PySpark fallback: raising
-            # PySparkNotImplementedError from streamReader makes the
-            # engine use simpleStreamReader (datasource_internal.py's
-            # _streamReader), so one format serves both shapes.
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader (simple mode)"},
-            )
-        if mode != "partitioned":
-            raise ValueError(
-                f"stream_mode must be partitioned|simple, got {mode!r}"
-            )
         return BooksPartitionedStreamReader(self.options)
-
-    def simpleStreamReader(self, schema) -> BooksStreamReader:
-        return BooksStreamReader(self.options)
 
 
 def register_books_source(spark) -> None:

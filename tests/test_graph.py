@@ -91,7 +91,7 @@ def test_walk_centrality_star(spark, sf_dir):
     integer recurrence, checked two rounds deep by hand.
     W0 = 1 everywhere; W1(hub) = 3, W1(leaf) = 1;
     W2(hub) = 3, W2(leaf) = 3; W3(hub) = 9, W3(leaf) = 3."""
-    from orchestrated_etl_spark.queries.graph_wave10 import (
+    from orchestrated_etl_spark.queries.graph import (
         _graph_walk_centrality,  # noqa: F401  (registry import path)
     )
 

@@ -14,6 +14,7 @@ from orchestrated_etl_spark.functions import multimodal as M
 from orchestrated_etl_spark.functions import similarity as SIM
 from orchestrated_etl_spark.functions import text as X
 from orchestrated_etl_spark.functions.text import tokens
+from orchestrated_etl_spark.queries.training_pipeline import _split_assignment
 
 
 @pytest.fixture(scope="module")
@@ -498,3 +499,97 @@ def test_scene_cut_counts_on_hand_built_frames(spark):
         row = rows[d["doc_id"]]
         assert row["n_frames"] == n_frames
         assert row["n_cuts"] == cuts
+
+
+def test_incremental_minhash_planted_neardup(spark):
+    """An incoming doc nearly identical to a history doc is flagged with
+    that history doc as its match; an unrelated incoming doc is not."""
+    from orchestrated_etl_spark.functions.dedup import (
+        incremental_minhash_flags,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    rows_hist = [(1, base), (2, "completely different words entirely here")]
+    rows_in = [(10, base), (11, "nothing shares any shingle with history")]
+    hist = spark.createDataFrame(rows_hist, "doc_id long, text string")
+    inc = spark.createDataFrame(rows_in, "doc_id long, text string")
+    out = {
+        r["doc_id"]: (r["is_neardup"], r["matched"])
+        for r in incremental_minhash_flags(
+            inc, hist, "doc_id", "text", threshold=0.9
+        ).collect()
+    }
+    assert out[10] == (True, 1)
+    assert out[11] == (False, -1)
+
+
+def test_semdedup_drops_planted_duplicate(spark, sf_dir):
+    """Duplicate the lowest-id embedding under a fresh high id: the
+    clone must be assigned to the same cluster and DROPPED (cosine 1.0
+    to a lower-id member), while the original stays kept."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    clone = emb.where(F.col("vec_id") == 20).select(
+        F.lit(100000).cast("long").alias("vec_id"),
+        "embedding",
+        "label",
+    )
+    patched = emb.unionByName(clone)
+    # run the registered pipeline on the patched frame
+    from orchestrated_etl_spark.functions.similarity import (
+        assign_to_centroids,
+        dot,
+        vec_norm,
+    )
+
+    centroids = patched.filter(F.col("vec_id") < 8)
+    assigned = assign_to_centroids(patched, centroids, "vec_id", "embedding")
+    a = assigned.select(
+        F.col("_id").alias("id_a"), F.col("_vec").alias("_va"), "centroid_id"
+    ).withColumn("_na", vec_norm(F.col("_va")))
+    b = assigned.select(
+        F.col("_id").alias("id_b"),
+        F.col("_vec").alias("_vb"),
+        F.col("centroid_id").alias("_cb"),
+    ).withColumn("_nb", vec_norm(F.col("_vb")))
+    pairs = a.join(
+        b,
+        (F.col("centroid_id") == F.col("_cb"))
+        & (F.col("id_b") < F.col("id_a")),
+    )
+    cos = F.round(
+        F.try_divide(
+            dot(F.col("_va"), F.col("_vb")), F.col("_na") * F.col("_nb")
+        ),
+        6,
+    )
+    dropped = {
+        r["id_a"]
+        for r in pairs.where(cos >= 0.99).select("id_a").distinct().collect()
+    }
+    assert 100000 in dropped and 20 not in dropped
+
+
+# ---------------------------------------------------------------------------
+# content-defined chunking: full pure-Python mini-oracle
+# ---------------------------------------------------------------------------
+
+
+def test_split_assignment_is_deterministic_and_exhaustive(spark, tmp_path):
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}", "en", "web", 10) for i in range(200)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    sf = str(tmp_path)
+    docs.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
+    a = {
+        (r["split"], r["lang"]): r["n_docs"]
+        for r in _split_assignment(spark, sf).collect()
+    }
+    b = {
+        (r["split"], r["lang"]): r["n_docs"]
+        for r in _split_assignment(spark, sf).collect()
+    }
+    assert a == b  # rerun-stable
+    assert sum(a.values()) == 200  # every doc assigned exactly once
+    assert set(s for s, _ in a) == {"train", "val", "test"}
+    assert a[("train", "en")] > a[("val", "en")]

@@ -901,44 +901,6 @@ def test_rotate_front_never_green_fronts_unconditionally():
     assert not _green(red)
 
 
-def test_registration_order_artifact_matches_fresh_interpreter():
-    """REGISTRATION_ORDER.txt (the committed staleness tie-break
-    artifact, round-10) must match a fresh-interpreter recomputation
-    LINE-FOR-LINE — not just as a set (registration_order() itself
-    validates membership; only a fresh subprocess can validate order,
-    because pytest's direct query-module imports permute dict order).
-    Fails with a pointer to the regeneration tool."""
-    import subprocess
-
-    frozen_path = REPO / "REGISTRATION_ORDER.txt"
-    assert frozen_path.exists(), "run tools/gen_registration_order.py"
-    script = """
-import sys
-from pathlib import Path
-REPO = Path(sys.argv[1])
-sys.path.insert(0, str(REPO))
-from orchestrated_etl_spark import registry
-print(chr(10).join(registry.registration_order()))
-"""
-    proc = subprocess.run(
-        [sys.executable, "-c", script, str(REPO)],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    live = proc.stdout.strip().splitlines()
-    frozen = [
-        ln.strip()
-        for ln in frozen_path.read_text().splitlines()
-        if ln.strip() and not ln.startswith("#")
-    ]
-    assert live == frozen, (
-        "REGISTRATION_ORDER.txt drifted from fresh-interpreter order — "
-        "rerun `python tools/gen_registration_order.py`"
-    )
-
-
 def test_rotate_front_reproduces_shipped_r18_front():
     """The SHIPPED round-18 `_FRONT` must equal the stalest-50
     recomputation from the committed CORRECTNESS_r01–r17 files — the
@@ -1042,9 +1004,9 @@ def test_driver_side_materialization_allowlist():
     allowed `.collect()` sites are each a bounded driver fetch, never
     corpus data:
 
-    - wave13_round4.py ×2: 1-scalar BFS / shortest-path seed fetches
+    - queries/graph.py ×2: 1-scalar BFS / shortest-path seed fetches
       (an iterative algorithm's hyperparameter, not data).
-    - scale_ops.py ×1: 25-row fixture-prep loop for the binaryFile
+    - sources/scratch.py ×1: 25-row fixture-prep loop for the binaryFile
       source (dimension-sized, test-data setup).
     - streaming_queries.py ×1: streaming memory-sink result poll (the
       sink IS driver-side by definition).
@@ -1056,8 +1018,8 @@ def test_driver_side_materialization_allowlist():
     import tokenize
 
     allowed = {
-        "queries/wave13_round4.py": 2,
-        "queries/scale_ops.py": 1,
+        "queries/graph.py": 2,
+        "sources/scratch.py": 1,
         "queries/streaming_queries.py": 1,
     }
     found: dict[str, int] = {}

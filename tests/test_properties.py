@@ -438,9 +438,7 @@ _starts_strategy = st.lists(
 def test_interval_coverage_matches_python_union(spark, tmp_path_factory, starts):
     import datetime
 
-    from orchestrated_etl_spark.queries.wave13_round4 import (
-        _interval_coverage,
-    )
+    from orchestrated_etl_spark.queries.events import _interval_coverage
 
     t0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
     rows = [
@@ -495,7 +493,7 @@ _cdc_docs_strategy = st.lists(
 @settings(**_SETTINGS)
 @given(_cdc_docs_strategy)
 def test_cdc_chunks_matches_python_replica_property(spark, docs):
-    from orchestrated_etl_spark.queries.wave15_round4 import _cdc_chunks
+    from orchestrated_etl_spark.queries.llm_dedup import _cdc_chunks
     from tests.test_wave15_ops import _py_chunks
 
     import tempfile

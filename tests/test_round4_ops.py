@@ -20,9 +20,7 @@ def test_null_safe_join_planted_null_keys(spark, tmp_path):
     click and purchase side: the anonymized NULL keys must merge into
     ONE anonymous row via <=>, not be dropped (plain equi-join) nor
     cross-matched per NULL (SQL NULL != NULL)."""
-    from orchestrated_etl_spark.queries.sql_surface_wave12 import (
-        _null_safe_join,
-    )
+    from orchestrated_etl_spark.queries.relational import _null_safe_join
 
     ts = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
     rows = [
@@ -109,7 +107,7 @@ def test_cep_pattern_counts_episodes(spark, tmp_path):
     user and a purchase-before-view user -> no row."""
     import datetime
 
-    from orchestrated_etl_spark.queries.wave13_round4 import _cep_conversion
+    from orchestrated_etl_spark.queries.events import _cep_conversion
 
     t0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
 
@@ -159,9 +157,7 @@ def test_bloom_prefilter_prunes_but_never_drops(spark, sf_dir):
     build and probe)."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from orchestrated_etl_spark.queries.wave13_round4 import (
-        bloom_prefilter_core,
-    )
+    from orchestrated_etl_spark.queries.relational import bloom_prefilter_core
 
     sup = (
         spark.read.parquet(f"{sf_dir}/supplier.parquet")
@@ -199,7 +195,7 @@ def test_bloom_prefilter_prunes_but_never_drops(spark, sf_dir):
 
 def test_snapshot_diff_classifies(spark, sf_dir):
     """Spot-check the three change classes against the mutation rules."""
-    from orchestrated_etl_spark.queries.wave13_round4 import _snapshot_diff
+    from orchestrated_etl_spark.queries.relational import _snapshot_diff
 
     rows = _snapshot_diff(spark, sf_dir).collect()
     by_type = {}
@@ -235,7 +231,7 @@ def test_skyline_hand_points(spark, tmp_path):
     """Planted catalog: (1,1) dominates everything except the duplicate
     pair — exact duplicates are NOT strictly dominated and both
     survive alongside the unique minimum."""
-    from orchestrated_etl_spark.queries.wave13_round4 import _skyline
+    from orchestrated_etl_spark.queries.relational import _skyline
 
     rows = [
         (1, 910.0, 5),   # skyline
@@ -261,9 +257,7 @@ def test_interval_coverage_merges_overlaps(spark, tmp_path):
     user 2: events 20m apart -> TWO 10-minute spans."""
     import datetime
 
-    from orchestrated_etl_spark.queries.wave13_round4 import (
-        _interval_coverage,
-    )
+    from orchestrated_etl_spark.queries.events import _interval_coverage
 
     t0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
     rows = [
@@ -293,7 +287,7 @@ def test_spatial_join_grid_blocking_exactness(spark, sf_dir):
     r spans at most one cell boundary per axis)."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from orchestrated_etl_spark.queries.wave13_round4 import (
+    from orchestrated_etl_spark.queries.relational import (
         _SPATIAL_R,
         _spatial_points,
         _spatial_radius_join,
@@ -338,7 +332,7 @@ def test_spatial_join_grid_blocking_exactness(spark, sf_dir):
 def test_kcore_peels_tail_nodes(spark, tmp_path, monkeypatch):
     """Hand graph: a 4-clique (every node degree 3) plus a pendant chain;
     3-core peeling must keep exactly the clique with degree 3 each."""
-    from orchestrated_etl_spark.queries import wave13_round4 as W
+    from orchestrated_etl_spark.queries import graph as G
 
     edges = spark.createDataFrame(
         # 4-clique 1-2-3-4 + chain 4-5-6
@@ -346,9 +340,9 @@ def test_kcore_peels_tail_nodes(spark, tmp_path, monkeypatch):
         "part_a long, part_b long",
     )
     monkeypatch.setattr(
-        W, "cached_edges", lambda spark, sf_dir, min_weight=2: edges
+        G, "cached_edges", lambda spark, sf_dir, min_weight=2: edges
     )
-    out = {r["node"]: r["degree"] for r in W._kcore(spark, "ignored").collect()}
+    out = {r["node"]: r["degree"] for r in G._kcore(spark, "ignored").collect()}
     assert out == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
@@ -358,9 +352,7 @@ def test_incremental_moments_match_varsamp(spark, sf_dir):
     1000-unit reporting grid)."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from orchestrated_etl_spark.queries.wave13_round4 import (
-        _incremental_moments,
-    )
+    from orchestrated_etl_spark.queries.aggregates import _incremental_moments
 
     got = {
         r["o_orderstatus"]: (r["n_rows"], r["mean_price"], r["var_price_k"])
@@ -404,9 +396,7 @@ def test_rolling_median_sparse_bucket_guard(spark, tmp_path):
     violates the precondition for 2024 and 2025."""
     import pytest
 
-    from orchestrated_etl_spark.queries.wave13_round4 import (
-        _rolling_median,
-    )
+    from orchestrated_etl_spark.queries.relational import _rolling_median
 
     days = [
         (datetime.date(y, m, 15), 100.0 * m + y % 100)
@@ -428,9 +418,7 @@ def test_rolling_median_matches_global_window_with_gap_year(
     donates pads, so the guard must not fire)."""
     from pyspark.sql import Window
 
-    from orchestrated_etl_spark.queries.wave13_round4 import (
-        _rolling_median,
-    )
+    from orchestrated_etl_spark.queries.relational import _rolling_median
 
     days = (
         # 2023: 10 days (dense donor)

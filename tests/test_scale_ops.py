@@ -13,7 +13,7 @@ from orchestrated_etl_spark.queries import scale_ops, training_pipeline  # noqa:
 
 def _ts(s):
     # UTC-aware: naive datetimes go through the process TZ (see
-    # test_surface_wave4._ts) — zone-free fixtures are the standing rule.
+    # test_events._ts) — zone-free fixtures are the standing rule.
     return datetime.fromisoformat(s).replace(tzinfo=timezone.utc)
 
 
@@ -293,7 +293,7 @@ def test_q18_in_subquery_becomes_semi_join(spark, sf_dir):
     """Q18's IN-over-grouped-HAVING must execute as a left-semi join
     against the pre-aggregated qualifying keys — the fact table is
     aggregated once, never re-scanned per outer row."""
-    from orchestrated_etl_spark.queries.sql_tpch_more import _q18_large_orders
+    from orchestrated_etl_spark.queries.sql_tpch import _q18_large_orders
 
     plan = (
         _q18_large_orders(spark, sf_dir)
@@ -306,7 +306,7 @@ def test_q19_disjunction_keeps_hash_join(spark, sf_dir):
     """Q19's OR-of-ANDs predicate must not degrade the equi-join: the
     common p_partkey = l_partkey conjunct stays the hash-join key and the
     disjunction evaluates as a residual filter (no cartesian product)."""
-    from orchestrated_etl_spark.queries.sql_tpch_more import _q19_disjunctive
+    from orchestrated_etl_spark.queries.sql_tpch import _q19_disjunctive
 
     plan = (
         _q19_disjunctive(spark, sf_dir)
@@ -320,9 +320,7 @@ def test_q10_topk_avoids_global_sort(spark, sf_dir):
     """Q10's ORDER BY revenue LIMIT 20 must plan as TakeOrderedAndProject
     (k rows per partition to the driver), not a full global Sort — the
     difference between shipping 20 rows and shipping every group."""
-    from orchestrated_etl_spark.queries.sql_tpch_more import (
-        _q10_returned_revenue,
-    )
+    from orchestrated_etl_spark.queries.sql_tpch import _q10_returned_revenue
 
     plan = (
         _q10_returned_revenue(spark, sf_dir)
@@ -336,9 +334,7 @@ def test_q6_filters_reach_parquet_scan(spark, sf_dir):
     bound must appear as PushedFilters on the parquet scan, not as a
     post-scan Filter-only plan — at 100 TB this is the difference between
     reading a year and reading everything."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave3 import (
-        _q6_forecast_revenue,
-    )
+    from orchestrated_etl_spark.queries.sql_tpch import _q6_forecast_revenue
 
     plan = (
         _q6_forecast_revenue(spark, sf_dir)
@@ -351,9 +347,7 @@ def test_q21_exists_chain_becomes_semi_then_anti(spark, sf_dir):
     """Q21's EXISTS and NOT EXISTS self-joins must plan as a left-semi
     and a left-anti join on l_orderkey — never a per-row subquery or a
     nested loop over the fact table."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave3 import (
-        _q21_waiting_supplier,
-    )
+    from orchestrated_etl_spark.queries.sql_tpch import _q21_waiting_supplier
 
     plan = (
         _q21_waiting_supplier(spark, sf_dir)
@@ -368,7 +362,7 @@ def test_q13_outer_join_preserves_orderless_customers(spark, sf_dir):
     plan, and the count histogram contains a c_count=0 bucket whenever
     some customer has only '5-LOW' orders (filter sits in the join
     condition, not a pre-filter that would drop the customer row)."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave3 import (
+    from orchestrated_etl_spark.queries.sql_tpch import (
         _q13_order_count_distribution,
     )
 
@@ -384,9 +378,7 @@ def test_q7_pair_disjunction_keeps_hash_joins(spark, sf_dir):
     """Q7's symmetric two-nation disjunction is a residual filter on
     already-joined rows — all five joins must stay hash joins (no
     cartesian product, no nested loop)."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave3 import (
-        _q7_volume_shipping,
-    )
+    from orchestrated_etl_spark.queries.sql_tpch import _q7_volume_shipping
 
     plan = (
         _q7_volume_shipping(spark, sf_dir)

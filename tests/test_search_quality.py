@@ -1,8 +1,7 @@
-"""Plan and semantics tests for the wave-8 TPC-H shapes and the
-search/quality queries: the point of each query is a specific Catalyst
-rewrite (decorrelation, semi-join chains, null-aware anti-join) or a
-hand-checkable scoring/gating rule — both are pinned here on the fixture
-and on tiny hand-built frames."""
+"""Search and quality-gate semantics: BM25 computed by hand and its
+posting-lookup plan over the staged index, bucketed-store pruning,
+incremental dedup against history, per-rule quality-gate attribution and
+TF-IDF tie order — on the fixture and on tiny hand-built frames."""
 
 from __future__ import annotations
 
@@ -10,54 +9,12 @@ import math
 
 from pyspark.sql import functions as F
 
+from tests.test_sql_tpch import _plan
+
 
 # ---------------------------------------------------------------------------
 # plan shapes
 # ---------------------------------------------------------------------------
-
-
-def _plan(df):
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_q2_correlated_min_decorrelates(spark, sf_dir):
-    """The correlated ``unit_cost = (SELECT min(...) WHERE same part)``
-    must decorrelate into an aggregate joined back on the correlation
-    key — at scale a per-row subquery execution would be O(parts ×
-    suppliers). The executed plan therefore contains a min aggregate and
-    NO per-row scalar-subquery node."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave8 import (
-        _q2_min_cost_supplier,
-    )
-
-    plan = _plan(_q2_min_cost_supplier(spark, sf_dir))
-    assert "min(" in plan, plan
-    assert "ScalarSubquery" not in plan, plan
-
-
-def test_q16_not_in_is_anti_join(spark, sf_dir):
-    """NOT IN must plan as a (null-aware) anti-join, and the distinct
-    supplier count must go through the two-phase distinct expansion —
-    both visible in the executed plan."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave8 import (
-        _q16_supplier_diversity,
-    )
-
-    plan = _plan(_q16_supplier_diversity(spark, sf_dir))
-    assert "LeftAnti" in plan, plan
-    assert "distinct" in plan.lower(), plan
-
-
-def test_q20_nested_in_is_semi_join_chain(spark, sf_dir):
-    """Both IN-subqueries (supplier IN …, part IN …) must become
-    left-semi joins — two of them in one plan, never a distinct
-    materialization or per-row evaluation."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave8 import (
-        _q20_excess_availability,
-    )
-
-    plan = _plan(_q20_excess_availability(spark, sf_dir))
-    assert plan.count("LeftSemi") >= 2, plan
 
 
 def test_bm25_query_is_posting_lookup_over_staged_index(spark, sf_dir):

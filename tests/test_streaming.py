@@ -445,40 +445,30 @@ def test_books_stream_available_now_stop_drains_clean_prefix(
 def test_books_stream_transient_non200_heals(spark, tmp_path):
     """Round-13 advice: attempts must accumulate ACROSS triggers on the
     driver-side reader instance, so a finite transient non-200 clears
-    and an on_error=stop stream heals instead of stalling forever. Both
-    stream readers (partitioned default and stream_mode=simple) freeze
-    at the failing page for the first fail_attempts triggers, then
-    advance to the full dataset."""
+    and an on_error=stop stream heals instead of stalling forever. The
+    stream reader freezes at the failing page for the first
+    fail_attempts triggers, then advances to the full dataset."""
     import time
 
-    def heal(tag, **extra):
-        q, target, parts = _run_books_stream(
-            spark, tmp_path, tag, {"processingTime": "0 seconds"},
-            fail_page=1, fail_attempts=3, on_error="stop", **extra,
-        )
-        try:
-            deadline = time.time() + 120
-            n = 0
-            while time.time() < deadline:
-                try:
-                    n = spark.read.parquet(target).count()
-                except Exception:
-                    n = 0
-                if n == 300:
-                    break
-                time.sleep(0.3)
-            assert n == 300, f"{tag}: stalled at {n} rows"
-            assert q.exception() is None
-        finally:
-            q.stop()
-        return parts
-
-    heal("heal_part")
-    # stream_mode=simple routes through the PySparkNotImplementedError
-    # fallback to the Simple reader: same healing, but page-at-a-time —
-    # every batch is the wrapper's single prefetched partition.
-    parts = heal("heal_simple", stream_mode="simple")
-    assert parts and max(parts) == 1, parts
+    q, target, _ = _run_books_stream(
+        spark, tmp_path, "heal_part", {"processingTime": "0 seconds"},
+        fail_page=1, fail_attempts=3, on_error="stop",
+    )
+    try:
+        deadline = time.time() + 120
+        n = 0
+        while time.time() < deadline:
+            try:
+                n = spark.read.parquet(target).count()
+            except Exception:
+                n = 0
+            if n == 300:
+                break
+            time.sleep(0.3)
+        assert n == 300, f"stalled at {n} rows"
+        assert q.exception() is None
+    finally:
+        q.stop()
 
 
 def test_stream_left_outer_join_semantics(spark, sf_dir):

@@ -420,7 +420,7 @@ SOURCE_REPARTITION_OK: dict[tuple[str, tuple[str, ...]], tuple[int, str]] = {
     # fixture-pinned at 8 only because the DuckDB oracle must name the
     # same constant.
     (
-        "orchestrated_etl_spark/queries/ops_wave11.py",
+        "orchestrated_etl_spark/queries/quality_io.py",
         ("lineage_shard", "order_year"),
     ): (1, "partitioned-write staging; fan-out knob _LINEAGE_SHARDS"),
 }

@@ -70,18 +70,8 @@ def main() -> None:
             for name, row in json.load(f).items():
                 if _green(row):
                     last[name] = max(last.get(name, 0), rnd)
-    frozen = registry.frozen_registration_order()
-    if frozen is None:
-        print("# NOTE: REGISTRATION_ORDER.txt absent — tie-break from live "
-              "import order (fresh interpreter required)", file=sys.stderr)
-        order_names = registry.registration_order()
-    else:
-        # Committed artifact: auditable from files alone, and immune to
-        # import-order permutation. registration_order() validates live
-        # membership against it, so drift raises rather than skewing.
-        registry.registration_order()
-        order_names = frozen
-    reg_order = {n: i for i, n in enumerate(order_names)}
+    # the committed artifact, validated against the live registry
+    reg_order = {n: i for i, n in enumerate(registry.registration_order())}
     oracles = registry.oracle_sql()
     oracle_names = [n for n in reg_order if n in oracles]
     unsampled = [n for n in oracle_names if n not in last]
