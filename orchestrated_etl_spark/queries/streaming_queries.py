@@ -7,25 +7,66 @@ IS SQL-expressible. Double sums accumulate in DECIMAL on both engines
 (order-exact) where an oracle compares them. Only genuinely
 state-semantics-dependent queries (applyInPandasWithState running
 totals, dedup-within-watermark re-emission) stay rows-only, pinned
-against batch twins in tests/test_streaming.py instead."""
+against batch twins in tests/test_streaming.py instead.
+
+Every stream is drained by streaming/events_stream.py, and every file a
+query owns (feed files, foreachBatch targets, read-back checkpoints) lives
+under its ``scratch_path``, cleared when the query starts."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from orchestrated_etl_spark.functions.quality import (
     QUARANTINE_SQL,
     quarantine_route,
 )
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources import sinks as K
+from orchestrated_etl_spark.sources.books_source import (
+    books_oracle_cte,
+    register_books_source,
+)
 from orchestrated_etl_spark.sources.catalog import read_events
-from orchestrated_etl_spark.sources.scratch import nation_blob_files
+from orchestrated_etl_spark.sources.scratch import (
+    nation_blob_files,
+    scratch_path,
+)
 from orchestrated_etl_spark.streaming import windows as W
 from orchestrated_etl_spark.streaming.events_stream import (
+    drain,
     read_events_stream,
     run_available_now,
 )
+
+
+def _scratch(name: str, sf_dir: str) -> str:
+    """The query's scratch dir, emptied: a run starts from nothing and
+    its files stay until the next run of the same query."""
+    path = scratch_path(name, sf_dir)
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+def _event_feed(
+    work: str, batch: DataFrame, schema: str | StructType
+) -> DataFrame:
+    """Write ``batch`` (events rows) as 6 feed files under ``work`` and
+    stream them back 2 per trigger: 3 micro-batches over arbitrary
+    (repartitioned) slices of event time. ``schema`` is the caller's
+    on purpose — the feeds declare ``ts`` differently."""
+    src = f"{work}/feed"
+    batch.repartition(6).write.parquet(src)
+    return (
+        batch.sparkSession.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+    )
 
 
 def _tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,27 +219,18 @@ def _foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     to any batch sink — JDBC, MERGE, multi-sink fan-out). The read-back
     aggregate equals the plain batch aggregate no matter how the stream
     was micro-batched, so this one IS oracle-checkable."""
-    import shutil
-    import tempfile
-
-    from orchestrated_etl_spark.sources import sinks as K
-
-    target = tempfile.mkdtemp(prefix="febatch_") + "/events"
-    shutil.rmtree(target, ignore_errors=True)
+    work = _scratch("stream_foreachbatch_sink", sf_dir)
+    target = f"{work}/events"
     ev = read_events_stream(spark, sf_dir).select(
         "event_id", "event_type", "value"
     )
-    q = (
-        ev.writeStream.foreachBatch(
-            lambda batch_df, batch_id: K.write_parquet(
-                batch_df, target, mode="append"
-            )
-        )
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        ev,
+        f"{work}/ckpt",
+        foreach_batch=lambda batch_df, _batch_id: K.write_parquet(
+            batch_df, target, mode="append"
+        ),
     )
-    q.awaitTermination()
     back = spark.read.parquet(target)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -295,8 +327,6 @@ def _stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream counts returning events (ts strictly after first seen) per
     event type. Deterministic, so this is the second streaming query with
     a full DuckDB oracle (after stream_foreachbatch_sink)."""
-    from orchestrated_etl_spark.sources.catalog import read_events
-
     first_seen = (
         read_events(spark, sf_dir)
         .groupBy("user_id")
@@ -332,27 +362,18 @@ register(
 
 def _books_stream_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scraper stage as a STREAM: the custom Python data source's
-    micro-batch reader pages through the synthetic catalog (offset = next
-    row index, checkpointable — a restarted scrape resumes, not
-    re-fetches), and a complete-mode aggregate maintains per-type counts
-    and standardised price totals as pages arrive. The finite source
-    drains over several micro-batches (AvailableNow isn't supported by
-    Python micro-batch streams, so the driver polls the sink until all
-    n rows have been aggregated — test-harness plumbing, not operator
-    semantics)."""
-    import time
-    import uuid
-
-    from orchestrated_etl_spark.sources.books_source import (
-        register_books_source,
-    )
-
+    partitioned stream reader pages through the synthetic catalog
+    (offset = next row index, checkpointable — a restarted scrape
+    resumes, not re-fetches), and a complete-mode aggregate keeps
+    per-type counts and standardised price totals. AvailableNow fixes
+    the pages available at start (all 3 here), fetches them one input
+    partition per page and stops, so the result is the batch
+    aggregate."""
     register_books_source(spark)
-    n, page = 300, 100
     sdf = (
         spark.readStream.format("books")
-        .option("n", n)
-        .option("page_size", page)
+        .option("n", 300)
+        .option("page_size", 100)
         .load()
     )
     agg = sdf.groupBy("book_type").agg(
@@ -360,29 +381,8 @@ def _books_stream_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("price").cast("decimal(18,2)"))
         .cast("double").alias("total_price"),
     )
-    qname = f"books_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120.0
-        while time.time() < deadline:
-            rows = spark.table(qname).agg(F.sum("n_books")).collect()
-            if rows and rows[0][0] == n:
-                break
-            time.sleep(0.3)
-        else:
-            raise TimeoutError(f"books stream did not drain {n} rows")
-    finally:
-        q.stop()
-    return spark.table(qname)
+    return run_available_now(agg, output_mode="complete")
 
-
-from orchestrated_etl_spark.sources.books_source import books_oracle_cte  # noqa: E402
 
 register(
     "stream_books_pages",
@@ -405,26 +405,10 @@ def _state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store actually holds, without stopping the stream or adding
     debug sinks. The state of a completed count-by-type aggregate equals
     the batch groupBy, so this has a full DuckDB oracle."""
-    import os
-    import shutil
-
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        ".scratch",
-        f"ckpt_state_inspect_{sf_dir.rstrip('/').rsplit('/', 1)[-1]}",
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = f"{_scratch('stream_state_inspect', sf_dir)}/ckpt"
     ev = read_events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    q = (
-        agg.writeStream.format("noop")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    drain(agg, ckpt, output_mode="update")
     state = spark.read.format("statestore").option("path", ckpt).load()
     # the value struct's field name is the internal agg-buffer name
     # ("count"), not the query alias — resolve it from the state schema
@@ -528,23 +512,8 @@ def _stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions (sink_dynamic_partition_overwrite's contract). The
     corrected relation is checkpointed before each overwrite to
     decouple read/write lineage (self-read-overwrite hazard)."""
-    import os
-    import shutil
-    import tempfile
-
-    from orchestrated_etl_spark.sources.catalog import read_events
-
-    work = tempfile.mkdtemp(prefix="cdc_upsert_")
-    src = f"{work}/feed"
+    work = _scratch("stream_cdc_upsert", sf_dir)
     target = f"{work}/dim_user_latest"
-    # driver-side prep: split the fixed events table into 6 feed files
-    (
-        read_events(spark, sf_dir)
-        .select("event_id", "user_id", "ts", "value")
-        .repartition(6)
-        .write.mode("overwrite")
-        .parquet(src)
-    )
 
     def latest_per_user(df: DataFrame) -> DataFrame:
         return (
@@ -587,26 +556,20 @@ def _stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # output through the Python process timezone at collect time
     # (round-10 TZ-sweep finding; pinned by
     # test_stream_outputs_are_timestamp_ntz).
-    feed = spark.readStream.schema(
-        "event_id long, user_id long, ts timestamp_ntz, value double"
-    ).option("maxFilesPerTrigger", 2).parquet(src)
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    feed = _event_feed(
+        work,
+        read_events(spark, sf_dir).select(
+            "event_id", "user_id", "ts", "value"
+        ),
+        "event_id long, user_id long, ts timestamp_ntz, value double",
     )
-    q.awaitTermination()
-    out = spark.read.parquet(target).select(
+    drain(feed, f"{work}/ckpt", foreach_batch=apply_batch)
+    return spark.read.parquet(target).select(
         "user_id",
         F.col("ts").alias("last_ts"),
         F.col("event_id").alias("last_event_id"),
         F.col("value").alias("last_value"),
     )
-    # materialize before the temp dir is reclaimed by later reruns
-    out = out.localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 register(
@@ -700,19 +663,6 @@ def _tumbling_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     time, so any window state mishandling (premature eviction, lost
     partials) would corrupt the totals. DECIMAL accumulation keeps the
     sums order-exact across batch boundaries."""
-    import tempfile
-
-    from orchestrated_etl_spark.sources.catalog import read_events
-
-    work = tempfile.mkdtemp(prefix="tumble_mb_")
-    src = f"{work}/feed"
-    (
-        read_events(spark, sf_dir)
-        .select("event_id", "user_id", "ts", "event_type", "value")
-        .repartition(6)
-        .write.mode("overwrite")
-        .parquet(src)
-    )
     # The feed must be LTZ (withWatermark rejects NTZ), so window
     # boundary computation depends on the session timezone — pin it to
     # UTC exactly as read_events_stream does for the single-file twin
@@ -720,10 +670,14 @@ def _tumbling_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # local midnights; round-10 TZ-sweep finding). The helper returns
     # the bounds as NTZ wall clock.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    feed = spark.readStream.schema(
+    feed = _event_feed(
+        _scratch("stream_tumbling_multibatch", sf_dir),
+        read_events(spark, sf_dir).select(
+            "event_id", "user_id", "ts", "event_type", "value"
+        ),
         "event_id long, user_id long, ts timestamp, "
-        "event_type string, value double"
-    ).option("maxFilesPerTrigger", 2).parquet(src)
+        "event_type string, value double",
+    )
     agg = W.tumbling_counts(
         feed,
         duration="1 day",
@@ -735,8 +689,7 @@ def _tumbling_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_value"),
         ],
     )
-    out = run_available_now(agg, output_mode="complete")
-    return out.localCheckpoint(eager=True)
+    return run_available_now(agg, output_mode="complete")
 
 
 register(
@@ -764,21 +717,10 @@ def _stream_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_binary_files determinism argument). This is the live half
     of the DLT-expectations pattern: bad rows divert to a quarantine
     sink as they ARRIVE, instead of being found by tomorrow's audit."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="quarantine_stream_")
-    src = f"{work}/feed"
     ev = read_events(spark, sf_dir)
-    ev.repartition(6).write.parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
+    stream = _event_feed(
+        _scratch("stream_quarantine_split", sf_dir), ev, ev.schema
     )
-    from orchestrated_etl_spark.streaming.events_stream import (
-        run_available_now,
-    )
-
     return run_available_now(quarantine_route(stream), output_mode="append")
 
 

@@ -1,7 +1,7 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads,
-single JVM); the configuration below is nevertheless written for a real
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores
+this process may run on, single JVM); the configuration below is nevertheless written for a real
 multi-executor cluster: AQE handles runtime partition coalescing and
 skew-join splitting, shuffle partition count is sized for the local core
 count (raise via env on a cluster), Arrow accelerates every
@@ -66,15 +66,14 @@ _DEFAULTS: dict[str, str] = {
 
 
 def local_cpus() -> int:
-    """Thread count for LOCAL mode, from $SPARK_GRAFT_CPUS (default 32).
-    Renamed from ``default_parallelism`` (round-14 review): that name
-    collided with ``compat.default_parallelism(spark)`` — the
-    cluster-aware shuffle width — and importing the wrong one silently
-    gave the 32-thread local default on a real cluster."""
+    """Thread count for LOCAL mode: $SPARK_GRAFT_CPUS, else the cores this
+    process may run on (``os.sched_getaffinity``, what ``nproc`` prints).
+    Not ``compat.default_parallelism(spark)``, the cluster-aware shuffle
+    width."""
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    except ValueError:
-        return 32
+        return max(1, int(os.environ["SPARK_GRAFT_CPUS"]))
+    except (KeyError, ValueError):
+        return len(os.sched_getaffinity(0))
 
 
 def get_spark(

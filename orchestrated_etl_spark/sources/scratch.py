@@ -1,4 +1,6 @@
-"""Scratch paths for queries that round-trip data through files."""
+"""Scratch paths: every file a query owns lives under its
+``scratch_path`` — round-trip writes, and the feed files, foreachBatch
+targets and checkpoints of the streaming queries."""
 
 from __future__ import annotations
 

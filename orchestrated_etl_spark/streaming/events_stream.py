@@ -2,12 +2,13 @@
 
 `read_events_stream` exposes events.parquet as a file stream with the same
 nanos→micros normalization the batch reader applies (sources/catalog.py).
-Tests and the rows-only streaming queries drive it with
-``Trigger.AvailableNow`` — deterministic micro-batches over a fixed
-directory — which is also the production pattern for "run every N minutes
-over whatever arrived" (the reference's cron semantics) without keeping a
-cluster hot: each run processes exactly the files not yet committed to the
-checkpoint.
+`drain` is the one stream drain: every registered streaming query runs
+its stream with ``Trigger.AvailableNow`` through it — deterministic
+micro-batches over a fixed input — which is also the production pattern
+for "run every N minutes over whatever arrived" (the reference's cron
+semantics) without keeping a cluster hot: each run processes exactly the
+input not yet committed to the checkpoint. `run_available_now` is its
+in-memory-table case.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,33 +73,51 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def run_available_now(
-    sdf: DataFrame, *, output_mode: str = "append", name: str | None = None
-) -> DataFrame:
-    """Execute a streaming DataFrame to completion with AvailableNow into
-    an in-memory table; return the materialized result as a batch
-    DataFrame. The memory sink is a test/dev harness — production sinks
-    are parquet/Delta via ``writeStream`` or ``foreachBatch`` (see
-    plans/pipeline.py for the JDBC-batch pattern)."""
-    qname = name or f"q_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    query = (
-        sdf.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
+def drain(
+    sdf: DataFrame,
+    checkpoint: str,
+    *,
+    output_mode: str = "append",
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    memory_table: str | None = None,
+) -> None:
+    """Run the stream ``sdf`` over every input available now, then stop:
+    the one place the engine drains a stream. The micro-batches go to
+    ``foreach_batch`` when it is given, to the in-memory table
+    ``memory_table`` when that is, and otherwise to the noop sink (a run
+    kept for the state and offsets it leaves in ``checkpoint``). The wait
+    has no timeout, so a failed query raises here instead of returning
+    a partial result."""
+    writer = sdf.writeStream.outputMode(output_mode)
+    if foreach_batch is not None:
+        writer = writer.foreachBatch(foreach_batch)
+    elif memory_table is not None:
+        writer = writer.format("memory").queryName(memory_table)
+    else:
+        writer = writer.format("noop")
+    (
+        writer.option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    query.awaitTermination()
+
+
+def run_available_now(
+    sdf: DataFrame, *, output_mode: str = "append"
+) -> DataFrame:
+    """Drain a streaming DataFrame into an in-memory table and return the
+    result as a batch DataFrame. The memory sink is a test/dev harness —
+    production sinks are parquet via ``writeStream`` or ``foreachBatch``
+    (see plans/pipeline.py). The result is materialized before the
+    memory table is dropped and the checkpoint removed, so the run
+    leaves neither behind, failed or not."""
     spark = sdf.sparkSession
-    # Detach the result from the run's scaffolding, then clean up: every
-    # registered stream query calls this per bench/oracle run, and
-    # without cleanup each run leaked a ckpt_* state-store dir in /tmp
-    # and a q_<uuid> memory table held in driver memory for the session
-    # lifetime (round-14 review). localCheckpoint materializes the small
-    # result so dropping the memory-sink view cannot invalidate it.
-    out = spark.table(qname).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(qname)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    table = f"q_{uuid.uuid4().hex[:12]}"
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    try:
+        drain(sdf, ckpt, output_mode=output_mode, memory_table=table)
+        return spark.table(table).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(table)
+        shutil.rmtree(ckpt, ignore_errors=True)

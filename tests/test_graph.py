@@ -1,7 +1,8 @@
 """Graph-family tests: semantics pinned on hand-built graphs (triangle
 count, walk counts, PageRank vs a pure-numpy power iteration) and plan
 shape for the edge derivation (no self-join of lineitem, bounded
-map-side pair generation)."""
+map-side pair generation); BFS, Bellman-Ford, k-core, clustering
+coefficients and HITS on planted graphs."""
 
 from __future__ import annotations
 
@@ -257,3 +258,104 @@ def test_bfs_round_join_is_exchange_free(spark, width):
     assert "Exchange hashpartitioning(src" not in plan, plan
     assert "Exchange" not in plan, plan
     assert "ShuffledHashJoin" in plan, plan
+
+
+def test_bfs_distances_hand_graph(spark):
+    """Path graph 1-2-3-4-5 plus an unreachable node 9: distances from 1
+    capped at 3 hops; node 5 (4 hops) and node 9 excluded."""
+    from orchestrated_etl_spark.functions.graph import bfs_distances
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (8, 9)],
+        "part_a long, part_b long",
+    )
+    out = {r["node"]: r["dist"] for r in bfs_distances(edges, 1, 3).collect()}
+    assert out == {1: 0, 2: 1, 3: 2, 4: 3}
+
+
+def test_shortest_path_bf_hand_graph(spark):
+    """Triangle with a heavy direct edge: 0-2 direct costs 10, but
+    0-1-2 costs 2+3=5; 3 rounds must find the cheaper 2-edge path."""
+    from orchestrated_etl_spark.functions.graph import shortest_path_bf
+
+    edges = spark.createDataFrame(
+        [(0, 1, 2), (1, 2, 3), (0, 2, 10)],
+        "part_a long, part_b long, weight long",
+    )
+    out = {
+        r["node"]: r["c"] for r in shortest_path_bf(edges, 0, 3).collect()
+    }
+    assert out == {0: 0, 1: 2, 2: 5}
+
+
+def test_kcore_peels_tail_nodes(spark, tmp_path, monkeypatch):
+    """Hand graph: a 4-clique (every node degree 3) plus a pendant chain;
+    3-core peeling must keep exactly the clique with degree 3 each."""
+    from orchestrated_etl_spark.queries import graph as G
+
+    edges = spark.createDataFrame(
+        # 4-clique 1-2-3-4 + chain 4-5-6
+        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)],
+        "part_a long, part_b long",
+    )
+    monkeypatch.setattr(
+        G, "cached_edges", lambda spark, sf_dir, min_weight=2: edges
+    )
+    out = {r["node"]: r["degree"] for r in G._kcore(spark, "ignored").collect()}
+    assert out == {1: 3, 2: 3, 3: 3, 4: 3}
+
+
+# Planted co-purchase lineitem: orders {1,2,3}x2 and {1,4}x2 give the
+# weight>=2 edge set {(1,2),(1,3),(2,3),(1,4)} — a triangle 1-2-3 with
+# pendant 4 hanging off node 1.
+_LINEITEM_ROWS = [
+    (1, 1), (1, 2), (1, 3),
+    (2, 1), (2, 2), (2, 3),
+    (3, 1), (3, 4),
+    (4, 1), (4, 4),
+]
+
+
+def _write_lineitem(spark, tmp_path) -> str:
+    df = spark.createDataFrame(
+        _LINEITEM_ROWS, "l_orderkey long, l_partkey long"
+    )
+    sf_dir = str(tmp_path)
+    df.write.parquet(f"{sf_dir}/lineitem.parquet")
+    return sf_dir
+
+
+def test_clustering_coefficient_planted(spark, tmp_path):
+    from orchestrated_etl_spark.queries.graph import _clustering_coefficient
+
+    sf_dir = _write_lineitem(spark, tmp_path)
+    out = {
+        r["node"]: (r["degree"], r["tri_count"], r["cc"])
+        for r in _clustering_coefficient(spark, sf_dir).collect()
+    }
+    # node 1: degree 3 (2,3,4), 1 triangle -> 2*1/(3*2) = 1/3
+    assert out[1] == (3, 1, 2.0 / 6.0)
+    # nodes 2,3: degree 2, 1 triangle -> fully clustered
+    assert out[2] == (2, 1, 1.0)
+    assert out[3] == (2, 1, 1.0)
+    # pendant node 4: degree 1 -> cc pinned to 0.0, not 0/0
+    assert out[4] == (1, 0, 0.0)
+    assert len(out) == 4
+
+
+def test_hits_2iter_planted(spark, tmp_path):
+    from orchestrated_etl_spark.queries.graph import _hits_2iter
+
+    sf_dir = _write_lineitem(spark, tmp_path)
+    out = {
+        r["node"]: (r["auth_1"], r["hub_1"], r["auth_2"])
+        for r in _hits_2iter(spark, sf_dir).collect()
+    }
+    # directed edges (low->high): 1->2, 1->3, 2->3, 1->4
+    # auth1 = in-degree; hub1(u) = sum auth1 over u's out-neighbors;
+    # auth2(v) = sum hub1 over v's in-neighbors.
+    assert out[1] == (0, 1 + 2 + 1, 0)
+    assert out[2] == (1, 2, 4)
+    assert out[3] == (2, 0, 4 + 2)
+    assert out[4] == (1, 0, 4)
+    assert len(out) == 4

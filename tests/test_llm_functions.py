@@ -593,3 +593,142 @@ def test_split_assignment_is_deterministic_and_exhaustive(spark, tmp_path):
     assert sum(a.values()) == 200  # every doc assigned exactly once
     assert set(s for s, _ in a) == {"train", "val", "test"}
     assert a[("train", "en")] > a[("val", "en")]
+
+
+def test_sq8_topk_external_query_id_collision(spark):
+    """Corpus ids 0..3; an EXTERNAL query reuses id 2. With
+    exclude_self=False the unrelated corpus vector 2 stays a candidate
+    (it is the query's true nearest neighbor here); with the default
+    exclude_self=True it is silently dropped — the documented
+    corpus-subset-only behavior."""
+    from orchestrated_etl_spark.functions import similarity as SIM
+
+    corpus = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0, 0.0]),
+            (1, [0.0, 1.0, 0.0, 0.0]),
+            (2, [0.0, 0.0, 1.0, 0.0]),  # the collided-id vector
+            (3, [0.0, 0.0, 0.0, 1.0]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    # external query: id happens to equal corpus id 2, vector is nearly
+    # corpus vector 2's direction
+    queries = spark.createDataFrame(
+        [(2, [0.0, 0.1, 1.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+
+    with_self = SIM.sq8_topk(
+        queries, corpus, "vec_id", "embedding", 1, exclude_self=False
+    ).collect()
+    assert [r["neighbor_id"] for r in with_self] == [2]
+
+    without = SIM.sq8_topk(
+        queries, corpus, "vec_id", "embedding", 1
+    ).collect()
+    assert [r["neighbor_id"] for r in without] == [1]  # true NN excluded
+
+
+# ---------------------------------------------------------------------------
+# content-defined chunking: full pure-Python mini-oracle
+# ---------------------------------------------------------------------------
+
+_POWS = [31 ** e for e in range(7, -1, -1)]
+
+
+def _py_chunks(text: str) -> list[str]:
+    n = len(text)
+    cuts = []
+    if n >= 9:
+        for i in range(2, n - 6):  # 1-based start positions 2..n-7
+            h = sum(
+                ord(text[i - 1 + j]) * p for j, p in enumerate(_POWS)
+            )
+            if h % 32 == 0:
+                cuts.append(i)
+    starts = [1] + cuts
+    out = []
+    for idx, s in enumerate(starts):
+        end = starts[idx + 1] if idx + 1 < len(starts) else n + 1
+        out.append(text[s - 1:end - 1])
+    return out
+
+
+def test_cdc_chunks_matches_python_replica(spark, tmp_path):
+    """Two documents embed the SAME 240-char passage at different
+    offsets; a third is disjoint. The mini-oracle recomputes chunking
+    and sharing in Python; the operator must agree exactly, and the
+    content-defined property must surface the shared passage."""
+    from orchestrated_etl_spark.queries.llm_dedup import _cdc_chunks
+
+    shared = "the quick brown fox jumps over the lazy dog again and " * 5
+    doc_a = "PREFIX-ALPHA " * 4 + shared + " SUFFIX-OMEGA" * 3
+    doc_b = "zz" + shared + "qq"  # different offset, different margins
+    doc_c = "0123456789" * 30  # disjoint content
+    doc_d = "tiny"  # < 9 chars: single chunk, no cuts
+    docs = {1: doc_a, 2: doc_b, 3: doc_c, 4: doc_d}
+
+    # precondition: the planted passage must actually chunk into at
+    # least one interior chunk present in both docs
+    from collections import Counter
+
+    owner = {}
+    for did, t in docs.items():
+        for c in set(_py_chunks(t)):
+            owner.setdefault(c, set()).add(did)
+    shared_chunks = {c for c, o in owner.items() if len(o) >= 2}
+    assert any(
+        docs_ == {1, 2} for c, docs_ in owner.items() if c in shared_chunks
+    )
+
+    spark.createDataFrame(
+        [(i, t, "en", "test", len(t)) for i, t in docs.items()],
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long",
+    ).write.parquet(f"{tmp_path}/documents.parquet")
+
+    out = {
+        r["doc_id"]: (
+            r["n_chunks"], r["n_shared_chunks"],
+            r["shared_chars"], r["total_chars"],
+        )
+        for r in _cdc_chunks(spark, str(tmp_path)).collect()
+    }
+    for did, t in docs.items():
+        cs = _py_chunks(t)
+        n_shared = sum(1 for c in cs if c in shared_chunks)
+        sh_chars = sum(len(c) for c in cs if c in shared_chunks)
+        assert out[did] == (len(cs), n_shared, sh_chars, len(t)), did
+    # the shared passage was found, the disjoint docs stayed clean
+    assert out[1][1] >= 1 and out[2][1] >= 1
+    assert out[3][1] == 0 and out[4] == (1, 0, 0, 4)
+
+
+def test_nfd_packing_planted(spark, tmp_path):
+    """Hand-computed next-fit-decreasing: tokens [300,300,200,100,12]
+    into cap-512 bins -> 3 bins (300 | 300+200 | 100+12), lower bound
+    2 (total 912)."""
+    from orchestrated_etl_spark.queries.training_pipeline import (
+        _NFD_CAP,
+        _pack_nfd_bins,
+    )
+
+    assert _NFD_CAP == 512
+    sizes = [300, 300, 200, 100, 12]
+    rows = [
+        (i, " ".join(["w"] * n), "en", "s1", n)
+        for i, n in enumerate(sizes)
+    ]
+    spark.createDataFrame(
+        rows,
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long",
+    ).write.parquet(f"{tmp_path}/documents.parquet")
+    out = _pack_nfd_bins(spark, str(tmp_path)).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert (r["n_docs"], r["total_tokens"]) == (5, 912)
+    assert r["bins_used"] == 3
+    assert r["bins_lower_bound"] == 2
+    assert r["fill_efficiency"] == 912.0 / (3 * 512)

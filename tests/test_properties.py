@@ -494,7 +494,7 @@ _cdc_docs_strategy = st.lists(
 @given(_cdc_docs_strategy)
 def test_cdc_chunks_matches_python_replica_property(spark, docs):
     from orchestrated_etl_spark.queries.llm_dedup import _cdc_chunks
-    from tests.test_wave15_ops import _py_chunks
+    from tests.test_llm_functions import _py_chunks
 
     import tempfile
 

@@ -9,10 +9,11 @@ pass recompiles all of them. The second run below must compile nothing.
 
 from __future__ import annotations
 
+import os
 import random
 
 from orchestrated_etl_spark import registry
-from orchestrated_etl_spark.session import _DEFAULTS
+from orchestrated_etl_spark.session import _DEFAULTS, local_cpus
 
 CACHE_KEY = "spark.sql.codegen.cache.maxEntries"
 
@@ -30,6 +31,15 @@ def _compiles(spark) -> int:
     executor tasks): the sample count of Spark's compilation-time metric."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def test_local_width_defaults_to_the_affinity_count(monkeypatch):
+    """Without $SPARK_GRAFT_CPUS the local session is as wide as the cores
+    this process may run on, not a width assumed for another host."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == 3
 
 
 def test_codegen_cache_size_is_the_session_default(spark):

@@ -130,7 +130,6 @@ def test_watermark_drops_late_rows_across_batches(spark, tmp_path):
     10:15 row must be DROPPED, while its 14:00 row closes the 12:00
     window. Append mode emits exactly the closed windows."""
     import os
-    import tempfile
     import uuid
 
     import pyarrow as pa
@@ -178,7 +177,7 @@ def test_watermark_drops_late_rows_across_batches(spark, tmp_path):
     q = (
         agg.writeStream.format("memory").queryName(qname)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -187,6 +186,7 @@ def test_watermark_drops_late_rows_across_batches(spark, tmp_path):
         (r["window_start"].hour, r["n_events"])
         for r in spark.table(qname).collect()
     }
+    spark.catalog.dropTempView(qname)
     # 10:00 window emitted with 2 rows (late row 4 dropped), 12:00 window
     # with rows 3+6; the 14:00 window never closes so append never emits it.
     assert got == {(10, 2), (12, 2)}
@@ -298,9 +298,11 @@ def test_books_stream_failure_policies(spark, tmp_path):
     register_books_source(spark)
 
     def start(tag: str, **opts):
-        # SimpleDataSourceStreamReader does not support availableNow
-        # (the engine falls back to ONE batch), so drive with a
-        # processingTime trigger and poll — the pattern of
+        # stop needs a live processingTime query that keeps probing past
+        # the failing page; AvailableNow captures latestOffset once and
+        # never probes that page (see
+        # test_books_stream_available_now_stop_drains_clean_prefix), so
+        # drive with a processingTime trigger and poll — the pattern of
         # test_books_stream_resumes_from_checkpoint above.
         sdf = spark.readStream.format("books").option("n", 300).option(
             "page_size", 100
@@ -719,3 +721,49 @@ def test_stateful_last_ts_survives_multiple_microbatches(spark, tmp_path):
     assert abs(final["total_value"] - 5.0) < 1e-9
     # the running max must NOT regress to the late batch's 09:00
     assert final["last_ts"] == t_new, final
+
+
+# The stream queries that own files (feeds, foreachBatch targets,
+# checkpoints read back) or read a memory table back: the ones that can
+# leave something behind.
+DRAINED_QUERIES = (
+    "stream_foreachbatch_sink",
+    "stream_books_pages",
+    "stream_state_inspect",
+    "stream_cdc_upsert",
+    "stream_tumbling_multibatch",
+    "stream_quarantine_split",
+)
+
+
+def test_stream_queries_release_what_they_hold(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Running a stream query leaves nothing in the system temp dir and
+    no memory table registered, and a repeated run reuses the query's
+    own scratch dir instead of adding one: a long-lived session can run
+    them forever without growing the disk or the catalog."""
+    import os
+    import tempfile
+
+    from orchestrated_etl_spark import registry
+    from orchestrated_etl_spark.sources.scratch import scratch_path
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    scratch = os.path.dirname(scratch_path("probe", sf_dir))
+    qs = registry.queries()
+
+    def views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    def one_pass() -> None:
+        for name in DRAINED_QUERIES:
+            qs[name](spark, sf_dir).collect()
+
+    before = views()
+    one_pass()
+    entries = set(os.listdir(scratch))
+    one_pass()
+    assert sorted(os.listdir(tmp_path)) == []
+    assert views() == before
+    assert set(os.listdir(scratch)) == entries

@@ -12,8 +12,6 @@ contract shows up as cumulative counts that never double-count.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 
@@ -31,10 +29,10 @@ def _run_stream(spark, src_dir, ckpt, out_dir):
     return spark.read.parquet(out_dir)
 
 
-def test_available_now_resumes_from_checkpoint(spark):
-    src = tempfile.mkdtemp(prefix="inc_src_")
-    ckpt = tempfile.mkdtemp(prefix="inc_ckpt_")
-    out = tempfile.mkdtemp(prefix="inc_out_") + "/data"
+def test_available_now_resumes_from_checkpoint(spark, tmp_path):
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out" / "data")
 
     spark.range(0, 100).select(
         F.col("id"), (F.col("id") * 1.0).alias("v")
@@ -58,6 +56,6 @@ def test_available_now_resumes_from_checkpoint(spark):
 
     # fresh checkpoint + fresh sink → full reprocess (the checkpoint, not
     # the source, carries the progress)
-    ckpt2 = tempfile.mkdtemp(prefix="inc_ckpt2_")
-    out_b = tempfile.mkdtemp(prefix="inc_out2_") + "/data"
+    ckpt2 = str(tmp_path / "ckpt2")
+    out_b = str(tmp_path / "out2" / "data")
     assert _run_stream(spark, src, ckpt2, out_b).count() == 130

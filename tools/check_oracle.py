@@ -34,7 +34,8 @@ every pandas-UDF kernel into tiny Arrow batches, so any kernel whose
 result depends on batch boundaries mismatches its oracle;
 ``spark.sql.files.maxPartitionBytes=65536`` multiplies input splits).
 Static confs (master, memory) belong in env: ``SPARK_GRAFT_CPUS=1``
-gives a local[1] single-thread session via session.py.
+gives a local[1] single-thread session via session.py (unset, the
+session is as wide as the cores this process may run on).
 
 ``--vanilla`` builds a plain ``SparkSession.builder.master("local[8]")``
 session instead of session.py's tuned one — the driver's environment
