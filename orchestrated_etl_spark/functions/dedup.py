@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import default_parallelism
+from orchestrated_etl_spark.compat import default_parallelism, stage
 from orchestrated_etl_spark.functions.text import tokens
 
 
@@ -465,21 +465,14 @@ def minhash_lsh_dedup(
     # branch and the verification branch each re-execute scan → shingle →
     # hash → aggregate (column pruning blocks Spark's exchange reuse), so
     # the corpus was scanned 7× per run — at 100 TB the dominant wasted
-    # cost. localCheckpoint truncates the lineage: sigs is n docs × (k+1)
-    # compact columns, orders of magnitude smaller than the corpus, stored
-    # on executors. (Executor loss → Spark retries the job from the
-    # checkpoint's parent; for a multi-hour 100 TB run prefer a staged
-    # parquet write — same shape, durable.)
-    # (Measured: lazy checkpoints — letting the sets job materialize the
-    # chain in one pass — benched ~0.4 s SLOWER than eager here; the
-    # per-job scheduler latency they save is smaller than the AQE
-    # replanning each eager boundary enables.)
-    sigs = sigs.localCheckpoint(eager=True)
+    # cost. Staging truncates the lineage: sigs is n docs × (k+1)
+    # compact columns, orders of magnitude smaller than the corpus.
+    # (Measured here: lazy staging — letting the sets job materialize the
+    # chain in one pass — benched ~0.4 s SLOWER than eager.)
+    sigs = stage(sigs)
     # cands is consumed twice (cand_ids leg + the verification join) and
-    # is tiny by LSH construction — checkpoint it too.
-    cands = lsh_candidate_pairs(sigs, bands, rows_per_band).localCheckpoint(
-        eager=True
-    )
+    # is tiny by LSH construction — stage it too.
+    cands = stage(lsh_candidate_pairs(sigs, bands, rows_per_band))
     # Build the verification shingle ARRAYS only for docs that appear in
     # some candidate pair: the array builder (sequence+transform) is an
     # interpreted higher-order function, so constructing it for the whole
@@ -491,14 +484,11 @@ def minhash_lsh_dedup(
     cand_ids = cands.select(
         F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias("_cid")
     )
-    # sets feeds both pair legs (pa, pb); checkpointing it caps the whole
-    # pipeline at TWO corpus scans total (one for sigs, one here). This is
-    # the one EAGER checkpoint: its job materializes the whole
-    # sigs → cands → cand_ids → sets chain in a single pass.
-    sets = (
+    # sets feeds both pair legs (pa, pb); staging it caps the whole
+    # pipeline at TWO corpus scans total (one for sigs, one here).
+    sets = stage(
         df.join(cand_ids, df[id_col] == F.col("_cid"), "left_semi")
         .select(F.col(id_col).alias("_id"), set_col.alias("_set"))
-        .localCheckpoint(eager=True)
     )
     pa = sets.select(F.col("_id").alias("id_a"), F.col("_set").alias("_sa"))
     pb = sets.select(F.col("_id").alias("id_b"), F.col("_set").alias("_sb"))
@@ -540,7 +530,7 @@ def incremental_minhash_flags(
     -1).
 
     The asymmetry is the scale story: history signatures/buckets are the
-    PERSISTED dedup index (here localCheckpoint; at 100 TB a staged
+    PERSISTED dedup index (here ``stage``; at 100 TB a staged
     parquet store keyed by bucket, appended nightly) — history text is
     never re-shingled per batch. The batch joins its bucket rows against
     the store on (band, bucket) — candidate pairs are cross-set band
@@ -552,12 +542,8 @@ def incremental_minhash_flags(
     par = default_parallelism(incoming.sparkSession)
     inc = incoming.repartition(par, F.col(id_col))
     hist = history.repartition(par, F.col(id_col))
-    sigs_h = minhash_signature_text(
-        hist, id_col, text_col, shingle_n, k
-    ).localCheckpoint(eager=True)
-    sigs_i = minhash_signature_text(
-        inc, id_col, text_col, shingle_n, k
-    ).localCheckpoint(eager=True)
+    sigs_h = stage(minhash_signature_text(hist, id_col, text_col, shingle_n, k))
+    sigs_i = stage(minhash_signature_text(inc, id_col, text_col, shingle_n, k))
     keys = bucket_key_cols(rows_per_band)
     bk_h = band_buckets(sigs_h, bands, rows_per_band).select(
         F.col("_id").alias("hist_id"), *keys
@@ -565,28 +551,24 @@ def incremental_minhash_flags(
     bk_i = band_buckets(sigs_i, bands, rows_per_band).select(
         F.col("_id").alias("in_id"), *keys
     )
-    cands = (
-        bk_i.join(bk_h, keys).select("in_id", "hist_id").distinct()
-    ).localCheckpoint(eager=True)
+    cands = stage(bk_i.join(bk_h, keys).select("in_id", "hist_id").distinct())
     # verification arrays only for candidate docs (semi-join both sides)
     set_col = shingles(text_col, shingle_n)
-    sa = (
+    sa = stage(
         inc.join(
             cands.select(F.col("in_id").alias("_cid")),
             inc[id_col] == F.col("_cid"),
             "left_semi",
         )
         .select(F.col(id_col).alias("in_id"), set_col.alias("_sa"))
-        .localCheckpoint(eager=True)
     )
-    sb = (
+    sb = stage(
         hist.join(
             cands.select(F.col("hist_id").alias("_cid")),
             hist[id_col] == F.col("_cid"),
             "left_semi",
         )
         .select(F.col(id_col).alias("hist_id"), set_col.alias("_sb"))
-        .localCheckpoint(eager=True)
     )
     shared = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
     union = F.size("_sa") + F.size("_sb") - shared
@@ -748,7 +730,7 @@ def connected_components(
     per round, all distributed, converging in graph-diameter rounds
     (near-dup clusters are shallow, so typically < 5). The loop runs to a
     FIXPOINT with a changed-row count as the stop condition;
-    ``localCheckpoint`` truncates the growing lineage each round.
+    staging truncates the growing lineage each round.
     Production note: for adversarial graphs (long chains) switch to the
     alternating large-star/small-star algorithm (Kiveris et al.) — same
     join shape, O(log² n) rounds.
@@ -758,13 +740,12 @@ def connected_components(
     """
     # Materialize the edge list ONCE: its lineage is typically a whole
     # near-dup pipeline (MinHash LSH etc.), and every propagation round
-    # joins against it — without this checkpoint each round re-executes
-    # that entire upstream pipeline.
-    both = edges.select("src", "dst").union(
+    # joins against it — without staging each round re-executes that
+    # entire upstream pipeline.
+    both = stage(edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = nodes.select(F.col("id"), F.col("id").alias("label"))
-    labels = labels.localCheckpoint(eager=True)
+    ))
+    labels = stage(nodes.select(F.col("id"), F.col("id").alias("label")))
     for _ in range(max_iter):
         neighbor_min = (
             both.join(labels, on=F.col("src") == F.col("id"))
@@ -781,7 +762,7 @@ def connected_components(
                 (F.col("nlabel") < labels["label"]).alias("_changed"),
             )
         )
-        updated = updated.localCheckpoint(eager=True)
+        updated = stage(updated)
         changed = updated.where(F.col("_changed")).count()
         labels = updated.drop("_changed")
         if changed == 0:

@@ -23,7 +23,7 @@ Scale posture:
   wedge fan-out and runs sort-merge — noted on the triangle query.
 - PageRank keeps ranks co-partitioned with edges on the join key; each
   iteration is one join + one aggregate. Iterations are composed lazily
-  (3 fixed rounds here); long-running propagation would localCheckpoint
+  (3 fixed rounds here); long-running propagation would stage
   per round like functions/dedup.py's connected components.
 """
 
@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import staged_checkpoint
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.sources.catalog import load_table
 from orchestrated_etl_spark.staged import staged
 
@@ -102,7 +102,7 @@ def copurchase_edges(
 def cached_edges(
     spark: SparkSession, sf_dir: str, min_weight: int = 2
 ) -> DataFrame:
-    """``copurchase_edges`` eagerly checkpointed once per session and
+    """``copurchase_edges`` staged once per session and
     ``lineitem`` version (staged.staged). Every graph query starts from
     these edges; without the stage each query re-runs the two fact-table
     shuffles of the derivation (~1.6 s at sf0.1, SCALING.md). On a
@@ -113,9 +113,7 @@ def cached_edges(
         f"edges/w{min_weight}",
         sf_dir,
         ("lineitem",),
-        lambda: copurchase_edges(
-            spark, sf_dir, min_weight=min_weight
-        ).localCheckpoint(eager=True),
+        lambda: stage(copurchase_edges(spark, sf_dir, min_weight=min_weight)),
     )
 
 
@@ -188,13 +186,13 @@ def triangle_count_oriented(edges: DataFrame) -> DataFrame:
     ra = F.struct(F.col("_da").alias("d"), F.col("part_a").alias("n"))
     rb = F.struct(F.col("_db").alias("d"), F.col("part_b").alias("n"))
     # Materialized once: the oriented relation feeds BOTH wedge legs and
-    # the closure probe — without the checkpoint each consumer replays
-    # the degree-annotation joins (3x the orientation work at any scale).
-    oriented = e.select(
+    # the closure probe — without staging each consumer replays the
+    # degree-annotation joins (3x the orientation work at any scale).
+    oriented = stage(e.select(
         F.when(ra < rb, F.col("part_a")).otherwise(F.col("part_b")).alias("src"),
         F.when(ra < rb, F.col("part_b")).otherwise(F.col("part_a")).alias("dst"),
         F.when(ra < rb, rb).otherwise(ra).alias("dst_rank"),
-    ).localCheckpoint(eager=True)
+    ))
     o1 = oriented.select(
         F.col("src").alias("u"), F.col("dst").alias("v"),
         F.col("dst_rank").alias("rv"),
@@ -237,27 +235,26 @@ def pagerank(
     composed lazy plan re-partitions ranks and edges on the same key,
     so AQE collapses the per-iteration exchanges at bench scale."""
     # The caller passes the edge list STAGED (every registered query
-    # passes cached_edges, a session-cached eager checkpoint): ``undirect``
-    # reads it twice, and over a lazy derivation both branches would
-    # re-run the fact-scan → pair-aggregate subtree inside the ed_deg
-    # checkpoint job. It is staged already, so it is not checkpointed
-    # again here.
+    # passes cached_edges, staged once per session): ``undirect`` reads
+    # it twice, and over a lazy derivation both branches would re-run
+    # the fact-scan → pair-aggregate subtree inside the ed_deg staging
+    # job. It is staged already, so it is not staged again here.
     # Degree-annotate with a COUNT window over the undirected relation:
     # one shuffle on src replaces the undirect-join-degrees formulation,
     # whose two branches would re-derive the union twice and add a
-    # second aggregate+join. Checkpointed so the per-iteration plans
-    # read a materialized, hash-partitioned-on-src relation — a cheap
-    # job (edge-list-sized input). Deliberately a PLAIN checkpoint, not
-    # staged_checkpoint (r18 A/B): the rank relation broadcasts below
-    # the threshold, so partition visibility buys nothing here, while
-    # the AQE-off staging job costs ~0.25 s per run at sf0.1 (loses
+    # second aggregate+join. Staged so the per-iteration plans read a
+    # materialized relation — a cheap job (edge-list-sized input).
+    # Deliberately without keep_partitioning (measured A/B): the rank
+    # relation broadcasts below the threshold, so partition visibility
+    # buys nothing here, while the AQE-off staging job costs ~0.25 s per
+    # run at sf0.1 (loses
     # exchange coalescing on a per-RUN build — unlike the BFS layout,
     # which is session-staged once). Past the broadcast threshold a
     # deployment would stage ed_deg once per session like
-    # cached_undirected_layout and staged_checkpoint it then.
+    # cached_undirected_layout and keep its partitioning then.
     from pyspark.sql import Window
 
-    ed_deg = (
+    ed_deg = stage(
         undirect(edges)
         .select(
             "src",
@@ -266,7 +263,6 @@ def pagerank(
             .over(Window.partitionBy("src"))
             .alias("src_deg"),
         )
-        .localCheckpoint(eager=True)
     )
     ranks: DataFrame | None = None
     for _ in range(iterations):
@@ -346,11 +342,11 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
             )
             .select(F.col("n2").alias("node"), "label")
         )
-        # Per-round checkpoint (same pattern as dedup's connected
+        # Per-round staging (same pattern as dedup's connected
         # components): without it round N's lazy plan replays rounds
         # 1..N-1's full lineage, turning a caller-supplied large
         # `iterations` into exponential recompute.
-        labels = labels.localCheckpoint(eager=True)
+        labels = stage(labels)
     if labels is None:  # iterations == 0: the identity seed
         labels = ed.select(F.col("src").alias("node")).distinct().select(
             "node", F.col("node").alias("label")
@@ -369,7 +365,7 @@ def src_layout(edges: DataFrame) -> DataFrame:
     above the core count, as session.py advises on a cluster) every round
     re-shuffles the whole edge list."""
     width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return staged_checkpoint(edges.repartition(width, F.col("src")))
+    return stage(edges.repartition(width, F.col("src")), keep_partitioning=True)
 
 
 def cached_undirected_layout(
@@ -414,15 +410,12 @@ def bfs_distances(
     visited-set check, because a previously seen node keeps its smaller
     dist; guide §2.4 "remove shuffles outright": 2 exchanges per round
     → 1, and the per-round job chain shrank 27 → 12 jobs measured at
-    sf0.1). The distance relation is checkpoint'd per round (the
+    sf0.1). The distance relation is staged per round (the
     pagerank/label-propagation pattern): without it round N replays
     rounds 1..N-1's lineage. Both the edge layout and the per-round
-    distance relation go through ``staged_checkpoint`` (r18): a plain
-    localCheckpoint under AQE reports UnknownPartitioning, so every
-    round's frontier⋈edges join silently RE-EXCHANGED the full edge
-    layout — the staging repartition bought nothing at the plan level
-    (this corrects the earlier co-partitioned claim here, which the
-    r18 plan capture disproved). With the partitioning preserved, the
+    distance relation are staged with ``keep_partitioning``: without
+    it every round's frontier⋈edges join RE-EXCHANGED the full edge
+    layout (seen in a plan capture). With the partitioning preserved, the
     frontier (a filter of the node-hash-partitioned distance relation)
     and the src-hash-partitioned edge layout are BOTH exchange-free in
     the join: per-round shuffle volume drops from |edges| + |visited| +
@@ -438,7 +431,7 @@ def bfs_distances(
     (costs one action per round)."""
     spark = edges.sparkSession
     # Hash-partition the edge list by src ONCE and pin that layout with
-    # the checkpoint: each round's join then reuses it (only the tiny
+    # staging: each round's join then reuses it (only the tiny
     # frontier moves), and the frontier side carries an explicit
     # shuffle_hash hint so Spark never elects to BROADCAST THE EDGE
     # LIST — data-sized, exactly the side that must never be built on
@@ -452,10 +445,10 @@ def bfs_distances(
         if u_layout is not None
         else src_layout(undirect(edges))
     )
-    dist = spark.range(1).select(
+    dist = stage(spark.range(1).select(
         F.lit(seed).cast("long").alias("node"),
         F.lit(0).cast("int").alias("dist"),
-    ).localCheckpoint(eager=True)
+    ))
     frontier = dist.select("node")
     for hop in range(1, max_hops + 1):
         expanded = (
@@ -469,18 +462,19 @@ def bfs_distances(
         )
         # One aggregate replaces distinct + anti-join: min(dist) keeps a
         # previously discovered node's smaller hop, so the result is the
-        # same minimum-hop relation. The checkpoint here re-materializes
+        # same minimum-hop relation. The staging here re-materializes
         # the visited set each round — the lazy-union form avoided that
         # copy but paid a distinct + anti-join (3 exchanges per round vs
         # this 1); measured at sf0.1 the aggregate form is net faster
         # (1.9 s → 1.2 s warm) on top of the structural exchange win.
-        # staged_checkpoint keeps the aggregate's hashpartitioning(node)
+        # keep_partitioning keeps the aggregate's hashpartitioning(node)
         # visible, so next round's frontier filter is co-partitioned
         # with the edge layout and the join plans with NO exchange.
-        dist = staged_checkpoint(
+        dist = stage(
             dist.unionByName(expanded)
             .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
+            .agg(F.min("dist").alias("dist")),
+            keep_partitioning=True,
         )
         frontier = dist.filter(F.col("dist") == hop).select("node")
     return dist
@@ -493,7 +487,7 @@ def shortest_path_bf(
     min total weight from ``seed`` using <= ``rounds`` edges. Returns
     (node BIGINT, c BIGINT) — exact integer costs. Each round unions
     the distance relation with every one-edge relaxation and takes
-    min(cost) per node; per-round localCheckpoint prevents lineage
+    min(cost) per node; per-round staging prevents lineage
     replay (same shape as bfs_distances/pagerank). Round cost: one
     |dist| x edge-list join + one min-aggregate — the Pregel SSSP
     iteration as DataFrame ops."""
@@ -514,22 +508,23 @@ def shortest_path_bf(
             )
         )
     )
-    dist = spark.range(1).select(
+    dist = stage(spark.range(1).select(
         F.lit(seed).cast("long").alias("node"),
         F.lit(0).cast("long").alias("c"),
-    ).localCheckpoint(eager=True)
+    ))
     for _ in range(rounds):
         relaxed = dist.hint("shuffle_hash").join(
             u, dist["node"] == u["src"]
         ).select(
             F.col("dst").alias("node"), (F.col("c") + F.col("w")).alias("c")
         )
-        # staged_checkpoint (r18): same zero-exchange round join as
-        # bfs_distances — dist keeps hashpartitioning(node), u keeps
-        # hashpartitioning(src), so only the min-aggregate shuffles.
-        dist = staged_checkpoint(
+        # Same zero-exchange round join as bfs_distances — dist keeps
+        # hashpartitioning(node), u keeps hashpartitioning(src), so
+        # only the min-aggregate shuffles.
+        dist = stage(
             dist.unionByName(relaxed)
             .groupBy("node")
-            .agg(F.min("c").alias("c"))
+            .agg(F.min("c").alias("c")),
+            keep_partitioning=True,
         )
     return dist

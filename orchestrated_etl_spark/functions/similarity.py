@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import default_parallelism
+from orchestrated_etl_spark.compat import default_parallelism, stage
 from orchestrated_etl_spark.functions.dedup import cosine, dot, vec_norm
 
 
@@ -420,32 +420,31 @@ def sq8_topk(
     unrelated corpus ids, pass ``exclude_self=False`` or the collided
     corpus vector is silently lost as a candidate."""
     # The codebook scale is ONE max-abs scalar over the corpus,
-    # checkpointed so the corpus-quantize and query-quantize consumers
-    # share it instead of re-aggregating.
-    scale_stats = (
+    # staged so the corpus-quantize and query-quantize consumers share
+    # it instead of re-aggregating.
+    scale_stats = stage(
         corpus.select(F.explode(vec_col).alias("x"))
         .agg(F.max(F.abs(F.col("x").cast("double"))).alias("_scale"))
-        .localCheckpoint(eager=True)
     )
     # Materialize the quantized corpus ONCE (same pattern as the
-    # MinHash signature checkpoint in functions/dedup.py): column
+    # MinHash signature staging in functions/dedup.py): column
     # pruning would otherwise re-execute the scan → stats → quantize
     # subtree per consumer. q8 is id + 64 small ints — a fraction of
     # the float corpus; at 100 TB this is the staged int8 index write.
-    # The id-repartition happens BEFORE the quantize projection (r18:
-    # it used to sit downstream of the checkpoint, costing a second
-    # exchange per consumer run), so the checkpointed index is already
+    # The id-repartition happens BEFORE the quantize projection (after
+    # the staging it would cost a second exchange per consumer run), so
+    # the staged index is already
     # spread across cores for the |Q|·|C| scoring pass — exactly how
     # the staged index would be written pre-partitioned at scale.
     par = default_parallelism(corpus.sparkSession)
-    q8 = sq8_quantize(
+    q8 = stage(sq8_quantize(
         corpus.select(F.col(id_col), F.col(vec_col)).repartition(
             par, F.col(id_col)
         ),
         id_col,
         vec_col,
         scale_stats,
-    ).localCheckpoint(eager=True)
+    ))
     c = q8.select(
         F.col(id_col).alias("neighbor_id"), F.col("q8").alias("_cq8")
     )
@@ -468,14 +467,13 @@ def sq8_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_q8").desc(), F.col("neighbor_id")
     )
-    topk = (
+    # |Q|·k rows, consumed twice below (candidate list + semi-join
+    # pruner) — staged so the |Q|×|C| scored window is not re-executed
+    # per consumer.
+    topk = stage(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "score_q8", "rank")
-        # |Q|·k rows, consumed twice below (candidate list + semi-join
-        # pruner) — checkpoint so the |Q|×|C| scored window is not
-        # re-executed per consumer.
-        .localCheckpoint(eager=True)
     )
     # Exact rerank of the survivors: |Q|*k rows — broadcast the candidate
     # list into two id-joins: query vectors from the QUERIES relation
@@ -582,7 +580,7 @@ def kmeans_refine(
     Scale shape: per round, one broadcast-join assignment over the corpus
     + one (centroid_id, pos) hash aggregate over exploded elements — both
     fully distributed; the only driver-side state is the k-row centroid
-    table itself (localCheckpoint per round cuts the lineage so round r+1
+    table itself (staging per round cuts the lineage so round r+1
     does not replay rounds 1..r). Initialization is deterministic (lowest
     k ids), so runs are reproducible."""
     init = (
@@ -592,7 +590,7 @@ def kmeans_refine(
             F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec")
         )
     )
-    centroids = init.localCheckpoint(eager=True)
+    centroids = stage(init)
     for _ in range(iters):
         assigned = assign_to_centroids(
             corpus,
@@ -622,12 +620,11 @@ def kmeans_refine(
         # result) runs with fewer clusters than asked for (round-14
         # review). Standard Lloyd practice: an empty cluster keeps its
         # previous centroid. The join is k×k — spine-sized.
-        centroids = (
+        centroids = stage(
             centroids.select("centroid_id", F.col("cvec").alias("_prev"))
             .join(means, "centroid_id", "left")
             .select(
                 "centroid_id", F.coalesce("cvec", "_prev").alias("cvec")
             )
-            .localCheckpoint(eager=True)
         )
     return centroids

@@ -63,9 +63,8 @@ def flagship(spark, sf_dir: str) -> DataFrame:
     weighted by l_quantity plays Average_rating; avg(l_extendedprice) plays
     Average_price.
 
-    Scale posture (doc matches code — r17 review): only NATION carries a
-    forced broadcast hint (25 rows, construction-fixed —
-    schemas.BROADCAST_TABLES). The customer and orders projections reach
+    Scale posture: only NATION carries a forced broadcast hint (25 rows,
+    fixed by the schema domain). The customer and orders projections reach
     the broadcast path ONLY while their actual size is under
     autoBroadcastJoinThreshold (true at bench scale; threshold/AQE
     decide — no hint, per the forced-broadcast rule); past it,

@@ -25,6 +25,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from orchestrated_etl_spark.compat import stage
+
 
 def top_k(df: DataFrame, k: int, *order_cols: Column | str) -> DataFrame:
     """Global top-k: TakeOrderedAndProject (per-partition heaps, driver
@@ -66,7 +68,7 @@ def global_rank_two_phase(
     1. ``repartitionByRange`` on the EXACT total-order keys (include a
        unique tie-breaker in ``order_cols``) so partition i holds a
        contiguous key range wholly before partition i+1; pin the
-       partitioning with a lazy ``localCheckpoint`` so the range
+       partitioning with a lazy ``stage`` so the range
        boundaries and ``spark_partition_id`` stay consistent across the
        two downstream consumers.
     2. A P-row per-partition aggregate (count + optional sum) feeds an
@@ -83,10 +85,10 @@ def global_rank_two_phase(
     ``running_sum_expr`` is given, ``running_sum_col`` (its windowed-sum
     type, e.g. exact DECIMAL for DECIMAL input).
     """
-    part = (
+    part = stage(
         df.repartitionByRange(num_range_partitions, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn("_pid", F.spark_partition_id()),
+        eager=False,
     )
     aggs = [F.count(F.lit(1)).alias("_pcnt")]
     if running_sum_expr is not None:

@@ -37,6 +37,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.functions.graph import EDGE_CTE, cached_edges
 from orchestrated_etl_spark.operators.relational import global_rank_two_phase
 from orchestrated_etl_spark.registry import register
@@ -707,9 +708,9 @@ def _incremental_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("month", F.col("o_orderdate")).alias("_m"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("_x"),
     )
-    # the "stored" monthly partials relation (localCheckpoint stands in
+    # the "stored" monthly partials relation (staging stands in
     # for the persisted moments table, as with the HLL sketch store)
-    monthly = (
+    monthly = stage(
         orders.groupBy("o_orderstatus", "_m")
         .agg(
             F.count(F.lit(1)).alias("_n"),
@@ -718,7 +719,6 @@ def _incremental_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("_x") * F.col("_x")).cast("decimal(38,4)")
             ).cast("decimal(38,4)").alias("_q"),
         )
-        .localCheckpoint(eager=True)
     )
     merged = monthly.groupBy("o_orderstatus").agg(
         F.sum("_n").alias("n_rows"),
@@ -1023,7 +1023,7 @@ def _chi2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("pri"),
         F.col("o_orderstatus").alias("st"),
     ).agg(F.count(F.lit(1)).alias("n"))
-    obs = obs.localCheckpoint(eager=True)  # 3 consumers, one fact pass
+    obs = stage(obs)  # 3 consumers, one fact pass
     rt = obs.groupBy("pri").agg(F.sum("n").alias("row_tot"))
     ct = obs.groupBy("st").agg(F.sum("n").alias("col_tot"))
     tot = obs.agg(F.sum("n").alias("big_n"))
@@ -1534,12 +1534,11 @@ def _countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
     ).alias("rb")
-    monthly = (
+    monthly = stage(  # the "stored" per-month partials
         li.select("m", rb)
         .select("m", "rb.r", "rb.bucket")
         .groupBy("m", "r", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)  # the "stored" per-month partials
     )
     merged = monthly.groupBy("r", "bucket").agg(
         F.sum("cnt").alias("cnt"), F.count(F.lit(1)).alias("n_partials")
@@ -1639,12 +1638,11 @@ def _bitmap_rollup_quarters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.trunc("l_shipdate", "month").alias("m"),
         F.col("l_partkey").alias("k"),
     )
-    monthly = (
+    monthly = stage(  # the "stored" per-month bitmaps
         li.groupBy(
             "m", F.bitmap_bucket_number("k").alias("bucket")
         )
         .agg(F.bitmap_construct_agg(F.bitmap_bit_position("k")).alias("bm"))
-        .localCheckpoint(eager=True)  # the "stored" per-month bitmaps
     )
     quarterly = monthly.groupBy(
         F.trunc("m", "quarter").alias("ship_quarter"), "bucket"
@@ -1813,7 +1811,7 @@ def _histogram_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hi",
         "n",
     )
-    monthly = (
+    monthly = stage(  # the "stored" per-month partials
         binned.groupBy("m", "bin")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
@@ -1821,7 +1819,6 @@ def _histogram_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("hi").alias("hi"),
             F.max("n").alias("n"),
         )
-        .localCheckpoint(eager=True)  # the "stored" per-month partials
     )
     merged = monthly.groupBy("bin").agg(
         F.sum("cnt").alias("cnt"),

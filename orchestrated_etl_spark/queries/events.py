@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.operators.relational import global_rank_two_phase
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources.catalog import read_events
@@ -484,7 +485,7 @@ def _rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket boundaries are engine-deterministic), emitting per
     (r_score, f_score, m_score) cell the user count and total spend.
 
-    Shape: one user_id aggregate (checkpointed once), three two-phase
+    Shape: one user_id aggregate (staged once), three two-phase
     global rankings bucketed map-side into exact ntile(5) quintiles
     (see rfm_ntile_core — no unpartitioned window anywhere since round
     6), one cell rollup; spend stays in DECIMAL until the final cast.
@@ -525,7 +526,7 @@ def rfm_ntile_core(ev: DataFrame) -> DataFrame:
         (F.col("event_type") == "purchase") & F.col("user_id").isNotNull()
     )
     maxts = purch.agg(F.max("ts").alias("_maxts"))
-    per_user = (
+    per_user = stage(  # 1 events aggregate feeds 3 ranks + n
         purch.crossJoin(F.broadcast(maxts))
         .groupBy("user_id")
         .agg(
@@ -537,8 +538,8 @@ def rfm_ntile_core(ev: DataFrame) -> DataFrame:
         .withColumn(
             "recency_days",
             F.datediff(F.to_date("_mx"), F.to_date("_last")),
-        )
-        .localCheckpoint(eager=False)  # 1 events aggregate feeds 3 ranks + n
+        ),
+        eager=False,
     )
     n_df = per_user.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     dims = [
@@ -678,7 +679,7 @@ def rfm_cutoff_core(ev: DataFrame) -> DataFrame:
         )
         .withColumn("spend_unit", F.floor("_spend").cast("long"))
     )
-    per_user = per_user.localCheckpoint(eager=False)
+    per_user = stage(per_user, eager=False)
     # FUSED cutoff derivation: all three dimensions' histograms in ONE
     # pass — explode each user row into (dim, value), histogram by
     # (dim, value), cumulative-sum over a window PARTITIONED BY dim
@@ -1479,10 +1480,9 @@ def _cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialized once: the O(domain) daily series feeds the totals
     # aggregate, the window, and the peak scan — without this each
     # consumer replays the fact-table aggregate (4 fact scans).
-    daily = (
+    daily = stage(
         ev.groupBy(F.to_date("ts").alias("day"))
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .localCheckpoint(eager=True)
     )
     totals = daily.agg(
         F.count(F.lit(1)).alias("n_days"),
@@ -1564,16 +1564,15 @@ def _acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     )
     # Materialized once: bounds, the spine join, and the lag fan-out
-    # all consume the O(domain) daily series — checkpointing caps the
+    # all consume the O(domain) daily series — staging caps the
     # plan at ONE fact-table aggregate pass.
-    daily = (
+    daily = stage(
         purch.groupBy(F.to_date("ts").alias("day"))
         .agg(
             F.sum(F.col("value").cast("decimal(18,2)"))
             .cast("double")
             .alias("rev")
         )
-        .localCheckpoint(eager=True)
     )
     bounds = daily.agg(
         F.min("day").alias("d0"), F.max("day").alias("d1")
@@ -2003,14 +2002,13 @@ def _max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     purch = ev.where(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     )
-    daily = (
+    daily = stage(  # window + min consumer, 1 fact pass
         purch.groupBy(F.to_date("ts").alias("day"))
         .agg(
             F.sum(F.col("value").cast("decimal(18,2)"))
             .cast("double")
             .alias("rev")
         )
-        .localCheckpoint(eager=True)  # window + min consumer, 1 fact pass
     )
     w = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -43,6 +43,7 @@ from orchestrated_etl_spark.functions.graph import (
     triangle_count_oriented,
     undirect,
 )
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.staged import staged
 
@@ -190,9 +191,7 @@ def _graph_walk_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration of eigenvector centrality. Pure BIGINT arithmetic, so the
     oracle comparison is exact with no float policy at all. Same
     join-aggregate-per-round shape as PageRank below."""
-    ed = undirect(
-        cached_edges(spark, sf_dir, min_weight=2)
-    ).localCheckpoint(eager=True)
+    ed = stage(undirect(cached_edges(spark, sf_dir, min_weight=2)))
     walks = ed.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1).cast("long").alias("w")
     )
@@ -594,7 +593,7 @@ def _shortest_path_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressed relationally: each round unions the current distance
     relation with every one-edge relaxation and takes min(cost) per
     node; k rounds give exact <=k-edge shortest costs. Per-round
-    localCheckpoint (the pagerank/BFS pattern) keeps round N's plan
+    staging (the pagerank/BFS pattern) keeps round N's plan
     from replaying rounds 1..N-1. Round cost: one join of the
     distance relation (<=|V| rows) against the edge list + one
     min-aggregate — the Pregel SSSP shape. The oracle unrolls the
@@ -661,12 +660,12 @@ def _kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     real work); a fixpoint loop is the same code with an emptiness
     check per round. Each round: semi-join the edge list to surviving
     nodes on BOTH endpoints, recount degrees, filter — edge-list-sized
-    joins and aggregates, per-round localCheckpoint (the established
+    joins and aggregates, per-round staging (the established
     iteration pattern). Output: surviving nodes with their final-round
     in-core degree, exact BIGINTs; the oracle unrolls the same three
     rounds."""
     edges = cached_edges(spark, sf_dir, min_weight=2)
-    u = undirect(edges).localCheckpoint(eager=True)
+    u = stage(undirect(edges))
     alive = u.select(F.col("src").alias("node")).distinct()
     deg = None
     for _ in range(_KCORE_ROUNDS):
@@ -678,10 +677,9 @@ def _kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("src").alias("node"))
             .agg(F.count(F.lit(1)).alias("degree"))
         )
-        alive = (
+        alive = stage(
             deg.where(F.col("degree") >= _KCORE_K)
             .select("node")
-            .localCheckpoint(eager=True)
         )
     return deg.join(alive, "node", "left_semi").select("node", "degree")
 

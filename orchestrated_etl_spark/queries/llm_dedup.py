@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.functions import dedup as D
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources.catalog import load_table
@@ -627,7 +628,7 @@ def _cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: hashing/chunking is MAP-ONLY inside the scan stage,
     and the emitted stream carries (doc_id, md5, chunk_len) — 40-ish
-    bytes per chunk, never text. It is checkpointed ONCE (two
+    bytes per chunk, never text. It is staged ONCE (two
     consumers; re-running the kernel would re-hash the corpus), then
     one groupBy(md5) + one broadcast-eligible join back + one
     groupBy(doc_id): two narrow shuffles over chunk-count rows
@@ -669,9 +670,9 @@ def _cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
                     recs["len"].append(e - s)
             yield pd.DataFrame(recs)
 
-    chunk_stream = docs.mapInPandas(
-        chunker, "doc_id long, n long, h string, len long"
-    ).localCheckpoint(eager=True)
+    chunk_stream = stage(
+        docs.mapInPandas(chunker, "doc_id long, n long, h string, len long")
+    )
     shared = (
         chunk_stream.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("n_docs"))

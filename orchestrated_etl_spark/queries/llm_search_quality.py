@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources.catalog import load_table
 from orchestrated_etl_spark.staged import staged
@@ -61,12 +62,12 @@ def _bm25_index(spark: SparkSession, sf_dir: str) -> None:
     - ``bm25_dfreq``   (term, df) — per-term document frequency;
     - ``bm25_stats``   (n_docs, avgdl) — 1-row corpus statistics.
 
-    Each relation is localCheckpoint(eager=True)'d, so queries never
+    Each relation is staged (``compat.stage``), so queries never
     re-derive corpus statistics — round 2's plan audit showed 6-8 corpus
     scans per BM25/RRF query because df/dl/avgdl recomputed every time;
     now the corpus is scanned exactly once at build. On a cluster the
-    checkpoint becomes a staged parquet write BUCKETED BY term, giving
-    per-term partition pruning on the posting lookup; localCheckpoint is
+    staging becomes a parquet write BUCKETED BY term, giving
+    per-term partition pruning on the posting lookup; ``stage`` is
     the single-node stand-in (same plan shape above the scan)."""
     staged(
         spark, "bm25/index", sf_dir, ("documents",),
@@ -83,20 +84,18 @@ def build_bm25_index(docs: DataFrame) -> tuple[DataFrame, ...]:
         F.size(F.split("text", " ")).alias("dl"),
         F.explode(F.split("text", " ")).alias("term"),
     )
-    postings = (
+    postings = stage(
         tokens.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-        .localCheckpoint(eager=True)
     )
-    dfreq = (
+    dfreq = stage(
         postings.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .localCheckpoint(eager=True)
     )
-    stats = docs.agg(
+    stats = stage(docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.avg(F.size(F.split("text", " "))).alias("avgdl"),
-    ).localCheckpoint(eager=True)
+    ))
     postings.createOrReplaceTempView("bm25_postings")
     dfreq.createOrReplaceTempView("bm25_dfreq")
     stats.createOrReplaceTempView("bm25_stats")
@@ -109,7 +108,7 @@ def _search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     STAGED index (_bm25_index): the query plan is a term-filtered
     posting-list lookup joined against the broadcast 3-row df relation,
     with corpus stats injected as ScalarSubquery nodes over the 1-row
-    checkpointed stats view — 0 corpus scans at query time (round 2 ran
+    staged stats view — 0 corpus scans at query time (round 2 ran
     6). df per query term is identical whether derived from the full or
     the term-filtered index, so the oracle (which filters first) is
     unchanged. Ranking ties break on doc_id so the LIMIT boundary is
@@ -680,7 +679,7 @@ def _bm25_store(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, ...]:
     BUCKETED TABLE (bucketBy term), plus df and 1-row stats tables. A
     term-filtered lookup then reads only the term's hash buckets —
     Spark's bucket pruning (`SelectedBucketsCount: k of 16` in the scan,
-    plan-asserted in tests) — which is the localCheckpoint variant's
+    plan-asserted in tests) — which is the in-session index's
     documented 100 TB posture made executable: the index survives the
     session and a q-term query touches ~q/16 of the posting files.
     Returns the written tables."""

@@ -12,7 +12,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import default_parallelism
+from orchestrated_etl_spark.compat import default_parallelism, stage
 from orchestrated_etl_spark.functions.dedup import cosine
 from orchestrated_etl_spark.functions import similarity as SIM
 from orchestrated_etl_spark.registry import register
@@ -621,9 +621,9 @@ def _semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the ROUNDED cosine with id tie-breaks."""
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8)
-    assigned = SIM.assign_to_centroids(
-        emb, centroids, "vec_id", "embedding"
-    ).localCheckpoint(eager=True)  # feeds both pair sides + the output
+    assigned = stage(  # feeds both pair sides + the output
+        SIM.assign_to_centroids(emb, centroids, "vec_id", "embedding")
+    )
     a = assigned.select(
         F.col("_id").alias("id_a"), F.col("_vec").alias("_va"), "centroid_id"
     ).withColumn("_na", SIM.vec_norm(F.col("_va")))
@@ -1157,11 +1157,10 @@ def _label_centroid_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shape serves source-vs-source redundancy at any corpus
     size."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = (
+    cent = stage(  # feeds norms AND the pair join
         emb.select("label", F.posexplode("embedding").alias("dim", "v"))
         .groupBy("label", "dim")
         .agg(F.avg("v").alias("c"))
-        .localCheckpoint(eager=True)  # feeds norms AND the pair join
     )
     norms = cent.groupBy("label").agg(
         F.sqrt(F.sum(F.col("c") * F.col("c"))).alias("nrm")

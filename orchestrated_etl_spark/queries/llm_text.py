@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import default_parallelism
+from orchestrated_etl_spark.compat import default_parallelism, stage
 from orchestrated_etl_spark.functions import text as X
 from orchestrated_etl_spark.operators.relational import global_rank_two_phase
 from orchestrated_etl_spark.registry import register
@@ -664,7 +664,7 @@ def _pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    words = docs.repartition(
+    words = stage(docs.repartition(  # pair counts + unigram df, one pass
         default_parallelism(spark), "doc_id"
     ).select(
         "doc_id",
@@ -676,7 +676,7 @@ def _pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         ).alias("ws"),
-    ).localCheckpoint(eager=True)  # pair counts + unigram df, one pass
+    ))
     n_docs = words.agg(F.count(F.lit(1)).alias("n"))
     uni = words.select(F.explode("ws").alias("w")).groupBy("w").agg(
         F.count(F.lit(1)).alias("df")

@@ -29,6 +29,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.functions.quality import (
     QUARANTINE_SQL,
     quarantine_route,
@@ -794,7 +795,13 @@ def _sink_dynamic_partition_overwrite(
     )
     path = f"{base}/orders_by_status"
     orders.write.partitionBy("o_orderstatus").mode("overwrite").parquet(path)
-    corrected = (
+    # Materialize the corrected slice BEFORE the overwrite: the write
+    # targets the same path the plan reads from, and while Spark 4's
+    # dynamic-overwrite staging handles self-read-overwrite, the pattern
+    # has historically raised "Cannot overwrite a path that is also
+    # being read from" and is fragile across commit protocols. Staging
+    # decouples read and write lineage.
+    corrected = stage(
         spark.read.parquet(path)
         .where(F.col("o_orderstatus") == "P")
         .select(
@@ -808,13 +815,6 @@ def _sink_dynamic_partition_overwrite(
             .alias("price"),
             "o_orderstatus",
         )
-        # Materialize the corrected slice BEFORE the overwrite: the write
-        # targets the same path the plan reads from, and while Spark 4's
-        # dynamic-overwrite staging handles self-read-overwrite, the
-        # pattern has historically raised "Cannot overwrite a path that
-        # is also being read from" and is fragile across commit
-        # protocols. The checkpoint decouples read and write lineage.
-        .localCheckpoint(eager=True)
     )
     (
         corrected.write.partitionBy("o_orderstatus")

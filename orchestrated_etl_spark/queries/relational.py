@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.operators import relational as R
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.schemas import EVENT_PROPS
@@ -1375,12 +1376,16 @@ register(
 def _nth_value_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nth_value over the FULL partition frame: each order's 2nd line
     part key annotated onto every line (NULL for 1-line orders) — the
-    "compare to the group's k-th element" window shape. Unique ordering
-    (l_linenumber) makes the picked row engine-deterministic."""
+    "compare to the group's k-th element" window shape. l_linenumber
+    alone is NOT unique within an order (the fixtures repeat
+    (l_orderkey, l_linenumber) pairs), so under a tie the 2nd row would
+    depend on read order. l_partkey breaks the tie: rows that still tie
+    on both keys share their l_partkey, so the picked value is the same
+    in any read order, on both engines."""
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 200)
     w = (
         Window.partitionBy("l_orderkey")
-        .orderBy("l_linenumber")
+        .orderBy("l_linenumber", "l_partkey")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
     return li.select(
@@ -1400,7 +1405,8 @@ register(
     SELECT l_orderkey, l_linenumber,
            coalesce(
                nth_value(l_partkey, 2)
-                   OVER (PARTITION BY l_orderkey ORDER BY l_linenumber
+                   OVER (PARTITION BY l_orderkey
+                         ORDER BY l_linenumber, l_partkey
                          ROWS BETWEEN UNBOUNDED PRECEDING
                                   AND UNBOUNDED FOLLOWING),
                -1) AS second_line_part
@@ -2004,17 +2010,16 @@ def _skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_min = band_stats.select(
         "_band", F.min("_band_min_size").over(wb).alias("_prev_min_size")
     )
-    # Checkpoint the pruned candidates ONCE: three consumers below
+    # Stage the pruned candidates ONCE: three consumers below
     # (pair side a, pair side b, final anti-join) would otherwise each
     # replay the part scan + band join — 6 scans for a relation that is
     # skyline-small after cross-band pruning.
-    cand = (
+    cand = stage(
         part.join(F.broadcast(prev_min), "_band", "left")
         .where(
             F.col("_prev_min_size").isNull()
             | (F.col("p_size") < F.col("_prev_min_size"))
         )
-        .localCheckpoint(eager=True)
     )
     # within-band exact dominance on the pruned candidates
     a = cand.alias("a")
@@ -2184,7 +2189,7 @@ def _rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket carries >= 6 rows — a year of a daily series has 100s; a
     sparser series would pick a coarser bucket. A violation no longer
     corrupts med7 silently: per-bucket counts (an O(#years) aggregate on
-    the already-checkpointed daily relation, broadcast back) gate every
+    the already-staged daily relation, broadcast back) gate every
     output row through ``raise_error``, so a <6-row non-final bucket
     fails loudly with the bucket and its count named — pinned by
     tests/test_relational.py::test_rolling_median_sparse_bucket_guard.
@@ -2195,7 +2200,10 @@ def _rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-sized series would partition by key instead and skip the
     padding entirely; the frame logic is unchanged."""
     orders = load_table(spark, sf_dir, "orders")
-    daily = (
+    # 4 consumers (spine, pad source, main rows, next-bucket map): stage
+    # the O(calendar-range) daily relation so the fact is aggregated
+    # ONCE, not re-scanned per consumer.
+    daily = stage(
         orders.groupBy(
             F.col("o_orderdate").cast("date").alias("day")
         )
@@ -2204,10 +2212,6 @@ def _rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("rev")
         )
-        # 4 consumers (spine, pad source, main rows, next-bucket map):
-        # checkpoint the O(calendar-range) daily relation so the fact is
-        # aggregated ONCE, not re-scanned per consumer.
-        .localCheckpoint(eager=True)
     )
     from pyspark.sql import Window
 

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.functions.quality import (
     QUARANTINE_SQL,
     quarantine_route,
@@ -543,9 +544,7 @@ def _stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = latest_per_user(cur.unionByName(b))
         else:  # first batch: target doesn't exist yet
             merged = b
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            target
-        )
+        stage(merged).write.mode("overwrite").parquet(target)
 
     # ts declared TIMESTAMP_NTZ: the feed parquet above stores
     # UTC-normalized micros written from read_events's LTZ batch reader

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.functions import text as X
 from orchestrated_etl_spark.functions.dedup import shingle_rows
 from orchestrated_etl_spark.functions.dedup import shingles as D_shingles
@@ -1017,14 +1018,13 @@ def _bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge), which is exactly the staged shape here: `words` is the
     distinct-word relation with frequencies."""
     docs = load_table(spark, sf_dir, "documents")
-    words = (
+    words = stage(  # pair count + re-probe, one pass
         docs.select(
             F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
         )
         .where(F.length("w") >= 2)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint(eager=True)  # pair count + re-probe, one pass
     )
     pairs = words.select(
         "freq",

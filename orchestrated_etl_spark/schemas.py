@@ -193,13 +193,3 @@ TABLES: dict[str, T.StructType] = {
     "documents": DOCUMENTS,
     "embeddings": EMBEDDINGS,
 }
-
-# Tables whose row count is FIXED BY THE SCHEMA DOMAIN (25 nations, 5
-# regions) — the only relations a FORCED broadcast hint is ever safe
-# for: a hint never falls back past the threshold, so anything that
-# grows with the scale factor (supplier/customer/part all scale
-# linearly — they were members here until the round-16 review caught
-# it, a latent reintroduction path for the class the r14/r15 hint
-# sweeps closed) must rely on threshold/AQE instead. Pinned by
-# tests/test_plan_audit.py::test_broadcast_tables_are_fixed_domain.
-BROADCAST_TABLES = frozenset({"region", "nation"})

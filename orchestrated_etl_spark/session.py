@@ -50,9 +50,9 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # --- python boundary ----------------------------------------------
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # --- broadcast: the construction-FIXED dims (region: 5 rows,
-    # nation: 25 — schemas.BROADCAST_TABLES) are the only relations the
-    # engine force-broadcasts; customer/supplier GROW with sf, so they
+    # --- broadcast: the dims whose size the schema domain fixes
+    # (region: 5 rows, nation: 25) are the only relations the engine
+    # force-broadcasts; customer/supplier GROW with sf, so they
     # reach the broadcast path only while their actual size is under
     # this threshold (AQE/threshold decide, never a forced hint). 64 MB
     # keeps small actuals broadcast at bench scale without driver OOM.

@@ -103,7 +103,8 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Consequence: any OTHER nanos-timestamp parquet read later in the
     session also comes back as bigint nanos instead of erroring; a
     session that must read foreign nanos files as errors should use a
-    separate session."""
+    separate session. The conf is only ever set to ``true``, never
+    restored, so concurrent callers cannot undo each other's setting."""
     ts_type = events_ts_type(sf_dir)
     nanos = isinstance(ts_type, T.LongType)
     if nanos:
@@ -135,41 +136,3 @@ def read_orc(spark: SparkSession, path: str, schema, **options) -> DataFrame:
     against drift between writer and reader versions)."""
     return spark.read.options(**options).schema(schema).orc(path)
 
-
-class Catalog:
-    """All fixture tables of one scale factor, lazily loaded and cached.
-
-    ``cat.lineitem`` / ``cat['lineitem']`` return the DataFrame;
-    ``cat.dim(name)`` returns a FIXED-DOMAIN dimension (nation/region —
-    schemas.BROADCAST_TABLES) with a broadcast hint. Growing dimensions
-    (supplier/customer/part) are deliberately NOT eligible: a forced
-    hint never falls back past the threshold, so at 100 TB it OOMs
-    executors — read them plain and let threshold/AQE pick broadcast
-    while they are actually small (the r14-r16 forced-broadcast rule).
-    """
-
-    def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
-        self.spark = spark
-        self.sf_dir = sf_dir
-        self._cache: dict[str, DataFrame] = {}
-
-    def __getitem__(self, name: str) -> DataFrame:
-        if name not in self._cache:
-            self._cache[name] = load_table(self.spark, self.sf_dir, name)
-        return self._cache[name]
-
-    def __getattr__(self, name: str) -> DataFrame:
-        if name.startswith("_") or name not in schemas.TABLES:
-            raise AttributeError(name)
-        return self[name]
-
-    def dim(self, name: str) -> DataFrame:
-        """A dimension table with an explicit broadcast hint."""
-        if name not in schemas.BROADCAST_TABLES:
-            raise KeyError(f"{name!r} is not a broadcast-safe dimension")
-        return F.broadcast(self[name])
-
-    def register_views(self) -> None:
-        """Expose every table as a SQL temp view (spark.sql access path)."""
-        for name in schemas.TABLES:
-            self[name].createOrReplaceTempView(name)

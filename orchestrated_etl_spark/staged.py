@@ -10,14 +10,17 @@ such a rewrite sound. On a cluster these values are the tables a nightly
 job writes once and every query reads.
 
 The index holds one value per name: a mismatch drops the held value and
-builds its successor. Dropping the reference is the release; nothing is
-unpersisted on the JVM side, which a Connect session could not do (see
-compat.py).
+builds its successor. Each name builds under its own lock, so threads
+asking for the same name concurrently build it once and share it, while
+different names build in parallel. Dropping the reference is the
+release; nothing is unpersisted on the JVM side, which a Connect session
+could not do (see compat.py).
 """
 
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Callable, Iterable
 from typing import TypeVar
 
@@ -30,6 +33,9 @@ V = TypeVar("V")
 
 # name -> (key the value was built under, value)
 _INDEX: dict[str, tuple[tuple, object]] = {}
+# name -> the lock its builds run under; _LOCKS_GUARD guards the dict
+_LOCKS: dict[str, threading.Lock] = {}
+_LOCKS_GUARD = threading.Lock()
 
 
 def fingerprint(sf_dir: str, tables: Iterable[str]) -> tuple:
@@ -68,11 +74,14 @@ def staged(
     the fingerprint of ``tables`` under ``sf_dir`` stay the same. The
     fingerprint is taken before the build, so a file rewritten during
     the build makes the next call rebuild."""
-    key = (application_id(spark), sf_dir, fingerprint(sf_dir, tables))
-    held = _INDEX.get(name)
-    if held is not None and held[0] == key:
-        return held[1]
-    _INDEX.pop(name, None)  # release the stale value before building anew
-    value = build()
-    _INDEX[name] = (key, value)
-    return value
+    with _LOCKS_GUARD:
+        lock = _LOCKS.setdefault(name, threading.Lock())
+    with lock:
+        key = (application_id(spark), sf_dir, fingerprint(sf_dir, tables))
+        held = _INDEX.get(name)
+        if held is not None and held[0] == key:
+            return held[1]
+        _INDEX.pop(name, None)  # release the stale value before building anew
+        value = build()
+        _INDEX[name] = (key, value)
+        return value

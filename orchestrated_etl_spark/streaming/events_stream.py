@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from orchestrated_etl_spark import schemas
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.sources.catalog import (
     events_ts_type,
     nanos_to_micros_ts,
@@ -117,7 +118,7 @@ def run_available_now(
     ckpt = tempfile.mkdtemp(prefix="ckpt_")
     try:
         drain(sdf, ckpt, output_mode=output_mode, memory_table=table)
-        return spark.table(table).localCheckpoint(eager=True)
+        return stage(spark.table(table))
     finally:
         spark.catalog.dropTempView(table)
         shutil.rmtree(ckpt, ignore_errors=True)

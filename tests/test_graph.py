@@ -172,24 +172,25 @@ def test_label_propagation_two_communities(spark):
 
 
 # ---------------------------------------------------------------------------
-# staged_checkpoint: partitioning visibility through checkpoints (r18)
+# stage(keep_partitioning=True): partitioning visibility through staging
 # ---------------------------------------------------------------------------
 
 
 def test_staged_checkpoint_preserves_partitioning_and_conf(spark):
-    """r18 contract: a plain localCheckpoint under AQE reports
-    UnknownPartitioning, so co-partitioned joins re-exchange BOTH sides;
-    staged_checkpoint must (a) keep the hashpartitioning visible —
-    a shuffle_hash join of two layouts staged on the join keys plans
-    with ZERO exchanges — and (b) restore spark.sql.adaptive.enabled
+    """A plain localCheckpoint under AQE reports UnknownPartitioning, so
+    co-partitioned joins re-exchange BOTH sides; staging with
+    keep_partitioning must (a) keep the hashpartitioning visible — a
+    shuffle_hash join of two layouts staged on the join keys plans with
+    ZERO exchanges — and (b) restore spark.sql.adaptive.enabled
     afterwards."""
-    from orchestrated_etl_spark.compat import staged_checkpoint
+    from orchestrated_etl_spark.compat import stage
 
     before = spark.conf.get("spark.sql.adaptive.enabled")
-    a = staged_checkpoint(spark.range(0, 5000).repartition(8, "id"))
-    b = staged_checkpoint(
+    a = stage(spark.range(0, 5000).repartition(8, "id"), keep_partitioning=True)
+    b = stage(
         spark.range(0, 5000).select(F.col("id").alias("id2"))
-        .repartition(8, "id2")
+        .repartition(8, "id2"),
+        keep_partitioning=True,
     )
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
     plan = (

@@ -1142,6 +1142,28 @@ def test_streams_drain_in_one_module():
     assert not temp_users, sorted(temp_users)
 
 
+def test_staging_has_one_primitive():
+    """Every relation the engine stages goes through ``compat.stage``:
+    no engine module but compat.py calls ``.localCheckpoint(...)`` or
+    ``staged_checkpoint(...)``. A hand-rolled call would skip the
+    primitive's concurrency-safe AQE flip and the one place its
+    eager/lazy and partitioning choices are written down. An AST scan,
+    so comments and docstrings cannot trip or satisfy it."""
+    import ast
+
+    callers = set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in ("localCheckpoint", "staged_checkpoint"):
+                callers.add(rel)
+    assert callers == {"compat.py"}, sorted(callers - {"compat.py"})
+
+
 def test_fixture_tables_have_one_reader():
     """Every fixture-table read goes through sources/catalog.load_table,
     which reads with the declared schema: an undeclared
@@ -1383,19 +1405,6 @@ def test_sample_queries_oversized_draw_is_usage_error():
     assert set(sample_queries(qs, oracles, 2, 0, non_front=False)) == {
         "a", "b",
     }
-
-
-def test_broadcast_tables_are_fixed_domain():
-    """schemas.BROADCAST_TABLES feeds Catalog.dim()'s forced broadcast
-    hint, so membership IS a standing claim that the table's row count
-    is fixed by the schema domain. Until round 16 it also listed
-    supplier/customer/part — linearly-growing dimensions, the exact
-    class the r14/r15 hint sweeps removed from every query — leaving a
-    blessed API path to reintroduce the OOM-at-scale hint. Only the
-    genuinely fixed domains may ever be members."""
-    from orchestrated_etl_spark import schemas
-
-    assert schemas.BROADCAST_TABLES == frozenset({"region", "nation"})
 
 
 def test_growing_dim_joins_not_force_broadcast_repo_wide(spark, sf_dir):

@@ -376,3 +376,39 @@ def test_rolling_median_matches_global_window_with_gap_year(
         .collect()
     }
     assert got == want  # bit-identical, gap year + sparse final bucket
+
+
+def test_nth_value_ignores_read_order(spark, sf_dir, tmp_path):
+    """window_nth_value over lineitem rewritten as a directory of 3 part
+    files with its rows permuted (seed 7) — a table's shape at scale,
+    read in no fixed order — must still match its DuckDB oracle over
+    the original file. With l_linenumber as the only sort key the
+    repeated (l_orderkey, l_linenumber) pairs made the 2nd row depend
+    on read order."""
+    import sys
+    from pathlib import Path
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entrymod
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from check_oracle import compare, duck_fetch, duck_views
+
+    rows = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    rows = rows.take(np.random.default_rng(7).permutation(rows.num_rows))
+    parted = tmp_path / "lineitem.parquet"
+    parted.mkdir()
+    for i, part in enumerate(np.array_split(np.arange(rows.num_rows), 3)):
+        pq.write_table(rows.take(part), parted / f"part-{i}.parquet")
+
+    sdf = entrymod.queries()["window_nth_value"](spark, str(tmp_path))
+    con = duck_views(sf_dir)
+    try:
+        oracle = entrymod.oracle_sql()["window_nth_value"]
+        dcols, drows = duck_fetch(con.execute(oracle), False)
+    finally:
+        con.close()
+    srows = [tuple(r) for r in sdf.collect()]
+    assert compare(sdf.columns, srows, dcols, drows) == []

@@ -1,13 +1,18 @@
 """The session index for staged relations (orchestrated_etl_spark/staged.py):
 its fingerprint, its reuse rule, the queries it serves seeing rewritten
-inputs, and a guard that keeps session state out of the engine modules."""
+inputs, staging from concurrent callers, and a guard that keeps session
+state out of the engine modules."""
 
 from __future__ import annotations
 
 import ast
+import hashlib
 import os
 import shutil
 import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pyarrow.parquet as pq
@@ -126,6 +131,75 @@ def test_staged_queries_see_rewritten_inputs(spark, sf_dir, tmp_path):
     assert set(held) == set(tables)
     for name, key in held.items():
         assert key[2] == S.fingerprint(tmp, tables[name]), name
+
+
+# ---------------------------------------------------------------------------
+# concurrent callers
+# ---------------------------------------------------------------------------
+
+
+def test_staged_builds_a_name_once_for_concurrent_callers(spark, tmp_path):
+    """Threads asking for the same name at once share one build."""
+    _write(tmp_path / "t.parquet", b"v1")
+    builds = []
+    gate = threading.Barrier(4)
+
+    def build():
+        builds.append(1)
+        time.sleep(0.2)  # the others arrive while this build runs
+        return len(builds)
+
+    def get(_):
+        gate.wait()
+        return S.staged(spark, "test/concurrent", str(tmp_path), ("t",), build)
+
+    try:
+        with ThreadPoolExecutor(4) as pool:
+            assert list(pool.map(get, range(4))) == [1, 1, 1, 1]
+    finally:
+        S._INDEX.pop("test/concurrent", None)
+
+
+def _digest(sdf) -> str:
+    """Order-insensitive digest of a result: check_oracle's normalized
+    row multiset, hashed."""
+    from check_oracle import df_multiset
+
+    rows = df_multiset(sdf.columns, [tuple(r) for r in sdf.collect()])
+    return hashlib.sha256(repr(sorted(map(repr, rows.items()))).encode()).hexdigest()
+
+
+def test_concurrent_staging_leaves_session_conf(spark, sf_dir):
+    """The graph queries (twice each) and then the bench headline suite,
+    run on 4 threads in one session, must leave AQE enabled and give
+    every query the rows of a sequential pass. Keeping partitioning
+    plans a staging statement with AQE off session-wide; overlapping
+    calls that each saved and restored the flag left it off for every
+    later query of the session."""
+    import bench
+
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    graph = sorted(n for n in qs if n.startswith("graph_"))
+    headline = bench.suite(qs)
+    key = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(key) == "true"
+    expected = {n: _digest(qs[n](spark, sf_dir)) for n in {*graph, *headline}}
+
+    def run(name):
+        return name, _digest(qs[name](spark, sf_dir))
+
+    mismatched = []
+    # each graph query's two runs start together, so its staging calls
+    # overlap
+    for names in ([n for n in graph for _ in range(2)], headline):
+        with ThreadPoolExecutor(4) as pool:
+            for name, digest in pool.map(run, names):
+                if digest != expected[name]:
+                    mismatched.append(name)
+        assert spark.conf.get(key) == "true"
+    assert mismatched == []
 
 
 # ---------------------------------------------------------------------------

@@ -13,8 +13,10 @@ cold run, the rest are warm. A rep is one perfbench tracer pass of
 item -> build -> plan -> execute spans, with bench.py's action (count,
 or collect for flagship) as execute, so perfbench's ``pass_layers``
 splits it into build, plan and execute with their jobs, and the event
-log adds stages. Staging calls (``localCheckpoint``, ``staged_checkpoint``)
-inside build are spans of their own.
+log adds stages. The engine stages through ``compat.stage``; each staging
+call inside build is a span of its own, whose ``via`` reads
+``localCheckpoint`` or ``staged_checkpoint`` (the ``keep_partitioning``
+path), the two calls the tracer wraps.
 
 Stdout gets one JSON line per query once Spark has stopped: ``cold``
 and ``warm`` (median over the warm reps) layer seconds, jobs and stages,
