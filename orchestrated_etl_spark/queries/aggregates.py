@@ -55,9 +55,6 @@ def _filtered_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plus bool_and/bool_or/count_if) — the single-pass replacement for
     the reference's three-separate-groupbys style (dags/dag.py:167-181).
     One hash aggregate, map-side partials, no self-joins."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "v_lineitem_w4"
-    )
     return spark.sql(
         """
         SELECT l_returnflag,
@@ -68,9 +65,10 @@ def _filtered_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                count_if(l_quantity >= 49.0) AS n_near_cap,
                bool_and(l_quantity > 0.0) AS all_positive_qty,
                bool_or(l_discount >= 0.10) AS any_max_disc
-        FROM v_lineitem_w4
+        FROM {lineitem}
         GROUP BY l_returnflag
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -242,7 +240,6 @@ def _listagg_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     string_agg(... ORDER BY ...)). Restricted to a key slice so group
     strings stay bounded — the 100 TB guidance is to cap membership or
     aggregate into arrays instead of unbounded strings."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_w12a")
     return spark.sql(
         """
         SELECT l_orderkey,
@@ -251,10 +248,11 @@ def _listagg_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
                listagg(DISTINCT l_returnflag, '|')
                    WITHIN GROUP (ORDER BY l_returnflag) AS flags,
                count(*) AS n_lines
-        FROM lineitem_w12a
+        FROM {lineitem}
         WHERE l_orderkey < 50
         GROUP BY l_orderkey
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -356,7 +354,6 @@ def _median_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     group's values — bounded-cardinality groups only; the streaming-
     friendly histogram alternative is events_rfm_quantile_cutoffs'
     cutoff derivation."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_w12b")
     return spark.sql(
         """
         SELECT l_returnflag,
@@ -368,9 +365,10 @@ def _median_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                    WITHIN GROUP (ORDER BY CAST(l_quantity AS INT))
                    AS DOUBLE) AS p90_qty_disc,
                count(*) AS n_lines
-        FROM lineitem_w12b
+        FROM {lineitem}
         GROUP BY l_returnflag
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -407,16 +405,16 @@ def _approx_topk_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens" over 100 TB where an exact groupBy-then-sort would shuffle
     the full key space. The oracle is the exact GROUP BY this sketch
     deliberately collapses to here."""
-    read_events(spark, sf_dir).createOrReplaceTempView("events_w12")
     return spark.sql(
         """
         SELECT t.item AS event_type, t.count AS n_events
         FROM (
             SELECT explode(approx_top_k(event_type, 10, 1000)) AS t
-            FROM events_w12
+            FROM {events}
         )
         ORDER BY event_type
-        """
+        """,
+        events=read_events(spark, sf_dir),
     )
 
 
@@ -443,7 +441,6 @@ def _grouping_id_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     the level bitmask every reporting layer keys on. Standard ANSI on
     both engines; superaggregate NULL keys are rendered as 'ALL' via
     the grouping bit so the compared output has no NULL strings."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_w12c")
     return spark.sql(
         """
         SELECT CASE WHEN grouping(l_returnflag) = 1 THEN 'ALL'
@@ -452,9 +449,10 @@ def _grouping_id_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ELSE l_linestatus END AS linestatus,
                CAST(grouping_id(l_returnflag, l_linestatus) AS INT) AS gid,
                count(*) AS n_lines
-        FROM lineitem_w12c
+        FROM {lineitem}
         GROUP BY CUBE(l_returnflag, l_linestatus)
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -487,7 +485,6 @@ def _regression_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     round(6) absorbs partial-aggregation summation-order ulp on the
     fixture's larger groups (irrational-valued outputs — the allowed
     rounding class)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_w12d")
     return spark.sql(
         """
         SELECT l_returnflag,
@@ -498,9 +495,10 @@ def _regression_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
                regr_count(l_extendedprice, l_quantity) AS n,
                round(regr_avgx(l_extendedprice, l_quantity), 6) AS avg_qty,
                round(regr_avgy(l_extendedprice, l_quantity), 6) AS avg_price
-        FROM lineitem_w12d
+        FROM {lineitem}
         GROUP BY l_returnflag
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

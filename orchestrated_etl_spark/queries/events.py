@@ -996,20 +996,18 @@ def _anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two grouped exact-percentile passes + one broadcast join + one
     conditional aggregate; every compared number is either an exact data
     value or an integer count."""
-    ev = read_events(spark, sf_dir).where(F.col("value").isNotNull())
-    ev.createOrReplaceTempView("events_mad")
     return spark.sql(
         """
         WITH med AS (
             SELECT event_type,
                    percentile_disc(0.5) WITHIN GROUP (ORDER BY value)
                        AS med
-            FROM events_mad GROUP BY event_type
+            FROM {events} GROUP BY event_type
         ),
         dev AS (
             SELECT e.event_type, e.value, m.med,
                    abs(e.value - m.med) AS ad
-            FROM events_mad e JOIN med m USING (event_type)
+            FROM {events} e JOIN med m USING (event_type)
         ),
         mad AS (
             SELECT event_type, max(med) AS med,
@@ -1022,7 +1020,8 @@ def _anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
                              THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
         FROM dev d JOIN mad m USING (event_type)
         GROUP BY d.event_type, m.med, m.mad
-        """
+        """,
+        events=read_events(spark, sf_dir).where(F.col("value").isNotNull()),
     )
 
 

@@ -53,32 +53,32 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _bm25_index(spark: SparkSession, sf_dir: str) -> None:
-    """Build (once per session and ``documents`` version, staged.staged)
-    the staged BM25 retrieval index:
+def bm25_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, ...]:
+    """The staged BM25 retrieval index over ``sf_dir``'s documents, built
+    once per session and ``documents`` version (staged.staged):
 
-    - ``bm25_postings`` (doc_id, term, tf, dl) — the FULL inverted index,
+    - ``postings`` (doc_id, term, tf, dl) — the FULL inverted index,
       one explode + one (doc,term) aggregate over the corpus;
-    - ``bm25_dfreq``   (term, df) — per-term document frequency;
-    - ``bm25_stats``   (n_docs, avgdl) — 1-row corpus statistics.
+    - ``dfreq``    (term, df) — per-term document frequency;
+    - ``stats``    (n_docs, avgdl) — 1-row corpus statistics.
 
     Each relation is staged (``compat.stage``), so queries never
-    re-derive corpus statistics — round 2's plan audit showed 6-8 corpus
-    scans per BM25/RRF query because df/dl/avgdl recomputed every time;
-    now the corpus is scanned exactly once at build. On a cluster the
-    staging becomes a parquet write BUCKETED BY term, giving
-    per-term partition pruning on the posting lookup; ``stage`` is
-    the single-node stand-in (same plan shape above the scan)."""
-    staged(
+    re-derive corpus statistics — recomputing df/dl/avgdl per query
+    cost 6-8 corpus scans per BM25/RRF query; the corpus is scanned
+    exactly once at build. On a cluster the staging becomes a parquet
+    write BUCKETED BY term, giving per-term partition pruning on the
+    posting lookup; ``stage`` is the single-node stand-in (same plan
+    shape above the scan)."""
+    return staged(
         spark, "bm25/index", sf_dir, ("documents",),
         lambda: build_bm25_index(_docs(spark, sf_dir)),
     )
 
 
 def build_bm25_index(docs: DataFrame) -> tuple[DataFrame, ...]:
-    """Build + register the staged index views from a documents frame
-    and return their three relations (split out so scaling measurements
-    drive the identical build on synthetically grown corpora)."""
+    """The three staged index relations (postings, dfreq, stats) of a
+    documents frame (split out so scaling measurements drive the
+    identical build on synthetically grown corpora)."""
     tokens = docs.select(
         "doc_id",
         F.size(F.split("text", " ")).alias("dl"),
@@ -96,48 +96,49 @@ def build_bm25_index(docs: DataFrame) -> tuple[DataFrame, ...]:
         F.count(F.lit(1)).alias("n_docs"),
         F.avg(F.size(F.split("text", " "))).alias("avgdl"),
     ))
-    postings.createOrReplaceTempView("bm25_postings")
-    dfreq.createOrReplaceTempView("bm25_dfreq")
-    stats.createOrReplaceTempView("bm25_stats")
     return postings, dfreq, stats
 
 
 def _search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 documents for a 3-term query under BM25 (k1=1.2, b=0.75,
     the Lucene-style idf ln(1 + (N-df+.5)/(df+.5))), served from the
-    STAGED index (_bm25_index): the query plan is a term-filtered
+    STAGED index (bm25_index): the query plan is a term-filtered
     posting-list lookup joined against the broadcast 3-row df relation,
     with corpus stats injected as ScalarSubquery nodes over the 1-row
-    staged stats view — 0 corpus scans at query time (round 2 ran
-    6). df per query term is identical whether derived from the full or
-    the term-filtered index, so the oracle (which filters first) is
-    unchanged. Ranking ties break on doc_id so the LIMIT boundary is
-    deterministic on both engines."""
-    _bm25_index(spark, sf_dir)
-    return bm25_query(spark)
+    staged stats relation — 0 corpus scans at query time. df per query
+    term is identical whether derived from the full or the term-filtered
+    index, so the oracle (which filters first) is unchanged. Ranking
+    ties break on doc_id so the LIMIT boundary is deterministic on both
+    engines."""
+    return bm25_query(spark, *bm25_index(spark, sf_dir))
 
 
-def bm25_query(spark: SparkSession) -> DataFrame:
-    """The posting-list lookup over the staged index views — see
+def bm25_query(
+    spark: SparkSession, postings: DataFrame, dfreq: DataFrame, stats: DataFrame
+) -> DataFrame:
+    """The posting-list lookup over a BM25 index's three relations — see
     _search_bm25_topk."""
     terms_in = "('" + "','".join(_BM25_TERMS) + "')"
     return spark.sql(
         f"""
         SELECT /*+ BROADCAST(d) */ doc_id,
                round(sum(
-                   ln(1.0 + ((SELECT n_docs FROM bm25_stats) - d.df + 0.5)
+                   ln(1.0 + ((SELECT n_docs FROM {{stats}}) - d.df + 0.5)
                             / (d.df + 0.5))
                    * (tf * ({_BM25_K1} + 1))
                    / (tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl /
-                        (SELECT avgdl FROM bm25_stats)))
+                        (SELECT avgdl FROM {{stats}})))
                ), 6) AS score,
                count(*) AS n_matched_terms
-        FROM bm25_postings p JOIN bm25_dfreq d USING (term)
+        FROM {{postings}} p JOIN {{dfreq}} d USING (term)
         WHERE term IN {terms_in}
         GROUP BY doc_id
         ORDER BY score DESC, doc_id
         LIMIT 20
-        """
+        """,
+        postings=postings,
+        dfreq=dfreq,
+        stats=stats,
     )
 
 
@@ -185,12 +186,10 @@ def _tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (stopwords excluded, idf =
     ln(N/df)). Plan: the (doc,term) aggregate reuses the posting shape,
     doc-frequency is a second aggregate on term joined back WITHOUT a
-    forced broadcast hint (round-16 review: the df relation is the raw
-    token VOCABULARY — Heaps'-law-unbounded, the same growing-relation
-    class whose PMI-vocabulary hint the r15 sweep dropped; the old
-    docstring's "grows with the language, not the corpus" held only for
-    a curated lexicon, not raw tokens. Threshold/AQE broadcast it while
-    small, shuffle on the term key past that). Issued as SQL text so
+    forced broadcast hint (the df relation is the raw token VOCABULARY —
+    Heaps'-law-unbounded, growing with the corpus, not the language,
+    unlike a curated lexicon. Threshold/AQE broadcast it while small,
+    shuffle on the term key past that). Issued as SQL text so
     the corpus size N plans as a ScalarSubquery literal rather than a
     1-row nested-loop join (plan-audit clean). Per-doc ranking is a
     window over the doc_id partitioning the first aggregate already
@@ -198,7 +197,6 @@ def _tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     alphabetically, so both engines emit the same rank-1..3 rows."""
     from orchestrated_etl_spark.functions.text import STOPWORDS
 
-    _docs(spark, sf_dir).createOrReplaceTempView("docs_tfidf")
     stop_in = "('" + "','".join(STOPWORDS) + "')"
     return spark.sql(
         f"""
@@ -206,7 +204,7 @@ def _tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id, term, count(*) AS tf
             FROM (
                 SELECT doc_id, explode(split(text, ' ')) AS term
-                FROM docs_tfidf
+                FROM {{docs}}
             )
             WHERE term NOT IN {stop_in}
             GROUP BY 1, 2
@@ -214,7 +212,7 @@ def _tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         df AS (SELECT term, count(*) AS df FROM terms GROUP BY 1),
         scored AS (
             SELECT doc_id, term,
-                   round(tf * ln(CAST((SELECT count(*) FROM docs_tfidf)
+                   round(tf * ln(CAST((SELECT count(*) FROM {{docs}})
                                       AS DOUBLE) / df.df), 6) AS score
             FROM terms JOIN df USING (term)
         )
@@ -228,7 +226,8 @@ def _tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         WHERE rank <= 3
         ORDER BY doc_id, rank
-        """
+        """,
+        docs=_docs(spark, sf_dir),
     )
 
 
@@ -730,28 +729,12 @@ def _search_bm25_store_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash buckets before any IO beyond those files. The store is written
     once per session and ``documents`` version (staged.staged). The
     oracle is the same BM25 SQL."""
-    staged(
-        spark, "bm25/store", sf_dir, ("documents",),
-        lambda: _bm25_store(spark, sf_dir),
-    )
-    terms_in = "('" + "','".join(_BM25_TERMS) + "')"
-    return spark.sql(
-        f"""
-        SELECT /*+ BROADCAST(d) */ doc_id,
-               round(sum(
-                   ln(1.0 + ((SELECT n_docs FROM bm25_stats_tbl) - d.df + 0.5)
-                            / (d.df + 0.5))
-                   * (tf * ({_BM25_K1} + 1))
-                   / (tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl /
-                        (SELECT avgdl FROM bm25_stats_tbl)))
-               ), 6) AS score,
-               count(*) AS n_matched_terms
-        FROM bm25_postings_tbl p JOIN bm25_dfreq_tbl d USING (term)
-        WHERE term IN {terms_in}
-        GROUP BY doc_id
-        ORDER BY score DESC, doc_id
-        LIMIT 20
-        """
+    return bm25_query(
+        spark,
+        *staged(
+            spark, "bm25/store", sf_dir, ("documents",),
+            lambda: _bm25_store(spark, sf_dir),
+        ),
     )
 
 

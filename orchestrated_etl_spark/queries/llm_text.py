@@ -355,14 +355,12 @@ def _udtf_chunk_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield doc_id, idx, min(32, len(toks) - 32 * idx)
 
     spark.udtf.register("chunk_expand_udtf", ChunkExpand)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "v_documents"
-    )
     return spark.sql(
         """
         SELECT c.doc_id, c.chunk_idx, c.n_tokens
-        FROM v_documents d, LATERAL chunk_expand_udtf(d.doc_id, d.text) c
-        """
+        FROM {documents} d, LATERAL chunk_expand_udtf(d.doc_id, d.text) c
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -583,9 +581,8 @@ def _text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LM, one explode+join+aggregate scores every document; both
     aggregates partial-combine map-side.
 
-    The LM join-back carries NO broadcast hint (round-17 review — the
-    r16 text_tfidf_keywords finding's SQL-hint sibling, which the F.
-    broadcast() grep missed): the RAW-token vocabulary grows by Heaps'
+    The LM join-back carries NO broadcast hint, for the same reason as
+    text_tfidf_keywords: the RAW-token vocabulary grows by Heaps'
     law with the corpus, not the language — a forced hint never falls
     back past the threshold and OOMs executors at 100 TB. Below the
     threshold Catalyst still picks broadcast on its own (same local
@@ -596,13 +593,10 @@ def _text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-prob is genuinely irrational → round(…,6) is the cross-engine
     tolerance (registry.py float policy), and ordering ties break on
     doc_id."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "docs_ulm"
-    )
     return spark.sql(
         """
         WITH toks AS (
-            SELECT doc_id, explode(split(text, ' ')) AS term FROM docs_ulm
+            SELECT doc_id, explode(split(text, ' ')) AS term FROM {documents}
         ),
         lm AS (SELECT term, count(*) AS cnt FROM toks GROUP BY 1)
         SELECT doc_id,
@@ -613,7 +607,8 @@ def _text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM toks JOIN lm USING (term)
         GROUP BY doc_id
         ORDER BY doc_id
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 

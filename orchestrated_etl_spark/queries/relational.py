@@ -338,17 +338,16 @@ register(
 
 
 def _grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
                count(*) AS n
-        FROM orders_gs
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
                                 (o_orderstatus, o_orderpriority))
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -623,12 +622,10 @@ register(
 
 def _sql_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shipping-priority query (TPC-H Q3 shape) issued as pure SQL text —
-    demonstrates that the registered-view + spark.sql path hits the same
+    demonstrates that spark.sql over frames bound as arguments hits the same
     Catalyst plan (hint-free joins — dims broadcast under the threshold
     and shuffle past it, partial agg, pushed predicates) as the
     DataFrame API."""
-    for t in ("customer", "orders", "lineitem"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
     return spark.sql(
         """
         SELECT l.l_orderkey AS orderkey,
@@ -637,16 +634,19 @@ def _sql_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS revenue,
                o.o_orderdate AS orderdate,
                o.o_orderpriority AS orderpriority
-        FROM v_customer c
-        JOIN v_orders o ON c.c_custkey = o.o_custkey
-        JOIN v_lineitem l ON l.l_orderkey = o.o_orderkey
+        FROM {customer} c
+        JOIN {orders} o ON c.c_custkey = o.o_custkey
+        JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
         WHERE c.c_mktsegment = 'BUILDING'
           AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
           AND l.l_shipdate > TIMESTAMP '1996-06-30 00:00:00'
         GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
         ORDER BY revenue DESC, orderdate, orderkey
         LIMIT 20
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -874,18 +874,16 @@ def _pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to the previous result, exactly how this engine's DataFrame
     pipelines read. Plan-identical to the nested-SELECT form; this query
     exists to pin the parser surface."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "orders_pipe_src"
-    )
     return spark.sql(
         """
-        FROM orders_pipe_src
+        FROM {orders}
         |> WHERE o_orderpriority = '1-URGENT'
         |> AGGREGATE count(*) AS n_orders,
                      CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
            GROUP BY o_orderstatus
         |> ORDER BY o_orderstatus
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -989,9 +987,6 @@ def _range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     dates. Issued as SQL text (the DataFrame ``rangeBetween`` API takes
     only numeric offsets; interval frames are SQL-surface). Window is
     partitioned by customer — no global sort at any scale."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "v_orders_w4"
-    )
     return spark.sql(
         """
         SELECT o_custkey, o_orderkey, o_orderdate,
@@ -1003,8 +998,9 @@ def _range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                    PARTITION BY o_custkey ORDER BY o_orderdate
                    RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW
                ) AS n_orders_7d
-        FROM v_orders_w4
-        """
+        FROM {orders}
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

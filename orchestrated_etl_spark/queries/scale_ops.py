@@ -1200,28 +1200,26 @@ def _ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     shutil.rmtree(os.path.join(wh, tbl.lower()), ignore_errors=True)
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView(
-        "nation_ddl_src"
-    )
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView(
-        "supplier_ddl_src"
-    )
+    nation = load_table(spark, sf_dir, "nation")
     spark.sql(
         f"""
         CREATE TABLE {tbl} USING PARQUET AS
         SELECT 'nation' AS source, n_regionkey AS regionkey,
                count(*) AS n_rows
-        FROM nation_ddl_src GROUP BY 2
-        """
+        FROM {{nation}} GROUP BY 2
+        """,
+        nation=nation,
     )
     spark.sql(
         f"""
         INSERT INTO {tbl}
         SELECT 'supplier', n.n_regionkey, count(*)
-        FROM supplier_ddl_src s
-        JOIN nation_ddl_src n ON s.s_nationkey = n.n_nationkey
+        FROM {{supplier}} s
+        JOIN {{nation}} n ON s.s_nationkey = n.n_nationkey
         GROUP BY 2
-        """
+        """,
+        supplier=load_table(spark, sf_dir, "supplier"),
+        nation=nation,
     )
     return spark.table(tbl)
 

@@ -19,11 +19,6 @@ from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources.catalog import load_table
 
 
-def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-
-
 # ---------------------------------------------------------------------------
 # Correlated EXISTS (TPC-H Q4 shape) — decorrelates to a left-semi join
 # ---------------------------------------------------------------------------
@@ -35,20 +30,21 @@ def _q4_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-semi hash join on o_orderkey = l_orderkey: one shuffle each side,
     no per-row subquery execution — the rewrite that makes this shape
     viable on a 100 TB fact table."""
-    _views(spark, sf_dir, "orders", "lineitem")
     return spark.sql(
         """
         SELECT o.o_orderpriority AS orderpriority,
                count(*) AS order_count
-        FROM v_orders o
+        FROM {orders} o
         WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
           AND EXISTS (
-              SELECT 1 FROM v_lineitem l
+              SELECT 1 FROM {lineitem} l
               WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R'
           )
         GROUP BY o.o_orderpriority
         ORDER BY orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -80,24 +76,25 @@ def _q17_below_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate). Catalyst decorrelates to: per-part aggregate of lineitem,
     joined back on l_partkey — two scans + one join, not one subquery per
     row. Brand filter prunes the part side before the join."""
-    _views(spark, sf_dir, "lineitem", "part")
     return spark.sql(
         """
         SELECT p.p_brand AS brand,
                count(*) AS n_small,
                CAST(sum(CAST(l.l_extendedprice AS DECIMAL(14,2))) AS DOUBLE)
                AS small_qty_revenue
-        FROM v_lineitem l
-        JOIN v_part p ON p.p_partkey = l.l_partkey
+        FROM {lineitem} l
+        JOIN {part} p ON p.p_partkey = l.l_partkey
         WHERE p.p_size <= 10
           AND l.l_quantity < (
               SELECT 0.5 * avg(l2.l_quantity)
-              FROM v_lineitem l2
+              FROM {lineitem} l2
               WHERE l2.l_partkey = l.l_partkey
           )
         GROUP BY p.p_brand
         ORDER BY brand
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
     )
 
 
@@ -133,7 +130,6 @@ def _cte_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept only where the nation average exceeds the global average
     (uncorrelated scalar subquery — computed once, broadcast as a
     literal-like single-row plan)."""
-    _views(spark, sf_dir, "supplier", "nation")
     return spark.sql(
         """
         WITH per_nation AS (
@@ -141,17 +137,19 @@ def _cte_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
                    count(*) AS n_suppliers,
                    CAST(sum(CAST(s_acctbal AS DECIMAL(14,2))) AS DOUBLE) / count(*)
                    AS avg_bal
-            FROM v_supplier
+            FROM {supplier}
             GROUP BY s_nationkey
         )
         SELECT n.n_name AS nation,
                p.n_suppliers,
                p.avg_bal
         FROM per_nation p
-        JOIN v_nation n ON n.n_nationkey = p.s_nationkey
-        WHERE p.avg_bal > (SELECT avg(s_acctbal) FROM v_supplier)
+        JOIN {nation} n ON n.n_nationkey = p.s_nationkey
+        WHERE p.avg_bal > (SELECT avg(s_acctbal) FROM {supplier})
         ORDER BY nation
-        """
+        """,
+        supplier=load_table(spark, sf_dir, "supplier"),
+        nation=load_table(spark, sf_dir, "nation"),
     )
 
 

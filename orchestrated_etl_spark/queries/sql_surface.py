@@ -33,9 +33,6 @@ def _sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     still a pure Catalyst expression after inlining — NOT a Python UDF,
     so whole-stage codegen is preserved), and the literal arrives via a
     named ``:param`` binding instead of string interpolation."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "v_lineitem_w5"
-    )
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION disc_price(p DOUBLE, d DOUBLE) "
         "RETURNS DECIMAL(18,4) "
@@ -47,11 +44,12 @@ def _sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(sum(disc_price(l_extendedprice, l_discount))
                     AS DOUBLE) AS revenue,
                count(*) AS n_items
-        FROM v_lineitem_w5
+        FROM {lineitem}
         WHERE l_quantity < :maxqty
         GROUP BY l_returnflag
         """,
         args={"maxqty": 30.0},
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -77,9 +75,6 @@ def _sql_table_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calendar densification pattern with the spine as a reusable
     catalog object instead of per-query boilerplate. The spine is
     generated (sequence + explode), never a scanned calendar table."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "v_orders_w5"
-    )
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION date_spine(d0 DATE, d1 DATE) "
         "RETURNS TABLE(day DATE) "
@@ -92,9 +87,10 @@ def _sql_table_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         LEFT JOIN (
             SELECT CAST(o_orderdate AS DATE) AS day,
                    count(*) AS n_orders
-            FROM v_orders_w5 GROUP BY CAST(o_orderdate AS DATE)
+            FROM {orders} GROUP BY CAST(o_orderdate AS DATE)
         ) c ON s.day = c.day
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -161,10 +157,9 @@ def _recursive_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     that distinguishes true recursion from a fixed-length UNION chain).
     Dimension-sized input; each recursion step is a small join Catalyst
     plans independently."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView(
-        "v_nation_w6"
+    return spark.sql(
+        _RECURSIVE_WALK_SQL, nation=load_table(spark, sf_dir, "nation")
     )
-    return spark.sql(_RECURSIVE_WALK_SQL.format(nation="v_nation_w6"))
 
 
 register(
@@ -185,19 +180,17 @@ def _session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql("DECLARE OR REPLACE VARIABLE status_var STRING DEFAULT 'F'")
     spark.sql("SET VAR price_floor = 150000.0")
     spark.sql("SET VAR status_var = 'O'")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "orders_w7"
-    )
     return spark.sql(
         """
         SELECT o_orderpriority,
                count(*) AS n,
                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                    AS total_price
-        FROM orders_w7
+        FROM {orders}
         WHERE o_totalprice > price_floor AND o_orderstatus = status_var
         GROUP BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -219,19 +212,17 @@ def _group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL / ORDER BY ALL: every non-aggregate select item
     becomes a grouping key — the analyst shorthand both engines support
     natively, so the SAME query text runs on Spark and DuckDB."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lineitem_w7"
-    )
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                count(*) AS n,
                CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
                    AS sum_qty
-        FROM lineitem_w7
+        FROM {lineitem}
         GROUP BY ALL
         ORDER BY ALL
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -254,9 +245,6 @@ def _collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower() normalization. Emitted values are deterministic (counts and a
     min, never a collation-arbitrary representative); the oracle
     normalizes with lower(), which UTF8_LCASE matches for ASCII data."""
-    load_table(spark, sf_dir, "part").createOrReplaceTempView(
-        "part_w7"
-    )
     return spark.sql(
         """
         SELECT count(DISTINCT collate(p_type, 'UTF8_LCASE')) AS n_types_ci,
@@ -264,8 +252,9 @@ def _collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                count(DISTINCT collate(p_brand, 'UTF8_LCASE'))
                    AS n_brands_ci,
                min(p_type) AS first_type
-        FROM part_w7
-        """
+        FROM {part}
+        """,
+        part=load_table(spark, sf_dir, "part"),
     )
 
 
@@ -283,23 +272,22 @@ register(
 
 
 def _identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IDENTIFIER(:param) clause: table/column names as bind parameters —
-    the safe form of dynamic SQL over a table chosen at runtime (dashboard
-    table-pickers, per-tenant table routing) that string concatenation
-    gets wrong. The name binds at analysis, so Catalyst still prunes and
-    pushes down as if the name were literal."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "customer_w7"
-    )
+    """IDENTIFIER(:param) clause: a column name as a bind parameter —
+    the safe form of dynamic SQL over a column chosen at runtime
+    (dashboard group-by pickers, per-tenant routing) that string
+    concatenation gets wrong; the table chosen at runtime arrives as a
+    bound frame. The name binds at analysis, so Catalyst still prunes
+    and pushes down as if the name were literal."""
     return spark.sql(
         """
         SELECT c_mktsegment, count(*) AS n_customers,
                CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
                    AS total_balance
-        FROM IDENTIFIER(:tbl)
+        FROM {customer}
         GROUP BY IDENTIFIER(:grp)
         """,
-        args={"tbl": "customer_w7", "grp": "c_mktsegment"},
+        args={"grp": "c_mktsegment"},
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -321,9 +309,6 @@ def _lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the whole chain constant-folds into a single codegen'd Project.
     The outer DOUBLE-normalizing projection exists only for the oracle
     dtype contract (DuckDB DECIMAL → pandas float64 vs Spark Decimal)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lineitem_w7b"
-    )
     return spark.sql(
         """
         SELECT l_orderkey, l_linenumber,
@@ -342,10 +327,11 @@ def _lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AS DECIMAL(28,6)) AS disc_price_d,
                    CAST(disc_price_d * CAST(1 + l_tax AS DECIMAL(8,2))
                         AS DECIMAL(38,8)) AS charged_d
-            FROM lineitem_w7b
+            FROM {lineitem}
             WHERE l_orderkey < 100
         )
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -378,9 +364,6 @@ def _try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces each NULL contract with explicit CASE guards (DuckDB's
     double division yields inf rather than erroring, so the guard IS the
     portable semantics)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lineitem_w7c"
-    )
     return spark.sql(
         """
         SELECT l_returnflag,
@@ -393,9 +376,10 @@ def _try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS n_mult_ok,
                count(try_to_number(l_returnflag, '99')) AS n_parse_ok,
                count(*) AS n
-        FROM lineitem_w7c
+        FROM {lineitem}
         GROUP BY l_returnflag
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -432,16 +416,14 @@ def _pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix); the scale path is keyset pagination (WHERE key > last_seen
     ORDER BY key LIMIT n), which is exactly how every *_topk query here
     bounds its scan. Total order ⇒ deterministic page."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView(
-        "nation_w12"
-    )
     return spark.sql(
         """
         SELECT n_regionkey, n_name
-        FROM nation_w12
+        FROM {nation}
         ORDER BY ALL
         LIMIT 5 OFFSET 10
-        """
+        """,
+        nation=load_table(spark, sf_dir, "nation"),
     )
 
 
@@ -511,18 +493,16 @@ def _pipe_syntax_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one scan, one partial+final aggregate), so this is an API-surface
     query: the engine accepts BOTH spellings of the same plan. DECIMAL
     accumulation cast to double per the registry float policy."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "v_orders_pipe"
-    )
     return spark.sql(
         """
-        FROM v_orders_pipe
+        FROM {orders}
         |> WHERE o_orderstatus = 'O'
         |> AGGREGATE count(*) AS n_orders,
                      CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
                           AS DOUBLE) AS total_price
            GROUP BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -561,9 +541,6 @@ def _lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     LATERAL surface (the thing this query demonstrates) is unchanged.
     Deterministic tie-break on s_suppkey; DuckDB runs the single-pass
     statement (identical result: same total order both phases)."""
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView(
-        "v_supplier_lat"
-    )
     return spark.sql(
         """
         WITH cand AS (
@@ -572,7 +549,7 @@ def _lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                          row_number() OVER (
                              PARTITION BY s_nationkey, s_suppkey % 32
                              ORDER BY s_acctbal DESC, s_suppkey) AS rn
-                  FROM v_supplier_lat)
+                  FROM {supplier})
             WHERE rn <= 2
         )
         SELECT n.s_nationkey, t.s_suppkey, t.s_acctbal
@@ -580,7 +557,8 @@ def _lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         LATERAL (SELECT s_suppkey, s_acctbal FROM cand s
                  WHERE s.s_nationkey = n.s_nationkey
                  ORDER BY s_acctbal DESC, s_suppkey LIMIT 2) t
-        """
+        """,
+        supplier=load_table(spark, sf_dir, "supplier"),
     )
 
 
@@ -609,20 +587,18 @@ def _parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-folds them so pushdown/pruning see real literals (the
     filter reaches the parquet scan exactly as if written inline).
     The oracle inlines the same values."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "v_orders_param"
-    )
     return spark.sql(
         """
         SELECT o_orderpriority,
                count(*) AS n_orders,
                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                    AS total_price
-        FROM v_orders_param
+        FROM {orders}
         WHERE o_orderstatus = :status AND o_totalprice > :floor
         GROUP BY o_orderpriority
         """,
         args={"status": "F", "floor": 50000.0},
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -681,10 +657,9 @@ def _named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the named clause isn't sugar only: it guarantees frame/partition
     identity, which is what lets Catalyst compute both in one Window
     operator."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "v_events_w15"
+    return spark.sql(
+        _NAMED_WINDOW_SQL, events=load_table(spark, sf_dir, "events")
     )
-    return spark.sql(_NAMED_WINDOW_SQL.format(events="v_events_w15"))
 
 
 register(

@@ -803,26 +803,27 @@ def _q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     than a nested-loop join; the NOT EXISTS decorrelates to an anti-join
     against a date-filtered orders projection — at 100 TB the orders side
     prunes to the recent partitions before the anti-join."""
-    for t in ("customer", "orders", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_q22")
     return spark.sql(
         """
         SELECT n.n_name AS nation, count(*) AS numcust,
                CAST(sum(CAST(c.c_acctbal AS DECIMAL(14,2))) AS DOUBLE)
                    AS totacctbal
-        FROM customer_q22 c
-        JOIN nation_q22 n ON c.c_nationkey = n.n_nationkey
+        FROM {customer} c
+        JOIN {nation} n ON c.c_nationkey = n.n_nationkey
         WHERE c.c_acctbal > (
-            SELECT avg(c_acctbal) FROM customer_q22 WHERE c_acctbal > 0.0
+            SELECT avg(c_acctbal) FROM {customer} WHERE c_acctbal > 0.0
         )
         AND NOT EXISTS (
-            SELECT 1 FROM orders_q22 o
+            SELECT 1 FROM {orders} o
             WHERE o.o_custkey = c.c_custkey
               AND o.o_orderdate >= TIMESTAMP '1999-01-01'
         )
         GROUP BY 1
         ORDER BY nation
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+        nation=load_table(spark, sf_dir, "nation"),
     )
 
 
@@ -896,11 +897,6 @@ register(
 )
 
 
-def _views(spark: SparkSession, sf_dir: str, tag: str, *tables: str) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_{tag}")
-
-
 # ---------------------------------------------------------------------------
 # Q2 shape — minimum-cost supplier per part within a region
 # ---------------------------------------------------------------------------
@@ -917,26 +913,25 @@ def _q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (l_partkey, l_suppkey); supplier/nation/region broadcast onto it.
     The unit-cost quotient is a raw IEEE division of identical inputs on
     both engines, so the min-equality filter decides identically."""
-    _views(spark, sf_dir, "q2", "lineitem", "part", "supplier", "nation", "region")
     return spark.sql(
         """
         WITH supply AS (
             SELECT l_partkey AS partkey, l_suppkey AS suppkey,
                    min(l_extendedprice / l_quantity) AS unit_cost
-            FROM lineitem_q2
+            FROM {lineitem}
             GROUP BY 1, 2
         ),
         eu_supply AS (
             SELECT supply.*, s_name, s_acctbal, n_name
             FROM supply
-            JOIN supplier_q2 ON suppkey = s_suppkey
-            JOIN nation_q2 ON s_nationkey = n_nationkey
-            JOIN region_q2 ON n_regionkey = r_regionkey
+            JOIN {supplier} ON suppkey = s_suppkey
+            JOIN {nation} ON s_nationkey = n_nationkey
+            JOIN {region} ON n_regionkey = r_regionkey
             WHERE r_name = 'EUROPE'
         )
         SELECT s_acctbal, s_name, n_name,
                p_partkey, p_type, p_size, unit_cost
-        FROM part_q2
+        FROM {part}
         JOIN eu_supply ON p_partkey = partkey
         WHERE p_type = 'ECONOMY' AND p_size <= 10
           AND unit_cost = (
@@ -945,7 +940,12 @@ def _q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
           )
         ORDER BY s_acctbal DESC, s_name, p_partkey
         LIMIT 100
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
+        supplier=load_table(spark, sf_dir, "supplier"),
+        nation=load_table(spark, sf_dir, "nation"),
+        region=load_table(spark, sf_dir, "region"),
     )
 
 
@@ -996,16 +996,15 @@ def _q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap global re-aggregation of the per-part partials. DECIMAL
     accumulation on both engines makes the threshold comparison exact —
     no group can flip sides from float ordering."""
-    _views(spark, sf_dir, "q11", "lineitem", "supplier", "nation")
     return spark.sql(
         """
         WITH national AS (
             SELECT l_partkey,
                    CAST(l_extendedprice AS DECIMAL(14,2))
                      * CAST(1.0 - l_discount AS DECIMAL(4,2)) AS val
-            FROM lineitem_q11
-            JOIN supplier_q11 ON l_suppkey = s_suppkey
-            JOIN nation_q11 ON s_nationkey = n_nationkey
+            FROM {lineitem}
+            JOIN {supplier} ON l_suppkey = s_suppkey
+            JOIN {nation} ON s_nationkey = n_nationkey
             WHERE n_name = 'NATION_7'
         )
         SELECT l_partkey AS partkey,
@@ -1014,7 +1013,10 @@ def _q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY 1
         HAVING sum(val) > (SELECT sum(val) * 0.0001 FROM national)
         ORDER BY part_value DESC, partkey
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        supplier=load_table(spark, sf_dir, "supplier"),
+        nation=load_table(spark, sf_dir, "nation"),
     )
 
 
@@ -1064,22 +1066,24 @@ def _q16_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-safe spelling of the same predicate is NOT EXISTS / a
     left_anti join, which Spark plans as a shuffle-capable regular
     anti-join — see j_anti_join for that form."""
-    _views(spark, sf_dir, "q16", "lineitem", "part", "supplier")
     return spark.sql(
         """
         SELECT p_brand, p_type, p_size,
                count(DISTINCT l_suppkey) AS supplier_cnt
-        FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem_q16) pairs
-        JOIN part_q16 ON p_partkey = l_partkey
+        FROM (SELECT DISTINCT l_partkey, l_suppkey FROM {lineitem}) pairs
+        JOIN {part} ON p_partkey = l_partkey
         WHERE p_brand <> 'Brand#1'
           AND p_type NOT LIKE 'PROMO%'
           AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
           AND l_suppkey NOT IN (
-              SELECT s_suppkey FROM supplier_q16 WHERE s_acctbal < 0.0
+              SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0.0
           )
         GROUP BY 1, 2, 3
         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
+        supplier=load_table(spark, sf_dir, "supplier"),
     )
 
 
@@ -1118,18 +1122,17 @@ def _q20_excess_availability(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppkey IN becomes a semi-join onto the supplier dim — no distinct
     materialization, no correlated re-execution. Quantities accumulate in
     DECIMAL so the half-share comparison is exact on both engines."""
-    _views(spark, sf_dir, "q20", "lineitem", "part", "supplier", "nation")
     return spark.sql(
         """
         SELECT s_name, s_acctbal
-        FROM supplier_q20
-        JOIN nation_q20 ON s_nationkey = n_nationkey
+        FROM {supplier}
+        JOIN {nation} ON s_nationkey = n_nationkey
         WHERE n_name = 'NATION_3'
           AND s_suppkey IN (
               SELECT l_suppkey
-              FROM lineitem_q20
+              FROM {lineitem}
               WHERE l_partkey IN (
-                  SELECT p_partkey FROM part_q20 WHERE p_name LIKE 'small %'
+                  SELECT p_partkey FROM {part} WHERE p_name LIKE 'small %'
               )
               GROUP BY l_suppkey, l_partkey
               HAVING sum(CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01'
@@ -1139,7 +1142,11 @@ def _q20_excess_availability(spark: SparkSession, sf_dir: str) -> DataFrame:
                      > 0.5 * sum(CAST(l_quantity AS DECIMAL(12,2)))
           )
         ORDER BY s_name
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
+        supplier=load_table(spark, sf_dir, "supplier"),
+        nation=load_table(spark, sf_dir, "nation"),
     )
 
 

@@ -1164,6 +1164,37 @@ def test_staging_has_one_primitive():
     assert callers == {"compat.py"}, sorted(callers - {"compat.py"})
 
 
+def test_sql_inputs_are_bound_not_registered():
+    """No engine module registers a temp view: a SQL-text query takes its
+    input frames as ``spark.sql`` keyword arguments, which bind them
+    under fresh names for the one call. A session-wide view name is
+    shared state — the last registration anywhere in the session wins,
+    so a query reading it by name can read another query's input. An AST
+    scan, so comments and docstrings cannot trip or satisfy it. (A
+    streaming memory sink names its table by ``queryName``; that is not
+    a registration call.)"""
+    import ast
+
+    registers = {
+        "createOrReplaceTempView",
+        "createTempView",
+        "createGlobalTempView",
+        "createOrReplaceGlobalTempView",
+        "registerTempTable",
+    }
+    callers = set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in registers
+            ):
+                callers.add(rel)
+    assert not callers, sorted(callers)
+
+
 def test_fixture_tables_have_one_reader():
     """Every fixture-table read goes through sources/catalog.load_table,
     which reads with the declared schema: an undeclared

@@ -86,6 +86,31 @@ def test_bm25_matches_hand_computation(spark, tmp_path):
     assert out[1] > out[2]  # higher tf, shorter doc wins
 
 
+def test_bm25_ignores_other_index_builds(spark, sf_dir, tmp_path):
+    """A BM25 query reads the index staged for its own corpus: building
+    another corpus's index in the same session (as the scaling tools do)
+    must not change the fixture's top-20."""
+    from orchestrated_etl_spark.queries.llm_search_quality import (
+        _search_bm25_topk,
+        build_bm25_index,
+    )
+    from orchestrated_etl_spark.sources.catalog import load_table
+
+    before = [tuple(r) for r in _search_bm25_topk(spark, sf_dir).collect()]
+    other = _write_docs(
+        spark,
+        tmp_path,
+        [
+            (1, "spark window merge", "en", "s"),
+            (2, "merge merge spark", "en", "s"),
+        ],
+    )
+    build_bm25_index(load_table(spark, other, "documents"))
+    after = [tuple(r) for r in _search_bm25_topk(spark, sf_dir).collect()]
+    assert before, "the fixture query returned no rows"
+    assert after == before
+
+
 def test_incremental_dedup_drops_known_content(spark, tmp_path):
     """Incoming docs (doc_id % 5 == 0) survive only if their exact text
     is absent from the history partition."""

@@ -47,6 +47,7 @@ from orchestrated_etl_spark.queries.events import (  # noqa: E402
     rfm_ntile_core,
 )
 from orchestrated_etl_spark.queries.llm_search_quality import (  # noqa: E402
+    bm25_index,
     bm25_query,
     build_bm25_index,
 )
@@ -147,7 +148,8 @@ _BM25 = {
     "build": lambda spark, d: build_bm25_index(
         load_table(spark, d, "documents")
     ),
-    "query": lambda spark, d: bm25_query(spark),
+    # the lookup over the index staged for this grown corpus
+    "query": lambda spark, d: bm25_query(spark, *bm25_index(spark, d)),
 }
 _RFM = {
     "ntile": lambda spark, d: rfm_ntile_core(
