@@ -8,11 +8,11 @@ row-at-a-time Python overhead. Partitioning follows the *metadata* (cheap
 to shuffle); bytes are only moved when a stage actually consumes them —
 project them out otherwise.
 
-The real decoders (PIL / torchaudio / ffmpeg) are not available in this
-container, so `decode_image` is a clearly-marked stub; `fake_decode_meta`
-is the deterministic stand-in used by tests and the oracle-checked query —
-it derives "decoded" properties purely from the md5 of the bytes, so an
-independent engine can reproduce them.
+No real decoder (PIL / torchaudio / ffmpeg) is wired in: the decode stage
+``decoded_metadata`` runs `_fake_meta_from_digest`, a deterministic
+stand-in used by tests and the oracle-checked query — it derives "decoded"
+properties purely from the md5 of the bytes, so an independent engine can
+reproduce them. A real decoder replaces that one call.
 """
 
 from __future__ import annotations
@@ -54,22 +54,6 @@ def binary_metadata(df: DataFrame, id_col: str, bin_col: Column) -> DataFrame:
         F.md5(bin_col).alias("digest"),
         F.lower(F.hex(F.substring(bin_col, 1, 4))).alias("magic_hex"),
     )
-
-
-def decode_image(data: bytes) -> "object":
-    """Decode an image payload. STUB: real decoding needs PIL/opencv,
-    which this container does not ship."""
-    try:
-        from PIL import Image  # noqa: PLC0415
-        import io  # noqa: PLC0415
-
-        return Image.open(io.BytesIO(data))
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            "image decoding requires PIL; install pillow or swap in your "
-            "decoder — the mapInPandas plumbing in decoded_metadata() is "
-            "decoder-agnostic"
-        ) from exc
 
 
 def _fake_meta_from_digest(digest: str) -> tuple[int, int, int]:

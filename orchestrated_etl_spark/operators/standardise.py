@@ -1,4 +1,4 @@
-"""Standardise-stage operators (SURVEY §2.2, T1-T6; §2.1 S3-S5).
+"""Standardise-stage operators (SURVEY §2.2, T1-T6; §2.1 S3-S4).
 
 The reference's ``standardise_book_data`` (/root/reference/dags/dag.py:125-149)
 dedups by key and coerces string columns to numbers with pandas
@@ -91,12 +91,6 @@ def project_drop(df: DataFrame, *cols: str) -> DataFrame:
     ``copy.drop(columns=['Title'])`` (dags/dag.py:163; SURVEY §1.4).
     Column pruning then propagates into the scan's ReadSchema."""
     return df.drop(*cols)
-
-
-def top_n_arrival(df: DataFrame, n: int) -> DataFrame:
-    """S5 — limit (dags/dag.py:76,114). Spark's ``limit`` short-circuits the
-    scan (LocalLimit per partition before the GlobalLimit)."""
-    return df.limit(n)
 
 
 def standardise_books(raw: DataFrame) -> DataFrame:

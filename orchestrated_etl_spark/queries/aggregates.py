@@ -41,7 +41,7 @@ from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.functions.graph import EDGE_CTE, cached_edges
 from orchestrated_etl_spark.operators.relational import global_rank_two_phase
 from orchestrated_etl_spark.registry import register
-from orchestrated_etl_spark.sources.catalog import load_table, read_events
+from orchestrated_etl_spark.sources.catalog import load_table
 from orchestrated_etl_spark.sources.scratch import scratch_path
 
 
@@ -414,7 +414,7 @@ def _approx_topk_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         ORDER BY event_type
         """,
-        events=read_events(spark, sf_dir),
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -1172,7 +1172,7 @@ def _welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE partial-aggregable pass, 1-row result. The classic
     telemetry experiment readout at any corpus size."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     p = ev.where(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     )

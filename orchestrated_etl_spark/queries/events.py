@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.operators.relational import global_rank_two_phase
 from orchestrated_etl_spark.registry import register
-from orchestrated_etl_spark.sources.catalog import read_events
+from orchestrated_etl_spark.sources.catalog import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -43,7 +43,7 @@ def _funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned data, so the funnel costs one exchange at any scale
     (the classic alternative, one self-join per stage, costs three)."""
     ev = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull())
         .select("user_id", "event_type", "ts")
     )
@@ -128,7 +128,7 @@ def _retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cohort, offset) count-distinct. Two shuffles, both on user-sized or
     aggregate-sized data."""
     ev = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull())
         .select("user_id", F.col("ts").cast("date").alias("day"))
         .distinct()
@@ -183,7 +183,7 @@ def _anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL (exact, order-independent) so both engines feed identical
     doubles into the identical ordered frame. One shuffle on event_type."""
     daily = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(
             F.sum(F.col("value").cast("decimal(25,10)"))
@@ -263,7 +263,7 @@ def _cogroup_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``value`` from the purchase side (KeyError in the kernel)."""
 
     def side(event_type: str) -> DataFrame:
-        return read_events(spark, sf_dir).where(
+        return load_table(spark, sf_dir, "events").where(
             F.col("user_id").isNotNull() & (F.col("event_type") == event_type)
         ).select("user_id", "value")
 
@@ -344,7 +344,7 @@ def _attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     are partition-local, same contract as asof_join); the touch-count
     window shares the purchase-id partitioning with the credit rollup.
     Purchases with zero prior clicks simply attribute nothing."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
         F.col("ts").alias("c_ts"),
@@ -429,7 +429,7 @@ def _markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the sequence is total-ordered and engine-independent), then one
     partial-aggregable count; the share divides two exact counts via a
     window over prev_type — no float accumulation."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     bigrams = ev.select(
         "user_id",
@@ -494,7 +494,7 @@ def _rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUE cutoffs — one shuffle, 12 broadcast scalars — when quintile
     boundaries may be approximated by the value grid. Both forms are
     oracle-checked."""
-    return rfm_ntile_core(read_events(spark, sf_dir))
+    return rfm_ntile_core(load_table(spark, sf_dir, "events"))
 
 
 def rfm_ntile_core(ev: DataFrame) -> DataFrame:
@@ -648,7 +648,7 @@ def _rfm_quantile_cutoffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell rollup. No ordered window ever sees the per-user relation —
     this is the plan that survives 100x users, where the ntile twin
     becomes a single-executor sort."""
-    return rfm_cutoff_core(read_events(spark, sf_dir))
+    return rfm_cutoff_core(load_table(spark, sf_dir, "events"))
 
 
 def rfm_cutoff_core(ev: DataFrame) -> DataFrame:
@@ -872,7 +872,7 @@ def _dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shape fans out 30x/90x compact pairs — or switch to stored HLL
     sketches per day and merge (agg_hll_sketch_merge), trading
     exactness for a constant-size merge."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.select(
         F.to_date("ts").alias("day"), "user_id"
     ).distinct()
@@ -939,7 +939,7 @@ def _ewma_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionization. For unbounded keys, window the recurrence per day
     and chain daily states (the stored-sketch pattern); Spark cannot
     stream an order-dependent fold any other way."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     purch = ev.where(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     )
@@ -1021,7 +1021,7 @@ def _anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM dev d JOIN mad m USING (event_type)
         GROUP BY d.event_type, m.med, m.mad
         """,
-        events=read_events(spark, sf_dir).where(F.col("value").isNotNull()),
+        events=load_table(spark, sf_dir, "events").where(F.col("value").isNotNull()),
     )
 
 
@@ -1073,7 +1073,7 @@ def _seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-terminating (÷7, group means), so outputs round(6) per the
     registry float policy."""
     daily = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(
             F.sum(F.col("value").cast("decimal(25,10)"))
@@ -1195,7 +1195,7 @@ def _cep_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of whole-user history (same pattern, same shuffle). The
     regex is RE2-compatible (no lookahead) so the DuckDB oracle runs
     the SAME pattern."""
-    ev = read_events(spark, sf_dir).where(F.col("user_id").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     seqs = (
         ev.select("user_id", "ts", "event_id", "event_type")
         .groupBy("user_id")
@@ -1272,7 +1272,7 @@ def _interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity (the storage resolution) both measures coincide
     exactly."""
     ev = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull())
         .select(
             "user_id",
@@ -1374,7 +1374,7 @@ def _cep_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id shuffle; the lag/cum-sum sessionizer and the sequence
     aggregate ride one partitioning. Output: per-user conversion count
     and session count."""
-    ev = read_events(spark, sf_dir).where(F.col("user_id").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1475,7 +1475,7 @@ def _cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (N, S, max|cusum|) relation is broadcast back onto the O(domain)
     daily series (plan_audit SCALAR_BROADCAST_OK); the ordered window
     runs over that same O(domain) relation, never the fact table."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     # Materialized once: the O(domain) daily series feeds the totals
     # aggregate, the window, and the peak scan — without this each
     # consumer replays the fact-table aggregate (4 fact scans).
@@ -1558,7 +1558,7 @@ def _acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the fact table collapses to the O(domain) daily relation
     first; the lag fan-out is 7×O(domain) rows into one equi-join and
     one 7-group aggregate. Nothing ordered ever sees O(fact)."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     purch = ev.where(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     )
@@ -1665,7 +1665,7 @@ def _km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase) + one broadcast 1-row horizon; everything ordered
     operates on O(distinct durations) rows — date-domain, never
     fact-sized. The packed-array fold sees one row."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     clicks = (
         ev.where(F.col("event_type") == "click")
         .groupBy("user_id")
@@ -1834,7 +1834,7 @@ def _holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the fact table collapses to the O(date-domain) daily
     relation; the fold sees one array on one row. Per-key series would
     fold per group (the EWMA contract)."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     purch = ev.where(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     )
@@ -1939,7 +1939,7 @@ def _trigram_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — never a full sort. The (ts, event_id)
     window order is a total order, so ranks can't flip between
     engines or reruns."""
-    ev = read_events(spark, sf_dir).where(F.col("user_id").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     paths = ev.select(
         F.concat_ws(
@@ -1997,7 +1997,7 @@ def _max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the fact table collapses to the O(date-domain) daily
     relation first (the rolling-median argument); the ordered window
     and the 1-row broadcast both operate on date-domain rows."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     purch = ev.where(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     )
@@ -2089,7 +2089,7 @@ def _bot_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     microsecond ties, but a regenerated one may. The RANGE burst frame
     keys on `us` alone by construction (range frames include all ties
     regardless of sort position)."""
-    ev = read_events(spark, sf_dir).where(F.col("user_id").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     us = F.expr(
         "timestampdiff(MICROSECOND,"
         " TIMESTAMP_NTZ '2024-01-01 00:00:00', ts)"
@@ -2170,7 +2170,7 @@ def _cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user aggregate (first activity), one broadcast-back
     join, one grouped aggregate; the only ordered window runs over
     the month-domain rollup, never the fact table."""
-    ev = read_events(spark, sf_dir).where(F.col("user_id").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     # integer WEEK index from a fixed anchor: exact, timezone-free, and
     # fine-grained enough that a month-long fixture still yields a
     # cohort x age grid (months would collapse it to one cell)
@@ -2283,7 +2283,7 @@ def _pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100x) is gone; the only unpartitioned window left is the
     exclusive-preceding offset scan over <=32 per-partition aggregate
     rows. Output is one row."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     purch = ev.where(
         (F.col("event_type") == "purchase")
         & F.col("value").isNotNull()

@@ -35,7 +35,7 @@ from orchestrated_etl_spark.functions.quality import (
     quarantine_route,
 )
 from orchestrated_etl_spark.registry import register
-from orchestrated_etl_spark.sources.catalog import load_table, read_events
+from orchestrated_etl_spark.sources.catalog import load_table
 from orchestrated_etl_spark.sources.scratch import scratch_path
 
 
@@ -108,7 +108,7 @@ def _xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted fields. Map-only until the final small aggregate; a
     regex-miss/malformed fragment yields NULL fields, never a crash —
     the completeness filter (S3) then drops them explicitly."""
-    ev = read_events(spark, sf_dir).where(F.col("user_id").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     framed = ev.select(
         F.concat(
             F.lit("<e><u>"),
@@ -707,9 +707,8 @@ def _dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ratios evaluated identically cross-engine; only ln() is
     irrational, so the contribution is rounded to 6 (registry float
     policy)."""
-    from orchestrated_etl_spark.sources.catalog import read_events
 
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     binned = ev.select(
         F.least(F.floor(F.col("value") / 50).cast("int"), F.lit(9)).alias(
             "bin"
@@ -869,7 +868,7 @@ def _quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase price cap, a props range contract, and an ingest-SLA
     hour window. `stream_quarantine_split` runs the SAME rule
     expressions over a multi-micro-batch stream."""
-    return quarantine_route(read_events(spark, sf_dir))
+    return quarantine_route(load_table(spark, sf_dir, "events"))
 
 
 register(

@@ -13,7 +13,7 @@ from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.operators import relational as R
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.schemas import EVENT_PROPS
-from orchestrated_etl_spark.sources.catalog import load_table, read_events
+from orchestrated_etl_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
 # sort / top-k
@@ -422,7 +422,7 @@ register(
 
 
 def _date_trunc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             # NOT date_trunc: Spark's date_trunc on TIMESTAMP_NTZ converts
@@ -482,7 +482,7 @@ register(
 
 
 def _tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return R.tumbling_window_agg(
         ev,
         "ts",
@@ -521,7 +521,7 @@ def _sliding_2h_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly duration/slide — bounded, unlike an explode over arbitrary
     arrays), then one hash aggregate per (window, type). The streaming
     twin is stream_sliding_2h; this batch form is the backfill path."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = F.window("ts", "2 hours", "1 hour")
     return (
         ev.groupBy(w.alias("w"), "event_type")
@@ -566,7 +566,7 @@ register(
 
 
 def _json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         F.get_json_object("props", "$.k").cast("int").alias("k_path"),
@@ -589,7 +589,7 @@ register(
 def _json_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate over an extracted JSON field (extraction feeding the
     relational layer, as the reference's scraped fields feed its groupbys)."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         ev.select("event_type", k.alias("k"))
@@ -796,7 +796,7 @@ def _json_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MapType coverage: parse props into map<string,int>, access by key
     and explode entries — the dynamic-schema alternative to the typed
     from_json struct in json_extract_props. Aggregates per event_type."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     m = F.from_json("props", "map<string,int>")
     entries = ev.select(
         "event_type",
@@ -837,7 +837,7 @@ def _variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON), try_variant_get extracts typed fields. Functionally the twin
     of json_field_agg; the difference is the column TYPE carried between
     operators is variant, not string."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     parsed = ev.select(
         "event_type",
         F.try_variant_get(F.parse_json("props"), "$.k", "int").alias("k"),
@@ -913,7 +913,7 @@ def _gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     window. Two shuffles total (daily agg, spine join) — both on user_id,
     and AQE coalesces them at small SF."""
     ev = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & (F.col("user_id") < 40))
         .select("user_id", F.col("ts").cast("date").alias("day"), "value")
     )
@@ -1081,7 +1081,7 @@ def _linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the known side. The standard sensor/time-series regularization at
     any scale: two shuffles (daily agg, spine join), both on user_id."""
     ev = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & (F.col("user_id") < 40))
         .select("user_id", F.col("ts").cast("date").alias("day"), "value")
     )
@@ -1323,7 +1323,7 @@ def _locf_purchase_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a running frame instead of a self-join. One shuffle on user_id;
     the frame scan is O(1) amortized per row. Ordering (ts, event_id) is
     a unique total order, so the carried value is engine-deterministic."""
-    ev = read_events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
     w = (
@@ -1545,7 +1545,7 @@ def _null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     just another key value), so the scale shape is identical to the
     equi-join. The nullable key is emitted through a -1 sentinel (no
     NULL-bearing numeric output)."""
-    ev = read_events(spark, sf_dir).withColumn(
+    ev = load_table(spark, sf_dir, "events").withColumn(
         "user_id",
         F.when(F.col("user_id") % 7 == 0, F.lit(None)).otherwise(
             F.col("user_id")
@@ -2085,7 +2085,7 @@ def _spatial_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard geospatial join: cell key = geohash prefix, hash
     shuffle on cells, skew handled by splitting hot cells (same salting
     slot as the ER blocker). Output columns exact integers."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     users = _spatial_points(
         ev.where(F.col("user_id").isNotNull()).select("user_id").distinct(),
         "user_id", 2654435761, 0, 40503, 7,

@@ -26,12 +26,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark import schemas
+from orchestrated_etl_spark.functions.sampling import (
+    HASH_MOD,
+    HASH_MULT,
+    hash_bucket,
+    hash_bucket_sql,
+)
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources import sinks
 from orchestrated_etl_spark.sources.catalog import (
     load_table,
     read_csv,
-    read_events,
     read_json,
     read_orc,
 )
@@ -39,22 +44,6 @@ from orchestrated_etl_spark.sources.scratch import (
     nation_blob_files,
     scratch_path,
 )
-
-# Multiplicative hash (Knuth 2^32 golden ratio) expressed in plain int64
-# arithmetic so Spark and the DuckDB oracle compute bit-identical buckets.
-# Production note: swap for xxhash64(col) when cross-engine parity isn't
-# required — same pushdown behavior, better mixing.
-_HASH_MULT = 2654435761
-_HASH_MOD = 4294967296
-
-
-def _bucket(col: str):
-    return (F.col(col) * F.lit(_HASH_MULT)) % F.lit(_HASH_MOD)
-
-
-def _bucket_sql(col: str) -> str:
-    return f"(({col} * {_HASH_MULT}) % {_HASH_MOD})"
-
 
 # ---------------------------------------------------------------------------
 # deterministic sampling
@@ -70,7 +59,7 @@ def _sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_table(spark, sf_dir, "orders")
     return (
-        orders.where(_bucket("o_orderkey") < int(_HASH_MOD * 0.10))
+        orders.where(hash_bucket("o_orderkey") < int(HASH_MOD * 0.10))
         .select("o_orderkey", "o_custkey", "o_totalprice")
     )
 
@@ -80,7 +69,7 @@ register(
     _sample_hash,
     f"""
     SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-    WHERE {_bucket_sql('o_orderkey')} < {int(_HASH_MOD * 0.10)}
+    WHERE {hash_bucket_sql('o_orderkey')} < {int(HASH_MOD * 0.10)}
     """,
 )
 
@@ -109,9 +98,9 @@ def _sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     Identical output to the one-window form (same total order: hash,
     then key); both windows are partitioned, both bounded."""
     orders = load_table(spark, sf_dir, "orders")
-    order = [_bucket("o_orderkey").asc(), F.col("o_orderkey").asc()]
+    order = [hash_bucket("o_orderkey").asc(), F.col("o_orderkey").asc()]
     salted = orders.select("o_orderkey", "o_orderstatus").withColumn(
-        "_salt", _bucket("o_orderkey") % F.lit(_STRAT_SALTS)
+        "_salt", hash_bucket("o_orderkey") % F.lit(_STRAT_SALTS)
     )
     w_local = Window.partitionBy("o_orderstatus", "_salt").orderBy(*order)
     cands = (
@@ -134,7 +123,7 @@ register(
     SELECT o_orderkey, o_orderstatus FROM orders
     QUALIFY row_number() OVER (
         PARTITION BY o_orderstatus
-        ORDER BY {_bucket_sql('o_orderkey')}, o_orderkey) <= 200
+        ORDER BY {hash_bucket_sql('o_orderkey')}, o_orderkey) <= 200
     """,
 )
 
@@ -270,7 +259,9 @@ def asof_core(ev: DataFrame) -> DataFrame:
 def _asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: the point-in-time join feature stores and backtests
     need, which Spark has no native operator for. See asof_core."""
-    ev = read_events(spark, sf_dir).select("event_id", "user_id", "ts", "event_type")
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts", "event_type"
+    )
     return asof_core(ev)
 
 
@@ -312,7 +303,9 @@ def _asof_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed events are already hash-partitioned on exactly those keys,
     and the summary is NOT broadcast (|users|·|days| rows is itself a
     big relation at 100 TB; only its per-key slices are small)."""
-    ev = read_events(spark, sf_dir).select("event_id", "user_id", "ts", "event_type")
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts", "event_type"
+    )
     return asof_salted_core(ev)
 
 
@@ -384,7 +377,9 @@ def _range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Equi-key (user_id) carries the shuffle; the interval predicate is a
     post-join condition inside the same sort-merge/hash join — no
     cross-product stage."""
-    ev = read_events(spark, sf_dir).select("event_id", "user_id", "ts", "event_type")
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts", "event_type"
+    )
     p = ev.where(F.col("event_type") == "purchase").alias("p")
     c = ev.where(F.col("event_type") == "click").alias("c")
     joined = p.join(
@@ -435,7 +430,7 @@ def _range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan-asserted in tests: the exchange key contains the bin. The
     oracle is the SAME relation as the plain range join."""
-    ev = read_events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
     return range_join_binned_core(ev)
@@ -670,7 +665,7 @@ def _sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     id; one shuffle on user_id for both windows (same partitioning is
     reused), then the aggregate rides the same key. The batch twin of the
     streaming session_window query."""
-    ev = read_events(spark, sf_dir).select("event_id", "user_id", "ts")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
     flagged = ev.withColumn(
         "new_s",
@@ -742,7 +737,7 @@ def _session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside window.start (which equals the session's min(ts)).
     Oracle: the lag/cumsum formulation — both engines must carve
     identical session boundaries (new session iff gap > 30 min)."""
-    ev = read_events(spark, sf_dir).select("user_id", "event_id", "ts")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts")
     return (
         ev.groupBy(
             "user_id", F.session_window("ts", "30 minutes").alias("w")
@@ -843,7 +838,7 @@ def _salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation makes this unnecessary for sums — the pattern matters for
     distinct/collect-style aggs and skewed JOIN keys, and this query is
     the executable documentation of it."""
-    ev = read_events(spark, sf_dir).select("event_id", "event_type", "value")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     phase1 = (
         ev.withColumn("_salt", F.pmod(F.col("event_id"), F.lit(16)))
         .groupBy("event_type", "_salt")
@@ -1373,7 +1368,7 @@ def _sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     break on doc_id). One map-side key projection + one top-k — the
     mixture-sampling shape for corpus construction at any scale."""
     docs = load_table(spark, sf_dir, "documents")
-    u = ((F.col("doc_id") * _HASH_MULT) % _HASH_MOD + 0.5) / float(_HASH_MOD)
+    u = (hash_bucket("doc_id") + 0.5) / float(HASH_MOD)
     key = F.round(F.log(u) / F.col("n_chars").cast("double"), 9)
     keyed = docs.select("doc_id", "n_chars", key.alias("ws_key"))
     # Top-k FIRST via orderBy().limit() → TakeOrderedAndProject (per-
@@ -1408,5 +1403,5 @@ register(
                AS rank
     FROM keyed
     QUALIFY rank <= {_WS_K}
-    """.replace("{m}", str(_HASH_MULT)).replace("{p}", str(_HASH_MOD)),
+    """.replace("{m}", str(HASH_MULT)).replace("{p}", str(HASH_MOD)),
 )

@@ -33,7 +33,7 @@ from orchestrated_etl_spark.sources.books_source import (
     books_oracle_cte,
     register_books_source,
 )
-from orchestrated_etl_spark.sources.catalog import read_events
+from orchestrated_etl_spark.sources.catalog import load_table
 from orchestrated_etl_spark.sources.scratch import (
     nation_blob_files,
     scratch_path,
@@ -329,7 +329,7 @@ def _stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     event type. Deterministic, so this is the second streaming query with
     a full DuckDB oracle (after stream_foreachbatch_sink)."""
     first_seen = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_ts"))
     )
@@ -546,18 +546,17 @@ def _stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = b
         stage(merged).write.mode("overwrite").parquet(target)
 
-    # ts declared TIMESTAMP_NTZ: the feed parquet above stores
-    # UTC-normalized micros written from read_events's LTZ batch reader
-    # (timestamp_micros, isAdjustedToUTC); declaring the column NTZ on
-    # read reinterprets those micros as UTC wall clock, independent of
-    # the host/process timezone, and no watermark is involved
+    # ts declared TIMESTAMP_NTZ: the feed parquet above stores the
+    # events batch read's wall-clock micros (TIMESTAMP_NTZ); declaring
+    # the column NTZ on read keeps them wall clock, independent of the
+    # host/process timezone, and no watermark is involved
     # (foreachBatch). An LTZ declaration here instead rendered the
     # output through the Python process timezone at collect time
     # (round-10 TZ-sweep finding; pinned by
     # test_stream_outputs_are_timestamp_ntz).
     feed = _event_feed(
         work,
-        read_events(spark, sf_dir).select(
+        load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "ts", "value"
         ),
         "event_id long, user_id long, ts timestamp_ntz, value double",
@@ -671,7 +670,7 @@ def _tumbling_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     feed = _event_feed(
         _scratch("stream_tumbling_multibatch", sf_dir),
-        read_events(spark, sf_dir).select(
+        load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "ts", "event_type", "value"
         ),
         "event_id long, user_id long, ts timestamp, "
@@ -716,7 +715,7 @@ def _stream_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_binary_files determinism argument). This is the live half
     of the DLT-expectations pattern: bad rows divert to a quarantine
     sink as they ARRIVE, instead of being found by tomorrow's audit."""
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     stream = _event_feed(
         _scratch("stream_quarantine_split", sf_dir), ev, ev.schema
     )

@@ -16,11 +16,13 @@ from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.functions import text as X
 from orchestrated_etl_spark.functions.dedup import shingle_rows
 from orchestrated_etl_spark.functions.dedup import shingles as D_shingles
+from orchestrated_etl_spark.functions.sampling import (
+    HASH_MOD,
+    hash_bucket,
+    hash_bucket_sql,
+)
 from orchestrated_etl_spark.registry import register
 from orchestrated_etl_spark.sources.catalog import load_table
-
-_HASH_MULT = 2654435761
-_HASH_MOD = 4294967296
 
 # ---------------------------------------------------------------------------
 # per-source cap (group-balanced downsampling)
@@ -159,19 +161,17 @@ register(
 
 def _mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-weighted mixture: keep all English, half of Chinese, a
-    quarter of everything else — via the same deterministic per-key hash
-    as scale_ops (reproducible across reruns and engines, evaluated in the
-    scan stage, no shuffle at all)."""
+    quarter of everything else — via the shared deterministic per-key
+    hash (functions/sampling.py: reproducible across reruns and engines,
+    evaluated in the scan stage, no shuffle at all)."""
     docs = load_table(spark, sf_dir, "documents")
     weight = (
         F.when(F.col("lang") == "en", F.lit(1.0))
         .when(F.col("lang") == "zh", F.lit(0.5))
         .otherwise(F.lit(0.25))
     )
-    bucket = (F.col("doc_id") * F.lit(_HASH_MULT)) % F.lit(_HASH_MOD)
-    return docs.where(bucket < weight * F.lit(float(_HASH_MOD))).select(
-        "doc_id", "lang", "source"
-    )
+    keep = hash_bucket("doc_id") < weight * F.lit(float(HASH_MOD))
+    return docs.where(keep).select("doc_id", "lang", "source")
 
 
 register(
@@ -179,10 +179,10 @@ register(
     _mixture,
     f"""
     SELECT doc_id, lang, source FROM documents
-    WHERE ((doc_id * {_HASH_MULT}) % {_HASH_MOD}) <
+    WHERE {hash_bucket_sql("doc_id")} <
           (CASE WHEN lang = 'en' THEN 1.0
                 WHEN lang = 'zh' THEN 0.5
-                ELSE 0.25 END) * {_HASH_MOD}.0
+                ELSE 0.25 END) * {HASH_MOD}.0
     """,
 )
 
@@ -221,10 +221,11 @@ def _temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         F.sqrt(F.col("_n_min") / F.col("n_docs")).alias("keep_rate"),
     )
-    bucket = (F.col("doc_id") * F.lit(_HASH_MULT)) % F.lit(_HASH_MOD)
     kept = (
         docs.join(F.broadcast(rates), "lang")
-        .where(bucket < F.col("keep_rate") * F.lit(float(_HASH_MOD)))
+        .where(
+            hash_bucket("doc_id") < F.col("keep_rate") * F.lit(float(HASH_MOD))
+        )
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_kept"))
     )
@@ -255,8 +256,8 @@ register(
     kept AS (
         SELECT d.lang, count(*) AS n_kept
         FROM documents d JOIN rates r ON d.lang = r.lang
-        WHERE ((d.doc_id * {_HASH_MULT}) % {_HASH_MOD})
-              < r.keep_rate * {_HASH_MOD}.0
+        WHERE {hash_bucket_sql("d.doc_id")}
+              < r.keep_rate * {HASH_MOD}.0
         GROUP BY d.lang
     )
     SELECT r.lang, r.n_docs,
@@ -546,8 +547,8 @@ def _e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .when(F.col("lang") == "zh", F.lit(0.5))
             .otherwise(F.lit(0.25))
         )
-        bucket = (F.col("doc_id") * F.lit(_HASH_MULT)) % F.lit(_HASH_MOD)
-        return df.where(bucket < weight * F.lit(float(_HASH_MOD)))
+        keep = hash_bucket("doc_id") < weight * F.lit(float(HASH_MOD))
+        return df.where(keep)
 
     def packing_stage(df: DataFrame) -> DataFrame:
         # two-phase per-source prefix sum (see _pack_bins) — the r15
@@ -594,10 +595,10 @@ register(
     ),
     mixture AS (
         SELECT * FROM quality
-        WHERE ((doc_id * {_HASH_MULT}) % {_HASH_MOD}) <
+        WHERE {hash_bucket_sql("doc_id")} <
               (CASE WHEN lang = 'en' THEN 1.0
                     WHEN lang = 'zh' THEN 0.5
-                    ELSE 0.25 END) * {_HASH_MOD}.0
+                    ELSE 0.25 END) * {HASH_MOD}.0
     ),
     packed AS (
         SELECT doc_id, source, lang,

@@ -12,10 +12,10 @@ fixture drift fails a test instead of being silently re-inferred.
 
 Timestamps: the fixtures store wall-clock TIMESTAMP(MICROS) without a
 zone, which is TIMESTAMP_NTZ; declaring them ``TimestampType`` (LTZ)
-would shift every value by the session zone. Only events ``ts`` varies
-(``events_schema``): the events file stream declares it LTZ, because
-watermarks reject NTZ, and both events readers follow a nanos or zoned
-``ts`` found by their shared footer probe (sources/catalog.py).
+would shift every value by the session zone. Batch reads of every table,
+events included, use these schemas as declared. Only the events file
+stream (streaming/events_stream.py) declares ``ts`` LTZ, because
+watermarks reject NTZ.
 """
 
 from __future__ import annotations
@@ -108,19 +108,6 @@ EVENTS = T.StructType(
         T.StructField("props", T.StringType(), True),  # JSON text
     ]
 )
-
-
-def events_schema(ts_type: T.DataType) -> T.StructType:
-    """``EVENTS`` with ``ts`` declared as ``ts_type`` (the type
-    ``sources/catalog.events_ts_type`` probes from the footer, or
-    TimestampType for the file stream)."""
-    return T.StructType(
-        [
-            T.StructField("ts", ts_type, f.nullable) if f.name == "ts" else f
-            for f in EVENTS
-        ]
-    )
-
 
 # JSON payload schema inside events.props (the analogue of the reference's
 # HTML field extraction, dags/dag.py:83-92 → S2 in SURVEY §2.1).

@@ -1,7 +1,7 @@
 """Streaming source + sink helpers for the events table.
 
-`read_events_stream` exposes events.parquet as a file stream with the same
-nanos→micros normalization the batch reader applies (sources/catalog.py).
+`read_events_stream` exposes events.parquet as a file stream with the
+declared ``schemas.EVENTS`` columns, ``ts`` declared LTZ for watermarks.
 `drain` is the one stream drain: every registered streaming query runs
 its stream with ``Trigger.AvailableNow`` through it — deterministic
 micro-batches over a fixed input — which is also the production pattern
@@ -19,59 +19,46 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from orchestrated_etl_spark import schemas
 from orchestrated_etl_spark.compat import stage
-from orchestrated_etl_spark.sources.catalog import (
-    events_ts_type,
-    nanos_to_micros_ts,
+
+# ``schemas.EVENTS`` with ``ts`` declared LTZ: withWatermark rejects the
+# batch schema's TIMESTAMP_NTZ.
+EVENTS_STREAM = T.StructType(
+    [
+        T.StructField("ts", T.TimestampType(), f.nullable) if f.name == "ts" else f
+        for f in schemas.EVENTS
+    ]
 )
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a file-source stream with proper TimestampType
-    ``ts``. File streams need a declared schema — inference would require
+    """events.parquet as a file-source stream with the ``EVENTS_STREAM``
+    schema. File streams need a declared schema — inference would require
     a listing job per trigger.
 
-    The column list is ``schemas.EVENTS`` and the footer probe is the
-    batch reader's (``events_ts_type``); ``ts`` is always declared LTZ
-    (or LongType for a nanos file), because withWatermark rejects the
-    batch reader's TIMESTAMP_NTZ.
+    The file stores wall-clock micros (TIMESTAMP_NTZ) but ``ts`` is
+    declared LTZ, so the stored micros are read as UTC instants. Window
+    boundaries match the batch reader's NTZ semantics ONLY when the
+    session renders instants in UTC.
 
-    SESSION-WIDE SIDE EFFECT (deliberate, round-14 review made it
-    signature-level doc): this sets ``spark.sql.session.timeZone=UTC``
-    (and, for a TIMESTAMP(NANOS) file,
-    ``spark.sql.legacy.parquet.nanosAsLong=true``) on the session and
-    does NOT restore them — the timezone pin must still be in force when
-    the stream EXECUTES (window boundaries and the Arrow rendering of
-    the LTZ ``ts`` evaluate at trigger time, not at plan-build time), so
-    a scoped save/restore would silently break the stream it just built.
-    A caller running non-UTC batch queries in the same session should
-    use a separate session for them."""
-    nanos = isinstance(events_ts_type(sf_dir), T.LongType)
-    if nanos:
-        # TIMESTAMP(NANOS) is read as its physical INT64 and converted
-        # below, exactly as the batch reader does.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # The µs/ms file stores NTZ wall-clock values but is declared LTZ
-    # (withWatermark rejects NTZ): the stored micros are read as UTC
-    # instants. Window boundaries match the batch reader's NTZ semantics
-    # ONLY when the session renders instants in UTC — force it here rather
-    # than relying on the session.py default, since a caller may bring its
-    # own vanilla session.
-    schema = schemas.events_schema(T.LongType() if nanos else T.TimestampType())
+    SESSION-WIDE SIDE EFFECT (deliberate): this sets
+    ``spark.sql.session.timeZone=UTC`` on the session and does NOT
+    restore it — the pin must still be in force when the stream EXECUTES
+    (window boundaries and the Arrow rendering of the LTZ ``ts`` evaluate
+    at trigger time, not at plan-build time), so a scoped save/restore
+    would silently break the stream it just built. It is set here rather
+    than relied on from the session.py default, since a caller may bring
+    its own vanilla session. A caller running non-UTC batch queries in
+    the same session should use a separate session for them."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # The [p] glob makes the path a pattern, so the file source accepts a
     # single file (basePath = parent dir) instead of demanding a directory.
-    raw = (
-        spark.readStream.schema(schema)
-        .parquet(f"{sf_dir}/events.[p]arquet")
+    return spark.readStream.schema(EVENTS_STREAM).parquet(
+        f"{sf_dir}/events.[p]arquet"
     )
-    if nanos:
-        raw = raw.withColumn("ts", nanos_to_micros_ts("ts"))
-    return raw
 
 
 def drain(

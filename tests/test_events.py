@@ -30,14 +30,14 @@ def test_ewma_fold_matches_python_loop(spark, sf_dir):
     """The array-fold EWMA equals the straightforward sequential Python
     recurrence, bit for bit, for every user."""
     from orchestrated_etl_spark.queries.events import _EWMA_ALPHA, _ewma_fold
-    from orchestrated_etl_spark.sources.catalog import read_events
+    from orchestrated_etl_spark.sources.catalog import load_table
 
     got = {
         r["user_id"]: r["ewma_value"]
         for r in _ewma_fold(spark, sf_dir).collect()
     }
     rows = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .where(
             (F.col("event_type") == "purchase") & F.col("value").isNotNull()
         )

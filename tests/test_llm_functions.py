@@ -209,11 +209,6 @@ def test_frame_sample(spark):
     assert sorted(r["frame_idx"] for r in out) == [0, 4, 8]
 
 
-def test_real_decoder_is_stubbed():
-    with pytest.raises((NotImplementedError, Exception)):
-        M.decode_image(b"\x89PNG\r\n")
-
-
 def test_kmeans_refine_matches_numpy(spark):
     """3 Lloyd iterations on a tiny separable dataset must produce the
     numpy-computed centroids (same deterministic init and cosine argmax)."""

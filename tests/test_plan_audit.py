@@ -1053,16 +1053,13 @@ def test_driver_side_materialization_allowlist():
 
 
 def test_stub_site_allowlist():
-    """Pin the package's stub surface to the one site the repo
-    legitimately needs (previously a hand check each round):
+    """Pin the package's stub surface: it is empty. The media decode
+    stage runs a deterministic fake decoder that IS oracle-checked
+    (functions/multimodal.py), with no stub for a real one.
 
-    - functions/multimodal.py: the env-gated media DECODER raise — the
-      container has no image/audio libs, the stub is the documented
-      honest boundary and its deterministic fake path IS oracle-checked.
-
-    No `pass` statement is allowed anywhere: a new one, or a new
-    NotImplementedError, is either padding (unfinished surface presented
-    as done) or a new env gate that needs a written reason here.
+    No `pass` statement or NotImplementedError is allowed anywhere: a
+    new one is either padding (unfinished surface presented as done) or
+    a new env gate that needs a written reason here.
     Tokenized NAME scan (comments and docstrings mentioning either word
     don't count — a `pass` NAME token can only be the statement keyword)
     compared as a per-file multiset, so neither glob order nor prose can
@@ -1082,7 +1079,7 @@ def test_stub_site_allowlist():
                     nie[rel] += 1
                 elif t.string == "pass":
                     bare[rel] += 1
-    assert nie == Counter({"functions/multimodal.py": 1}), dict(nie)
+    assert nie == Counter(), dict(nie)
     assert bare == Counter(), dict(bare)
 
 
@@ -1209,7 +1206,9 @@ def test_fixture_tables_have_one_reader():
 
     Read-backs of paths the engine wrote itself (``path``, ``target``,
     ``base``) stay allowed, and so does the events file stream, which
-    has its own declared reader."""
+    declares ``ts`` LTZ for watermarks. ``events`` has no reader of its
+    own: ``load_table`` reads it with ``schemas.EVENTS`` like the other
+    nine tables, with no per-table branch."""
     import ast
 
     def mentions_sf_dir(node) -> bool:
@@ -1248,6 +1247,51 @@ def test_fixture_tables_have_one_reader():
             ) or (isinstance(node, ast.JoinedStr) and fixture_path(node)):
                 sites.add(f"{rel}:{node.lineno}")
     assert not sites, sorted(sites)
+
+
+def test_session_conf_writes_are_pinned():
+    """The engine writes session conf in three places only:
+    ``compat.staged_checkpoint``'s AQE flip (set, then restore) and the
+    two ``spark.sql.session.timeZone=UTC`` pins the LTZ streams need
+    (withWatermark rejects NTZ, and LTZ window bounds follow the session
+    zone). A session-wide write anywhere else changes how later queries
+    in the session, and queries on other threads, run. An AST scan of
+    every ``<x>.conf.set(...)`` call, keyed by module, enclosing function
+    and key argument, so comments and docstrings cannot trip or satisfy
+    it."""
+    import ast
+    from collections import Counter
+
+    def conf_writes(node, fn, rel, out):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "set"
+                and isinstance(child.func.value, ast.Attribute)
+                and child.func.value.attr == "conf"
+            ):
+                key = ast.unparse(child.args[0]) if child.args else ""
+                out[(rel, fn, key)] += 1
+            is_fn = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            conf_writes(child, child.name if is_fn else fn, rel, out)
+
+    sites = Counter()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        conf_writes(ast.parse(path.read_text()), "<module>", rel, sites)
+    tz = "'spark.sql.session.timeZone'"
+    pinned = Counter(
+        {
+            ("compat.py", "staged_checkpoint", "key"): 2,
+            ("streaming/events_stream.py", "read_events_stream", tz): 1,
+            ("queries/streaming_queries.py", "_tumbling_multibatch", tz): 1,
+        }
+    )
+    assert sites == pinned, {
+        "unexpected": sorted((sites - pinned).elements()),
+        "missing": sorted((pinned - sites).elements()),
+    }
 
 
 def test_compat_accessors_classic_and_connect_fallback(spark):

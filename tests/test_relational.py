@@ -35,15 +35,17 @@ def test_locf_carries_last_purchase_only(spark):
     )
     import orchestrated_etl_spark.queries.relational as REL
 
-    orig = REL.read_events
-    REL.read_events = lambda s, d: df
+    orig = REL.load_table
+    REL.load_table = lambda s, d, name: (
+        df if name == "events" else orig(s, d, name)
+    )
     try:
         got = {
             r["event_id"]: r["last_purchase_value"]
             for r in _locf_purchase_value(spark, "unused").collect()
         }
     finally:
-        REL.read_events = orig
+        REL.load_table = orig
     assert got == {1: -1.0, 2: 5.0, 3: 5.0, 4: 8.0, 5: 8.0, 6: -1.0}
 
 
@@ -68,8 +70,10 @@ def test_linear_interpolation_hand_series(spark):
         "event_id long, user_id long, ts timestamp_ntz, "
         "event_type string, value double",
     )
-    orig = REL.read_events
-    REL.read_events = lambda s, d: df
+    orig = REL.load_table
+    REL.load_table = lambda s, d, name: (
+        df if name == "events" else orig(s, d, name)
+    )
     try:
         got = {
             (r["user_id"], r["day"].isoformat()): (
@@ -79,7 +83,7 @@ def test_linear_interpolation_hand_series(spark):
             for r in REL._linear_interpolate(spark, "unused").collect()
         }
     finally:
-        REL.read_events = orig
+        REL.load_table = orig
     assert got[(1, "2024-01-01")] == (True, 10.0)
     assert got[(1, "2024-01-02")] == (False, 20.0)
     assert got[(1, "2024-01-03")] == (False, 30.0)
@@ -258,13 +262,13 @@ def test_spatial_join_grid_blocking_exactness(spark, sf_dir):
         _spatial_points,
         _spatial_radius_join,
     )
-    from orchestrated_etl_spark.sources.catalog import read_events
+    from orchestrated_etl_spark.sources.catalog import load_table
 
     got = {
         (r["user_id"], r["store_id"], r["dist_sq"])
         for r in _spatial_radius_join(spark, sf_dir).collect()
     }
-    ev = read_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     users = _spatial_points(
         ev.where(F.col("user_id").isNotNull()).select("user_id").distinct(),
         "user_id", 2654435761, 0, 40503, 7,

@@ -657,10 +657,10 @@ def test_stratified_sample_windows_are_salted_and_bounded(spark, sf_dir):
     (c) produce the IDENTICAL relation to the naive one-window form."""
     from pyspark.sql import Window
 
+    from orchestrated_etl_spark.functions.sampling import hash_bucket
     from orchestrated_etl_spark.queries.scale_ops import (
         _STRAT_K,
         _STRAT_SALTS,
-        _bucket,
         _sample_stratified,
     )
 
@@ -682,7 +682,7 @@ def test_stratified_sample_windows_are_salted_and_bounded(spark, sf_dir):
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     w = Window.partitionBy("o_orderstatus").orderBy(
-        _bucket("o_orderkey").asc(), F.col("o_orderkey").asc()
+        hash_bucket("o_orderkey").asc(), F.col("o_orderkey").asc()
     )
     naive = (
         orders.select("o_orderkey", "o_orderstatus")

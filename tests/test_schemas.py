@@ -60,38 +60,29 @@ def test_load_table_launches_no_job(spark, sf_dir):
     ]
 
 
-def test_events_probe_follows_the_ts_encoding(spark, sf_dir, tmp_path):
-    """read_events declares ``ts`` from a footer probe that batch and
-    stream share: the wall-clock fixtures read as TIMESTAMP_NTZ, a zoned
-    file (what Spark writes for a ``timestamp`` column) as TIMESTAMP, and
-    a TIMESTAMP(NANOS) file as its nanos floor-truncated to micros."""
+def test_events_read_with_declared_schema(spark, sf_dir, tmp_path):
+    """``load_table(..., "events")`` reads with ``schemas.EVENTS`` as
+    declared, with no footer probe: the wall-clock fixtures read ``ts``
+    as TIMESTAMP_NTZ, a TIMESTAMP(NANOS) file fails at its first action
+    instead of being adapted, and a zoned file (what Spark writes for a
+    ``timestamp`` column) reads as NTZ with the wall clock it was
+    written from in the UTC session."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    import pytest
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    from orchestrated_etl_spark.sources.catalog import events_ts_type, read_events
-
-    assert events_ts_type(sf_dir) == T.TimestampNTZType()
-    assert read_events(spark, sf_dir).schema == load_table(
-        spark, sf_dir, "events"
-    ).schema
-
-    zoned = tmp_path / "zoned"
-    load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    ).write.parquet(str(zoned / "events.parquet"))
-    assert events_ts_type(str(zoned)) == T.TimestampType()
-    assert read_events(spark, str(zoned)).count() == 1000  # sf0.001 events
+    events = load_table(spark, sf_dir, "events")
+    assert _types(events.schema) == _types(schemas.EVENTS)
+    assert dict(events.dtypes)["ts"] == "timestamp_ntz"
 
     nanos = tmp_path / "nanos"
     nanos.mkdir()
-    ns = 1_704_067_200_123_456_789
     pq.write_table(
         pa.table(
             {
                 "event_id": pa.array([1], pa.int64()),
-                "ts": pa.array([ns], pa.timestamp("ns")),
+                "ts": pa.array([1_704_067_200_123_456_789], pa.timestamp("ns")),
                 "user_id": pa.array([7], pa.int64()),
                 "event_type": ["click"],
                 "value": [1.0],
@@ -100,6 +91,17 @@ def test_events_probe_follows_the_ts_encoding(spark, sf_dir, tmp_path):
         ),
         str(nanos / "events.parquet"),
     )
-    assert events_ts_type(str(nanos)) == T.LongType()
-    got = read_events(spark, str(nanos)).select(F.unix_micros("ts")).first()[0]
-    assert got == ns // 1000
+    read = load_table(spark, str(nanos), "events")  # lazy: no error yet
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        read.collect()
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    zoned = tmp_path / "zoned"
+    events.withColumn("ts", F.col("ts").cast("timestamp")).write.parquet(
+        str(zoned / "events.parquet")
+    )
+    back = load_table(spark, str(zoned), "events")
+    assert dict(back.dtypes)["ts"] == "timestamp_ntz"
+    rows = sorted(back.select("event_id", "ts").collect())
+    assert len(rows) == 1000  # sf0.001 events
+    assert rows == sorted(events.select("event_id", "ts").collect())

@@ -60,8 +60,3 @@ def test_drop_incomplete(spark):
     )
     assert S.drop_incomplete(df).count() == 1
     assert S.drop_incomplete(df, ["x"]).count() == 2
-
-
-def test_top_n_arrival(spark):
-    df = spark.range(100)
-    assert S.top_n_arrival(df, 7).count() == 7

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.sources.catalog import read_events
+from orchestrated_etl_spark.sources.catalog import load_table
 from orchestrated_etl_spark.streaming import windows as W
 from orchestrated_etl_spark.streaming.events_stream import (
     read_events_stream,
@@ -26,7 +26,7 @@ def test_tumbling_daily_matches_batch(spark, sf_dir):
         for r in out.collect()
     }
     batch = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy(
             # cast-to-date, NOT date_trunc: date_trunc on NTZ returns
             # LTZ, which collects through the Python process timezone —
@@ -57,7 +57,7 @@ def test_streaming_dedup_matches_distinct(spark, sf_dir):
     }
     want = {
         r["event_type"]: r["n"]
-        for r in read_events(spark, sf_dir)
+        for r in load_table(spark, sf_dir, "events")
         .select("user_id", "event_type")
         .distinct()
         .groupBy("event_type")
@@ -74,7 +74,7 @@ def test_session_windows_match_batch(spark, sf_dir):
         output_mode="complete",
     )
     batch = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy(F.session_window("ts", "10 minutes"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -110,7 +110,7 @@ def test_stateful_running_totals_match_batch(spark, sf_dir):
 
     out = _stateful(spark, sf_dir)
     batch = (
-        read_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -226,7 +226,7 @@ def test_dedup_within_watermark_single_batch_matches_distinct(spark, sf_dir):
     }
     want = {
         r["event_type"]: r["n"]
-        for r in read_events(spark, sf_dir)
+        for r in load_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n"))
         .collect()
@@ -483,13 +483,14 @@ def test_stream_left_outer_join_semantics(spark, sf_dir):
     from orchestrated_etl_spark.queries.streaming_queries import (
         _stream_stream_left_outer,
     )
-    from orchestrated_etl_spark.sources.catalog import read_events
 
     out = {
         (r["event_id"], r["clicks_1h"])
         for r in _stream_stream_left_outer(spark, sf_dir).collect()
     }
-    ev = read_events(spark, sf_dir).select("event_id", "user_id", "ts", "event_type")
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts", "event_type"
+    )
     p = ev.where(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"), F.col("user_id").alias("p_user"),
         F.col("ts").alias("p_ts"))

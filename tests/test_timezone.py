@@ -34,9 +34,9 @@ def _rows(df):
 
 
 def test_events_ts_is_ntz(spark, sf_dir):
-    from orchestrated_etl_spark.sources.catalog import read_events
+    from orchestrated_etl_spark.sources.catalog import load_table
 
-    assert dict(read_events(spark, sf_dir).dtypes)["ts"] == "timestamp_ntz"
+    assert dict(load_table(spark, sf_dir, "events").dtypes)["ts"] == "timestamp_ntz"
 
 
 # Every batch query whose semantics touch event timestamps or emit
